@@ -1297,8 +1297,9 @@ object ScaleTest {
   }
 
   /** Standing shingle index soak: probe→commit-survivors per batch,
-    * shingleCompact under marker-suspend. 64 new files per commit
-    * (shingle vocab spans all buckets) → trigger 192 fires every ~3. */
+    * shingleCompact under marker-suspend. The layout is pinned to 64
+    * buckets (sf0.1 would size 4): 64 new files per commit (shingle vocab
+    * spans all buckets) → trigger 192 fires every ~3. */
   private def soakDedupMain(nBatches: Int): Unit = {
     import org.apache.spark.sql.functions._
     val spark = soakSession()
@@ -1307,7 +1308,7 @@ object ScaleTest {
     val base = java.nio.file.Files
       .createTempDirectory("graft_soak_shingle").toString
     val t0 = System.nanoTime()
-    Dedup.shingleBuildIfStale(spark, src, base)
+    Dedup.shingleBuildIfStale(spark, src, base, 64)
     println(f"soak dedup build: ${(System.nanoTime() - t0) / 1e9}%.2f s")
     // The build's standing corpus is doc_id % 5 =!= 0; arrivals come from
     // the held-out fifth, split into nBatches by id hash.

@@ -531,11 +531,16 @@ object Dedup {
     * cap on corpus df alone can never be kept), `dfc/` (sh, dfc; ALL
     * shingles — the probe must distinguish "new shingle" from "capped
     * shingle"), and `n0/` (doc_id, n0 — the doc's standing capped
-    * size). */
+    * size). The bucket count is sized from the corpus bytes
+    * ([[StandingIndex.bucketsFor]]); probes read it back from `_stats`. */
+  def shingleBuildIfStale(s: SparkSession, d: String, base: String): Boolean =
+    shingleBuildIfStale(s, d, base,
+      StandingIndex.sizedBuckets(s"$d/documents.parquet"))
+
+  /** [[shingleBuildIfStale]] with a caller-pinned bucket count. */
   def shingleBuildIfStale(s: SparkSession, d: String, base: String,
-      nBuckets: Int = 64): Boolean = {
-    val sig = StandingIndex.sourceSig(s"$d/documents.parquet")
-    val want = s"dir=$d sig=$sig buckets=$nBuckets dig=1"
+      nBuckets: Int): Boolean = {
+    val want = shingleMarker(d, nBuckets)
     if (StandingIndex.upToDate(base, want)) return false
     StandingIndex.reset(base)
     val corpus = Tables.documents(s, d)
@@ -574,6 +579,11 @@ object Dedup {
     StandingIndex.commit(base, want)
     true
   }
+
+  /** Build marker of a shingle index over corpus dir `d`; the phase
+    * queries extend it with the phase they reached. */
+  private def shingleMarker(d: String, nBuckets: Int): String =
+    s"dir=$d ${StandingIndex.layoutMarker(s"$d/documents.parquet", nBuckets)} dig=1"
 
   /** Probe-only ingest dedup against a standing index: shingle the batch,
     * path-prune the standing postings/df scans to the batch's own
@@ -1010,11 +1020,11 @@ object Dedup {
     * any interruption (or corpus rewrite) rebuilds from source. */
   def standingCommitIngest(s: SparkSession, d: String): DataFrame = {
     val base = s"${System.getProperty("java.io.tmpdir")}/graft_shingle_commit"
-    val sig = StandingIndex.sourceSig(s"$d/documents.parquet")
-    val wantFinal = s"dir=$d sig=$sig buckets=64 dig=1 committed=b1"
+    val nBuckets = StandingIndex.sizedBuckets(s"$d/documents.parquet")
+    val wantFinal = s"${shingleMarker(d, nBuckets)} committed=b1"
     if (!StandingIndex.upToDate(base, wantFinal)) {
       StandingIndex.reset(base)
-      shingleBuildIfStale(s, d, base)
+      shingleBuildIfStale(s, d, base, nBuckets)
       val b1 = Tables.documents(s, d).filter(col("doc_id") % 10 === 5)
         .select("doc_id", "text")
       val survivors = shingleProbeUnordered(s, base, b1)
@@ -1040,11 +1050,11 @@ object Dedup {
     * mid-transition or corpus rewrite rebuilds from source. */
   def standingDeleteIngest(s: SparkSession, d: String): DataFrame = {
     val base = s"${System.getProperty("java.io.tmpdir")}/graft_shingle_delete"
-    val sig = StandingIndex.sourceSig(s"$d/documents.parquet")
-    val wantFinal = s"dir=$d sig=$sig buckets=64 dig=1 deleted=mod10eq1"
+    val nBuckets = StandingIndex.sizedBuckets(s"$d/documents.parquet")
+    val wantFinal = s"${shingleMarker(d, nBuckets)} deleted=mod10eq1"
     if (!StandingIndex.upToDate(base, wantFinal)) {
       StandingIndex.reset(base)
-      shingleBuildIfStale(s, d, base)
+      shingleBuildIfStale(s, d, base, nBuckets)
       shingleDelete(s, base,
         Tables.documents(s, d).filter(col("doc_id") % 10 === 1)
           .select("doc_id", "text"))

@@ -1443,7 +1443,7 @@ object Retrieval {
       // Rename-only swap ([[StandingIndex.swapDirs]]): same reader-
       // window hardening as the shared compactions.
       def swapIn(tmp: String, dir: String): Unit =
-        StandingIndex.swapDirs(tmp, dir)
+        StandingIndex.swapDirs(s, tmp, dir)
       val tasks = math.max(1, math.min(NumBuckets,
         s.conf.get("spark.sql.shuffle.partitions").toInt))
       val pTmp = s"$base/_compact_postings"
@@ -2017,7 +2017,7 @@ object Retrieval {
   // the query's own buckets and scores by a pure long-sum aggregate over
   // precomputed impacts: per-probe cost is ~|query-term posting lists|,
   // never |corpus|. This is the static sibling of [[EvolvingDistIndex]]
-  // (same xxhash64 % 64 bucketing, same pruned-read idiom): that class
+  // (same xxhash64 bucketing, same pruned-read idiom): that class
   // re-scores raw postings against EVOLVING stats because its corpus
   // grows; here the corpus is fixed at build, so impacts freeze and a
   // probe's answer is row-identical to [[bm25TopK]] — `q_bm25_standing`
@@ -2029,18 +2029,22 @@ object Retrieval {
     * signature — an in-place rewrite with the same doc count still
     * rebuilds — and same bucket count). One write task per bucket dir
     * ([[StandingIndex.writeBucketed]]), so the layout is ≤ nBuckets
-    * files per table at any corpus scale. `nBuckets` is the
-    * serving-layout knob: a probe reads the buckets its query terms hash
-    * into, so pruning wins when the query's distinct-term count is small
-    * against nBuckets — size it ~(corpus partition budget), not to the
-    * query (64 mirrors the evolving gate's bench-scale default; a 100 TB
-    * deployment sizes buckets to ~128 MB partitions exactly like any
-    * hive layout). The count is persisted in `_stats`, so probes always
-    * hash with the layout that built the index. */
+    * files per table at any corpus scale. A probe reads the buckets its
+    * query terms hash into, so the count follows the corpus, not the
+    * query: it is sized from the corpus bytes
+    * ([[StandingIndex.bucketsFor]] — few buckets for a small corpus,
+    * where a probe naming more than 32 bucket paths would pay a
+    * distributed listing job; 64 from 16 MB up). The count is persisted
+    * in `_stats`, so probes always hash with the layout that built the
+    * index. */
+  def bm25BuildIfStale(s: SparkSession, d: String, base: String): Boolean =
+    bm25BuildIfStale(s, d, base,
+      StandingIndex.sizedBuckets(s"$d/documents.parquet"))
+
+  /** [[bm25BuildIfStale]] with a caller-pinned bucket count. */
   def bm25BuildIfStale(s: SparkSession, d: String, base: String,
-      nBuckets: Int = EvolvingDistIndex.NumBuckets): Boolean = {
-    val sig = StandingIndex.sourceSig(s"$d/documents.parquet")
-    val want = s"dir=$d sig=$sig buckets=$nBuckets"
+      nBuckets: Int): Boolean = {
+    val want = bm25Marker(d, nBuckets)
     if (StandingIndex.upToDate(base, want)) return false
     StandingIndex.reset(base)
     val docs = Tables.documents(s, d).select("doc_id", "text")
@@ -2055,6 +2059,11 @@ object Retrieval {
     StandingIndex.commit(base, want)
     true
   }
+
+  /** Build marker of a BM25 index over corpus dir `d`; the delete query
+    * extends it with the phase it reached. */
+  private def bm25Marker(d: String, nBuckets: Int): String =
+    s"dir=$d ${StandingIndex.layoutMarker(s"$d/documents.parquet", nBuckets)}"
 
   /** Probe-only ranked top-k against a standing index: tokenize the query
     * docs, prune BOTH standing scans to the query's term buckets (the
@@ -2169,12 +2178,11 @@ object Retrieval {
     * corpus rewrite rebuilds from source. */
   def bm25TopKStandingDelete(s: SparkSession, d: String): DataFrame = {
     val base = s"${System.getProperty("java.io.tmpdir")}/graft_bm25_delete"
-    val sig = StandingIndex.sourceSig(s"$d/documents.parquet")
-    val want = s"dir=$d sig=$sig buckets=${EvolvingDistIndex.NumBuckets} " +
-      "deleted=mod9eq4"
+    val nBuckets = StandingIndex.sizedBuckets(s"$d/documents.parquet")
+    val want = s"${bm25Marker(d, nBuckets)} deleted=mod9eq4"
     if (!StandingIndex.upToDate(base, want)) {
       StandingIndex.reset(base)
-      bm25BuildIfStale(s, d, base)
+      bm25BuildIfStale(s, d, base, nBuckets)
       bm25Delete(s, base,
         Tables.documents(s, d).filter(col("doc_id") % 9 === 4)
           .select("doc_id"))

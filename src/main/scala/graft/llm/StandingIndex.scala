@@ -17,7 +17,14 @@ import org.apache.spark.sql.functions._
   *    path.
   *  - **Bucketed layout writer** (xxhash64 % n on the routing column,
   *    repartitioned on the partition column so each bucket directory is
-  *    one file per write at any corpus scale).
+  *    one file per write at any corpus scale). A build that is not handed
+  *    a count sizes n from the source table's bytes ([[bucketsFor]]: one
+  *    bucket per [[BytesPerBucket]], a power of two in [1,
+  *    [[MaxBuckets]]]) for two measured reasons: a probe whose pruned
+  *    read names more than 32 bucket paths makes Spark list them with a
+  *    distributed job (`parallelPartitionDiscovery.threshold`), and every
+  *    bucket a commit touches adds one file. The marker records the count
+  *    beside the source bytes that chose it.
   *  - **Path-level pruned reader.** Handing the reader only the probed
   *    `part=value` directories (with basePath preserving the partition
   *    column) keeps the driver from listing + footer-reading the
@@ -88,6 +95,48 @@ private[graft] object StandingIndex {
       .digest(parts.mkString("\n").getBytes("UTF-8"))
       .map("%02x".format(_)).mkString
   }
+
+  /** Bytes of the source table's parquet data files — file metadata
+    * only, like [[sourceSig]]. The measured size [[bucketsFor]] sizes a
+    * layout from. */
+  def sourceBytes(path: String): Long = {
+    val p = java.nio.file.Paths.get(path)
+    if (!java.nio.file.Files.exists(p)) return 0L
+    val st = java.nio.file.Files.walk(p)
+    try st.filter(q => java.nio.file.Files.isRegularFile(q) &&
+        q.toString.endsWith(".parquet"))
+      .mapToLong(q => java.nio.file.Files.size(q)).sum()
+    finally st.close()
+  }
+
+  /** Source bytes one bucket of a sized layout covers. */
+  val BytesPerBucket: Long = 256L * 1024
+
+  /** Largest sized layout: 64 buckets, reached at 16 MiB of source. */
+  val MaxBuckets = 64
+
+  /** Bucket count of a layout over `sourceBytes` of source parquet: one
+    * bucket per [[BytesPerBucket]], rounded up to a power of two (so the
+    * count only moves when the corpus doubles) and clamped to [1,
+    * [[MaxBuckets]]]. Small corpora get few buckets: a probe then names
+    * at most that many paths, below Spark's 32-path threshold for a
+    * distributed listing job, and a commit adds at most that many
+    * files. */
+  def bucketsFor(sourceBytes: Long): Int = {
+    val n = if (sourceBytes <= 0L) 1L
+      else math.min(MaxBuckets.toLong, (sourceBytes - 1) / BytesPerBucket + 1)
+    if (n == 1L) 1 else Integer.highestOneBit((n - 1).toInt) << 1
+  }
+
+  /** [[bucketsFor]] the bytes of the source table at `source`. */
+  def sizedBuckets(source: String): Int = bucketsFor(sourceBytes(source))
+
+  /** The layout part of a bucketed index's marker: the content signature
+    * of `source`, the bucket count, and the source bytes beside it, so a
+    * reader of `_meta` sees what sized the layout. */
+  def layoutMarker(source: String, nBuckets: Int): String =
+    s"sig=${sourceSig(source)} buckets=$nBuckets " +
+      s"src_bytes=${sourceBytes(source)}"
 
   /** True iff `base/_meta` exists and matches `want` exactly. */
   def upToDate(base: String, want: String): Boolean = {
@@ -220,7 +269,7 @@ private[graft] object StandingIndex {
     // Dropping every row (a full purge) or compacting an already-empty
     // table must not swap in a data-less dir — see [[ensureReadable]].
     ensureReadable(s, tmp, out.schema, Some(part))
-    swapDirs(tmp, dir)
+    swapDirs(s, tmp, dir)
   }
 
   /** Flat (non-partitioned) sibling of [[compactTable]] for delta tables
@@ -234,7 +283,7 @@ private[graft] object StandingIndex {
     val out = xform(s.read.parquet(dir))
     out.write.mode("overwrite").parquet(tmp)
     ensureReadable(s, tmp, out.schema, None)
-    swapDirs(tmp, dir)
+    swapDirs(s, tmp, dir)
   }
 
   /** Swap a fully-written temp table into the live path by RENAMES
@@ -249,14 +298,24 @@ private[graft] object StandingIndex {
     * manifest-pinned file set or a transactional table format). A
     * crash between the renames leaves `_old_<table>` beside a missing
     * live dir — inside [[withMarkerSuspended]] that is an unmarked,
-    * rebuildable tree, exactly like any other torn compaction. */
-  private[llm] def swapDirs(tmp: String, dir: String): Unit = {
+    * rebuildable tree, exactly like any other torn compaction.
+    *
+    * The renames bypass Spark, so the swap refreshes the session's cached
+    * frames under `dir` itself (a Spark write does this on its own). Spark
+    * matches cached plans by root paths alone: a probe caching its pruned
+    * read of `dir/bucket=0` before the swap would otherwise serve the
+    * next probe of the same buckets from a file list the swap deleted —
+    * certain on a one-bucket layout, where every probe reads the same
+    * path. */
+  private[llm] def swapDirs(s: SparkSession, tmp: String,
+      dir: String): Unit = {
     val live = java.nio.file.Paths.get(dir)
     val aside = live.resolveSibling("_old_" + live.getFileName.toString)
     graft.Fs.deleteRec(aside)
     java.nio.file.Files.move(live, aside)
     java.nio.file.Files.move(java.nio.file.Paths.get(tmp), live)
     graft.Fs.deleteRec(aside)
+    s.catalog.refreshByPath(dir)
   }
 
   // ── Tombstone protocol ─────────────────────────────────────────────

@@ -437,21 +437,10 @@ object DocStreams {
   def streamDedupEvolving(s: SparkSession, d: String): DataFrame = {
     import java.nio.file._
     import graft.llm.Dedup
-    // Pricing marks (the [[streamDecontamEvolvingDist]] discipline):
-    // GRAFT_SDE_TIMING=1 prints per-term wall so a bench-row cost can be
-    // attributed instead of guessed.
-    def mark(tag: String, t0: Long): Long = {
-      if (sys.env.contains("GRAFT_SDE_TIMING"))
-        println(f"[sde] gate/$tag ${(System.nanoTime() - t0) / 1e9}%.2f")
-      System.nanoTime()
-    }
-    var tg = System.nanoTime()
     val dir = stageDocs(s, d)
-    tg = mark("stage", tg)
     val tmp = System.getProperty("java.io.tmpdir")
     val pristine = s"$tmp/graft_shingle_stream_pristine"
     Dedup.shingleBuildIfStale(s, d, pristine)
-    tg = mark("pristine_build", tg)
     // Empty arrival slice: nothing will probe or commit — serve the empty
     // verdict frame straight off the pristine index, no working clone.
     if (graft.Fs.countWithSuffix(Paths.get(dir), ".parquet") == 0)
@@ -463,7 +452,9 @@ object DocStreams {
     // never rewritten), so links give pristine-isolation at metadata cost
     // however big the standing index grows.
     graft.Fs.linkRec(Paths.get(pristine), base)
-    mark("clone", tg)
+    // The clone bypasses Spark: drop any cached read of a previous call's
+    // working copy, which Spark would match to this call's reads by path.
+    s.catalog.refreshByPath(base.toString)
     val outBase = Paths.get(tmp, "graft_stream_dedup_evolving")
     if (Files.exists(outBase)) {
       graft.Fs.deleteRec(outBase)
@@ -477,17 +468,14 @@ object DocStreams {
        batchId: Long) =>
         val b = batch.toDF().select(col("doc_id"), col("text"))
         val out = outBase.resolve(s"v$batchId").toString
-        var tb = System.nanoTime()
         // Unordered per-batch verdicts: the combined read-back below is
         // the one place this query sorts.
         Dedup.shingleProbeUnordered(s, base.toString, b)
           .write.mode("overwrite").parquet(out)
-        tb = mark(s"probe_b$batchId", tb)
         val survivors = s.read.parquet(out)
           .filter(!col("is_dup")).select("doc_id")
         Dedup.shingleCommit(s, base.toString,
           b.join(survivors, Seq("doc_id"), "left_semi"))
-        mark(s"commit_b$batchId", tb)
         latest = batchId
         ()
     }

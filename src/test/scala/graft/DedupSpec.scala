@@ -664,7 +664,10 @@ class DedupSpec extends SparkSpec {
     corpus.write.mode("overwrite").parquet(s"$dir/documents.parquet")
     val base = java.nio.file.Files
       .createTempDirectory("graft_shingle_commit_cross_ix").toString
-    Dedup.shingleBuildIfStale(spark, dir, base)
+    // Pinned to 64 buckets: the file-count witness below needs the
+    // batch's shingles spread over several buckets, which the tiny
+    // corpus would not size.
+    Dedup.shingleBuildIfStale(spark, dir, base, nBuckets = 64)
     val b1 = Seq((0L, "x y z p0 q0 r0")).toDF("doc_id", "text")
     val v1 = Dedup.shingleProbe(spark, base, b1).collect()
     assert(v1.length == 1 && !v1.head.getBoolean(1),

@@ -600,8 +600,17 @@ class PlanShapeSpec extends SparkSpec with AdaptiveSparkPlanHelper {
       })
       assert(antiS.isEmpty,
         s"$tag: tombstone exclusion must never shuffle the probe side")
-      assert(roots.exists(_.toString.contains(s"PartitionFilters: [$part")),
-        s"$tag: standing scan lost its $part partition filter")
+      // A value predicate on the partition column: `IN`/`INSET` over
+      // several probed values, `=` over one (a one-bucket layout, where
+      // the optimizer also infers an isnotnull that prints first — so
+      // the scan nodes are inspected, not the plan string).
+      val partFilters = roots.flatMap(r => collectWithSubqueries(r) {
+        case f: FileSourceScanExec => f.partitionFilters
+      }).flatten
+      assert(partFilters.exists(e =>
+          !e.isInstanceOf[org.apache.spark.sql.catalyst.expressions.IsNotNull] &&
+          e.references.exists(_.name == part)),
+        s"$tag: standing scan lost its $part partition filter: $partFilters")
     }
     // Fresh standing state for all three (the shipped bases may have been
     // compacted — tombstones drained — by an earlier spec).

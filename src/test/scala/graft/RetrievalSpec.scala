@@ -733,9 +733,10 @@ class RetrievalSpec extends SparkSpec with AdaptiveSparkPlanHelper {
   test("standing BM25 probe partition-prunes both scans to the query buckets") {
     val base = java.nio.file.Files
       .createTempDirectory("graft_bm25_prune").toString
-    Retrieval.bm25BuildIfStale(spark, Sf, base)
-    // One query doc with few terms: its bucket set is a strict subset of
-    // the 64, so an unpruned scan is distinguishable from a pruned one.
+    // Pinned to 64 buckets (the fixture corpus would size one): one query
+    // doc with few terms then hashes into a strict subset of them, so an
+    // unpruned scan is distinguishable from a pruned one.
+    Retrieval.bm25BuildIfStale(spark, Sf, base, nBuckets = 64)
     val one = Tables.documents(spark, Sf)
       .select("doc_id", "text").filter(col("doc_id") === 0L)
     val plan = Retrieval.bm25Probe(spark, base, one)

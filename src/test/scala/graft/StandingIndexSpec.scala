@@ -8,7 +8,9 @@ import org.scalatest.funsuite.AnyFunSuite
 /** Recovery-protocol properties of the standing-index shared machinery
   * that the per-index suites (AnnIndexSpec, RetrievalSpec, DedupSpec)
   * exercise only on the happy path: the marker-suspend exception
-  * contract, and linkRec's metadata-vs-data cloning split. */
+  * contract, and linkRec's metadata-vs-data cloning split. Also the
+  * layout-sizing rule: default bucket counts follow the source bytes,
+  * and the count never changes an answer. */
 class StandingIndexSpec extends SparkSpec {
 
   private def mkIndex(): java.nio.file.Path = {
@@ -180,5 +182,80 @@ class StandingIndexSpec extends SparkSpec {
     assert(!Files.exists(Paths.get(s"$base/_old_t")),
       "aside dir must be deleted after the rename swap")
     Fs.deleteRec(Paths.get(base))
+  }
+
+  test("bucketsFor is monotone in the source bytes and stays in [1, 64]") {
+    val kib = 1024L
+    val sizes = (Seq(0L, 1L, Long.MaxValue) ++
+      (0 to 40).flatMap(e => Seq((1L << e) - 1, 1L << e, (1L << e) + 1)) ++
+      (1 to 80).map(_ * 256 * kib)).distinct.sorted
+    val counts = sizes.map(StandingIndex.bucketsFor)
+    counts.zip(sizes).foreach { case (n, b) =>
+      assert(n >= 1 && n <= StandingIndex.MaxBuckets && Integer.bitCount(n) == 1,
+        s"$b bytes sized $n buckets")
+    }
+    assert(counts.zip(counts.tail).forall { case (a, b) => a <= b },
+      s"not monotone: ${sizes.zip(counts)}")
+    // The worked points: a 68 KB stream corpus, sf0.1's 584 KB, and the
+    // 16 MiB floor of the full 64-bucket layout.
+    assert(StandingIndex.bucketsFor(68 * kib) == 1)
+    assert(StandingIndex.bucketsFor(584 * kib) == 4)
+    assert(StandingIndex.bucketsFor(16 * kib * kib) == 64)
+    assert(StandingIndex.bucketsFor(16 * kib * kib - 1) == 64)
+    assert(StandingIndex.bucketsFor(8 * kib * kib) == 32)
+  }
+
+  test("the stream dedup gate's default-built index stays under Spark's " +
+      "parallel listing threshold and records what sized it") {
+    graft.streaming.DocStreams.streamDedupEvolving(spark, Sf).collect()
+    graft.TrackedCaches.release()
+    val pristine = Paths.get(System.getProperty("java.io.tmpdir"),
+      "graft_shingle_stream_pristine")
+    val n = new String(Files.readAllBytes(pristine.resolve("_stats")),
+      "UTF-8").trim.toInt
+    val threshold = spark.conf
+      .get("spark.sql.sources.parallelPartitionDiscovery.threshold").toInt
+    assert(n <= threshold,
+      s"$n buckets: a probe touching them all lists with a Spark job")
+    val bytes = StandingIndex.sourceBytes(s"$Sf/documents.parquet")
+    assert(n == StandingIndex.bucketsFor(bytes))
+    val marker = new String(Files.readAllBytes(pristine.resolve("_meta")),
+      "UTF-8")
+    assert(marker.contains(s"buckets=$n src_bytes=$bytes"),
+      s"marker does not record the bytes that sized the layout: $marker")
+  }
+
+  test("probes over a default-sized index equal probes over a pinned " +
+      "64-bucket index") {
+    import org.apache.spark.sql.functions.col
+    import graft.llm.{Dedup, Retrieval}
+    def fresh(tag: String) =
+      Files.createTempDirectory(s"graft_standing_$tag").toString
+    def buckets(base: String) = new String(
+      Files.readAllBytes(Paths.get(s"$base/_stats")), "UTF-8")
+      .trim.split(" ").last.toInt
+    val docs = Tables.documents(spark, Sf).select("doc_id", "text")
+    val (shSized, sh64) = (fresh("sh_sized"), fresh("sh_64"))
+    Dedup.shingleBuildIfStale(spark, Sf, shSized)
+    Dedup.shingleBuildIfStale(spark, Sf, sh64, 64)
+    val (bmSized, bm64) = (fresh("bm_sized"), fresh("bm_64"))
+    Retrieval.bm25BuildIfStale(spark, Sf, bmSized)
+    Retrieval.bm25BuildIfStale(spark, Sf, bm64, 64)
+    assert(buckets(shSized) < 64 && buckets(bmSized) < 64,
+      "the sf0.001 corpus must size a smaller layout than the pinned one")
+    assert(buckets(sh64) == 64 && buckets(bm64) == 64)
+    val batch = docs.filter(col("doc_id") % 5 === 0)
+    def shingle(base: String) =
+      Dedup.shingleProbe(spark, base, batch).collect().map(_.toString).toSeq
+    val queries = docs.filter(col("doc_id") < Retrieval.NumQueries)
+    def bm25(base: String) =
+      Retrieval.bm25Probe(spark, base, queries).collect().map(_.toString).toSeq
+    val sh = shingle(shSized)
+    assert(sh.nonEmpty && sh.exists(_.contains("true")))
+    assert(sh == shingle(sh64), "shingle verdicts moved with the layout")
+    val bm = bm25(bmSized)
+    assert(bm.nonEmpty && bm == bm25(bm64), "BM25 top-k moved with the layout")
+    graft.TrackedCaches.release()
+    Seq(shSized, sh64, bmSized, bm64).foreach(b => Fs.deleteRec(Paths.get(b)))
   }
 }

@@ -643,6 +643,22 @@ class StreamingSpec extends SparkSpec {
       "stream verdicts diverged from the two-phase batch reference")
   }
 
+  test("evolving dedup gate: a second call before any cache release " +
+      "serves the same verdicts") {
+    // Each call re-clones its working index into the same directory,
+    // outside Spark. Cached reads from the first call match the second
+    // call's reads by path (one bucket at this corpus size), so the clone
+    // must refresh them or the second call reads deleted files.
+    val first = graft.streaming.DocStreams.streamDedupEvolving(spark, Sf)
+      .collect().map(_.toString).toSeq
+    val second = graft.streaming.DocStreams.streamDedupEvolving(spark, Sf)
+      .collect().map(_.toString).toSeq
+    graft.TrackedCaches.release()
+    spark.catalog.clearCache()
+    assert(first.nonEmpty && second == first,
+      "the second call diverged from the first")
+  }
+
   test("evolving dedup gate: batch-1 dup of a committed survivor is caught (crafted)") {
     import spark.implicits._
     // Zone arithmetic: arrivals {0, 10, 20, 30} → lo=0, span=8 → chunks
