@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Benchmark main (driver contract): runs every SparkEntry query on
   * SPARK_GRAFT_SF_DIR and prints ONE JSON line
   * {"metric":"total","value":N,"unit":"sec","queries":{...},"sf":...}.
@@ -98,7 +96,6 @@ object Bench {
 
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
     // Move the JVM temp root to tmpfs when present (ShuffleDir's rationale,
     // applied to everything else that lands in java.io.tmpdir during a
     // bench run: staged streaming landing zones, TEMPORARY stream
@@ -119,21 +116,7 @@ object Bench {
         } else None
       }
       .foreach(t => System.setProperty("java.io.tmpdir", t))
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.local.dir", ShuffleDir.path)
-      // Default 1 = one file per mapper (measured suite-faster, commit
-      // e9beb82); env-overridable so per-query effects of the writer
-      // choice can be measured as a controlled pair (SCALING.md table).
-      .config("spark.shuffle.sort.bypassMergeThreshold",
-        sys.env.getOrElse("SPARK_GRAFT_BYPASS_MERGE", "1"))
-      .config("spark.sql.warehouse.dir", "/tmp/graft_warehouse")
-      .config("spark.ui.enabled", "false")
-      .withExtensions(new graft.functions.GraftExtensions)
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = GraftSession.build()
 
     // Warmup: exercise codegen, parquet reader, shuffle machinery once.
     val wn = spark.read.parquet(s"$sfDir/nation.parquet")

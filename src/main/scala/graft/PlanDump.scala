@@ -295,14 +295,7 @@ object PlanDump {
   }
 
   def main(args: Array[String]): Unit = {
-    val spark = SparkSession.builder().master("local[32]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.local.dir", ShuffleDir.path)
-      .config("spark.shuffle.sort.bypassMergeThreshold", "1")
-      .config("spark.sql.warehouse.dir", "/tmp/graft_warehouse")
-      .config("spark.ui.enabled", "false").getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = GraftSession.build()
     val sf = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.01")
     val sb = new StringBuilder
     sb ++= "# PLANS — executed physical plans of the headline queries\n\n"

@@ -11,6 +11,9 @@ import org.apache.spark.sql.functions._
   * at natural size (replicating them would plant artificial duplicate
   * clusters and measure a different problem).
   *
+  * Every mode builds the factory session ([[GraftSession.build]]):
+  * `SPARK_GRAFT_CPUS` cores, default 4.
+  *
   * Usage: runMain graft.ScaleTest [copies]        (default 10)
   *        runMain graft.ScaleTest docs [copies]   (dedup-family Nx experiment; SCALING.md carries 10x + 30x)
   *        runMain graft.ScaleTest streams         (streaming-family 10x experiment)
@@ -118,16 +121,7 @@ object ScaleTest {
     if (args.headOption.contains("soakann"))
       return soakAnnMain(args.drop(1).headOption.map(_.toInt).getOrElse(20))
     val copies = if (args.nonEmpty) args(0).toInt else 10
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.local.dir", ShuffleDir.path)
-      .config("spark.shuffle.sort.bypassMergeThreshold", "1")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = GraftSession.build()
 
     val src = "/root/testdata/sf0.1"
     // The corpus directory embeds the generator parameters (copy count +
@@ -193,16 +187,7 @@ object ScaleTest {
     * 150k docs, still far under this host's memory, and the point where a
     * super-linear candidate generator would visibly bend). */
   private def docsMain(copies: Int, only: Option[Set[String]] = None): Unit = {
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.local.dir", ShuffleDir.path)
-      .config("spark.shuffle.sort.bypassMergeThreshold", "1")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = GraftSession.build()
     val src = "/root/testdata/sf0.1"
     // Parameter-stamped path (copies, substitution mod, doc-id stride):
     // a change to buildDocs must bump this suffix so a stale cached corpus
@@ -296,16 +281,7 @@ object ScaleTest {
     * gate. Every operator is user-keyed, so the expectation is ~linear
     * wall growth with flat per-user cost. */
   private def eventsMain(copies: Int): Unit = {
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.local.dir", ShuffleDir.path)
-      .config("spark.shuffle.sort.bypassMergeThreshold", "1")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = GraftSession.build()
     val src = "/root/testdata/sf0.1"
     // Same replicated corpus (and stamp discipline) as the streams mode;
     // `runMain graft.ScaleTest events 30` runs the 30x ladder (30M events,
@@ -345,16 +321,7 @@ object ScaleTest {
 
   /** Streaming-family 10x experiment — see the object scaladoc. */
   private def streamsMain(): Unit = {
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.local.dir", ShuffleDir.path)
-      .config("spark.shuffle.sort.bypassMergeThreshold", "1")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = GraftSession.build()
     val src = "/root/testdata/sf0.1"
     // Parameter-stamped path (copies, key stride) — same rebuild discipline
     // as the other modes.
@@ -402,15 +369,16 @@ object ScaleTest {
     }
     val docSubset = Seq("q_stream_ingest_dedup", "q_stream_quality_gate",
       "q_stream_decontam")
-    def timeDocStream(name: String, dir: String): Double = {
+    def timeFrame(df: => DataFrame): Double = {
       val t0 = System.nanoTime()
-      SparkEntry.queries(name)(spark, dir)
-        .write.format("noop").mode("overwrite").save()
+      df.write.format("noop").mode("overwrite").save()
       val dt = (System.nanoTime() - t0) / 1e9
       TrackedCaches.release()
       spark.catalog.clearCache()
       dt
     }
+    def timeDocStream(name: String, dir: String): Double =
+      timeFrame(SparkEntry.queries(name)(spark, dir))
     println("query,docs1x_s,docs10x_s,ratio")
     docSubset.foreach { name =>
       timeDocStream(name, src) // warm (first call also stages the 1x zone)
@@ -428,15 +396,15 @@ object ScaleTest {
     // switches to past BroadcastScreenMaxBytes, so the crossover is a
     // measurement, not an assertion).
     println("query,mode,docs1x_s,docs10x_s")
-    Seq("broadcast", "distributed").foreach { mode =>
-      spark.conf.set("graft.retrieval.screenMode", mode)
-      try {
-        timeDocStream("q_stream_decontam", src)
-        val a = timeDocStream("q_stream_decontam", src)
-        timeDocStream("q_stream_decontam", docsDst)
-        val b = timeDocStream("q_stream_decontam", docsDst)
+    Seq("broadcast" -> Long.MaxValue, "distributed" -> 0L).foreach {
+      case (mode, ceiling) =>
+        def decontam(dir: String): Double = timeFrame(
+          graft.streaming.DocStreams.streamDecontamUnder(spark, dir, ceiling))
+        decontam(src)
+        val a = decontam(src)
+        decontam(docsDst)
+        val b = decontam(docsDst)
         println(f"q_stream_decontam,$mode,$a%.2f,$b%.2f")
-      } finally spark.conf.unset("graft.retrieval.screenMode")
     }
     // The vector-ingest gate streams EMBEDDINGS, so its 10x axis is the
     // vecs-mode corpus (10x genuinely distinct vectors — corpus IVF index
@@ -458,41 +426,6 @@ object ScaleTest {
     spark.stop()
   }
 
-  /** Vector-family 10x experiment: measures the recall-vs-scan-fraction
-    * ladder that sized the shipped IVF config (Similarity.centroidsFor /
-    * probesFor). The measurement that matters: on a uniform-random corpus
-    * recall@10 is a function of the SCAN FRACTION nearly independent of N
-    * (the 1x and 10x ladders coincide), so a fixed nprobe — a falling
-    * fraction of the sqrt(N)-growing cell count — decays recall (measured
-    * 0.78 -> 0.44 at 10x), while probesFor's fixed ~30% fraction holds it
-    * >= 0.80 at both scales. embeddings replicate 10x with a copy-keyed
-    * dimension rotation plus deterministic per-copy sign flips: a
-    * rotated/sign-flipped random vector is just another random vector (the
-    * corpus stays uniform), but it is FAR from its source (expected cosine
-    * ~0), so the 10x corpus has 10x genuinely distinct vectors — growth,
-    * not planted duplicates that would hand ANN its own copies as trivial
-    * neighbors. Reported per scale: annIvf/annLsh/brute wall time AND the
-    * (nprobe, scan fraction, recall@10) ladder including the shipped
-    * probesFor point at each scale. */
-  /** The standing-index ladders' shared session (the same config block
-    * every ladder main uses; `ext` adds GraftExtensions for mains whose
-    * queries need the registered plans/functions). */
-  private def ladderSession(ext: Boolean): SparkSession = {
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val b = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.local.dir", ShuffleDir.path)
-      .config("spark.shuffle.sort.bypassMergeThreshold", "1")
-      .config("spark.ui.enabled", "false")
-    val spark =
-      (if (ext) b.withExtensions(new graft.functions.GraftExtensions) else b)
-        .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    spark
-  }
-
   /** Post-measurement hygiene OUTSIDE the timed window (the ladder rule:
     * released caches must actually be reaped before the next row). */
   private def settle(spark: SparkSession): Unit = {
@@ -511,7 +444,7 @@ object ScaleTest {
     * scan) while rebuild pays training's N·√N kernel plus the corpus
     * assignment pass every call. Reuses the vecs mode's staged corpus. */
   private def vecStandingMain(copies: Int): Unit = {
-    val spark = ladderSession(ext = false)
+    val spark = GraftSession.build()
     val src = "/root/testdata/sf0.1"
     val dst = stagedDir(s"graft_vecs${copies}x_c${copies}_v1000000_", src)
     if (!new java.io.File(s"$dst/_built").exists()) {
@@ -635,7 +568,7 @@ object ScaleTest {
     * tracks the QUERY's posting lists while rebuild pays the corpus
     * tokenize + index build every call. */
   private def bm25StandingMain(copies: Int): Unit = {
-    val spark = ladderSession(ext = true)
+    val spark = GraftSession.build()
     val src = "/root/testdata/sf0.1"
     val dst = stagedDir(s"graft_docs${copies}x_c${copies}_m5_d1000000_", src)
     if (!new java.io.File(s"$dst/_built").exists()) {
@@ -731,7 +664,7 @@ object ScaleTest {
     * judge-decomposed 100× profile is DOMINATED by the corpus-linear
     * capped-index build the standing form amortizes away. */
   private def dedupStandingMain(copies: Int): Unit = {
-    val spark = ladderSession(ext = true)
+    val spark = GraftSession.build()
     val src = "/root/testdata/sf0.1"
     val dst = stagedDir(s"graft_docs${copies}x_c${copies}_m5_d1000000_", src)
     if (!new java.io.File(s"$dst/_built").exists()) {
@@ -861,7 +794,7 @@ object ScaleTest {
     * posting reads (batch-vocabulary buckets, whose per-bucket size
     * grows with the corpus) and the compaction rewrite. */
   private def evoStandingMain(copies: Int): Unit = {
-    val spark = ladderSession(ext = true)
+    val spark = GraftSession.build()
     val src = "/root/testdata/sf0.1"
     val dst = stagedDir(s"graft_docs${copies}x_c${copies}_m5_d1000000_", src)
     if (!new java.io.File(s"$dst/_built").exists()) {
@@ -920,17 +853,24 @@ object ScaleTest {
     spark.stop()
   }
 
+  /** Vector-family 10x experiment: measures the recall-vs-scan-fraction
+    * ladder that sized the shipped IVF config (Similarity.centroidsFor /
+    * probesFor). The measurement that matters: on a uniform-random corpus
+    * recall@10 is a function of the SCAN FRACTION nearly independent of N
+    * (the 1x and 10x ladders coincide), so a fixed nprobe — a falling
+    * fraction of the sqrt(N)-growing cell count — decays recall (measured
+    * 0.78 -> 0.44 at 10x), while probesFor's fixed ~30% fraction holds it
+    * >= 0.80 at both scales. embeddings replicate 10x with a copy-keyed
+    * dimension rotation plus deterministic per-copy sign flips: a
+    * rotated/sign-flipped random vector is just another random vector (the
+    * corpus stays uniform), but it is FAR from its source (expected cosine
+    * ~0), so the 10x corpus has 10x genuinely distinct vectors — growth,
+    * not planted duplicates that would hand ANN its own copies as trivial
+    * neighbors. Reported per scale: annIvf/annLsh/brute wall time AND the
+    * (nprobe, scan fraction, recall@10) ladder including the shipped
+    * probesFor point at each scale. */
   private def vecsMain(copies: Int): Unit = {
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.local.dir", ShuffleDir.path)
-      .config("spark.shuffle.sort.bypassMergeThreshold", "1")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = GraftSession.build()
     val src = "/root/testdata/sf0.1"
     // Parameter-stamped path (copies, id stride) — same rebuild discipline
     // as the other modes; `runMain graft.ScaleTest vecs 30` runs the 30x
@@ -1160,21 +1100,6 @@ object ScaleTest {
       }
   }
 
-  private def soakSession(): SparkSession = {
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.local.dir", ShuffleDir.path)
-      .config("spark.shuffle.sort.bypassMergeThreshold", "1")
-      .config("spark.ui.enabled", "false")
-      .withExtensions(new graft.functions.GraftExtensions)
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    spark
-  }
-
   private def parquetFileCount(dir: String): Long = {
     val p = java.nio.file.Paths.get(dir)
     if (!java.nio.file.Files.isDirectory(p)) return 0L
@@ -1257,7 +1182,7 @@ object ScaleTest {
     * the 64 buckets) fires every ~6 batches after a reset. */
   private def soakMain(nBatches: Int): Unit = {
     import org.apache.spark.sql.functions._
-    val spark = soakSession()
+    val spark = GraftSession.build()
     import graft.llm.Retrieval
     val src = "/root/testdata/sf0.1"
     val docs = Tables.documents(spark, src).select("doc_id", "text")
@@ -1302,7 +1227,7 @@ object ScaleTest {
     * spans all buckets) → trigger 192 fires every ~3. */
   private def soakDedupMain(nBatches: Int): Unit = {
     import org.apache.spark.sql.functions._
-    val spark = soakSession()
+    val spark = GraftSession.build()
     import graft.llm.Dedup
     val src = "/root/testdata/sf0.1"
     val base = java.nio.file.Files
@@ -1358,7 +1283,7 @@ object ScaleTest {
     * every ~7 batches after a reset. */
   private def soakAnnMain(nBatches: Int): Unit = {
     import org.apache.spark.sql.functions._
-    val spark = soakSession()
+    val spark = GraftSession.build()
     import graft.llm.{AnnIndex, StandingIndex}
     val src = "/root/testdata/sf0.1"
     val emb = Tables.embeddings(spark, src).select("vec_id", "embedding")

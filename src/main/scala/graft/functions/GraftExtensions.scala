@@ -81,8 +81,7 @@ object CosineSelfRule extends Rule[LogicalPlan] {
 }
 
 /** Session extensions: SQL-registered float_cosine + the self-cosine
-  * optimization. Install with
-  * `SparkSession.builder().withExtensions(new GraftExtensions)`. */
+  * optimization. Installed by [[graft.GraftSession.build]]. */
 class GraftExtensions extends (SparkSessionExtensions => Unit) {
   override def apply(e: SparkSessionExtensions): Unit = {
     e.injectFunction((

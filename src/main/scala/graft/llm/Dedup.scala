@@ -362,22 +362,16 @@ object Dedup {
       .getContentSummary(p).getLength
   }
 
-  /** A/B override for the sizes broadcast (`graft.dedup.sizesBroadcast=off`
-    * conf, or GRAFT_SIZES_BROADCAST=off env for harness mains that build
-    * their own sessions, forces the pre-round-12 shuffle-join plan) —
-    * measurement-only, the same pattern as `graft.retrieval.wavePrune`. */
-  private def sizesBroadcastOn(s: SparkSession): Boolean =
-    s.conf.getOption("graft.dedup.sizesBroadcast")
-      .orElse(sys.env.get("GRAFT_SIZES_BROADCAST"))
-      .forall(_ != "off")
+  /** Whether the corpus is under the [[SizesBroadcastMaxDocBytes]] gate. */
+  private def sizesFit(s: SparkSession, d: String): Boolean =
+    docBytes(s, d) <= SizesBroadcastMaxDocBytes
 
   /** Doc-arity frame `df`, broadcast when the corpus is under the
     * [[SizesBroadcastMaxDocBytes]] gate, untouched (shuffle-join plan)
     * otherwise. */
   private def maybeBroadcastSizes(s: SparkSession, d: String,
       df: DataFrame): DataFrame =
-    if (sizesBroadcastOn(s) && docBytes(s, d) <= SizesBroadcastMaxDocBytes)
-      broadcast(df)
+    if (sizesFit(s, d)) broadcast(df)
     else df
 
   def ngramJaccardPairs(s: SparkSession, d: String): DataFrame =
@@ -420,7 +414,7 @@ object Dedup {
     incrementalDedupStages(s, d).last._2
 
   /** [[incrementalDedup]] with its pipeline prefixes exposed by name, so
-    * [[graft.Decompose]] can attribute deep-scale wall time to a specific
+    * `graft.Measure decompose` can attribute deep-scale wall time to a specific
     * term (index build vs candidate-pair aggregate vs verification) instead
     * of guessing — the 100×-ladder rule is decomposition before fix. The
     * LAST stage is the query; earlier stages are its own intermediates. */
@@ -1223,7 +1217,7 @@ object Dedup {
   def dupNgramFraction(s: SparkSession, d: String): DataFrame =
     dupNgramFractionStages(s, d).last._2
 
-  /** [[dupNgramFraction]] pipeline prefixes for [[graft.Decompose]] (same
+  /** [[dupNgramFraction]] pipeline prefixes for `graft.Measure decompose` (same
     * convention as [[incrementalDedupStages]]: last stage is the query). */
   private[graft] def dupNgramFractionStages(
       s: SparkSession, d: String): Seq[(String, DataFrame)] = {
@@ -1730,10 +1724,9 @@ object Dedup {
   def containmentPairs(s: SparkSession, d: String): DataFrame =
     containmentPairsOf(
       graft.TrackedCaches.track(cappedShingles(s, d).cache()),
-      broadcastSizes = sizesBroadcastOn(s) &&
-        docBytes(s, d) <= SizesBroadcastMaxDocBytes)
+      broadcastSizes = sizesFit(s, d))
 
-  /** [[containmentPairs]] pipeline prefixes for [[graft.Decompose]] (same
+  /** [[containmentPairs]] pipeline prefixes for `graft.Measure decompose` (same
     * convention as [[incrementalDedupStages]]: last stage is the query).
     * The full stage passes the SAME sizes-broadcast gate decision
     * production [[containmentPairs]] makes — a decomposition that timed a
@@ -1749,8 +1742,7 @@ object Dedup {
       .agg(count(lit(1)).as("i"))
     Seq("capped_index" -> sh, "pair_agg" -> inter,
       "full" -> containmentPairsOf(sh,
-        broadcastSizes = sizesBroadcastOn(s) &&
-          docBytes(s, d) <= SizesBroadcastMaxDocBytes))
+        broadcastSizes = sizesFit(s, d)))
   }
 
   /** [[containmentPairs]] over an explicit df-capped shingle frame

@@ -234,8 +234,9 @@ object Retrieval {
     * sub-ceiling terms, capped at [[CandCap]] by shared-rare-term count
     * (bounded heaps via TopKPerKey — never a per-query sort). The rare-term
     * rank window is per-query over its own term list: bounded. */
-  private[graft] def screenCandidates(ix: Bm25Index, queryTerms: DataFrame): DataFrame =
-    screenCandidatesQd(ix, subCeilingQueryDf(ix, queryTerms))
+  private[graft] def screenCandidates(ix: Bm25Index, queryTerms: DataFrame,
+      wavePrune: Boolean = true): DataFrame =
+    screenCandidatesQd(ix, subCeilingQueryDf(ix, queryTerms), wavePrune)
 
   /** Wave-1 candidate oversupply factor: the doc-id prefix probed first is
     * sized to hold an ESTIMATED WaveCandFactor * [[CandCap]] all-rare-term
@@ -335,12 +336,13 @@ object Retrieval {
     *   - Anything unproven re-runs the original full scatter, so the
     *     estimates only ever cost performance, never exactness
     *     (RetrievalSpec A/Bs pruned-vs-flat row-for-row across all three
-    *     routes; `graft.retrieval.wavePrune=off` forces the flat plan).
+    *     routes; `wavePrune = false` forces the flat plan).
     *
     * On a pure-Zipf batch (no common rare terms) the one extra driver
     * aggregate short-circuits to the plain scatter — the cheap exact plan
     * there, the MaxScore-router argument. */
-  private[graft] def screenCandidatesQd(ix: Bm25Index, qd: DataFrame): DataFrame = {
+  private[graft] def screenCandidatesQd(ix: Bm25Index, qd: DataFrame,
+      wavePrune: Boolean = true): DataFrame = {
     import qd.sparkSession.implicits._
     val wr = Window.partitionBy("query_id").orderBy(col("df"), col("term"))
     val rare = qd.withColumn("rrk", row_number().over(wr))
@@ -383,20 +385,12 @@ object Retrieval {
     val sess = qd.sparkSession
     // Routing breadcrumb (observability for RetrievalSpec's engagement
     // assert — the MaxScore plan does the same through its returned stats).
-    def note(v: String): Unit = {
-      // Streaming foreachBatch runs under a CLONED session whose conf is
-      // invisible to the caller — under the diagnostic flag, also print.
-      if (sys.env.contains("GRAFT_EVODIST_TIMING2"))
-        println(s"[evodist] waveStats=$v")
-      sess.conf.set("graft.retrieval.waveStats", v)
-    }
+    def note(v: String): Unit = sess.conf.set("graft.retrieval.waveStats", v)
     def flat(reason: String): DataFrame = {
       note(reason)
       scatter(rare).select("query_id", "doc_id")
     }
-    val on = sess.conf
-      .getOption("graft.retrieval.wavePrune").forall(_ != "off")
-    if (!on) return flat("forced-off")
+    if (!wavePrune) return flat("forced-off")
     val comCeil = SelDfFrac * ix.n
     // ONE collect for the whole routing prelude: the per-query rare rows
     // are batch-arity (<= RareTerms per arrival — the same driver-data
@@ -696,12 +690,6 @@ object Retrieval {
       case None => outA
     }
     val rareF = rare.join(broadcast(sat), Seq("query_id"), "left_anti")
-    if (sys.env.contains("GRAFT_EVODIST_TIMING2")) {
-      // Diagnostic-only proof-coverage census (extra eager jobs).
-      val nq = qd.select("query_id").distinct().count()
-      val nsat = sat.select("query_id").distinct().count()
-      println(s"[evodist] proven=$nsat/$nq arrivals (rest take the exact scatter)")
-    }
     out.unionByName(scatter(rareF)).select("query_id", "doc_id")
   }
 
@@ -1200,12 +1188,6 @@ object Retrieval {
       * as [[org.apache.spark.sql.Observation]] metrics (the fwd aggregate
       * already computes per-doc len), so stats cost no job of their own. */
     def append(docs: DataFrame): Unit = {
-      def mark(tag: String, t0: Long): Long = {
-        if (sys.env.contains("GRAFT_EVODIST_TIMING"))
-          println(f"[evodist] append/$tag ${(System.nanoTime() - t0) / 1e9}%.2f")
-        System.nanoTime()
-      }
-      var t = System.nanoTime()
       // Appending onto a dir someone else's append already tore would
       // compound the damage (and a caller blindly retrying ITS OWN torn
       // append would double the partial rows) — same loud refusal the
@@ -1243,7 +1225,6 @@ object Retrieval {
         tf = postings(docs).cache()
         byBucket(tf).write.partitionBy("bucket").mode("append")
           .parquet(postingsDir)
-        t = mark("postings", t)
         // The dfd and fwd appends both derive from the now-cached tf and
         // land in different dirs — run them as concurrent jobs (the
         // shingleCommit idiom, guide-§2.6 back-fill: the second job's
@@ -1275,7 +1256,6 @@ object Retrieval {
           done.collectFirst { case scala.util.Failure(e) => e }
             .foreach(e => throw e)
         }
-        t = mark("dfd", t)
         val m = obs.get
         val nd = m("nd").asInstanceOf[Long]
         val sl = m("sl") match { case l: Long => l; case _ => 0L }
@@ -1285,7 +1265,7 @@ object Retrieval {
           s"$nd $sl".getBytes("UTF-8"))
         // Delta landed — the append is complete; retire the intent.
         java.nio.file.Files.delete(intentPath)
-        mark("fwd+stats", t); ()
+        ()
       } catch {
         case e: Throwable =>
           // The recovery itself may fail (a census walk racing executor
@@ -1489,12 +1469,6 @@ object Retrieval {
       * index AS CURRENTLY APPENDED — callers order screen-before-append to
       * get the screen-then-ingest evolving semantics. */
     def screen(arrivals: DataFrame): DataFrame = {
-      def mark(tag: String, t0: Long): Long = {
-        if (sys.env.contains("GRAFT_EVODIST_TIMING"))
-          println(f"[evodist] screen/$tag ${(System.nanoTime() - t0) / 1e9}%.2f")
-        System.nanoTime()
-      }
-      var t = System.nanoTime()
       requireNoTornAppend()
       val qt = postings(arrivals)
         .select(col("doc_id").as("query_id"), col("term"))
@@ -1503,7 +1477,6 @@ object Retrieval {
       // that turns both standing-side scans into partition-pruned reads.
       val qb = qt.select(pmod(xxhash64(col("term")), lit(NumBuckets.toLong))
           .as("bucket")).distinct().collect().map(_.getLong(0))
-      t = mark("qb", t)
       // CACHE the pruned views for the batch: stage 1 drives several
       // driver actions (term-class collects, the doc-mask, the wave
       // percentile, the kernel slice) and each would otherwise re-read
@@ -1530,27 +1503,17 @@ object Retrieval {
       // so it neither caches nor counts: the expensive stage-1 internals
       // (kout / topA / topB) carry their own caches.
       val qd = graft.TrackedCaches.track(subCeilingQueryDf(bix, qt).cache())
-      var cand = screenCandidatesQd(bix, qd)
-      t = mark("stage1", t)
-      if (sys.env.contains("GRAFT_EVODIST_TIMING2")) {
-        // Diagnostic-only eager attribution (changes the plan: extra cache
-        // + count) — never on in a measured bench run.
-        cand = graft.TrackedCaches.track(cand.cache())
-        cand.count()
-        t = mark("stage1-eval", t)
-      }
+      val cand = screenCandidatesQd(bix, qd)
       val scores = scoreCandidatesQd(bix, s.read.parquet(fwdDir), qd, cand)
       val top = graft.plans.TopKPerKey.topKPerKey(scores, 1, Seq("query_id"),
           Seq("score" -> false, "doc_id" -> true))
         .select(col("query_id").as("doc_id"), col("doc_id").as("top_match"),
           col("score").as("top_score"))
-      val out = arrivals.select(col("doc_id"))
+      arrivals.select(col("doc_id"))
         .join(top, Seq("doc_id"), "left")
         .select(col("doc_id"),
           coalesce(col("top_match"), lit(-1L)).as("top_match"),
           coalesce(col("top_score"), lit(0.0)).as("top_score"))
-      mark("stage2-lazy", t)
-      out
     }
   }
 
@@ -2336,19 +2299,6 @@ object Retrieval {
     import s.implicits._
     val nd = ix.tf.groupBy("doc_id").agg(count(lit(1)).as("nterms"))
     val qn = queryTerms.groupBy("query_id").agg(count(lit(1)).as("qterms"))
-    // Route-mode override for controlled A/B measurement (the screenMode
-    // discipline): "scatter" short-circuits to the single-pass
-    // hybridScatterLists plan with ZERO routing work — no driver stats
-    // collects, no theta phase — so the routed build's full overhead is
-    // measurable as one isolated pair. Exactness is route-invariant
-    // (RetrievalSpec gates it); only cost moves.
-    val routeMode = s.conf.getOption("graft.retrieval.hybridRoute")
-      .orElse(sys.env.get("GRAFT_HYBRID_ROUTE")).getOrElse("auto")
-    if (routeMode == "scatter") {
-      val (bm, jac) = hybridScatterLists(ix, queryTerms, nd, qn)
-      return HybridPlan(fuseLists(bm, jac), Map.empty, Map.empty,
-        Map.empty, Set.empty)
-    }
     val qtSub = subCeilingQueryDf(ix, queryTerms)
       .select("query_id", "term", "df")
     val qtPairs = qtSub.select("query_id", "term")

@@ -686,7 +686,7 @@ object Similarity {
   def randProjection(s: SparkSession, d: String): DataFrame =
     randProjectionStages(s, d).last._2
 
-  /** [[randProjection]] pipeline prefixes for [[graft.Decompose]] (same
+  /** [[randProjection]] pipeline prefixes for `graft.Measure decompose` (same
     * convention as the dedup `*Stages`: last stage is the query). */
   private[graft] def randProjectionStages(
       s: SparkSession, d: String): Seq[(String, DataFrame)] = {

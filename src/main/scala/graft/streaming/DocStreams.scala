@@ -306,24 +306,26 @@ object DocStreams {
     * under the broadcast gate the corpus signature/band/digest index is
     * snapshotted (collected from the SAME distributed frames the other
     * strategy probes) and each micro-batch screens in one mapPartitions
-    * pass; `graft.dedup.screenMode` = broadcast|distributed overrides.
-    * StreamingSpec holds both modes row-identical end-to-end. */
-  def streamIngestDedup(s: SparkSession, d: String): DataFrame = {
+    * pass. StreamingSpec holds both strategies row-identical end-to-end
+    * through [[streamIngestDedupUnder]]. */
+  def streamIngestDedup(s: SparkSession, d: String): DataFrame =
+    streamIngestDedupUnder(s, d, graft.llm.Retrieval.BroadcastScreenMaxBytes)
+
+  /** [[streamIngestDedup]] with the broadcast ceiling (corpus text bytes)
+    * as a parameter: `Long.MaxValue` forces the broadcast screen, `0L` the
+    * distributed one. */
+  private[graft] def streamIngestDedupUnder(s: SparkSession, d: String,
+      screenMaxBytes: Long): DataFrame = {
     import java.nio.file._
     val dir = stageDocs(s, d)
     val corpus = Tables.documents(s, d).filter(col("doc_id") % 5 =!= 0)
     // The standing corpus index, built once and reused by every micro-batch:
     // band rows + signatures for the near-dup join, digests for exact dup.
     val rows = Dedup.NumHashes / Dedup.Bands
-    val mode = s.conf.getOption("graft.dedup.screenMode").getOrElse("auto")
-    val useBroadcast = mode match {
-      case "broadcast" => true
-      case "distributed" => false
-      case _ =>
-        val st = corpus.agg(count(lit(1)).as("n"),
-          sum(length(col("text"))).as("bytes")).head()
-        st.getLong(0) == 0L ||
-          st.getLong(1) <= graft.llm.Retrieval.BroadcastScreenMaxBytes
+    val useBroadcast = {
+      val st = corpus.agg(count(lit(1)).as("n"),
+        sum(length(col("text"))).as("bytes")).head()
+      st.getLong(0) == 0L || st.getLong(1) <= screenMaxBytes
     }
 
     var snapOpt: Option[org.apache.spark.broadcast.Broadcast[_]] = None
@@ -692,9 +694,16 @@ object DocStreams {
     * whole screen runs as one mapPartitions pass against a broadcast index
     * snapshot (zero shuffles per micro-batch); above it the distributed
     * postings-probe kernel runs unchanged. Identical verdicts either way —
-    * StreamingSpec replays the gate end-to-end in both modes and asserts
-    * row equality. */
-  def streamDecontam(s: SparkSession, d: String): DataFrame = {
+    * StreamingSpec replays the gate end-to-end on both sides (through
+    * [[streamDecontamUnder]]) and asserts row equality. */
+  def streamDecontam(s: SparkSession, d: String): DataFrame =
+    streamDecontamUnder(s, d, graft.llm.Retrieval.BroadcastScreenMaxBytes)
+
+  /** [[streamDecontam]] with the broadcast ceiling (corpus text bytes) as
+    * a parameter: `Long.MaxValue` forces the broadcast screen, `0L` the
+    * distributed one. */
+  private[graft] def streamDecontamUnder(s: SparkSession, d: String,
+      screenMaxBytes: Long): DataFrame = {
     import java.nio.file._
     import graft.llm.Retrieval
     val dir = stageDocs(s, d)
@@ -702,20 +711,15 @@ object DocStreams {
       .select("doc_id", "text")
     // Physical-strategy selection by INDEX SIZE (the broadcast-join
     // philosophy — see the Retrieval "Broadcast screening" comment): a
-    // corpus whose text payload fits Retrieval.BroadcastScreenMaxBytes is
-    // screened by the zero-shuffle broadcast snapshot (one mapPartitions
-    // pass per micro-batch); anything larger keeps the distributed
-    // postings-probe kernel. graft.retrieval.screenMode=broadcast|
-    // distributed overrides for A/B measurement (RetrievalSpec holds the
-    // two paths bit-identical; the ScaleTest ladder measures both).
-    val mode = s.conf.getOption("graft.retrieval.screenMode").getOrElse("auto")
-    val useBroadcast = mode match {
-      case "broadcast" => true
-      case "distributed" => false
-      case _ =>
-        val st = corpus.agg(count(lit(1)).as("n"),
-          sum(length(col("text"))).as("bytes")).head()
-        st.getLong(0) == 0L || st.getLong(1) <= Retrieval.BroadcastScreenMaxBytes
+    // corpus whose text payload fits the ceiling is screened by the
+    // zero-shuffle broadcast snapshot (one mapPartitions pass per
+    // micro-batch); anything larger keeps the distributed postings-probe
+    // kernel (StreamingSpec holds the two paths bit-identical; the
+    // ScaleTest ladder measures both).
+    val useBroadcast = {
+      val st = corpus.agg(count(lit(1)).as("n"),
+        sum(length(col("text"))).as("bytes")).head()
+      st.getLong(0) == 0L || st.getLong(1) <= screenMaxBytes
     }
 
     var snapOpt: Option[org.apache.spark.broadcast.Broadcast[_]] = None
@@ -960,15 +964,8 @@ object DocStreams {
       graft.Fs.deleteRec(base)
     }
     Files.createDirectories(base)
-    def mark(tag: String, t0: Long): Long = {
-      if (sys.env.contains("GRAFT_EVODIST_TIMING"))
-        println(f"[evodist] gate/$tag ${(System.nanoTime() - t0) / 1e9}%.2f")
-      System.nanoTime()
-    }
-    var tg = System.nanoTime()
     val inc = new Retrieval.EvolvingDistIndex(s, base.toString)
     inc.append(corpus) // the one-time seed build — corpus-scale, like buildIndex
-    tg = mark("seed", tg)
     graft.plans.TopKPerKey.ensureRegistered(s)
     def verdicts(batch: DataFrame): DataFrame =
       inc.screen(batch.select(col("doc_id"), col("text")))
@@ -980,11 +977,9 @@ object DocStreams {
     val q = stream.writeStream.foreachBatch {
       (batch: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row],
        batchId: Long) =>
-        var tb = System.nanoTime()
         val b = batch.toDF()
         verdicts(b).write.mode("overwrite")
           .parquet(base.resolve(s"v$batchId").toString)
-        tb = mark(s"verdict$batchId", tb)
         // Ingest AFTER the screen: the NEXT batch sees this one.
         inc.append(b.select(col("doc_id"), col("text")))
         graft.TrackedCaches.release()

@@ -282,9 +282,16 @@ object VecStreams {
     * payload is under [[graft.llm.Retrieval.BroadcastScreenMaxBytes]]
     * broadcasts its trained index and screens each micro-batch in one
     * mapPartitions pass; larger corpora keep the distributed probed-cells
-    * kernel. `graft.similarity.screenMode` = broadcast|distributed
-    * overrides for A/B measurement; verdicts are identical either way. */
-  def streamVecIngest(s: SparkSession, d: String): DataFrame = {
+    * kernel. Verdicts are identical either way (StreamingSpec replays
+    * both sides through [[streamVecIngestUnder]]). */
+  def streamVecIngest(s: SparkSession, d: String): DataFrame =
+    streamVecIngestUnder(s, d, graft.llm.Retrieval.BroadcastScreenMaxBytes)
+
+  /** [[streamVecIngest]] with the broadcast ceiling (corpus embedding
+    * bytes) as a parameter: `Long.MaxValue` forces the broadcast screen,
+    * `0L` the distributed one. */
+  private[graft] def streamVecIngestUnder(s: SparkSession, d: String,
+      screenMaxBytes: Long): DataFrame = {
     import java.nio.file._
     val dir = stageVecs(s, d)
     val corpus = Tables.embeddings(s, d).filter(col("vec_id") % 5 =!= 0)
@@ -297,14 +304,9 @@ object VecStreams {
     val cents = Similarity.trainCentroids(sx,
       Similarity.seedCentroidsOf(corpus, sx, k), nVec, k)
 
-    val mode = s.conf.getOption("graft.similarity.screenMode").getOrElse("auto")
     val dims = if (nVec == 0) 0L
       else corpus.select(size(col("embedding"))).head().getInt(0).toLong
-    val useBroadcast = mode match {
-      case "broadcast" => true
-      case "distributed" => false
-      case _ => nVec * dims * 4 <= graft.llm.Retrieval.BroadcastScreenMaxBytes
-    }
+    val useBroadcast = nVec * dims * 4 <= screenMaxBytes
 
     var snapOpt: Option[org.apache.spark.broadcast.Broadcast[_]] = None
     val screen: DataFrame => DataFrame =

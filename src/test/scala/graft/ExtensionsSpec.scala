@@ -1,29 +1,11 @@
 package graft
 
-import graft.functions.{GraftExtensions, SelfCosine}
-import org.apache.spark.sql.SparkSession
+import graft.functions.SelfCosine
 import org.apache.spark.sql.functions._
-import org.scalatest.funsuite.AnyFunSuite
 
-/** SparkSessionExtensions: SQL function registration + optimizer rule. Own
-  * session (extensions bind at build time). */
-class ExtensionsSpec extends AnyFunSuite {
-  // getOrCreate would silently return another suite's session (no
-  // extensions); clearing forces a fresh session (shared SparkContext is fine).
-  lazy val spark: SparkSession = {
-    SparkSession.clearActiveSession()
-    SparkSession.clearDefaultSession()
-    SparkSession.builder()
-    .master("local[2]")
-    .appName("graft-ext-test")
-    .config("spark.sql.shuffle.partitions", "2")
-    .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.local.dir", graft.ShuffleDir.path)
-      .config("spark.shuffle.sort.bypassMergeThreshold", "1")
-    .config("spark.ui.enabled", "false")
-    .withExtensions(new GraftExtensions)
-    .getOrCreate()
-  }
+/** SparkSessionExtensions: SQL function registration + optimizer rule, on
+  * the factory session that installs them. */
+class ExtensionsSpec extends SparkSpec {
 
   test("float_cosine is callable from SQL") {
     val r = spark.sql(
@@ -76,7 +58,7 @@ class ExtensionsSpec extends AnyFunSuite {
     // The rule must not be demonstration-only surface: the quantizer's
     // self_cos sanity column is written as FloatCosine(x, x) and must be
     // strength-reduced in the optimized plan of the session Verify/Bench run
-    // (this suite's session installs the same extensions they do).
+    // (the factory session they all build).
     val df = graft.llm.Similarity.quantizeVectors(spark, "/root/testdata/sf0.001")
     val optimized = df.queryExecution.optimizedPlan
     // Traverse the WHOLE plan: the query ends in orderBy, so the expression

@@ -1,0 +1,55 @@
+package graft
+
+import java.nio.file.{Files, Path, Paths}
+import scala.jdk.CollectionConverters._
+
+import graft.functions.SelfCosine
+
+/** The session recipe and the operator library's configuration surface:
+  * one place builds sessions, and the library reads no switch from the
+  * environment or the session conf. */
+class GraftSessionSpec extends SparkSpec {
+
+  private def scalaFiles(root: String): Seq[Path] = {
+    val dir = Paths.get(root)
+    assert(Files.isDirectory(dir), s"$root not found (run from the repo root)")
+    val walk = Files.walk(dir)
+    try walk.iterator.asScala.filter(_.toString.endsWith(".scala")).toList
+    finally walk.close()
+  }
+
+  private def text(p: Path): String = new String(Files.readAllBytes(p), "UTF-8")
+
+  test("only GraftSession.scala calls the SparkSession builder") {
+    val needle = "SparkSession" + ".builder"
+    val sites = (scalaFiles("src/main/scala") ++ scalaFiles("src/test/scala"))
+      .filter(p => text(p).contains(needle))
+      .map(_.getFileName.toString)
+    assert(sites == Seq("GraftSession.scala"), s"builders outside the factory: $sites")
+  }
+
+  test("the factory session installs the extensions and sizes shuffles to its cores") {
+    assert(spark.conf.get("spark.sql.shuffle.partitions") == Cpus.toString)
+    assert(spark.sparkContext.master == s"local[$Cpus]")
+    val optimized = llm.Similarity.quantizeVectors(spark, Sf).queryExecution.optimizedPlan
+    val rewritten = optimized.collect {
+      case p if p.expressions.exists(_.exists(_.isInstanceOf[SelfCosine])) => p
+    }.nonEmpty
+    assert(rewritten, s"SelfCosine not reached by q_vec_quantize: $optimized")
+  }
+
+  test("the operator library reads no env var and no graft.* session conf") {
+    // Writing the waveStats breadcrumb (conf.set) is output, not a switch.
+    val reads = Seq(
+      "sys\\.env".r,
+      "System\\.getenv".r,
+      """conf\s*\.\s*(get|getOption)\s*\(\s*"graft\.""".r)
+    val offenders = Seq("llm", "ops", "streaming", "plans", "functions")
+      .flatMap(d => scalaFiles(s"src/main/scala/graft/$d"))
+      .flatMap { p =>
+        val t = text(p)
+        reads.flatMap(_.findAllMatchIn(t)).map(m => s"${p.getFileName}: ${m.matched}")
+      }
+    assert(offenders.isEmpty, s"library switches: ${offenders.mkString("; ")}")
+  }
+}

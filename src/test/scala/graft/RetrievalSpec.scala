@@ -538,15 +538,12 @@ class RetrievalSpec extends SparkSpec with AdaptiveSparkPlanHelper {
       .filter(col("doc_id") < 64 ||
         (col("doc_id") >= 1000 && col("doc_id") < 1064))
       .select(col("doc_id").as("query_id"), col("term"))
-    def cands(): Set[(Long, Long)] =
-      Retrieval.screenCandidates(ix, qt).collect()
+    def cands(wavePrune: Boolean = true): Set[(Long, Long)] =
+      Retrieval.screenCandidates(ix, qt, wavePrune).collect()
         .map(r => (r.getLong(0), r.getLong(1))).toSet
     val waved = cands()
     val stats = spark.conf.get("graft.retrieval.waveStats")
-    spark.conf.set("graft.retrieval.wavePrune", "off")
-    val flat =
-      try cands()
-      finally spark.conf.unset("graft.retrieval.wavePrune")
+    val flat = cands(wavePrune = false)
     assert(waved == flat, "class-split candidates diverged from the scatter")
     // Engagement evidence: the commons bitmask was built (the pool dfs
     // tie at two values, so lexicographic tie-breaks concentrate every
@@ -578,17 +575,14 @@ class RetrievalSpec extends SparkSpec with AdaptiveSparkPlanHelper {
     val ix = Retrieval.buildIndex(docs, cache = true)
     val qt = ix.tf.filter(col("doc_id") < 64)
       .select(col("doc_id").as("query_id"), col("term"))
-    def cands(): Set[(Long, Long)] =
-      Retrieval.screenCandidates(ix, qt).collect()
+    def cands(wavePrune: Boolean = true): Set[(Long, Long)] =
+      Retrieval.screenCandidates(ix, qt, wavePrune).collect()
         .map(r => (r.getLong(0), r.getLong(1))).toSet
     val routed = cands()
     val stats = spark.conf.get("graft.retrieval.waveStats")
     assert(stats.contains("underCap"),
       s"expected the degenerate-selectivity flat route, got $stats")
-    spark.conf.set("graft.retrieval.wavePrune", "off")
-    val flat =
-      try cands()
-      finally spark.conf.unset("graft.retrieval.wavePrune")
+    val flat = cands(wavePrune = false)
     assert(routed == flat, "underCap route diverged from the scatter")
     graft.TrackedCaches.release()
   }
@@ -616,17 +610,14 @@ class RetrievalSpec extends SparkSpec with AdaptiveSparkPlanHelper {
     val ix = Retrieval.buildIndex(docs, cache = true)
     val qt = ix.tf.filter(col("doc_id") < 64)
       .select(col("doc_id").as("query_id"), col("term"))
-    def cands(): Set[(Long, Long)] =
-      Retrieval.screenCandidates(ix, qt).collect()
+    def cands(wavePrune: Boolean = true): Set[(Long, Long)] =
+      Retrieval.screenCandidates(ix, qt, wavePrune).collect()
         .map(r => (r.getLong(0), r.getLong(1))).toSet
     val routed = cands()
     val stats = spark.conf.get("graft.retrieval.waveStats")
     assert(stats.contains("lowCoverage"),
       s"expected the low-coverage flat route, got $stats")
-    spark.conf.set("graft.retrieval.wavePrune", "off")
-    val flat =
-      try cands()
-      finally spark.conf.unset("graft.retrieval.wavePrune")
+    val flat = cands(wavePrune = false)
     assert(routed == flat, "lowCoverage route diverged from the scatter")
     graft.TrackedCaches.release()
   }

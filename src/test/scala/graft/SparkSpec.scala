@@ -3,21 +3,11 @@ package graft
 import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
 
-/** Shared session per suite (spark_guide.md): local[4], UTC, small shuffle.
-  * GraftExtensions installed like the shipped Verify/Bench sessions, so specs
-  * exercise the same optimizer surface the driver runs (CosineSelfRule,
-  * SQL-registered float_cosine). */
+/** Shared session per suite: the factory session ([[GraftSession.build]])
+  * at 4 cores, so specs exercise the same optimizer surface Bench and
+  * Verify run (CosineSelfRule, SQL-registered float_cosine). */
 trait SparkSpec extends AnyFunSuite {
   val Sf = "/root/testdata/sf0.001"
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .appName("graft-test")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.local.dir", graft.ShuffleDir.path)
-      .config("spark.shuffle.sort.bypassMergeThreshold", "1")
-    .config("spark.sql.warehouse.dir", "/tmp/graft_warehouse")
-    .config("spark.ui.enabled", "false")
-    .withExtensions(new graft.functions.GraftExtensions)
-    .getOrCreate()
+  val Cpus = 4
+  lazy val spark: SparkSession = GraftSession.build(Cpus)
 }

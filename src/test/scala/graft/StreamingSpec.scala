@@ -506,15 +506,12 @@ class StreamingSpec extends SparkSpec {
   test("ingest-dedup broadcast screen == distributed screen, end-to-end bit-for-bit") {
     // Third gate under the size-based strategy contract: identical
     // exact-dup flags and near-dup sources from both physical screens.
-    def run(mode: String) = {
-      spark.conf.set("graft.dedup.screenMode", mode)
-      try graft.streaming.DocStreams.streamIngestDedup(spark, Sf).collect()
-      finally spark.conf.unset("graft.dedup.screenMode")
-    }
-    val bc = run("broadcast")
+    def run(ceiling: Long) =
+      graft.streaming.DocStreams.streamIngestDedupUnder(spark, Sf, ceiling).collect()
+    val bc = run(Long.MaxValue)
     graft.TrackedCaches.release()
     spark.catalog.clearCache()
-    val dist = run("distributed")
+    val dist = run(0L)
     graft.TrackedCaches.release()
     spark.catalog.clearCache()
     assert(bc.nonEmpty && bc.length == dist.length)
@@ -527,15 +524,12 @@ class StreamingSpec extends SparkSpec {
     // Same strategy-selection contract as the decontam gate: the broadcast
     // snapshot screen and the distributed probed-cells kernel must emit
     // IDENTICAL verdicts — same nn_id, same 4-dp cosine, same admits.
-    def run(mode: String) = {
-      spark.conf.set("graft.similarity.screenMode", mode)
-      try graft.streaming.VecStreams.streamVecIngest(spark, Sf).collect()
-      finally spark.conf.unset("graft.similarity.screenMode")
-    }
-    val bc = run("broadcast")
+    def run(ceiling: Long) =
+      graft.streaming.VecStreams.streamVecIngestUnder(spark, Sf, ceiling).collect()
+    val bc = run(Long.MaxValue)
     graft.TrackedCaches.release()
     spark.catalog.clearCache()
-    val dist = run("distributed")
+    val dist = run(0L)
     graft.TrackedCaches.release()
     spark.catalog.clearCache()
     assert(bc.nonEmpty && bc.length == dist.length)
@@ -549,17 +543,15 @@ class StreamingSpec extends SparkSpec {
     // broadcast-join philosophy); both strategies must produce IDENTICAL
     // verdict frames — same top_match, same top_score down to the last
     // 6-dp micro-unit, same admits — or the auto threshold would change
-    // answers, not just plans. Forcing each mode through the session conf
-    // runs the real gate end-to-end (stream machinery included) twice.
-    def run(mode: String) = {
-      spark.conf.set("graft.retrieval.screenMode", mode)
-      try graft.streaming.DocStreams.streamDecontam(spark, Sf).collect()
-      finally spark.conf.unset("graft.retrieval.screenMode")
-    }
-    val bc = run("broadcast")
+    // answers, not just plans. Forcing each side through the broadcast
+    // ceiling runs the real gate end-to-end (stream machinery included)
+    // twice.
+    def run(ceiling: Long) =
+      graft.streaming.DocStreams.streamDecontamUnder(spark, Sf, ceiling).collect()
+    val bc = run(Long.MaxValue)
     graft.TrackedCaches.release()
     spark.catalog.clearCache()
-    val dist = run("distributed")
+    val dist = run(0L)
     graft.TrackedCaches.release()
     spark.catalog.clearCache()
     assert(bc.nonEmpty, "decontam verdicts must be non-empty at the test SF")
@@ -586,10 +578,8 @@ class StreamingSpec extends SparkSpec {
     intercept[org.apache.spark.SparkException](snap.get.value)
     graft.TrackedCaches.release()
     spark.catalog.clearCache()
-    spark.conf.set("graft.retrieval.screenMode", "broadcast")
-    val static0 =
-      try graft.streaming.DocStreams.streamDecontam(spark, Sf).collect()
-      finally spark.conf.unset("graft.retrieval.screenMode")
+    val static0 = graft.streaming.DocStreams
+      .streamDecontamUnder(spark, Sf, Long.MaxValue).collect()
     graft.TrackedCaches.release()
     spark.catalog.clearCache()
     assert(evolving.length == static0.length, "arrival coverage differs")
@@ -725,21 +715,15 @@ class StreamingSpec extends SparkSpec {
       assert(e.getMessage.toLowerCase.contains("destroy"),
         s"$name: snapshot was not destroyed: ${e.getMessage}")
     }
-    def gate[A](conf: String, run: => A): A = {
-      spark.conf.set(conf, "broadcast")
-      try { run } finally spark.conf.unset(conf)
-    }
+    val broadcastSide = Long.MaxValue
     graft.streaming.DocStreams.lastSnapshot = None
-    gate("graft.retrieval.screenMode",
-      graft.streaming.DocStreams.streamDecontam(spark, Sf).collect())
+    graft.streaming.DocStreams.streamDecontamUnder(spark, Sf, broadcastSide).collect()
     assertDestroyed("decontam", graft.streaming.DocStreams.lastSnapshot)
     graft.streaming.DocStreams.lastSnapshot = None
-    gate("graft.dedup.screenMode",
-      graft.streaming.DocStreams.streamIngestDedup(spark, Sf).collect())
+    graft.streaming.DocStreams.streamIngestDedupUnder(spark, Sf, broadcastSide).collect()
     assertDestroyed("ingest-dedup", graft.streaming.DocStreams.lastSnapshot)
     graft.streaming.VecStreams.lastSnapshot = None
-    gate("graft.similarity.screenMode",
-      graft.streaming.VecStreams.streamVecIngest(spark, Sf).collect())
+    graft.streaming.VecStreams.streamVecIngestUnder(spark, Sf, broadcastSide).collect()
     assertDestroyed("vec-ingest", graft.streaming.VecStreams.lastSnapshot)
     graft.TrackedCaches.release()
     spark.catalog.clearCache()
