@@ -47,8 +47,6 @@ final class BroadcastRegimeExceeded(msg: String)
 
 object DocStreams {
 
-  private val stageLock = new Object
-
   /** The most recent gate run's broadcast index snapshot — exposed so
     * StreamingSpec can assert the lifecycle: once a gate's verdict frame is
     * parquet-backed, its snapshot must be DESTROYED (driver + executor
@@ -65,55 +63,11 @@ object DocStreams {
     StructField("doc_id", LongType),
     StructField("text", StringType)))
 
-  /** Stage the arriving doc slice (doc_id % 5 == 0) as an mtime-ordered
-    * landing zone of contiguous doc_id ranges — the same staged-chunk
-    * discipline as [[EventStreams.stageEvents]]. The BASE DIRECTORY itself
-    * is keyed by source dir (not just the staged-marker), so staging
-    * dataset B can never wipe dataset A's zone out from under A's
-    * checkpointed streams — the multi-SF ScaleTest path switches zones
-    * within one JVM and each zone must stay valid across the switch. */
-  def stageDocs(s: SparkSession, d: String, nFiles: Int = 4): String = stageLock.synchronized {
-    import java.nio.file._
-    val base = Paths.get(System.getProperty("java.io.tmpdir"),
-      s"graft_stream_docs_${d.replaceAll("[^a-zA-Z0-9.]", "_")}")
-    val marker = base.resolve("_staged")
-    if (Files.exists(marker)) return base.toString
-    if (Files.exists(base)) {
-      graft.Fs.deleteRec(base)
-    }
-    Files.createDirectories(base)
-    val docs = Tables.documents(s, d).filter(col("doc_id") % 5 === 0)
-      .select(col("doc_id"), col("text")).cache()
-    // A degenerate corpus can have an EMPTY arrival slice — min/max come
-    // back null and unguarded unboxing would NPE. Stage a zero-chunk zone
-    // instead; the stream mains return an empty verdict frame for it.
-    val bounds = docs.agg(min("doc_id"), max("doc_id")).head()
-    if (bounds.isNullAt(0)) {
-      docs.unpersist()
-      Files.createFile(marker)
-      return base.toString
-    }
-    val Array(lo, hi) = bounds.toSeq.map(_.asInstanceOf[Long]).toArray
-    val span = (hi - lo) / nFiles + 1
-    (0 until nFiles).foreach { i =>
-      val tmp = base.resolve(s"_stage_$i")
-      docs.filter(col("doc_id") >= lo + i * span && col("doc_id") < lo + (i + 1) * span)
-        .coalesce(1).write.mode("overwrite").parquet(tmp.toString)
-      // A sparse doc_id space can leave a range empty (no part file) —
-      // skip it rather than stage a zero-row chunk or throw.
-      val part = graft.Fs.firstWithSuffix(tmp, ".parquet")
-      if (part.isDefined) {
-        val dst = base.resolve(f"chunk_$i%02d.parquet")
-        Files.move(part.get, dst, StandardCopyOption.REPLACE_EXISTING)
-        Files.setLastModifiedTime(dst,
-          attribute.FileTime.fromMillis(1000000000000L + i * 60000L))
-      }
-      graft.Fs.deleteRec(tmp)
-    }
-    docs.unpersist()
-    Files.createFile(marker)
-    base.toString
-  }
+  /** Stage the arriving doc slice (doc_id % 5 == 0) as a [[Zone]] chunked
+    * on doc_id. */
+  def stageDocs(s: SparkSession, d: String): String =
+    Zone.stage(s, d, "documents", "doc_id",
+      Tables.documents(s, d).filter(col("doc_id") % 5 === 0).select("doc_id", "text"))
 
   /** One micro-batch's screening: verdicts for an arrival frame against the
     * standing corpus index. Factored out of the stream so PlanShapeSpec can
@@ -316,7 +270,6 @@ object DocStreams {
     * distributed one. */
   private[graft] def streamIngestDedupUnder(s: SparkSession, d: String,
       screenMaxBytes: Long): DataFrame = {
-    import java.nio.file._
     val dir = stageDocs(s, d)
     val corpus = Tables.documents(s, d).filter(col("doc_id") % 5 =!= 0)
     // The standing corpus index, built once and reused by every micro-batch:
@@ -362,37 +315,15 @@ object DocStreams {
           screenBatch(batch, corpusSig, corpusBands, corpusDigests)
       }
 
-    val outBase = Paths.get(System.getProperty("java.io.tmpdir"), "graft_stream_ingest")
-    if (Files.exists(outBase)) {
-      graft.Fs.deleteRec(outBase)
+    val outBase = Zone.tmp("graft_stream_ingest")
+    val latest = Zone.run(s, dir, docSchema, outBase, Zone.SliceShuffles) {
+      (batch, batchId) => Zone.put(screen(batch), outBase, batchId)
     }
-    Files.createDirectories(outBase)
-    @volatile var latest = -1L
-    val stream = s.readStream.schema(docSchema)
-      .option("maxFilesPerTrigger", 2).parquet(dir)
-    val q = stream.writeStream.foreachBatch {
-      (batch: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row],
-       batchId: Long) =>
-        screen(batch.toDF())
-          .write.mode("overwrite")
-          .parquet(outBase.resolve(s"v$batchId").toString)
-        latest = batchId
-        ()
-    }
-    // Batch work inside foreachBatch inherits the session's shuffle
-    // partitioning; size it to the micro-batch like the sibling streaming
-    // queries (micro-batches are arrival-slice-scale, not corpus-scale).
-    val saved = s.conf.get("spark.sql.shuffle.partitions")
-    s.conf.set("spark.sql.shuffle.partitions", "8")
-    try {
-      val qs = q.start()
-      try qs.processAllAvailable() finally qs.stop()
-    } finally s.conf.set("spark.sql.shuffle.partitions", saved)
     // The incrementality gate (>= 2 micro-batches) applies only when the
     // zone has enough chunks for two triggers: a sparse doc_id space can
     // legitimately stage fewer than 3 non-empty chunks (stageDocs skips
     // empty ranges), and one-batch screening of such a corpus is correct.
-    val nChunks = graft.Fs.countWithSuffix(Paths.get(dir), ".parquet")
+    val nChunks = Zone.chunks(dir)
     require(latest >= 1 || nChunks <= 2,
       s"ingest dedup ran ${latest + 1} micro-batches over $nChunks chunks — " +
         "need >= 2 batches for the screening to actually be incremental")
@@ -409,8 +340,7 @@ object DocStreams {
       // Verdicts are parquet-backed; the snapshot can never be probed
       // again — destroy it now (see [[lastSnapshot]]).
       snapOpt.foreach(_.destroy())
-      s.read.parquet((0L to latest).map(b => outBase.resolve(s"v$b").toString): _*)
-        .orderBy("doc_id")
+      Zone.versions(s, outBase, latest, "doc_id")
     }
   }
 
@@ -440,78 +370,55 @@ object DocStreams {
     import java.nio.file._
     import graft.llm.Dedup
     val dir = stageDocs(s, d)
-    val tmp = System.getProperty("java.io.tmpdir")
-    val pristine = s"$tmp/graft_shingle_stream_pristine"
+    val pristine = Zone.tmp("graft_shingle_stream_pristine")
     Dedup.shingleBuildIfStale(s, d, pristine)
     // Empty arrival slice: nothing will probe or commit — serve the empty
     // verdict frame straight off the pristine index, no working clone.
-    if (graft.Fs.countWithSuffix(Paths.get(dir), ".parquet") == 0)
+    if (Zone.chunks(dir) == 0)
       return Dedup.shingleProbe(s, pristine,
         Tables.documents(s, d).select(col("doc_id"), col("text")).limit(0))
-    val base = Paths.get(tmp, "graft_stream_dedup_evolving_ix")
-    graft.Fs.deleteRec(base)
+    val base = Zone.tmp("graft_stream_dedup_evolving_ix")
+    graft.Fs.deleteRec(Paths.get(base))
     // Hard-link clone: shingleCommit is append-only (existing files are
     // never rewritten), so links give pristine-isolation at metadata cost
     // however big the standing index grows.
-    graft.Fs.linkRec(Paths.get(pristine), base)
+    graft.Fs.linkRec(Paths.get(pristine), Paths.get(base))
     // The clone bypasses Spark: drop any cached read of a previous call's
     // working copy, which Spark would match to this call's reads by path.
-    s.catalog.refreshByPath(base.toString)
-    val outBase = Paths.get(tmp, "graft_stream_dedup_evolving")
-    if (Files.exists(outBase)) {
-      graft.Fs.deleteRec(outBase)
-    }
-    Files.createDirectories(outBase)
-    @volatile var latest = -1L
-    val stream = s.readStream.schema(docSchema)
-      .option("maxFilesPerTrigger", 2).parquet(dir)
-    val q = stream.writeStream.foreachBatch {
-      (batch: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row],
-       batchId: Long) =>
-        val b = batch.toDF().select(col("doc_id"), col("text"))
-        val out = outBase.resolve(s"v$batchId").toString
+    s.catalog.refreshByPath(base)
+    val outBase = Zone.tmp("graft_stream_dedup_evolving")
+    val latest = Zone.run(s, dir, docSchema, outBase, Zone.SliceShuffles) {
+      (batch, batchId) =>
+        val b = batch.select(col("doc_id"), col("text"))
         // Unordered per-batch verdicts: the combined read-back below is
         // the one place this query sorts.
-        Dedup.shingleProbeUnordered(s, base.toString, b)
-          .write.mode("overwrite").parquet(out)
-        val survivors = s.read.parquet(out)
+        Zone.put(Dedup.shingleProbeUnordered(s, base, b), outBase, batchId)
+        val survivors = s.read.parquet(Zone.version(outBase, batchId))
           .filter(!col("is_dup")).select("doc_id")
-        Dedup.shingleCommit(s, base.toString,
+        Dedup.shingleCommit(s, base,
           b.join(survivors, Seq("doc_id"), "left_semi"))
-        latest = batchId
-        ()
     }
-    val saved = s.conf.get("spark.sql.shuffle.partitions")
-    s.conf.set("spark.sql.shuffle.partitions", "8")
-    val qs = q.start()
-    try { try qs.processAllAvailable() finally qs.stop() }
-    finally s.conf.set("spark.sql.shuffle.partitions", saved)
-    val nChunks = graft.Fs.countWithSuffix(Paths.get(dir), ".parquet")
+    val nChunks = Zone.chunks(dir)
     if (latest < 0) {
       // Empty arrival slice: nothing probed, nothing committed.
-      Dedup.shingleProbe(s, base.toString,
+      Dedup.shingleProbe(s, base,
         Tables.documents(s, d).select(col("doc_id"), col("text")).limit(0))
     } else {
       require(nChunks == 4 && latest == 1,
         s"evolving dedup ran ${latest + 1} batches over $nChunks chunks — " +
           "the oracle's batch arithmetic needs the dense 4-chunk / 2-batch zone")
-      s.read.parquet((0L to latest).map(b => outBase.resolve(s"v$b").toString): _*)
-        .orderBy("doc_id")
+      Zone.versions(s, outBase, latest, "doc_id")
     }
   }
 
   /** Oracle for [[streamDedupEvolving]]: the shared two-phase commit
     * chain ([[graft.llm.Dedup.twoPhaseDedupSql]]) with the batch
     * membership replayed from the staged zone's boundary arithmetic
-    * (chunk = (doc_id − lo) / span, batch = chunk / 2 — exactly
-    * [[streamDecontamEvolvingSql]]'s `ab` block), emitting BOTH batches'
-    * verdicts. */
+    * ([[Zone.batchOfSql]], as in [[streamDecontamEvolvingSql]]), emitting
+    * BOTH batches' verdicts. */
   val streamDedupEvolvingSql: String = graft.llm.Dedup.twoPhaseDedupSql(
-    s"""arrb AS (SELECT a.doc_id, ((a.doc_id - p.lo) // p.span) // 2 AS b
-                 FROM (SELECT doc_id FROM documents WHERE doc_id % 5 = 0) a,
-                      (SELECT lo, (hi - lo) // 4 + 1 AS span FROM
-                         (SELECT min(doc_id) AS lo, max(doc_id) AS hi
-                          FROM documents WHERE doc_id % 5 = 0)) p),
+    s"""arrb AS (${Zone.batchOfSql(
+             "(SELECT doc_id FROM documents WHERE doc_id % 5 = 0)", "doc_id")}),
         a0 AS (SELECT doc_id FROM arrb WHERE b = 0),
         a1 AS (SELECT doc_id FROM arrb WHERE b = 1)""",
     c => s"$c IN (SELECT doc_id FROM a0)",
@@ -538,36 +445,17 @@ object DocStreams {
     * cost is |batch| x model-probe work (model sides broadcast); the corpus
     * is never re-scanned after training. */
   def streamQualityGate(s: SparkSession, d: String): DataFrame = {
-    import java.nio.file._
     val dir = stageDocs(s, d)
     val corpus = Tables.documents(s, d).filter(col("doc_id") % 5 =!= 0)
     val (c2, c1, vocab) =
       TextAnalysis.bigramModel(TextAnalysis.bigramsOf(corpus.select("doc_id", "text")))
-    val outBase = Paths.get(System.getProperty("java.io.tmpdir"), "graft_stream_gate")
-    if (Files.exists(outBase)) {
-      graft.Fs.deleteRec(outBase)
+    val outBase = Zone.tmp("graft_stream_gate")
+    val latest = Zone.run(s, dir, docSchema, outBase, Zone.SliceShuffles) {
+      (batch, batchId) =>
+        Zone.put(TextAnalysis.scorePpl(TextAnalysis.bigramsOf(batch), c2, c1, vocab)
+          .withColumn("admit", col("ppl") <= lit(PplAdmitMax)), outBase, batchId)
     }
-    Files.createDirectories(outBase)
-    @volatile var latest = -1L
-    val stream = s.readStream.schema(docSchema)
-      .option("maxFilesPerTrigger", 2).parquet(dir)
-    val q = stream.writeStream.foreachBatch {
-      (batch: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row],
-       batchId: Long) =>
-        TextAnalysis.scorePpl(TextAnalysis.bigramsOf(batch.toDF()), c2, c1, vocab)
-          .withColumn("admit", col("ppl") <= lit(PplAdmitMax))
-          .write.mode("overwrite")
-          .parquet(outBase.resolve(s"v$batchId").toString)
-        latest = batchId
-        ()
-    }
-    val saved = s.conf.get("spark.sql.shuffle.partitions")
-    s.conf.set("spark.sql.shuffle.partitions", "8")
-    try {
-      val qs = q.start()
-      try qs.processAllAvailable() finally qs.stop()
-    } finally s.conf.set("spark.sql.shuffle.partitions", saved)
-    val nChunks = graft.Fs.countWithSuffix(Paths.get(dir), ".parquet")
+    val nChunks = Zone.chunks(dir)
     require(latest >= 1 || nChunks <= 2,
       s"quality gate ran ${latest + 1} micro-batches over $nChunks chunks — " +
         "need >= 2 batches for the gate to actually be incremental")
@@ -580,8 +468,7 @@ object DocStreams {
         .withColumn("admit", col("ppl") <= lit(PplAdmitMax))
         .orderBy("doc_id")
     else
-      s.read.parquet((0L to latest).map(b => outBase.resolve(s"v$b").toString): _*)
-        .orderBy("doc_id")
+      Zone.versions(s, outBase, latest, "doc_id")
   }
 
   /** Batch oracle for the quality gate: the corpus-trained model scoring the
@@ -704,7 +591,6 @@ object DocStreams {
     * distributed one. */
   private[graft] def streamDecontamUnder(s: SparkSession, d: String,
       screenMaxBytes: Long): DataFrame = {
-    import java.nio.file._
     import graft.llm.Retrieval
     val dir = stageDocs(s, d)
     val corpus = Tables.documents(s, d).filter(col("doc_id") % 5 =!= 0)
@@ -768,23 +654,6 @@ object DocStreams {
         }
       }
 
-    val outBase = Paths.get(System.getProperty("java.io.tmpdir"), "graft_stream_decontam")
-    if (Files.exists(outBase)) {
-      graft.Fs.deleteRec(outBase)
-    }
-    Files.createDirectories(outBase)
-    @volatile var latest = -1L
-    val stream = s.readStream.schema(docSchema)
-      .option("maxFilesPerTrigger", 2).parquet(dir)
-    val q = stream.writeStream.foreachBatch {
-      (batch: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row],
-       batchId: Long) =>
-        screen(batch.toDF())
-          .write.mode("overwrite")
-          .parquet(outBase.resolve(s"v$batchId").toString)
-        latest = batchId
-        ()
-    }
     // Decontam's distributed stage-1 hit scatter is arrivals x posting-list
     // rows — ~6M per batch on this low-selectivity corpus — but the scatter
     // is consumed by map-side partial aggregation INSIDE its stage: the
@@ -808,12 +677,11 @@ object DocStreams {
     // RareTerms 4 -> 3 moved CPU inside noise; batch-count reduction is
     // exhausted (4 staged chunks at maxFilesPerTrigger=2 is already the
     // 2-batch minimum the incrementality gate demands).
-    val saved = s.conf.get("spark.sql.shuffle.partitions")
-    s.conf.set("spark.sql.shuffle.partitions", "8")
-    val qs = q.start()
-    try { try qs.processAllAvailable() finally qs.stop() }
-    finally s.conf.set("spark.sql.shuffle.partitions", saved)
-    val nChunks = graft.Fs.countWithSuffix(Paths.get(dir), ".parquet")
+    val outBase = Zone.tmp("graft_stream_decontam")
+    val latest = Zone.run(s, dir, docSchema, outBase, Zone.SliceShuffles) {
+      (batch, batchId) => Zone.put(screen(batch), outBase, batchId)
+    }
+    val nChunks = Zone.chunks(dir)
     require(latest >= 1 || nChunks <= 2,
       s"decontam gate ran ${latest + 1} micro-batches over $nChunks chunks — " +
         "need >= 2 batches for the screening to actually be incremental")
@@ -826,8 +694,7 @@ object DocStreams {
     else {
       // Parquet-backed verdicts: destroy the snapshot (see [[lastSnapshot]]).
       snapOpt.foreach(_.destroy())
-      s.read.parquet((0L to latest).map(b => outBase.resolve(s"v$b").toString): _*)
-        .orderBy("doc_id")
+      Zone.versions(s, outBase, latest, "doc_id")
     }
   }
 
@@ -860,7 +727,6 @@ object DocStreams {
     * 4-chunk zone (it throws on sparse corpora rather than silently
     * diverging from the oracle's batch arithmetic). */
   def streamDecontamEvolving(s: SparkSession, d: String): DataFrame = {
-    import java.nio.file._
     import graft.llm.Retrieval
     val dir = stageDocs(s, d)
     val corpus = Tables.documents(s, d).filter(col("doc_id") % 5 =!= 0)
@@ -878,19 +744,9 @@ object DocStreams {
     // needs it, not eagerly after every append — the final batch's append
     // would otherwise pay a projection + broadcast nothing ever reads.
     @volatile var stale = false
-    val outBase = Paths.get(System.getProperty("java.io.tmpdir"),
-      "graft_stream_decontam_evolving")
-    if (Files.exists(outBase)) {
-      graft.Fs.deleteRec(outBase)
-    }
-    Files.createDirectories(outBase)
-    @volatile var latest = -1L
-    val stream = s.readStream.schema(docSchema)
-      .option("maxFilesPerTrigger", 2).parquet(dir)
-    val q = stream.writeStream.foreachBatch {
-      (batch: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row],
-       batchId: Long) =>
-        val b = batch.toDF()
+    val outBase = Zone.tmp("graft_stream_decontam_evolving")
+    val latest = Zone.run(s, dir, docSchema, outBase, Zone.SliceShuffles) {
+      (b, batchId) =>
         if (stale) {
           val old = snap
           snap = graft.TrackedCaches.trackBroadcast(
@@ -898,11 +754,9 @@ object DocStreams {
           old.destroy()
           stale = false
         }
-        Retrieval.screenBatchLocal(s, snap, b.select(col("doc_id"), col("text")))
+        Zone.put(Retrieval.screenBatchLocal(s, snap, b.select(col("doc_id"), col("text")))
           .select(col("doc_id"), col("top_match"), col("top_score"),
-            (col("top_score") <= lit(Bm25AdmitMax)).as("admit"))
-          .write.mode("overwrite")
-          .parquet(outBase.resolve(s"v$batchId").toString)
+            (col("top_score") <= lit(Bm25AdmitMax)).as("admit")), outBase, batchId)
         // Ingest the batch into the standing index; the NEXT batch (if any)
         // screens against it. Batch frames are arrival-slice-scale — the
         // collect is |batch|-bounded by construction of the staged zone.
@@ -910,16 +764,9 @@ object DocStreams {
           .map(r => (r.getLong(0), r.getString(1)))
         inc.append(rows.sortBy(_._1).toSeq)
         stale = true
-        latest = batchId
-        ()
     }
-    val saved = s.conf.get("spark.sql.shuffle.partitions")
-    s.conf.set("spark.sql.shuffle.partitions", "8")
-    val qs = q.start()
-    try { try qs.processAllAvailable() finally qs.stop() }
-    finally s.conf.set("spark.sql.shuffle.partitions", saved)
     lastSnapshot = Some(snap)
-    val nChunks = graft.Fs.countWithSuffix(Paths.get(dir), ".parquet")
+    val nChunks = Zone.chunks(dir)
     if (latest < 0) {
       // Empty arrival slice: nothing screened, nothing ingested — return
       // the empty verdict frame (snapshot stays valid for the lazy plan).
@@ -932,8 +779,7 @@ object DocStreams {
         s"evolving decontam ran ${latest + 1} batches over $nChunks chunks — " +
           "the oracle's batch arithmetic needs the dense 4-chunk / 2-batch zone")
       snap.destroy()
-      s.read.parquet((0L to latest).map(b => outBase.resolve(s"v$b").toString): _*)
-        .orderBy("doc_id")
+      Zone.versions(s, outBase, latest, "doc_id")
     }
   }
 
@@ -953,39 +799,19 @@ object DocStreams {
     * maxFilesPerTrigger = 2) is copied from the broadcast twin so the
     * oracle's batch arithmetic holds here too. */
   def streamDecontamEvolvingDist(s: SparkSession, d: String): DataFrame = {
-    import java.nio.file._
-    import graft.llm.Retrieval
+    import graft.llm.{Retrieval, StandingIndex}
     val dir = stageDocs(s, d)
     val corpus = Tables.documents(s, d).filter(col("doc_id") % 5 =!= 0)
       .select("doc_id", "text")
-    val base = Paths.get(System.getProperty("java.io.tmpdir"),
-      "graft_stream_decontam_evolving_dist")
-    if (Files.exists(base)) {
-      graft.Fs.deleteRec(base)
-    }
-    Files.createDirectories(base)
-    val inc = new Retrieval.EvolvingDistIndex(s, base.toString)
+    val ix = Zone.tmp("graft_stream_decontam_evolving_dist_ix")
+    StandingIndex.reset(ix)
+    val inc = new Retrieval.EvolvingDistIndex(s, ix)
     inc.append(corpus) // the one-time seed build — corpus-scale, like buildIndex
     graft.plans.TopKPerKey.ensureRegistered(s)
     def verdicts(batch: DataFrame): DataFrame =
       inc.screen(batch.select(col("doc_id"), col("text")))
         .select(col("doc_id"), col("top_match"), col("top_score"),
           (col("top_score") <= lit(Bm25AdmitMax)).as("admit"))
-    @volatile var latest = -1L
-    val stream = s.readStream.schema(docSchema)
-      .option("maxFilesPerTrigger", 2).parquet(dir)
-    val q = stream.writeStream.foreachBatch {
-      (batch: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row],
-       batchId: Long) =>
-        val b = batch.toDF()
-        verdicts(b).write.mode("overwrite")
-          .parquet(base.resolve(s"v$batchId").toString)
-        // Ingest AFTER the screen: the NEXT batch sees this one.
-        inc.append(b.select(col("doc_id"), col("text")))
-        graft.TrackedCaches.release()
-        latest = batchId
-        ()
-    }
     // UNLIKE the broadcast-regime gates, no shuffle.partitions=8 override:
     // this gate exists for heavy batches against big standing state, and
     // its kernel + stage-2 fold want the session's full parallelism (the
@@ -998,13 +824,16 @@ object DocStreams {
     // count is bounded by construction (appends repartition by bucket),
     // so task count stays sane at any corpus scale; files larger than
     // maxPartitionBytes still split.
-    val openCost = "spark.sql.files.openCostInBytes"
-    val saved = s.conf.get(openCost)
-    s.conf.set(openCost, (128L << 20).toString)
-    val qs = q.start()
-    try { try qs.processAllAvailable() finally qs.stop() }
-    finally s.conf.set(openCost, saved)
-    val nChunks = graft.Fs.countWithSuffix(Paths.get(dir), ".parquet")
+    val out = Zone.tmp("graft_stream_decontam_evolving_dist")
+    val latest = Zone.run(s, dir, docSchema, out,
+        "spark.sql.files.openCostInBytes" -> (128L << 20).toString) {
+      (b, batchId) =>
+        Zone.put(verdicts(b), out, batchId)
+        // Ingest AFTER the screen: the NEXT batch sees this one.
+        inc.append(b.select(col("doc_id"), col("text")))
+        graft.TrackedCaches.release()
+    }
+    val nChunks = Zone.chunks(dir)
     if (latest < 0)
       verdicts(corpus.limit(0)).orderBy("doc_id")
     else {
@@ -1012,8 +841,7 @@ object DocStreams {
         s"evolving-dist decontam ran ${latest + 1} batches over $nChunks " +
           "chunks — the oracle's batch arithmetic needs the dense " +
           "4-chunk / 2-batch zone")
-      s.read.parquet((0L to latest).map(b => base.resolve(s"v$b").toString): _*)
-        .orderBy("doc_id")
+      Zone.versions(s, out, latest, "doc_id")
     }
   }
 
@@ -1084,11 +912,7 @@ object DocStreams {
   val streamDecontamEvolvingSql: String =
     s"""WITH corpus AS (SELECT doc_id, text FROM documents WHERE doc_id % 5 <> 0),
         arr AS (SELECT doc_id, text FROM documents WHERE doc_id % 5 = 0),
-        bounds AS (SELECT min(doc_id) AS lo, max(doc_id) AS hi FROM arr),
-        params AS (SELECT lo, (hi - lo) // 4 + 1 AS span FROM bounds),
-        ab AS (SELECT a.doc_id, a.text,
-                 ((a.doc_id - p.lo) // p.span) // 2 AS b
-               FROM arr a, params p),
+        ab AS (${Zone.batchOfSql("arr", "doc_id")}),
         arr0 AS (SELECT doc_id, text FROM ab WHERE b = 0),
         arr1 AS (SELECT doc_id, text FROM ab WHERE b = 1),
         ref1 AS (SELECT doc_id, text FROM corpus

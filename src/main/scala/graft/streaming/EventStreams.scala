@@ -1,7 +1,7 @@
 package graft.streaming
 
 import graft.Tables
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
 import org.apache.spark.sql.types._
@@ -9,21 +9,13 @@ import org.apache.spark.sql.types._
 /** Structured Streaming over the events table (SURVEY.md §2.9 extension).
   *
   * The corpus is batch parquet, so streaming runs are driven in file chunks
-  * (`maxFilesPerTrigger` over a staged copy) — the same code shape a
+  * (`maxFilesPerTrigger` over a staged [[Zone]]) — the same code shape a
   * production `readStream` on a landing bucket would use. Aggregations carry
   * watermarks; sessionization is a `flatMapGroupsWithState` with event-time
   * timeout, the canonical scalable pattern (state is per-key on executors,
   * no global coordination).
   */
 object EventStreams {
-
-  /** Files consumed per micro-batch by the benchmark queries. 2 keeps every
-    * multi-batch property under test (watermark progression, cross-batch
-    * duplicates, state eviction) at half the per-trigger machinery cost of
-    * 1 — the fixed micro-batch overhead dominated the streaming bench times.
-    * Sessionization stays at 1 file/trigger for finer-grained event-time
-    * timeout coverage. */
-  val FilesPerTrigger = 2
 
   /** Streaming-source schema: ts staged as epoch micros (long) because the
     * corpus's TIMESTAMP(NANOS) cannot round-trip a stream source directly. */
@@ -34,86 +26,49 @@ object EventStreams {
     StructField("event_type", StringType),
     StructField("value", DoubleType)))
 
-  /** Stage events as streamable parquet: one file per contiguous TIME chunk,
-    * with strictly increasing mtimes so the file source replays them in
-    * event-time order (a random split would make later micro-batches almost
-    * entirely late w.r.t. the watermark and they would be dropped — exactly
-    * what a production landing zone avoids by being append-ordered). */
-  /** Serializes stage-or-reuse decisions: the marker check plus the wipe/
-    * write below are not atomic, so two suites staging concurrently in one
-    * JVM could each see "not staged" and double-stage (or worse, one deletes
-    * the tree while the other's readStream lists it). All staging for this
-    * JVM goes through this lock; cross-JVM is not a concern (driver and sbt
-    * each run single-JVM). */
-  private val stageLock = new Object
-
-  def stageEvents(s: SparkSession, d: String, nFiles: Int = 4): String = stageLock.synchronized {
-    import java.nio.file._
-    // The BASE DIRECTORY is keyed by source dir (not just the marker): a
-    // landing zone is written once and read by many queries, and staging
-    // dataset B must never wipe dataset A's zone — A's checkpointed
-    // streams reference those files, and the multi-SF ScaleTest path
-    // switches zones within one JVM.
-    val base = Paths.get(System.getProperty("java.io.tmpdir"),
-      s"graft_stream_events_${d.replaceAll("[^a-zA-Z0-9.]", "_")}")
-    val marker = base.resolve("_staged")
-    if (Files.exists(marker)) return base.toString
-    if (Files.exists(base)) {
-      graft.Fs.deleteRec(base)
-    }
-    Files.createDirectories(base)
-    val ev = Tables.events(s, d)
+  /** Stage events as a [[Zone]] chunked on event time. */
+  def stageEvents(s: SparkSession, d: String): String =
+    Zone.stage(s, d, "events", "ts_us", Tables.events(s, d)
       .select(col("event_id"), unix_micros(col("ts")).as("ts_us"),
-        col("user_id"), col("event_type"), col("value"))
-      .cache()
-    // Empty-source guard (same discipline as DocStreams.stageDocs): null
-    // min/max means zero events — stage a zero-chunk zone, don't NPE.
-    val bounds = ev.agg(min("ts_us"), max("ts_us")).head()
-    if (bounds.isNullAt(0)) {
-      ev.unpersist()
-      Files.createFile(marker)
-      return base.toString
-    }
-    val Array(lo, hi) = bounds.toSeq.map(_.asInstanceOf[Long]).toArray
-    val span = (hi - lo) / nFiles + 1
-    (0 until nFiles).foreach { i =>
-      val tmp = base.resolve(s"_stage_$i")
-      ev.filter(col("ts_us") >= lo + i * span && col("ts_us") < lo + (i + 1) * span)
-        .coalesce(1).write.mode("overwrite").parquet(tmp.toString)
-      // An event-time gap spanning a whole range leaves it empty (no part
-      // file) — skip it rather than throw (same guard as DocStreams).
-      val part = graft.Fs.firstWithSuffix(tmp, ".parquet")
-      if (part.isDefined) {
-        val dst = base.resolve(f"chunk_$i%02d.parquet")
-        Files.move(part.get, dst, StandardCopyOption.REPLACE_EXISTING)
-        Files.setLastModifiedTime(dst,
-          attribute.FileTime.fromMillis(1000000000000L + i * 60000L))
-      }
-      graft.Fs.deleteRec(tmp)
-    }
-    ev.unpersist()
-    Files.createFile(marker)
-    base.toString
+        col("user_id"), col("event_type"), col("value")))
+
+  /** Zone `dir` as an event stream with `ts` restored from `ts_us`. */
+  private def eventStream(s: SparkSession, dir: String,
+      files: Int = Zone.FilesPerTrigger): DataFrame =
+    Zone.source(s, dir, stagedSchema, files)
+      .withColumn("ts", timestamp_micros(col("ts_us")))
+
+  /** Drains `df` into the memory table `name`, with `conf` set for the
+    * run, and returns the table. */
+  private def toMemory(s: SparkSession, name: String, mode: OutputMode,
+      conf: (String, String)*)(df: => Dataset[_]): DataFrame = {
+    Zone.withConf(s, conf: _*)(Zone.drain(
+      df.writeStream.outputMode(mode).format("memory").queryName(name)))
+    s.table(name)
   }
+
+  /** Drains `df` in append mode into parquet files under `base/out`, with
+    * state and source progress checkpointed in `base/ckpt` (calling again
+    * with the same base resumes from the checkpoint). */
+  private def toFiles(s: SparkSession, base: String,
+      conf: (String, String)*)(df: => Dataset[_]): Unit =
+    Zone.withConf(s, conf: _*)(Zone.drain(
+      df.writeStream.outputMode(OutputMode.Append())
+        .format("parquet")
+        .option("path", s"$base/out")
+        .option("checkpointLocation", s"$base/ckpt")))
 
   /** Tumbling 1h window counts as a streaming query: watermark + window agg,
     * complete mode into a memory sink, drained synchronously. Returns the
     * final result table — bit-equal to the batch q_tumbling_window. */
   def tumblingWindowStream(s: SparkSession, d: String): DataFrame = {
-    val dir = stageEvents(s, d)
-    val stream = s.readStream.schema(stagedSchema)
-      .option("maxFilesPerTrigger", FilesPerTrigger).parquet(dir)
-      .withColumn("ts", timestamp_micros(col("ts_us")))
-    val agg = stream
+    val agg = eventStream(s, stageEvents(s, d))
       .withWatermark("ts", "1 hour")
       .groupBy(window(col("ts"), "1 hour"))
       .agg(count(lit(1)).as("cnt"),
         sum(col("value").cast(DecimalType(18, 4))).cast(DoubleType).as("sum_value"))
       .select(col("window.start").as("win_start"), col("cnt"), col("sum_value"))
-    val q = agg.writeStream.outputMode(OutputMode.Complete())
-      .format("memory").queryName("graft_tumbling").start()
-    try q.processAllAvailable() finally q.stop()
-    s.table("graft_tumbling").orderBy("win_start")
+    toMemory(s, "graft_tumbling", OutputMode.Complete())(agg).orderBy("win_start")
   }
 
   /** Stream-static join: the event stream enriched against the static
@@ -121,19 +76,15 @@ object EventStreams {
     * aggregated per market segment. The standard streaming-enrichment shape:
     * no state beyond the aggregation, dim freshness = batch boundary. */
   def streamStaticJoin(s: SparkSession, d: String): DataFrame = {
-    val dir = stageEvents(s, d)
     val customers = Tables.customer(s, d)
-    val stream = s.readStream.schema(stagedSchema)
-      .option("maxFilesPerTrigger", FilesPerTrigger).parquet(dir)
+    val stream = Zone.source(s, stageEvents(s, d), stagedSchema)
     val joined = stream
       .join(customers, stream("user_id") === customers("c_custkey"), "inner")
       .groupBy("c_mktsegment")
       .agg(count(lit(1)).as("cnt"),
         sum(col("value").cast(DecimalType(18, 4))).cast(DoubleType).as("sum_value"))
-    val q = joined.writeStream.outputMode(OutputMode.Complete())
-      .format("memory").queryName("graft_stream_static").start()
-    try q.processAllAvailable() finally q.stop()
-    s.table("graft_stream_static").orderBy("c_mktsegment")
+    toMemory(s, "graft_stream_static", OutputMode.Complete())(joined)
+      .orderBy("c_mktsegment")
   }
 
   val streamStaticJoinSql: String =
@@ -159,27 +110,15 @@ object EventStreams {
     * to catch. */
   def streamingDedup(s: SparkSession, d: String): DataFrame = {
     val dir = stageEvents(s, d)
-    def reader = s.readStream.schema(stagedSchema)
-      .option("maxFilesPerTrigger", FilesPerTrigger).parquet(dir)
-      .withColumn("ts", timestamp_micros(col("ts_us")))
-    val doubled = reader.unionByName(reader)
-    val deduped = doubled
+    val deduped = eventStream(s, dir).unionByName(eventStream(s, dir))
       .withWatermark("ts", "2 hours")
       .dropDuplicates("event_id")
       .groupBy("event_type")
       .agg(count(lit(1)).as("cnt"))
-    // Two stateful ops x shuffle.partitions state stores x batch = the fixed
-    // cost of this query; size the store count to the stream's throughput
-    // (per-query state partitioning is baked into the checkpoint, so this is
-    // a start-time decision in production too). Restored after the run.
-    val saved = s.conf.get("spark.sql.shuffle.partitions")
-    s.conf.set("spark.sql.shuffle.partitions", "8")
-    try {
-      val q = deduped.writeStream.outputMode(OutputMode.Complete())
-        .format("memory").queryName("graft_stream_dedup").start()
-      try q.processAllAvailable() finally q.stop()
-    } finally s.conf.set("spark.sql.shuffle.partitions", saved)
-    s.table("graft_stream_dedup").orderBy("event_type")
+    // Two stateful ops x shuffle.partitions state stores x batch = the
+    // fixed cost of this query.
+    toMemory(s, "graft_stream_dedup", OutputMode.Complete(), Zone.SliceShuffles)(deduped)
+      .orderBy("event_type")
   }
 
   val streamingDedupSql: String =
@@ -221,12 +160,10 @@ object EventStreams {
     * the watermark passes the view's 30-minute match window (state eviction
     * in the post-data no-data batch). */
   def attributionPairs(s: SparkSession, dir: String,
-      filesPerTrigger: Int = FilesPerTrigger,
+      filesPerTrigger: Int = Zone.FilesPerTrigger,
       joinType: String = "inner",
       queryName: String = "graft_stream_attrib"): DataFrame = {
-    def reader = s.readStream.schema(stagedSchema)
-      .option("maxFilesPerTrigger", filesPerTrigger).parquet(dir)
-      .withColumn("ts", timestamp_micros(col("ts_us")))
+    def reader = eventStream(s, dir, filesPerTrigger)
     val views = reader.filter(col("event_type") === "view")
       .select(col("event_id").as("view_id"), col("user_id").as("v_user"),
         col("ts").as("v_ts"), col("ts_us").as("v_us"))
@@ -241,14 +178,7 @@ object EventStreams {
         col("p_ts") <= col("v_ts") + expr("INTERVAL 30 MINUTES"), joinType)
       .select(col("v_user").as("user_id"), col("view_id"), col("v_us"),
         col("purchase_id"), (col("p_us") - col("v_us")).as("delay_us"))
-    val saved = s.conf.get("spark.sql.shuffle.partitions")
-    s.conf.set("spark.sql.shuffle.partitions", "8")
-    try {
-      val q = pairs.writeStream.outputMode(OutputMode.Append())
-        .format("memory").queryName(queryName).start()
-      try q.processAllAvailable() finally q.stop()
-    } finally s.conf.set("spark.sql.shuffle.partitions", saved)
-    s.table(queryName)
+    toMemory(s, queryName, OutputMode.Append(), Zone.SliceShuffles)(pairs)
   }
 
   private val WatermarkUs = 3600L * 1000000   // 1 hour (both join sides)
@@ -338,28 +268,19 @@ object EventStreams {
     *    before the corpus max — the same closable-horizon rule as
     *    [[streamStreamOuter]]. */
   def sessionWindowStream(s: SparkSession, d: String): DataFrame = {
-    val dir = stageEvents(s, d)
-    val stream = s.readStream.schema(stagedSchema)
-      .option("maxFilesPerTrigger", FilesPerTrigger).parquet(dir)
-      .withColumn("ts", timestamp_micros(col("ts_us")))
+    val sessions = eventStream(s, stageEvents(s, d))
       .withWatermark("ts", "1 hour")
-    val sessions = stream
       .groupBy(col("user_id"), session_window(col("ts"), "30 minutes"))
       .agg(count(lit(1)).as("n_events"), max(col("ts_us")).as("last_us"))
       .select(col("user_id"),
         unix_micros(col("session_window.start")).as("start_us"),
         col("n_events"), col("last_us"))
-    val saved = s.conf.get("spark.sql.shuffle.partitions")
-    s.conf.set("spark.sql.shuffle.partitions", "8")
-    try {
-      val q = sessions.writeStream.outputMode(OutputMode.Append())
-        .format("memory").queryName("graft_session_window").start()
-      try q.processAllAvailable() finally q.stop()
-    } finally s.conf.set("spark.sql.shuffle.partitions", saved)
+    val emitted = toMemory(s, "graft_session_window", OutputMode.Append(),
+      Zone.SliceShuffles)(sessions)
     val maxUs = Tables.events(s, d)
       .agg(max(unix_micros(col("ts")))).head().getLong(0)
     val horizon = maxUs - WatermarkUs - JoinBoundUs - HorizonMarginUs
-    s.table("graft_session_window")
+    emitted
       .filter(col("last_us") < horizon)
       .select(col("user_id"), col("start_us"), col("n_events"))
       .orderBy("user_id", "start_us")
@@ -394,21 +315,23 @@ object EventStreams {
 
   val SessionGapMs = 30L * 60 * 1000
 
+  /** Zone `dir` as typed events for the sessionizers: 1 file per trigger
+    * for finer-grained event-time timeout coverage, 1-hour watermark. */
+  private def sessionInput(s: SparkSession, dir: String): Dataset[Ev] = {
+    import s.implicits._
+    eventStream(s, dir, 1)
+      .withWatermark("ts", "1 hour")
+      .select(col("event_id"), col("user_id"), col("ts_us"), col("event_type"),
+        col("ts"))
+      .as[Ev]
+  }
+
   /** Stateful streaming sessionization: per-user session assembly in
     * flatMapGroupsWithState with event-time timeout. Emits a session when
     * the watermark passes its gap. The batch gaps-and-islands query
     * (ops.Analytics.sessionize) is the oracle for this in tests. */
   def sessionizeStream(s: SparkSession, d: String): DataFrame = {
     import s.implicits._
-    val dir = stageEvents(s, d)
-    val stream = s.readStream.schema(stagedSchema)
-      .option("maxFilesPerTrigger", 1).parquet(dir)
-      .withColumn("ts", timestamp_micros(col("ts_us")))
-      .withWatermark("ts", "1 hour")
-      .select(col("event_id"), col("user_id"), col("ts_us"), col("event_type"),
-        col("ts"))
-      .as[Ev]
-
     val emit = (userId: Long, events: Iterator[Ev], state: GroupState[SessState]) => {
       // Events within a micro-batch group are not ordered: sort by event time.
       val sorted = events.toSeq.sortBy(e => (e.ts_us, e.event_id))
@@ -441,12 +364,10 @@ object EventStreams {
       out.reverseIterator
     }
 
-    val sessions = stream.groupByKey(_.user_id)
+    val sessions = sessionInput(s, stageEvents(s, d)).groupByKey(_.user_id)
       .flatMapGroupsWithState(OutputMode.Append(), GroupStateTimeout.EventTimeTimeout())(emit)
-    val q = sessions.writeStream.outputMode(OutputMode.Append())
-      .format("memory").queryName("graft_sessions").start()
-    try q.processAllAvailable() finally q.stop()
-    s.table("graft_sessions").orderBy("user_id", "sess_start")
+    toMemory(s, "graft_sessions", OutputMode.Append())(sessions)
+      .orderBy("user_id", "sess_start")
   }
 
   /** The same per-user sessionization through Spark 4's transformWithState
@@ -508,6 +429,20 @@ object EventStreams {
     }
   }
 
+  /** transformWithState requires the RocksDB state-store provider; it is
+    * set for the run only. */
+  private val RocksDbState = "spark.sql.streaming.stateStore.providerClass" ->
+    "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider"
+
+  /** The transformWithState sessionizer over zone `dir`. */
+  private def twsSessions(s: SparkSession, dir: String): Dataset[Sess] = {
+    import s.implicits._
+    import org.apache.spark.sql.streaming.TimeMode
+    sessionInput(s, dir).groupByKey(_.user_id)
+      .transformWithState(new SessionProcessor, TimeMode.EventTime(),
+        OutputMode.Append())
+  }
+
   /** One checkpointed run of the transformWithState sessionizer over
     * whatever files currently sit in `dir`, appending emitted sessions to
     * `base/out` parquet with state + source progress in `base/ckpt`.
@@ -516,66 +451,12 @@ object EventStreams {
     * close correctly from recovered state (StreamingSpec gates that the
     * two-run emission set equals a single uninterrupted run's). */
   private[graft] def runTwsSessionsOnce(s: SparkSession, dir: String,
-      base: String): Unit = {
-    import s.implicits._
-    import org.apache.spark.sql.streaming.TimeMode
-    val key = "spark.sql.streaming.stateStore.providerClass"
-    val prev = s.conf.getOption(key)
-    s.conf.set(key,
-      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-    try {
-      val stream = s.readStream.schema(stagedSchema)
-        .option("maxFilesPerTrigger", 1).parquet(dir)
-        .withColumn("ts", timestamp_micros(col("ts_us")))
-        .withWatermark("ts", "1 hour")
-        .select(col("event_id"), col("user_id"), col("ts_us"),
-          col("event_type"), col("ts"))
-        .as[Ev]
-      val sessions = stream.groupByKey(_.user_id)
-        .transformWithState(new SessionProcessor, TimeMode.EventTime(),
-          OutputMode.Append())
-      val q = sessions.writeStream.outputMode(OutputMode.Append())
-        .format("parquet")
-        .option("path", s"$base/out")
-        .option("checkpointLocation", s"$base/ckpt")
-        .start()
-      try q.processAllAvailable() finally q.stop()
-    } finally prev match {
-      case Some(v) => s.conf.set(key, v)
-      case None => s.conf.unset(key)
-    }
-  }
+      base: String): Unit =
+    toFiles(s, base, RocksDbState)(twsSessions(s, dir))
 
-  def sessionizeStreamTws(s: SparkSession, d: String): DataFrame = {
-    import s.implicits._
-    import org.apache.spark.sql.streaming.TimeMode
-    val dir = stageEvents(s, d)
-    // transformWithState requires the RocksDB provider; session-scope it
-    // like the layout writer's timestamp conf (restore after the run).
-    val key = "spark.sql.streaming.stateStore.providerClass"
-    val prev = s.conf.getOption(key)
-    s.conf.set(key,
-      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-    try {
-      val stream = s.readStream.schema(stagedSchema)
-        .option("maxFilesPerTrigger", 1).parquet(dir)
-        .withColumn("ts", timestamp_micros(col("ts_us")))
-        .withWatermark("ts", "1 hour")
-        .select(col("event_id"), col("user_id"), col("ts_us"),
-          col("event_type"), col("ts"))
-        .as[Ev]
-      val sessions = stream.groupByKey(_.user_id)
-        .transformWithState(new SessionProcessor, TimeMode.EventTime(),
-          OutputMode.Append())
-      val q = sessions.writeStream.outputMode(OutputMode.Append())
-        .format("memory").queryName("graft_sessions_tws").start()
-      try q.processAllAvailable() finally q.stop()
-      s.table("graft_sessions_tws").orderBy("user_id", "sess_start")
-    } finally prev match {
-      case Some(v) => s.conf.set(key, v)
-      case None => s.conf.unset(key)
-    }
-  }
+  def sessionizeStreamTws(s: SparkSession, d: String): DataFrame =
+    toMemory(s, "graft_sessions_tws", OutputMode.Append(), RocksDbState)(
+      twsSessions(s, stageEvents(s, d))).orderBy("user_id", "sess_start")
 
   /** Streaming ETL into a PARQUET FILE SINK — the landing-zone-to-lake shape
     * every production pipeline ends in, where the memory-sink queries above
@@ -590,34 +471,25 @@ object EventStreams {
     * call again with the SAME base: the checkpoint's file-commit log makes
     * replay exactly-once — StreamingSpec gates that). */
   private[graft] def runFileSinkOnce(s: SparkSession, dir: String, base: String): Unit = {
-    val stream = s.readStream.schema(stagedSchema)
-      .option("maxFilesPerTrigger", FilesPerTrigger).parquet(dir)
-      .withColumn("ts", timestamp_micros(col("ts_us")))
-    val agg = stream
+    val agg = eventStream(s, dir)
       .withWatermark("ts", "1 hour")
       .groupBy(window(col("ts"), "1 hour"))
       .agg(count(lit(1)).as("cnt"))
       .select(col("window.start").as("win_start"), col("cnt"))
-    // Size the state store to the stream like every sibling stateful query
-    // (see streamingDedup): at the session's 32 partitions each micro-batch
-    // pays 4x the state-store/commit-log fixed cost AND the sink writes a
-    // parquet file per partition per batch. The partitioning bakes into the
-    // checkpoint, so restarts (same base) see the same 8. Restored after.
-    val saved = s.conf.get("spark.sql.shuffle.partitions")
-    s.conf.set("spark.sql.shuffle.partitions", "8")
-    try {
-      val q = agg.writeStream.outputMode(OutputMode.Append())
-        .format("parquet")
-        .option("path", s"$base/out")
-        .option("checkpointLocation", s"$base/ckpt")
-        .start()
-      try q.processAllAvailable() finally q.stop()
-    } finally s.conf.set("spark.sql.shuffle.partitions", saved)
+    // The sink also writes a parquet file per shuffle partition per batch;
+    // the partitioning bakes into the checkpoint, so restarts (same base)
+    // see the same 8.
+    toFiles(s, base, Zone.SliceShuffles)(agg)
   }
 
   def streamFileSink(s: SparkSession, d: String): DataFrame = {
     val dir = stageEvents(s, d)
-    val base = java.nio.file.Files.createTempDirectory("graft_filesink").toString
+    // One working dir per query, wiped per call. The wipe bypasses Spark:
+    // drop any cached read of a previous call's output, which Spark would
+    // match to this call's read by path.
+    val base = Zone.tmp("graft_stream_file_sink")
+    graft.llm.StandingIndex.reset(base)
+    s.catalog.refreshByPath(base)
     runFileSinkOnce(s, dir, base)
     val flushed = graft.TrackedCaches.track(s.read.parquet(s"$base/out").cache())
     // Windows still open at the watermark when input ends are never flushed
@@ -657,49 +529,35 @@ object EventStreams {
     * commutative-associative (sum, max), so the incremental fixpoint equals
     * the batch rollup the oracle computes. */
   def streamCdcApply(s: SparkSession, d: String): DataFrame = {
-    import java.nio.file._
     val dir = stageEvents(s, d)
-    val base = Paths.get(System.getProperty("java.io.tmpdir"), "graft_stream_cdc")
-    if (Files.exists(base)) {
-      graft.Fs.deleteRec(base)
-    }
-    Files.createDirectories(base)
-    @volatile var latest = -1L
+    val base = Zone.tmp("graft_stream_cdc")
     val zeroDec = lit(0).cast(DecimalType(28, 4))
-    val stream = s.readStream.schema(stagedSchema)
-      .option("maxFilesPerTrigger", FilesPerTrigger).parquet(dir)
-    val q = stream.writeStream.foreachBatch {
-      (batch: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row],
-       batchId: Long) =>
-        val delta = batch.groupBy("user_id")
-          .agg(count(lit(1)).as("d_n"),
-            max("ts_us").as("d_ts"),
-            sum(col("value").cast(DecimalType(18, 4)))
-              .cast(DecimalType(28, 4)).as("d_sum"))
-        val merged =
-          if (batchId == 0)
-            delta.select(col("user_id"), col("d_n").as("n_events"),
-              col("d_ts").as("last_ts_us"), col("d_sum").as("sum_dec"))
-          else {
-            val cur = s.read.parquet(base.resolve(s"v${batchId - 1}").toString)
-            cur.join(delta, Seq("user_id"), "full_outer")
-              .select(col("user_id"),
-                (coalesce(col("n_events"), lit(0L))
-                  + coalesce(col("d_n"), lit(0L))).as("n_events"),
-                greatest(col("last_ts_us"), col("d_ts")).as("last_ts_us"),
-                (coalesce(col("sum_dec"), zeroDec)
-                  + coalesce(col("d_sum"), zeroDec))
-                  .cast(DecimalType(28, 4)).as("sum_dec"))
-          }
-        merged.write.mode("overwrite")
-          .parquet(base.resolve(s"v$batchId").toString)
-        latest = batchId
-        ()
-    }.start()
-    try q.processAllAvailable() finally q.stop()
+    val latest = Zone.run(s, dir, stagedSchema, base) { (batch, batchId) =>
+      val delta = batch.groupBy("user_id")
+        .agg(count(lit(1)).as("d_n"),
+          max("ts_us").as("d_ts"),
+          sum(col("value").cast(DecimalType(18, 4)))
+            .cast(DecimalType(28, 4)).as("d_sum"))
+      val merged =
+        if (batchId == 0)
+          delta.select(col("user_id"), col("d_n").as("n_events"),
+            col("d_ts").as("last_ts_us"), col("d_sum").as("sum_dec"))
+        else {
+          val cur = s.read.parquet(Zone.version(base, batchId - 1))
+          cur.join(delta, Seq("user_id"), "full_outer")
+            .select(col("user_id"),
+              (coalesce(col("n_events"), lit(0L))
+                + coalesce(col("d_n"), lit(0L))).as("n_events"),
+              greatest(col("last_ts_us"), col("d_ts")).as("last_ts_us"),
+              (coalesce(col("sum_dec"), zeroDec)
+                + coalesce(col("d_sum"), zeroDec))
+                .cast(DecimalType(28, 4)).as("sum_dec"))
+        }
+      Zone.put(merged, base, batchId)
+    }
     require(latest >= 1, s"CDC apply ran ${latest + 1} micro-batches — " +
       "need >= 2 for the merge to actually be incremental")
-    s.read.parquet(base.resolve(s"v$latest").toString)
+    s.read.parquet(Zone.version(base, latest))
       .select(col("user_id"), col("n_events"), col("last_ts_us"),
         col("sum_dec").cast(DoubleType).as("sum_value"))
       .orderBy("user_id")
@@ -751,7 +609,6 @@ object EventStreams {
     * invariant and the batch DuckDB oracle gates the streaming run
     * bit-for-bit (the [[DocStreams]] gate contract). */
   def streamAnomalyGate(s: SparkSession, d: String): DataFrame = {
-    import java.nio.file._
     val dir = stageEvents(s, d)
     val train = Tables.events(s, d)
       .filter(unix_micros(col("ts")) < AnomalyCutoffUs)
@@ -760,29 +617,14 @@ object EventStreams {
     val stats = graft.TrackedCaches.track(
       graft.ops.EventAnalytics.userRobustStats(train).cache())
     stats.count() // materialize the baseline once, before the stream starts
-    val base = Paths.get(System.getProperty("java.io.tmpdir"), "graft_stream_anomaly")
-    if (Files.exists(base)) {
-      graft.Fs.deleteRec(base)
+    val base = Zone.tmp("graft_stream_anomaly")
+    val latest = Zone.run(s, dir, stagedSchema, base) { (batch, batchId) =>
+      Zone.put(screenAnomalyBatch(
+        batch.filter(col("ts_us") >= AnomalyCutoffUs), stats), base, batchId)
     }
-    Files.createDirectories(base)
-    @volatile var latest = -1L
-    val stream = s.readStream.schema(stagedSchema)
-      .option("maxFilesPerTrigger", FilesPerTrigger).parquet(dir)
-    val q = stream.writeStream.foreachBatch {
-      (batch: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row],
-       batchId: Long) =>
-        screenAnomalyBatch(
-          batch.filter(col("ts_us") >= AnomalyCutoffUs).toDF(), stats)
-          .write.mode("overwrite")
-          .parquet(base.resolve(s"v$batchId").toString)
-        latest = batchId
-        ()
-    }.start()
-    try q.processAllAvailable() finally q.stop()
     require(latest >= 1, s"anomaly gate ran ${latest + 1} micro-batches — " +
       "need >= 2 for the screening to actually be incremental")
-    s.read.parquet((0L to latest).map(b => base.resolve(s"v$b").toString): _*)
-      .orderBy("event_id")
+    Zone.versions(s, base, latest, "event_id")
   }
 
   val streamAnomalyGateSql: String =

@@ -40,8 +40,6 @@ import org.apache.spark.sql.types._
   */
 object VecStreams {
 
-  private val stageLock = new Object
-
   /** Most recent gate run's broadcast snapshot — the
     * [[DocStreams.lastSnapshot]] lifecycle discipline (StreamingSpec
     * asserts it is destroyed once verdicts are parquet-backed). */
@@ -52,52 +50,6 @@ object VecStreams {
   private val vecSchema = StructType(Seq(
     StructField("vec_id", LongType),
     StructField("embedding", ArrayType(FloatType))))
-
-  /** Stage the arriving vector slice (vec_id % 5 == 0) as an mtime-ordered
-    * landing zone of contiguous vec_id ranges — the same staged-chunk
-    * discipline as [[DocStreams.stageDocs]], base directory keyed by
-    * source dir so multi-SF sessions cannot cross-invalidate zones. */
-  def stageVecs(s: SparkSession, d: String, nFiles: Int = 4): String = stageLock.synchronized {
-    import java.nio.file._
-    val base = Paths.get(System.getProperty("java.io.tmpdir"),
-      s"graft_stream_vecs_${d.replaceAll("[^a-zA-Z0-9.]", "_")}")
-    val marker = base.resolve("_staged")
-    if (Files.exists(marker)) return base.toString
-    if (Files.exists(base)) {
-      graft.Fs.deleteRec(base)
-    }
-    Files.createDirectories(base)
-    val vecs = Tables.embeddings(s, d).filter(col("vec_id") % 5 === 0)
-      .select(col("vec_id"), col("embedding")).cache()
-    // Degenerate corpus -> empty arrival slice: stage a zero-chunk zone
-    // (the stream main returns an empty verdict frame for it) instead of
-    // NPEing on null min/max.
-    val bounds = vecs.agg(min("vec_id"), max("vec_id")).head()
-    if (bounds.isNullAt(0)) {
-      vecs.unpersist()
-      Files.createFile(marker)
-      return base.toString
-    }
-    val Array(lo, hi) = bounds.toSeq.map(_.asInstanceOf[Long]).toArray
-    val span = (hi - lo) / nFiles + 1
-    (0 until nFiles).foreach { i =>
-      val tmp = base.resolve(s"_stage_$i")
-      vecs.filter(col("vec_id") >= lo + i * span && col("vec_id") < lo + (i + 1) * span)
-        .coalesce(1).write.mode("overwrite").parquet(tmp.toString)
-      // Sparse vec_id spaces can leave a range empty — skip, don't throw.
-      val part = graft.Fs.firstWithSuffix(tmp, ".parquet")
-      if (part.isDefined) {
-        val dst = base.resolve(f"chunk_$i%02d.parquet")
-        Files.move(part.get, dst, StandardCopyOption.REPLACE_EXISTING)
-        Files.setLastModifiedTime(dst,
-          attribute.FileTime.fromMillis(1000000000000L + i * 60000L))
-      }
-      graft.Fs.deleteRec(tmp)
-    }
-    vecs.unpersist()
-    Files.createFile(marker)
-    base.toString
-  }
 
   /** Admission ceiling: an arriving vector whose nearest corpus neighbor
     * scores cosine >= this is rejected as a semantic near-duplicate. Sits
@@ -292,8 +244,9 @@ object VecStreams {
     * `0L` the distributed one. */
   private[graft] def streamVecIngestUnder(s: SparkSession, d: String,
       screenMaxBytes: Long): DataFrame = {
-    import java.nio.file._
-    val dir = stageVecs(s, d)
+    // The arriving slice (vec_id % 5 == 0) as a [[Zone]] chunked on vec_id.
+    val dir = Zone.stage(s, d, "embeddings", "vec_id",
+      Tables.embeddings(s, d).filter(col("vec_id") % 5 === 0).select("vec_id", "embedding"))
     val corpus = Tables.embeddings(s, d).filter(col("vec_id") % 5 =!= 0)
     // The standing IVF index, built once and reused by every micro-batch:
     // exact-integer k-means centroids + cell-assigned corpus vectors.
@@ -348,32 +301,11 @@ object VecStreams {
         (batch: DataFrame) => screenBatch(batch, cents, cells, nprobe)
       }
 
-    val outBase = Paths.get(System.getProperty("java.io.tmpdir"), "graft_stream_vec_ingest")
-    if (Files.exists(outBase)) {
-      graft.Fs.deleteRec(outBase)
+    val outBase = Zone.tmp("graft_stream_vec_ingest")
+    val latest = Zone.run(s, dir, vecSchema, outBase, Zone.SliceShuffles) {
+      (batch, batchId) => Zone.put(screen(batch), outBase, batchId)
     }
-    Files.createDirectories(outBase)
-    @volatile var latest = -1L
-    val stream = s.readStream.schema(vecSchema)
-      .option("maxFilesPerTrigger", 2).parquet(dir)
-    val q = stream.writeStream.foreachBatch {
-      (batch: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row],
-       batchId: Long) =>
-        screen(batch.toDF())
-          .write.mode("overwrite")
-          .parquet(outBase.resolve(s"v$batchId").toString)
-        latest = batchId
-        ()
-    }
-    // Micro-batches are arrival-slice-scale: size their shuffles to match
-    // (the sibling streaming queries' discipline).
-    val saved = s.conf.get("spark.sql.shuffle.partitions")
-    s.conf.set("spark.sql.shuffle.partitions", "8")
-    try {
-      val qs = q.start()
-      try qs.processAllAvailable() finally qs.stop()
-    } finally s.conf.set("spark.sql.shuffle.partitions", saved)
-    val nChunks = graft.Fs.countWithSuffix(Paths.get(dir), ".parquet")
+    val nChunks = Zone.chunks(dir)
     require(latest >= 1 || nChunks <= 2,
       s"vec ingest ran ${latest + 1} micro-batches over $nChunks chunks — " +
         "need >= 2 batches for the screening to actually be incremental")
@@ -388,8 +320,7 @@ object VecStreams {
       // Parquet-backed verdicts: destroy the snapshot (the
       // [[DocStreams.lastSnapshot]] lifecycle discipline).
       snapOpt.foreach(_.destroy())
-      s.read.parquet((0L to latest).map(b => outBase.resolve(s"v$b").toString): _*)
-        .orderBy("vec_id")
+      Zone.versions(s, outBase, latest, "vec_id")
     }
   }
 

@@ -52,4 +52,15 @@ class GraftSessionSpec extends SparkSpec {
       }
     assert(offenders.isEmpty, s"library switches: ${offenders.mkString("; ")}")
   }
+
+  test("one module owns the streaming micro-batch loop and the conf it sets") {
+    val files = scalaFiles("src/main/scala/graft/streaming")
+    def sites(re: scala.util.matching.Regex): Seq[String] =
+      files.flatMap(p => re.findAllMatchIn(text(p)).map(_ => p.getFileName.toString))
+    val loops = sites("""\.foreachBatch\b""".r)
+    assert(loops == Seq("Zone.scala"), s"foreachBatch call sites: $loops")
+    val shuffleSets =
+      sites("""conf\s*\.\s*set\s*\(\s*"spark\.sql\.shuffle\.partitions"""".r)
+    assert(shuffleSets.isEmpty, s"shuffle partitions set outside Zone.withConf: $shuffleSets")
+  }
 }

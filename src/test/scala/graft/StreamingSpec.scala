@@ -263,6 +263,50 @@ class StreamingSpec extends SparkSpec {
       s"restart changed the sink contents: ${second.size} rows vs ${first.size}")
   }
 
+  test("file sink reuses one working dir across calls") {
+    import java.nio.file._
+    import scala.jdk.CollectionConverters._
+    // A file-sink working dir holds the sink's `out` and `ckpt`; each call
+    // must reuse the query's one dir instead of leaving a new one behind.
+    def sinkDirs(): Set[Path] = {
+      val ls = Files.list(Paths.get(System.getProperty("java.io.tmpdir")))
+      try ls.iterator.asScala.filter(p =>
+          Files.isDirectory(p.resolve("out")) && Files.isDirectory(p.resolve("ckpt")))
+        .toSet
+      finally ls.close()
+    }
+    val before = sinkDirs()
+    EventStreams.streamFileSink(spark, Sf).count()
+    EventStreams.streamFileSink(spark, Sf).count()
+    TrackedCaches.release()
+    val added = sinkDirs() -- before
+    assert(added.size <= 1, s"two file-sink calls left ${added.size} new dirs: $added")
+  }
+
+  test("ingest dedup restages its landing zone when the source table is rewritten") {
+    import java.nio.file._
+    import spark.implicits._
+    val base = Files.createTempDirectory("graft_zone_rewrite").toString
+    val text = (id: Long) => (0 until 12).map(w => s"r${id}w$w").mkString(" ")
+    def write(ids: Seq[Long]): Unit =
+      ids.map(i => (i, text(i))).toDF("doc_id", "text")
+        .write.mode("overwrite").parquet(s"$base/documents.parquet")
+    def arrivals(): Set[Long] = {
+      val ids = graft.streaming.DocStreams.streamIngestDedup(spark, base)
+        .collect().map(_.getLong(0)).toSet
+      TrackedCaches.release()
+      ids
+    }
+    write(0L to 24L)
+    assert(arrivals() == (0L to 24L by 5).toSet)
+    // Same path, different corpus: the zone staged from the first one must
+    // not be served.
+    write(100L to 124L)
+    assert(arrivals() == (100L to 124L by 5).toSet,
+      "the rewritten table's arrivals were screened from the old zone")
+    graft.Fs.deleteRec(Paths.get(base))
+  }
+
   test("streaming ingest dedup == batch-computed verdicts over the same split") {
     import graft.llm.Dedup
     val streamed = graft.streaming.DocStreams.streamIngestDedup(spark, Sf)
