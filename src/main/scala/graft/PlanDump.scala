@@ -32,12 +32,12 @@ object PlanDump {
       "ShuffleExchange on either join side (bucketed scans align with the key)."),
     "q_topk_per_key" -> ("Custom TopKPerKey physical operator. Expect: " +
       "partial per-partition heaps below ONE exchange on the key, final heaps above."),
-    "q_pagerank" -> ("Integer PageRank output stage. Rounds materialize the " +
-      "node-scale rank vector to a LOCAL relation (driver collect, the " +
-      "trainCentroids discipline), so this plan shows the final decode/sort " +
-      "over a LocalTableScan; the per-round shape (2 BroadcastHashJoins " +
-      "over the cached edge list, zero SortMergeJoin) is asserted on an " +
-      "un-materialized round by PlanShapeSpec."),
+    "q_pagerank" -> ("Integer PageRank output stage. Rounds run through " +
+      "Superstep.iterate and materialize the rank vector via eager " +
+      "localCheckpoint (executor-resident, no driver collect), so this plan " +
+      "shows the final decode/sort over a Scan ExistingRDD; the per-round " +
+      "shape (2 BroadcastHashJoins over the cached edge list, zero " +
+      "SortMergeJoin) is asserted on an un-materialized round by PlanShapeSpec."),
     "q_bloom_join" -> ("Bloom-prefiltered semi join. Expect: the bloom UDF " +
       "filter BELOW the o_custkey exchange (facts pruned before shuffling), " +
       "then the exact semi join above it."),
@@ -112,13 +112,10 @@ object PlanDump {
       "No occurrence-scale join anywhere (the pre-r11 plan joined the " +
       "owner table back onto the full occurrence stream and re-shuffled " +
       "it by doc_id — its 30x ladder term), no self-join, no global window."),
-    "q_pagerank_dist" -> ("Distributed PageRank output stage (the web-scale " +
-      "formulation). The rank vector stays executor-resident: rounds " +
-      "materialize via eager localCheckpoint, so this plan shows the final " +
-      "decode/sort over a Scan ExistingRDD — and must contain NO " +
-      "LocalTableScan (that is q_pagerank's driver-localized marker; " +
-      "PlanShapeSpec asserts both this and the per-round shuffle-hash, " +
-      "broadcast-free round shape)."),
+    "q_pagerank_dist" -> ("q_pagerank with the shuffle-hash join hint (the " +
+      "web-scale formulation). Same final decode/sort over a Scan " +
+      "ExistingRDD with NO LocalTableScan; PlanShapeSpec asserts the " +
+      "per-round shape: both rank joins shuffle-hash, nothing broadcasts."),
     "q_pmi_pairs" -> ("PMI collocations. Expect: ONE map-side-combined " +
       "bigram count aggregate (the corpus pass), the PmiMinCount filter " +
       "BELOW the joins, and both vocab-arity marginals joined back by " +
@@ -181,21 +178,17 @@ object PlanDump {
       "corpus scan, per-row integer bucket arithmetic, a <=64-row bucket " +
       "aggregate (map-side combined) and the 1-row corpus max as a " +
       "BROADCAST cross join — no windows, no wide joins."),
-    "q_reach_bfs" -> ("Recursive-CTE BFS (Spark 4 UnionLoop). Expect: the " +
-      "loop's per-hop step as ONE equi-join of the frontier against the " +
-      "localCheckpointed edge view (an ExistingRDD / LocalTableScan-backed " +
-      "scan, NOT a parquet re-scan per iteration — the edge build ran once, " +
-      "eagerly), the hop guard as the loop's anchor condition, and the " +
-      "min-hop aggregate + sort OUTSIDE the loop."),
-    "q_reach_bfs_dist" -> ("Deduped-frontier iterative BFS (the " +
-      "q_pagerank_dist move applied to traversal). Rounds materialize via " +
-      "eager localCheckpoint, so this plan shows the final decode/sort " +
-      "over a Scan ExistingRDD with NO LocalTableScan; the per-round " +
-      "kernel (audited by PlanShapeSpec 'distributed BFS') shuffle-hashes " +
-      "the frontier against the once-bucketed cached edges, distincts, " +
-      "and anti-joins the visited set — the frontier dedup the recursive " +
-      "CTE cannot express, which is what lets this twin run uncapped to " +
-      "the fixpoint."),
+    "q_reach_bfs" -> ("Deduped-frontier BFS output stage. Rounds run " +
+      "through Superstep.iterate and materialize via eager " +
+      "localCheckpoint, so this plan shows the final decode/sort over a " +
+      "Scan ExistingRDD of the (nid, hop) state; each round broadcasts " +
+      "the frontier against the cached, src-bucketed edge list, distincts " +
+      "the neighbors and anti-joins the state."),
+    "q_reach_bfs_dist" -> ("q_reach_bfs with the shuffle-hash join hint. " +
+      "Same final decode/sort over a Scan ExistingRDD with NO " +
+      "LocalTableScan; the per-round kernel (audited by PlanShapeSpec " +
+      "'distributed BFS') shuffle-hashes the frontier against the " +
+      "once-bucketed cached edges instead of broadcasting it."),
     "q_triangle_count" -> ("Degree-ordered triangle closure. The edge " +
       "builder (fact scan -> cached (part, supplier) distinct projection " +
       "-> capped pairing self-join) runs EAGERLY inside the " +

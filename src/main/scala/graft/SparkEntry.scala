@@ -201,10 +201,10 @@ object SparkEntry {
     "q_heavy_hitters" -> (graft.ops.Sketches.heavyHitters _),
     "q_bloom_join" -> (graft.ops.Sketches.bloomSemiJoin _),
     "q_approx_quantile" -> (graft.ops.Sketches.approxQuantile _),
-    "q_pagerank" -> (graft.ops.Graph.pageRank _),
-    "q_pagerank_dist" -> (graft.ops.Graph.pageRankDistributed _),
-    "q_reach_bfs" -> (graft.ops.Graph.reachBfs _),
-    "q_reach_bfs_dist" -> ((s, d) => graft.ops.Graph.reachBfsDistributed(s, d)),
+    "q_pagerank" -> ((s, d) => graft.ops.Graph.pageRank(s, d, "broadcast")),
+    "q_pagerank_dist" -> ((s, d) => graft.ops.Graph.pageRank(s, d, "shuffle_hash")),
+    "q_reach_bfs" -> ((s, d) => graft.ops.Graph.reachBfs(s, d, "broadcast")),
+    "q_reach_bfs_dist" -> ((s, d) => graft.ops.Graph.reachBfs(s, d, "shuffle_hash")),
     // Continuous-ingest curation surface
     "q_dedup_incremental" -> (Dedup.incrementalDedup _),
     "q_dedup_standing" -> (Dedup.standingIngestDedup _),
@@ -616,13 +616,10 @@ object SparkEntry {
     "q_bloom_join" -> graft.ops.Sketches.bloomSemiJoinSql,
     "q_approx_quantile" -> graft.ops.Sketches.approxQuantileSql,
     "q_pagerank" -> graft.ops.Graph.pageRankSql,
-    // Same oracle on purpose: the distributed formulation must be
-    // bit-identical to the broadcast one (Graph.pageRankDistributed doc).
+    // Same oracle on purpose: the _dist rows differ from their broadcast
+    // twins only by join hint, so their output must be identical.
     "q_pagerank_dist" -> graft.ops.Graph.pageRankSql,
     "q_reach_bfs" -> graft.ops.Graph.reachBfsSql,
-    // Same oracle on purpose: the deduped-frontier iterative BFS must be
-    // row-identical to the recursive CTE at the shared depth cap
-    // (Graph.reachBfsDistributed doc).
     "q_reach_bfs_dist" -> graft.ops.Graph.reachBfsSql,
     "q_dedup_incremental" -> Dedup.incrementalDedupSql,
     // Standing index: persistence moves the cost regime (build-once

@@ -1535,62 +1535,45 @@ object Dedup {
     val edges = pairs.union(
       pairs.select(col("b").as("a"), col("a").as("b")))
       .repartition(width, col("a")).cache()
-    var labels = edges.select(col("a").as("id")).distinct()
+    val init = edges.select(col("a").as("id")).distinct()
       .withColumn("label", col("id"))
-      .localCheckpoint(true)
     // Label sums decrease monotonically and stabilize exactly at the
-    // fixpoint, so they double as a convergence check. Checking every OTHER
-    // round halves the driver actions: a sum equal across rounds t-2 and t
-    // implies (by monotonicity) round t-1 was already the fixpoint, so the
-    // late detection costs one no-op propagation round, while each skipped
-    // check saves a full scan-and-agg job over the labels. Iteration cap is
-    // a safety net for pathological path-shaped components.
-    def propagate(ls: DataFrame): DataFrame = {
+    // fixpoint, so they double as the halt test. Under 1M edges the sum job
+    // costs less than one wasted propagation round (near-dup graphs
+    // converge in 1-3 rounds), so check every round; at scale check every
+    // OTHER round: a sum equal across rounds t-2 and t implies (by
+    // monotonicity) round t-1 was already the fixpoint, so the late
+    // detection costs one no-op round while each skipped check saves a
+    // full scan-and-agg job over the labels.
+    val checkEvery = if (nEdges < 1000000L) 1 else 2
+    // Safety net for pathological path-shaped components.
+    val cap = 30
+    var prevSum = Long.MaxValue
+    def settled(ls: DataFrame, i: Int): Boolean =
+      (i % checkEvery == 0 || i > cap) && {
+        val s = ls.agg(sum("label")).head().getLong(0)
+        val same = s == prevSum
+        prevSum = s
+        same
+      }
+    // Round cap + 1 is the cap-exit fixpoint check, always summed: a
+    // component with diameter > cap would otherwise silently ship wrong
+    // cluster ids, so labels still moving there fail loudly.
+    val run = graft.ops.Superstep.iterate(init, cap + 1, settled) { (ls, _) =>
       val viaNeighbor = edges
         .join(ls, edges("b") === ls("id"))
         .select(edges("a").as("id"), col("label"))
-      // localCheckpoint per iteration: each step references `labels` twice,
-      // so an unmaterialized lineage doubles per round (2^n plan blowup);
-      // checkpointing truncates the logical plan, the standard move for
-      // iterative algorithms on DataFrames.
-      ls.union(viaNeighbor)
-        .groupBy("id").agg(min("label").as("label"))
-        .localCheckpoint(true)
+      ls.union(viaNeighbor).groupBy("id").agg(min("label").as("label"))
     }
-    // Check cadence is adaptive: under 1M edges the sum job costs less than
-    // one wasted propagation round (near-dup graphs converge in 1-3 rounds),
-    // so check every round; at scale the every-other-round scheme wins.
-    val checkEvery = if (nEdges < 1000000L) 1 else 2
-    var prevSum = Long.MaxValue
-    var converged = false
-    val cap = 30
-    var i = 0
-    while (!converged && i < cap) {
-      i += 1
-      labels = propagate(labels)
-      if (i % checkEvery == 0) {
-        val s = labels.agg(sum("label")).head().getLong(0)
-        if (s == prevSum) converged = true else prevSum = s
-      }
-    }
-    if (!converged) {
-      // Cap exit: a component with diameter > cap would silently ship wrong
-      // cluster ids. Verify the fixpoint with one extra propagation round
-      // and fail loudly if labels are still moving.
-      val next = propagate(labels)
-      val s1 = labels.agg(sum("label")).head().getLong(0)
-      val s2 = next.agg(sum("label")).head().getLong(0)
-      require(s1 == s2,
-        s"minLabelComponents did not converge within $cap rounds " +
-          "(a component's min-label eccentricity exceeds the cap); " +
-          "raise the cap or pre-contract the pathological component")
-      labels = next
-    }
-    // labels is localCheckpoint(true) = already materialized; the pair and
+    require(run.halted,
+      s"minLabelComponents did not converge within $cap rounds " +
+        "(a component's min-label eccentricity exceeds the cap); " +
+        "raise the cap or pre-contract the pathological component")
+    // The labels are checkpointed (already materialized); the pair and
     // edge caches have no remaining consumers.
     pairs.unpersist(blocking = false)
     edges.unpersist(blocking = false)
-    labels
+    run.state
   }
 
   val dedupClustersSql: String =

@@ -1,7 +1,7 @@
 package graft.ops
 
 import graft.Tables
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 /** Iterative graph analytics on relational edge lists — the Pregel-lite
@@ -9,7 +9,10 @@ import org.apache.spark.sql.functions._
   * complements [[graft.llm.Dedup.minLabelComponents]]'s connected
   * components. Everything is integer arithmetic so the fixed-iteration
   * result is bit-identical on any engine — the same determinism discipline
-  * as the IVF centroid training.
+  * as the IVF centroid training. PageRank and BFS run their rounds through
+  * [[Superstep.iterate]]; each takes the join hint as its one plan choice
+  * ("broadcast" for a dims-scale vertex set, "shuffle_hash" for one too
+  * large for any single machine).
   */
 object Graph {
 
@@ -19,129 +22,68 @@ object Graph {
   val PrInit = 1000000L
   val PrIters = 3
 
-  /** Fixed-iteration integer PageRank over the part↔supplier co-occurrence
-    * graph (distinct (l_partkey, l_suppkey) from lineitem, both directions,
-    * so every node has in- and out-edges and there is no dangling-mass
-    * term). Ranks are integers scaled by 1e6; contributions use integer
-    * division (truncating on both engines for non-negatives), so three
-    * rounds are deterministic and hash-match the oracle's unrolled CTE
-    * chain.
-    *
-    * Scale shape: the node set here is dimension-sized (parts + suppliers,
-    * ~21k at sf0.1) while the edge list is fact-sized (~1.2M), so each round
-    * BROADCASTS the per-node contribution vector against the cached edge
-    * list and map-side-combines the groupBy(dst) — the edge list is scanned
-    * from cache, never shuffled, and the only shuffle per round is ≤|nodes|
-    * partial sums. Rounds materialize eagerly (localCheckpoint) so round t's
-    * broadcast build doesn't re-plan rounds 1..t-1. Node ids stay LONGS
-    * throughout the joins (parity-encoded: part p → 2p, supplier s → 2s+1);
-    * the display string ("p:…"/"s:…") is minted only in the final
-    * projection — integer hash joins, no string keys in the hot path. That
-    * is the right plan whenever the node vector fits a broadcast (any graph
-    * whose vertex set is dims-scale); for a web-scale vertex set, flip the
-    * hint off and the same code degrades to the classic shuffle
-    * formulation — edges pre-bucketed on src, one rank-vector shuffle per
-    * round. */
-  /** Parity-encoded long-keyed edge list (cached+tracked) and out-degrees. */
-  private[graft] def prGraph(s: SparkSession, d: String): (DataFrame, DataFrame) = {
-    val e0 = Tables.lineitem(s, d)
+  /** The part↔supplier co-occurrence graph PageRank and BFS traverse:
+    * distinct (l_partkey, l_suppkey) from lineitem, both directions, so
+    * every node has in- and out-edges and there is no dangling-mass term.
+    * Node ids are parity-encoded longs (part p → 2p, supplier s → 2s+1):
+    * integer hash joins throughout, with the display string minted only by
+    * [[nodeName]] in the final projection. The fact-sized list shuffles
+    * once, here, into the src bucketing every round's message join reads
+    * from cache (cached and tracked). */
+  private[graft] def edgeList(s: SparkSession, d: String): DataFrame = {
+    val ps = Tables.lineitem(s, d)
       .select(col("l_partkey").as("p"), col("l_suppkey").as("sk"))
       .distinct()
-    val edges = graft.TrackedCaches.track(
-      e0.select((col("p") * 2).as("src"), (col("sk") * 2 + 1).as("dst"))
-        .union(e0.select((col("sk") * 2 + 1).as("src"), (col("p") * 2).as("dst")))
-        .cache())
+    graft.TrackedCaches.track(
+      ps.select((col("p") * 2).as("src"), (col("sk") * 2 + 1).as("dst"))
+        .union(ps.select((col("sk") * 2 + 1).as("src"), (col("p") * 2).as("dst")))
+        .repartition(col("src")).cache())
+  }
+
+  /** "p:<partkey>" / "s:<suppkey>" for the parity-encoded `nid` column. */
+  private val nodeName: Column =
+    when(col("nid") % 2 === 0, concat(lit("p:"), expr("nid div 2")))
+      .otherwise(concat(lit("s:"), expr("(nid - 1) div 2")))
+      .as("node")
+
+  /** [[edgeList]] and its out-degrees (which inherit the src bucketing:
+    * partial aggregation, no exchange). */
+  private[graft] def prGraph(s: SparkSession, d: String): (DataFrame, DataFrame) = {
+    val edges = edgeList(s, d)
     (edges, edges.groupBy("src").agg(count(lit(1)).as("d")))
   }
 
   /** One un-materialized propagation round — the plan PlanShapeSpec audits
-    * (pageRank checkpoints each round, which truncates the visible plan). */
-  private[graft] def prRound(edges: DataFrame, deg: DataFrame, pr: DataFrame): DataFrame = {
-    val contrib = pr.join(broadcast(deg), pr("nid") === deg("src"))
+    * (each round is checkpointed, which truncates the visible plan).
+    * `joinHint` is the strategy of both rank joins. "broadcast" suits a
+    * dims-scale vertex set (parts + suppliers, ~21k at sf0.1, against a
+    * ~1.2M edge list): the contribution vector broadcasts against the
+    * cached edges, the groupBy(dst) map-side-combines, and the only shuffle
+    * per round is ≤|nodes| partial sums. "shuffle_hash" is the web-scale
+    * shape: nothing broadcasts, each round shuffles ~|nodes| rank rows on
+    * nid while the edges stay in their src bucketing. */
+  private[graft] def prRound(edges: DataFrame, deg: DataFrame, pr: DataFrame,
+      joinHint: String): DataFrame = {
+    val contrib = pr.join(deg.hint(joinHint), pr("nid") === deg("src"))
       .select(col("nid"), expr("pr div d").as("c"))
-    edges.join(broadcast(contrib), edges("src") === contrib("nid"))
+    edges.join(contrib.hint(joinHint), edges("src") === contrib("nid"))
       .groupBy(col("dst")).agg(sum(col("c")).as("m"))
       .select(col("dst").as("nid"),
         (lit(PrBase) + expr(s"($PrDamp * m) div 100")).as("pr"))
   }
 
-  def pageRank(s: SparkSession, d: String): DataFrame = {
-    val (edges, deg0) = prGraph(s, d)
-    // The rank and degree vectors are node-scale (~21k rows at sf0.1, two
-    // longs each) — materialize them to LOCAL relations (the trainCentroids
-    // discipline, llm/Similarity.scala): each round's broadcast then builds
-    // from driver-local data instead of re-running a cluster job, and round
-    // t's plan never nests rounds 1..t-1 (the problem localCheckpoint(true)
-    // solved before, at the cost of an eager materialization job per round).
-    // For a web-scale vertex set this collect is the thing to flip back to a
-    // checkpointed distributed vector — see the scaladoc above.
-    def localize(df: DataFrame): DataFrame =
-      s.createDataFrame(java.util.Arrays.asList(df.collect(): _*), df.schema)
-    val deg = localize(deg0)
-    var pr = deg.select(col("src").as("nid"), lit(PrInit).as("pr"))
-    (1 to PrIters).foreach { _ =>
-      pr = localize(prRound(edges, deg, pr))
-    }
-    pr.select(
-        when(col("nid") % 2 === 0, concat(lit("p:"), expr("nid div 2")))
-          .otherwise(concat(lit("s:"), expr("(nid - 1) div 2")))
-          .as("node"),
-        col("pr").as("rank"))
-      .orderBy("node")
-  }
-
-  /** One un-materialized round of the distributed formulation — [[prRound]]'s
-    * integer arithmetic with every broadcast replaced by a hinted
-    * shuffle-hash join (PlanShapeSpec audits this plan: no broadcast, no
-    * sort-merge of the edge list). */
-  private[graft] def prRoundDist(edges: DataFrame, deg: DataFrame,
-      pr: DataFrame): DataFrame = {
-    val contrib = pr.join(deg.hint("shuffle_hash"), pr("nid") === deg("src"))
-      .select(col("nid"), expr("pr div d").as("c"))
-    edges.join(contrib.hint("shuffle_hash"), edges("src") === contrib("nid"))
-      .groupBy(col("dst")).agg(sum(col("c")).as("m"))
-      .select(col("dst").as("nid"),
-        (lit(PrBase) + expr(s"($PrDamp * m) div 100")).as("pr"))
-  }
-
-  /** [[pageRank]] without the driver-localized rank vector — the web-scale
-    * formulation the batch variant's scaladoc points at, executed: the rank
-    * vector stays a DISTRIBUTED dataset for the whole run (each round
-    * materializes via eager localCheckpoint — executor-resident partitions,
-    * no driver collect, lineage truncated so round t never re-plans rounds
-    * 1..t-1), edges are pre-bucketed on src ONCE and read from cache every
-    * round, and the per-round joins are hinted shuffle-hash so no side is
-    * ever broadcast — the shape that survives a vertex set too large for
-    * any single machine. Round arithmetic is [[prRound]]'s bit-for-bit
-    * (same integer formulas), so the output hash-matches [[pageRank]] and
-    * shares its DuckDB oracle; PlanShapeSpec additionally asserts the rank
-    * lineage carries no LocalTableScan (the driver-localization marker) and
-    * that the edge list is not re-shuffled per round.
-    *
-    * Cost trade vs [[pageRank]]: each round shuffles ~|nodes| rank rows on
-    * nid (deg and the post-agg rank vector share the src/nid partitioning,
-    * so the contribution join is co-partitioned) — at dims-scale the
-    * broadcast variant wins (nothing shuffles at all), which is why it
-    * stays the shipped default; at web scale the broadcast build itself is
-    * the bottleneck and THIS plan is the one that runs. */
-  def pageRankDistributed(s: SparkSession, d: String): DataFrame = {
-    val (edges0, _) = prGraph(s, d)
-    // Pre-bucket on src: every round's message join reuses this layout, so
-    // the fact-sized edge list is shuffled exactly once, here.
-    val edges = graft.TrackedCaches.track(
-      edges0.repartition(col("src")).cache())
-    // Degrees inherit the src bucketing (partial agg, no exchange).
-    val deg = edges.groupBy("src").agg(count(lit(1)).as("d"))
-    var pr = deg.select(col("src").as("nid"), lit(PrInit).as("pr"))
-      .localCheckpoint(true)
-    (1 to PrIters).foreach { _ =>
-      pr = prRoundDist(edges, deg, pr).localCheckpoint(true)
-    }
-    pr.select(
-        when(col("nid") % 2 === 0, concat(lit("p:"), expr("nid div 2")))
-          .otherwise(concat(lit("s:"), expr("(nid - 1) div 2")))
-          .as("node"),
-        col("pr").as("rank"))
+  /** Fixed-iteration integer PageRank over [[edgeList]]. Ranks are integers
+    * scaled by 1e6; contributions use integer division (truncating on both
+    * engines for non-negatives), so [[PrIters]] rounds are deterministic
+    * and hash-match the oracle's unrolled CTE chain under either join hint
+    * (the q_pagerank and q_pagerank_dist rows share [[pageRankSql]]). The
+    * rank vector stays executor-resident between rounds; nothing is
+    * collected to the driver. */
+  def pageRank(s: SparkSession, d: String, joinHint: String): DataFrame = {
+    val (edges, deg) = prGraph(s, d)
+    val init = deg.select(col("src").as("nid"), lit(PrInit).as("pr"))
+    Superstep.iterate(init, PrIters)((pr, _) => prRound(edges, deg, pr, joinHint))
+      .state.select(nodeName, col("pr").as("rank"))
       .orderBy("node")
   }
 
@@ -299,121 +241,56 @@ object Graph {
         FROM deg LEFT JOIN pn ON deg.n = pn.n
         ORDER BY supplier"""
 
-  /** BFS depth cap for [[reachBfs]]. Three hops covers the supply-chain
+  /** BFS depth cap of the registry rows. Three hops covers the supply-chain
     * question ("a recall of part X touches which suppliers, then which
-    * co-supplied parts, then which of THEIR suppliers") while keeping the
-    * un-deduplicated recursive frontier bounded: recursive CTEs cannot
-    * aggregate inside the loop, so frontier rows multiply by node degree
-    * per hop (~550k rows total here at either test SF) — the depth cap is
-    * what bounds that product, the same role the round count plays in the
-    * iterative family. */
+    * co-supplied parts, then which of THEIR suppliers"); the DuckDB oracle's
+    * recursive CTE, whose UNION ALL frontier multiplies by node degree per
+    * hop, needs the same bound. */
   val BfsMaxHop = 3
 
   /** Seed node: part 1, parity-encoded like the PageRank node ids. */
   val BfsSeed = 2L
 
-  /** Min-hop reachability from one part over the part↔supplier graph via a
-    * RECURSIVE CTE (Spark 4's WITH RECURSIVE / UnionLoopExec) — the
-    * supply-chain blast-radius query, and the library's declarative-SQL
-    * counterpart to the hand-rolled iterative traversals: bounded-depth
-    * traversals fit the recursive-CTE form directly; UNBOUNDED fixpoints
-    * (components, ranks) stay with the checkpointed driver-loop kernels
-    * ([[pageRankDist]], [[graft.llm.Dedup]]'s min-label components), which
-    * dedupe the frontier between rounds — the thing the recursion's
-    * UNION ALL loop cannot do.
+  /** Min-hop reachability from [[BfsSeed]] over [[edgeList]] — the
+    * supply-chain blast-radius query — as deduped-frontier BFS: the state
+    * is one (nid, hop) table, and each round expands the last hop's
+    * frontier by one equi-join against the bucketed edges, DEDUPLICATES it
+    * and anti-joins away every node already in the state, so a round's
+    * frontier is bounded by |unvisited nodes| no matter the path
+    * multiplicity. First discovery order IS min-hop order in BFS, so hop
+    * labels need no post-aggregation. `joinHint` is the strategy of both
+    * joins ("broadcast" for q_reach_bfs, "shuffle_hash" for
+    * q_reach_bfs_dist); both rows share [[reachBfsSql]].
     *
-    * Scale shape: the edge list is built ONCE, eagerly materialized
-    * (localCheckpoint — the [[triangleCounts]] lineage-cut discipline), and
-    * registered as the view the recursion scans each iteration; every hop
-    * is then one equi-join of the (hop-bounded) frontier against that
-    * local table, and the min-hop aggregate runs once, after the loop.
-    * Node ids stay parity-encoded longs inside the loop; strings are
-    * minted only in the final projection. */
-  def reachBfs(s: SparkSession, d: String): DataFrame = {
-    val ps = Tables.lineitem(s, d)
-      .select(col("l_partkey").as("p"), col("l_suppkey").as("sk")).distinct()
-    val edges = ps.select((col("p") * 2).as("src"), (col("sk") * 2 + 1).as("dst"))
-      .unionByName(ps.select((col("sk") * 2 + 1).as("src"), (col("p") * 2).as("dst")))
-      .localCheckpoint(true)
-    edges.createOrReplaceTempView("graft_bfs_edges")
-    s.sql(s"""
-      WITH RECURSIVE reach(nid, hop) AS (
-        SELECT CAST($BfsSeed AS BIGINT) AS nid, 0 AS hop
-        UNION ALL
-        SELECT e.dst, r.hop + 1
-        FROM reach r JOIN graft_bfs_edges e ON e.src = r.nid
-        WHERE r.hop < $BfsMaxHop
-      )
-      SELECT CASE WHEN nid % 2 = 0 THEN concat('p:', CAST(nid DIV 2 AS STRING))
-                  ELSE concat('s:', CAST((nid - 1) DIV 2 AS STRING)) END AS node,
-             min(hop) AS hop
-      FROM reach GROUP BY nid ORDER BY hop, node""")
-  }
-
-  /** The DISTRIBUTED twin of [[reachBfs]] — iterative deduped-frontier BFS,
-    * the [[pageRankDistributed]] move applied to traversal: each round
-    * expands the frontier by one equi-join against the pre-bucketed edge
-    * list, DEDUPLICATES it (distinct), and anti-joins away every node
-    * already visited, so a round's frontier is bounded by |unvisited
-    * nodes| no matter the path multiplicity — exactly the aggregation the
-    * recursive CTE's UNION ALL loop cannot express (its frontier rows
-    * multiply by node degree per hop, which is why [[reachBfs]] carries
-    * [[BfsMaxHop]]). First-discovery order IS min-hop order in BFS, so
-    * hop labels need no post-aggregation; with `maxHop = None` the loop
-    * runs to the true fixpoint (frontier empty = component exhausted) in
-    * at most diameter rounds, which a depth-capped recursion cannot reach
-    * on a high-diameter graph without exponential frontier blowup.
-    *
-    * Scale shape: edges shuffle ONCE into the src bucketing and are read
-    * from cache every round; the per-round join is hinted shuffle-hash on
-    * that layout (no broadcast — the frontier can be node-scale); visited
-    * and frontier materialize via eager localCheckpoint so round t never
-    * re-plans rounds 1..t-1 (executor-resident, no driver collect). The
-    * per-round `count()` on the already-checkpointed frontier is the loop's
-    * only driver-visible scalar — the termination test. Output is
-    * hash-identical to [[reachBfs]] at the same cap (GraphSpec proves
-    * both cap-equality and uncapped fixpoint termination) and shares its
-    * DuckDB oracle. */
-  def reachBfsDistributed(s: SparkSession, d: String,
+    * A capped run ([[BfsMaxHop]] by default) is ended by its cap alone:
+    * rounds past an emptied frontier add nothing, so it pays no per-round
+    * count. With `maxHop = None` the empty frontier is the halt test, and
+    * the loop reaches the true fixpoint (the seed's component exhausted)
+    * in at most diameter rounds. */
+  def reachBfs(s: SparkSession, d: String, joinHint: String,
       maxHop: Option[Int] = Some(BfsMaxHop)): DataFrame = {
-    val ps = Tables.lineitem(s, d)
-      .select(col("l_partkey").as("p"), col("l_suppkey").as("sk")).distinct()
-    val edges0 = ps.select((col("p") * 2).as("src"), (col("sk") * 2 + 1).as("dst"))
-      .unionByName(ps.select((col("sk") * 2 + 1).as("src"), (col("p") * 2).as("dst")))
-    val edges = graft.TrackedCaches.track(
-      edges0.repartition(col("src")).cache())
-    var visited = edges.sparkSession.range(1)
-      .select(lit(BfsSeed).as("nid"), lit(0).as("hop"))
-      .localCheckpoint(true)
-    var frontier = visited
-    var hop = 0
-    var frontierSize = 1L
-    while (frontierSize > 0 && maxHop.forall(hop < _)) {
-      hop += 1
-      frontier = bfsRound(edges, visited, frontier, hop).localCheckpoint(true)
-      frontierSize = frontier.count()
-      if (frontierSize > 0)
-        visited = visited.unionByName(frontier).localCheckpoint(true)
-    }
-    visited.select(
-        when(col("nid") % 2 === 0, concat(lit("p:"), expr("nid div 2")))
-          .otherwise(concat(lit("s:"), expr("(nid - 1) div 2")))
-          .as("node"),
-        col("hop").cast("int").as("hop"))
+    val edges = edgeList(s, d)
+    val seed = s.range(0, 1, 1, 1).select(lit(BfsSeed).as("nid"), lit(0).as("hop"))
+    val halt: (DataFrame, Int) => Boolean =
+      if (maxHop.isDefined) (_, _) => false
+      else (state, hop) => state.filter(col("hop") === hop).count() == 0
+    Superstep.iterate(seed, maxHop.getOrElse(Int.MaxValue), halt)(
+        (state, hop) => bfsRound(edges, state, hop, joinHint))
+      .state.select(nodeName, col("hop"))
       .orderBy("hop", "node")
   }
 
-  /** One BFS expansion round: frontier -> unvisited neighbors at `hop`.
-    * Shuffle-hash-hinted against the pre-bucketed edges so neither side
-    * broadcasts (the frontier can be node-scale at web scale); split out so
-    * PlanShapeSpec can audit the physical round. */
-  private[graft] def bfsRound(edges: DataFrame, visited: DataFrame,
-      frontier: DataFrame, hop: Int): DataFrame =
-    edges.hint("shuffle_hash")
-      .join(frontier.select(col("nid").as("src")), "src")
+  /** One BFS round: the state plus the unvisited neighbors of its
+    * hop - 1 frontier, labeled `hop`. Split out so PlanShapeSpec can audit
+    * the physical round. */
+  private[graft] def bfsRound(edges: DataFrame, state: DataFrame, hop: Int,
+      joinHint: String): DataFrame = {
+    val frontier = state.filter(col("hop") === hop - 1).select(col("nid").as("src"))
+    val found = edges.join(frontier.hint(joinHint), "src")
       .select(col("dst").as("nid")).distinct()
-      .join(visited.select("nid"), Seq("nid"), "left_anti")
-      .select(col("nid"), lit(hop).as("hop"))
+      .join(state.select("nid").hint(joinHint), Seq("nid"), "left_anti")
+    state.union(found.select(col("nid"), lit(hop).as("hop")))
+  }
 
   val reachBfsSql: String =
     s"""WITH RECURSIVE

@@ -609,6 +609,9 @@ object DocStreams {
     }
 
     var snapOpt: Option[org.apache.spark.broadcast.Broadcast[_]] = None
+    // The distributed screen's per-batch cache, unpersisted once the
+    // batch's verdicts are written.
+    var batchCache: Option[DataFrame] = None
     val screen: DataFrame => DataFrame =
       if (useBroadcast) {
         val snap = graft.TrackedCaches.trackBroadcast(
@@ -631,10 +634,12 @@ object DocStreams {
           // Both screening stages read the (query term, df) rows; cache them
           // per batch so the arrival tokenize + df join runs once, not twice
           // (the stages share one plan and Spark does not dedupe subtrees).
-          // Tiny: |batch| x sub-ceiling vocabulary. Released after the batch's
-          // write by the foreachBatch body via TrackedCaches.
+          // Tiny: |batch| x sub-ceiling vocabulary. The micro-batch body
+          // unpersists it after the batch's write; tracking covers the lazy
+          // empty-zone frame, which no micro-batch writes.
           val qd = graft.TrackedCaches.track(
             Retrieval.subCeilingQueryDf(ix, qt).cache())
+          batchCache = Some(qd)
           val cand = Retrieval.screenCandidatesQd(ix, qd)
           val scores = Retrieval.scoreCandidatesQd(ix, fwd, qd, cand)
           // Top-1 per arrival via the bounded-heap operator rather than a
@@ -679,7 +684,9 @@ object DocStreams {
     // 2-batch minimum the incrementality gate demands).
     val outBase = Zone.tmp("graft_stream_decontam")
     val latest = Zone.run(s, dir, docSchema, outBase, Zone.SliceShuffles) {
-      (batch, batchId) => Zone.put(screen(batch), outBase, batchId)
+      (batch, batchId) =>
+        Zone.put(screen(batch), outBase, batchId)
+        batchCache.foreach(_.unpersist(blocking = false))
     }
     val nChunks = Zone.chunks(dir)
     require(latest >= 1 || nChunks <= 2,

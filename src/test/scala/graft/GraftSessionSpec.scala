@@ -63,4 +63,10 @@ class GraftSessionSpec extends SparkSpec {
       sites("""conf\s*\.\s*set\s*\(\s*"spark\.sql\.shuffle\.partitions"""".r)
     assert(shuffleSets.isEmpty, s"shuffle partitions set outside Zone.withConf: $shuffleSets")
   }
+
+  test("the graph rounds collect nothing to the driver") {
+    val src = text(Paths.get("src/main/scala/graft/ops/Graph.scala"))
+    val collects = """\.collect\s*\(\s*\)""".r.findAllMatchIn(src).size
+    assert(collects == 0, s"Graph.scala has $collects .collect() calls")
+  }
 }

@@ -313,7 +313,7 @@ class PlanShapeSpec extends SparkSpec with AdaptiveSparkPlanHelper {
     val (edges, deg) = graft.ops.Graph.prGraph(spark, Sf)
     val pr0 = deg.select(col("src").as("nid"),
       lit(graft.ops.Graph.PrInit).as("pr"))
-    val df = graft.ops.Graph.prRound(edges, deg, pr0)
+    val df = graft.ops.Graph.prRound(edges, deg, pr0, "broadcast")
     df.collect()
     val plan = df.queryExecution.executedPlan
     val bhj = collectWithSubqueries(plan) { case j: BroadcastHashJoinExec => j }
@@ -327,24 +327,22 @@ class PlanShapeSpec extends SparkSpec with AdaptiveSparkPlanHelper {
 
   test("distributed PageRank: same output, no driver-local rank, no broadcast rounds") {
     // The web-scale variant must be bit-identical to the broadcast one...
-    val a = graft.ops.Graph.pageRank(spark, Sf).collect()
+    val a = graft.ops.Graph.pageRank(spark, Sf, "broadcast").collect()
       .map(r => (r.getString(0), r.getLong(1)))
-    val b0 = graft.ops.Graph.pageRankDistributed(spark, Sf)
+    val b0 = graft.ops.Graph.pageRank(spark, Sf, "shuffle_hash")
     val b = b0.collect().map(r => (r.getString(0), r.getLong(1)))
     assert(a.sameElements(b), "distributed rounds must reproduce pageRank exactly")
-    // ...with the rank vector never driver-localized: pageRank's collect+
-    // createDataFrame shows up as LocalTableScan; the distributed lineage
-    // must carry none (its checkpointed rounds scan executor-resident RDDs).
+    // ...with the rank vector never driver-localized: a collect+
+    // createDataFrame would show up as LocalTableScan; the lineage must
+    // carry none (its checkpointed rounds scan executor-resident RDDs).
     assert(!b0.queryExecution.executedPlan.toString.contains("LocalTableScan"),
       "rank-vector lineage must not pass through a driver-local relation")
     // And the per-round plan is the classic shuffle formulation: both rank
     // joins shuffle-hash against the pre-bucketed edges; nothing broadcasts.
-    val (edges0, _) = graft.ops.Graph.prGraph(spark, Sf)
-    val edges = graft.TrackedCaches.track(edges0.repartition(col("src")).cache())
-    val deg = edges.groupBy("src").agg(count(lit(1)).as("d"))
+    val (edges, deg) = graft.ops.Graph.prGraph(spark, Sf)
     val pr0 = deg.select(col("src").as("nid"),
       lit(graft.ops.Graph.PrInit).as("pr")).localCheckpoint(true)
-    val round = graft.ops.Graph.prRoundDist(edges, deg, pr0)
+    val round = graft.ops.Graph.prRound(edges, deg, pr0, "shuffle_hash")
     round.collect()
     val plan = round.queryExecution.executedPlan
     val shj = collectWithSubqueries(plan) {
@@ -362,7 +360,7 @@ class PlanShapeSpec extends SparkSpec with AdaptiveSparkPlanHelper {
     // LocalTableScan in the final lineage — checkpointed rounds scan
     // executor-resident RDDs) and expand via the pre-bucketed edge layout
     // with a shuffle-hash hint, never broadcasting a node-scale frontier.
-    val df = graft.ops.Graph.reachBfsDistributed(spark, Sf)
+    val df = graft.ops.Graph.reachBfs(spark, Sf, "shuffle_hash")
     df.collect()
     val plan = df.queryExecution.executedPlan.toString
     assert(!plan.contains("LocalTableScan"),
@@ -371,16 +369,11 @@ class PlanShapeSpec extends SparkSpec with AdaptiveSparkPlanHelper {
     // Per-round shape (checkpoints truncate the final lineage, so audit the
     // round kernel directly): frontier expansion shuffle-hashes against the
     // bucketed edges; the anti-join carries no sort-merge of the edge list.
-    val ps = Tables.lineitem(spark, Sf)
-      .select(col("l_partkey").as("p"), col("l_suppkey").as("sk")).distinct()
-    val edges = graft.TrackedCaches.track(
-      ps.select((col("p") * 2).as("src"), (col("sk") * 2 + 1).as("dst"))
-        .unionByName(ps.select((col("sk") * 2 + 1).as("src"), (col("p") * 2).as("dst")))
-        .repartition(col("src")).cache())
+    val edges = graft.ops.Graph.edgeList(spark, Sf)
     val seed = spark.range(1)
       .select(lit(graft.ops.Graph.BfsSeed).as("nid"), lit(0).as("hop"))
       .localCheckpoint(true)
-    val round = graft.ops.Graph.bfsRound(edges, seed, seed, 1)
+    val round = graft.ops.Graph.bfsRound(edges, seed, 1, "shuffle_hash")
     round.collect()
     val rplan = round.queryExecution.executedPlan
     val shj = collectWithSubqueries(rplan) {

@@ -54,7 +54,7 @@ class SketchesSpec extends SparkSpec {
   }
 
   test("PageRank conserves scaled mass within truncation loss and is deterministic") {
-    val r = Graph.pageRank(spark, Sf).cache()
+    val r = Graph.pageRank(spark, Sf, "broadcast").cache()
     val nodes = r.count()
     val total = r.agg(sum("rank")).head().getLong(0)
     // Each round: base mass PrBase*nodes + damped share of (conserved modulo
@@ -62,7 +62,7 @@ class SketchesSpec extends SparkSpec {
     val ideal = nodes * (Graph.PrBase + Graph.PrDamp * Graph.PrInit / 100)
     assert(total <= ideal, s"mass grew: $total > $ideal")
     assert(total >= ideal * 9 / 10, s"mass lost beyond truncation plausibility: $total vs $ideal")
-    val again = Graph.pageRank(spark, Sf).collect()
+    val again = Graph.pageRank(spark, Sf, "broadcast").collect()
     assert(r.collect().toSeq == again.toSeq, "fixed-iteration integer PageRank must be deterministic")
     r.unpersist()
   }
@@ -95,59 +95,62 @@ class SketchesSpec extends SparkSpec {
     }
   }
 
-  test("recursive-CTE reachability equals an in-memory BFS from the same seed") {
-    val got = Graph.reachBfs(spark, Sf).collect()
-      .map(r => r.getString(0) -> r.getInt(1)).toMap
-    // In-memory BFS over the same parity-encoded bipartite graph.
+  /** The part↔supplier graph as an in-memory adjacency map, node ids
+    * parity-encoded like Graph's (part p → 2p, supplier s → 2s+1). */
+  private lazy val adj: Map[Long, Set[Long]] = {
     val ps = Tables.lineitem(spark, Sf)
       .select("l_partkey", "l_suppkey").distinct().collect()
       .map(r => (r.getLong(0) * 2, r.getLong(1) * 2 + 1))
-    val adj = (ps ++ ps.map(_.swap)).groupBy(_._1).view
+    (ps ++ ps.map(_.swap)).groupBy(_._1).view
       .mapValues(_.map(_._2).toSet).toMap
+  }
+
+  private def name(nid: Long) =
+    if (nid % 2 == 0) s"p:${nid / 2}" else s"s:${(nid - 1) / 2}"
+
+  /** In-memory min-hop BFS from Graph.BfsSeed, `maxHop` hops deep. */
+  private def bfsReference(maxHop: Int): Map[String, Int] = {
     val hops = scala.collection.mutable.Map(Graph.BfsSeed -> 0)
     var frontier = Set(Graph.BfsSeed)
-    (1 to Graph.BfsMaxHop).foreach { h =>
+    (1 to maxHop).foreach { h =>
       frontier = frontier.flatMap(adj.getOrElse(_, Set.empty))
         .filterNot(hops.contains)
       frontier.foreach(hops(_) = h)
     }
-    def name(nid: Long) =
-      if (nid % 2 == 0) s"p:${nid / 2}" else s"s:${(nid - 1) / 2}"
-    val expect = hops.map { case (nid, h) => name(nid) -> h }.toMap
-    assert(got == expect, s"BFS mismatch: got ${got.size} nodes, expected ${expect.size}")
-    // the traversal must actually leave hop 1 (2-hop part neighborhood live)
-    assert(got.values.count(_ == 2) > 0 && got.values.count(_ == 1) > 0)
+    hops.map { case (nid, h) => name(nid) -> h }.toMap
   }
 
-  test("distributed deduped-frontier BFS == recursive CTE at the cap; uncapped reaches fixpoint") {
-    // Cap-equality: the iterative twin must reproduce the recursive CTE's
-    // min-hop map row for row at BfsMaxHop (they share one DuckDB oracle).
-    val cte = Graph.reachBfs(spark, Sf).collect()
+  private def bfs(hint: String, maxHop: Option[Int]): Map[String, Int] = {
+    val got = Graph.reachBfs(spark, Sf, hint, maxHop).collect()
       .map(r => r.getString(0) -> r.getInt(1)).toMap
-    val dist = Graph.reachBfsDistributed(spark, Sf).collect()
-      .map(r => r.getString(0) -> r.getInt(1)).toMap
-    assert(dist == cte,
-      s"capped distributed BFS diverges: ${dist.size} vs ${cte.size} nodes")
     graft.TrackedCaches.release()
-    // Fixpoint: uncapped, the anti-joined frontier must drain to empty —
-    // the termination the UNION ALL recursion cannot express — and the
-    // result must be a superset of the capped map that agrees on it
+    got
+  }
+
+  test("both BFS rows equal an in-memory BFS from the same seed") {
+    // q_reach_bfs and q_reach_bfs_dist differ only by join hint; each must
+    // reproduce the reference min-hop map row for row at BfsMaxHop.
+    val expect = bfsReference(Graph.BfsMaxHop)
+    Seq("broadcast", "shuffle_hash").foreach { hint =>
+      val got = bfs(hint, Some(Graph.BfsMaxHop))
+      assert(got == expect,
+        s"$hint BFS mismatch: got ${got.size} nodes, expected ${expect.size}")
+    }
+    // the traversal must actually leave hop 1 (2-hop part neighborhood live)
+    assert(expect.values.count(_ == 2) > 0 && expect.values.count(_ == 1) > 0)
+  }
+
+  test("uncapped BFS drains its frontier and agrees with the capped labels") {
+    // Fixpoint: uncapped, the anti-joined frontier must drain to empty and
+    // the result must be a superset of the capped map that agrees on it
     // (min-hop labels are prefix-stable), covering the seed's whole
     // component (every node it touches has all ITS neighbors labeled).
-    val full = Graph.reachBfsDistributed(spark, Sf, maxHop = None).collect()
-      .map(r => r.getString(0) -> r.getInt(1)).toMap
-    graft.TrackedCaches.release()
-    assert(cte.forall { case (n, h) => full.get(n).contains(h) },
+    val capped = bfsReference(Graph.BfsMaxHop)
+    val full = bfs("shuffle_hash", None)
+    assert(capped.forall { case (n, h) => full.get(n).contains(h) },
       "uncapped BFS must agree with the capped labels")
-    assert(full.size >= cte.size)
+    assert(full.size >= capped.size)
     // component closure, re-checked against the raw edge list
-    val ps = Tables.lineitem(spark, Sf)
-      .select("l_partkey", "l_suppkey").distinct().collect()
-      .map(r => (r.getLong(0) * 2, r.getLong(1) * 2 + 1))
-    val adj = (ps ++ ps.map(_.swap)).groupBy(_._1).view
-      .mapValues(_.map(_._2).toSet).toMap
-    def name(nid: Long) =
-      if (nid % 2 == 0) s"p:${nid / 2}" else s"s:${(nid - 1) / 2}"
     val labeled = full.keySet
     adj.foreach { case (nid, nbrs) =>
       if (labeled.contains(name(nid)))

@@ -9,6 +9,12 @@ import org.apache.spark.sql.functions._
   * same logical aggregation). */
 class StreamingSpec extends SparkSpec {
 
+  /** `body` over a fresh temp dir named by `prefix`, deleted afterwards. */
+  private def withTempDir[A](prefix: String)(body: String => A): A = {
+    val dir = java.nio.file.Files.createTempDirectory(prefix)
+    try body(dir.toString) finally graft.Fs.deleteRec(dir)
+  }
+
   test("streaming tumbling window == batch tumbling window") {
     val streamed = EventStreams.tumblingWindowStream(spark, Sf)
       .select("win_start", "cnt", "sum_value")
@@ -212,8 +218,12 @@ class StreamingSpec extends SparkSpec {
     val chunks = Files.list(staged).filter(_.toString.endsWith(".parquet"))
       .sorted().iterator().asScala.toSeq
     assert(chunks.size >= 3, s"need >= 3 staged chunks, got ${chunks.size}")
-    def freshDir(tag: String) =
-      Files.createTempDirectory(s"graft_tws_$tag").toString
+    val made = scala.collection.mutable.Buffer.empty[Path]
+    def freshDir(tag: String) = {
+      val dir = Files.createTempDirectory(s"graft_tws_$tag")
+      made += dir
+      dir.toString
+    }
     // Files.copy does NOT preserve the staged zone's deterministic mtimes,
     // and the file source orders batches by modification time — landed
     // chunks must keep their time order or sessionization sees cross-batch
@@ -224,43 +234,46 @@ class StreamingSpec extends SparkSpec {
       Files.setLastModifiedTime(dst, Files.getLastModifiedTime(c))
       ()
     }
-    // Reference: one uninterrupted run over all chunks.
-    val refZone = freshDir("refzone"); val refBase = freshDir("refbase")
-    chunks.foreach(land(_, refZone))
-    EventStreams.runTwsSessionsOnce(spark, refZone, refBase)
-    // Split: run over the first half, STOP (checkpoint persists the RocksDB
-    // state + source offsets), land the rest, run again with the same base.
-    val splitZone = freshDir("splitzone"); val splitBase = freshDir("splitbase")
-    val (early, late) = chunks.splitAt(chunks.size / 2)
-    early.foreach(land(_, splitZone))
-    EventStreams.runTwsSessionsOnce(spark, splitZone, splitBase)
-    late.foreach(land(_, splitZone))
-    EventStreams.runTwsSessionsOnce(spark, splitZone, splitBase)
-    val ref = spark.read.parquet(s"$refBase/out")
-    val split = spark.read.parquet(s"$splitBase/out")
-    assert(ref.count() > 0, "reference run emitted no sessions")
-    // Sessions spanning the restart boundary must close from RECOVERED
-    // state — any loss or duplication shows as a set difference.
-    assert(split.exceptAll(ref).count() == 0 && ref.exceptAll(split).count() == 0,
-      s"restart emissions (${split.count()}) != uninterrupted (${ref.count()})")
+    try {
+      // Reference: one uninterrupted run over all chunks.
+      val refZone = freshDir("refzone"); val refBase = freshDir("refbase")
+      chunks.foreach(land(_, refZone))
+      EventStreams.runTwsSessionsOnce(spark, refZone, refBase)
+      // Split: run over the first half, STOP (checkpoint persists the RocksDB
+      // state + source offsets), land the rest, run again with the same base.
+      val splitZone = freshDir("splitzone"); val splitBase = freshDir("splitbase")
+      val (early, late) = chunks.splitAt(chunks.size / 2)
+      early.foreach(land(_, splitZone))
+      EventStreams.runTwsSessionsOnce(spark, splitZone, splitBase)
+      late.foreach(land(_, splitZone))
+      EventStreams.runTwsSessionsOnce(spark, splitZone, splitBase)
+      val ref = spark.read.parquet(s"$refBase/out")
+      val split = spark.read.parquet(s"$splitBase/out")
+      assert(ref.count() > 0, "reference run emitted no sessions")
+      // Sessions spanning the restart boundary must close from RECOVERED
+      // state — any loss or duplication shows as a set difference.
+      assert(split.exceptAll(ref).count() == 0 && ref.exceptAll(split).count() == 0,
+        s"restart emissions (${split.count()}) != uninterrupted (${ref.count()})")
+    } finally made.foreach(graft.Fs.deleteRec)
   }
 
   test("file sink restart over the same checkpoint is exactly-once (no re-emission)") {
     val dir = EventStreams.stageEvents(spark, Sf)
-    val base = java.nio.file.Files.createTempDirectory("graft_filesink_spec").toString
-    EventStreams.runFileSinkOnce(spark, dir, base)
-    val first = spark.read.parquet(s"$base/out")
-      .collect().map(r => (r.getTimestamp(0), r.getLong(1))).sorted.toSeq
-    assert(first.nonEmpty, "first run must flush at least one closed window")
-    assert(first.map(_._1).distinct.size == first.size,
-      "append sink emitted a window twice within one run")
-    // Restart against the same checkpoint + path with no new input: the
-    // file-commit log must replay nothing and duplicate nothing.
-    EventStreams.runFileSinkOnce(spark, dir, base)
-    val second = spark.read.parquet(s"$base/out")
-      .collect().map(r => (r.getTimestamp(0), r.getLong(1))).sorted.toSeq
-    assert(second == first,
-      s"restart changed the sink contents: ${second.size} rows vs ${first.size}")
+    withTempDir("graft_filesink_spec") { base =>
+      EventStreams.runFileSinkOnce(spark, dir, base)
+      val first = spark.read.parquet(s"$base/out")
+        .collect().map(r => (r.getTimestamp(0), r.getLong(1))).sorted.toSeq
+      assert(first.nonEmpty, "first run must flush at least one closed window")
+      assert(first.map(_._1).distinct.size == first.size,
+        "append sink emitted a window twice within one run")
+      // Restart against the same checkpoint + path with no new input: the
+      // file-commit log must replay nothing and duplicate nothing.
+      EventStreams.runFileSinkOnce(spark, dir, base)
+      val second = spark.read.parquet(s"$base/out")
+        .collect().map(r => (r.getTimestamp(0), r.getLong(1))).sorted.toSeq
+      assert(second == first,
+        s"restart changed the sink contents: ${second.size} rows vs ${first.size}")
+    }
   }
 
   test("file sink reuses one working dir across calls") {
@@ -284,27 +297,26 @@ class StreamingSpec extends SparkSpec {
   }
 
   test("ingest dedup restages its landing zone when the source table is rewritten") {
-    import java.nio.file._
     import spark.implicits._
-    val base = Files.createTempDirectory("graft_zone_rewrite").toString
-    val text = (id: Long) => (0 until 12).map(w => s"r${id}w$w").mkString(" ")
-    def write(ids: Seq[Long]): Unit =
-      ids.map(i => (i, text(i))).toDF("doc_id", "text")
-        .write.mode("overwrite").parquet(s"$base/documents.parquet")
-    def arrivals(): Set[Long] = {
-      val ids = graft.streaming.DocStreams.streamIngestDedup(spark, base)
-        .collect().map(_.getLong(0)).toSet
-      TrackedCaches.release()
-      ids
+    withTempDir("graft_zone_rewrite") { base =>
+      val text = (id: Long) => (0 until 12).map(w => s"r${id}w$w").mkString(" ")
+      def write(ids: Seq[Long]): Unit =
+        ids.map(i => (i, text(i))).toDF("doc_id", "text")
+          .write.mode("overwrite").parquet(s"$base/documents.parquet")
+      def arrivals(): Set[Long] = {
+        val ids = graft.streaming.DocStreams.streamIngestDedup(spark, base)
+          .collect().map(_.getLong(0)).toSet
+        TrackedCaches.release()
+        ids
+      }
+      write(0L to 24L)
+      assert(arrivals() == (0L to 24L by 5).toSet)
+      // Same path, different corpus: the zone staged from the first one must
+      // not be served.
+      write(100L to 124L)
+      assert(arrivals() == (100L to 124L by 5).toSet,
+        "the rewritten table's arrivals were screened from the old zone")
     }
-    write(0L to 24L)
-    assert(arrivals() == (0L to 24L by 5).toSet)
-    // Same path, different corpus: the zone staged from the first one must
-    // not be served.
-    write(100L to 124L)
-    assert(arrivals() == (100L to 124L by 5).toSet,
-      "the rewritten table's arrivals were screened from the old zone")
-    graft.Fs.deleteRec(Paths.get(base))
   }
 
   test("streaming ingest dedup == batch-computed verdicts over the same split") {
@@ -416,36 +428,35 @@ class StreamingSpec extends SparkSpec {
   }
 
   test("streaming vec ingest rejects a planted corpus twin, admits orthogonals") {
-    import java.nio.file._
     // Synthetic embedding geometry on one-hot axes: arrival 0 is byte-
     // identical to corpus vec 7 (cos 1.0 -> reject, neighbor 7); arrivals
     // 5/10/15/20 sit on axes no corpus vector uses (cos 0.0 -> admit).
     // Arrival ids {0,5,10,15,20} keep every staged vec_id range non-empty.
-    val base = Files.createTempDirectory("graft_vec_synth").toString
-    def oneHot(axis: Int): Array[Float] =
-      Array.tabulate(64)(i => if (i == axis) 1.0f else 0.0f)
-    val rows =
-      Seq((0L, oneHot(7)), (5L, oneHot(40)), (10L, oneHot(41)),
-        (15L, oneHot(42)), (20L, oneHot(50))) ++
-        (1 to 24).filter(_ % 5 != 0).map(i => (i.toLong, oneHot(i)))
-    import spark.implicits._
-    rows.toDF("vec_id", "embedding")
-      .write.mode("overwrite").parquet(s"$base/embeddings.parquet")
-    val out = graft.streaming.VecStreams.streamVecIngest(spark, base)
-      .collect()
-      .map(r => r.getLong(0) -> ((r.getLong(1), r.getDouble(2), r.getBoolean(3))))
-      .toMap
-    assert(out(0L) == ((7L, 1.0, false)),
-      s"arrival 0 must reject against corpus twin 7, got ${out(0L)}")
-    Seq(5L, 10L, 15L, 20L).foreach { i =>
-      assert(out(i)._2 == 0.0 && out(i)._3,
-        s"orthogonal arrival $i must admit at cos 0.0, got ${out(i)}")
+    withTempDir("graft_vec_synth") { base =>
+      def oneHot(axis: Int): Array[Float] =
+        Array.tabulate(64)(i => if (i == axis) 1.0f else 0.0f)
+      val rows =
+        Seq((0L, oneHot(7)), (5L, oneHot(40)), (10L, oneHot(41)),
+          (15L, oneHot(42)), (20L, oneHot(50))) ++
+          (1 to 24).filter(_ % 5 != 0).map(i => (i.toLong, oneHot(i)))
+      import spark.implicits._
+      rows.toDF("vec_id", "embedding")
+        .write.mode("overwrite").parquet(s"$base/embeddings.parquet")
+      val out = graft.streaming.VecStreams.streamVecIngest(spark, base)
+        .collect()
+        .map(r => r.getLong(0) -> ((r.getLong(1), r.getDouble(2), r.getBoolean(3))))
+        .toMap
+      assert(out(0L) == ((7L, 1.0, false)),
+        s"arrival 0 must reject against corpus twin 7, got ${out(0L)}")
+      Seq(5L, 10L, 15L, 20L).foreach { i =>
+        assert(out(i)._2 == 0.0 && out(i)._3,
+          s"orthogonal arrival $i must admit at cos 0.0, got ${out(i)}")
+      }
+      graft.TrackedCaches.release()
     }
-    graft.TrackedCaches.release()
   }
 
   test("streaming ingest dedup flags a planted exact corpus twin") {
-    import java.nio.file._
     // The real corpus has no identical-text pair spanning the arrival split
     // at test SF, so the digest path would be vacuously all-false — plant
     // one. Arrival ids {0,5,10,15,20} keep every staged doc_id range
@@ -453,44 +464,45 @@ class StreamingSpec extends SparkSpec {
     // => also a near-dup with full signature agreement), doc 20 has two
     // words (no shingles => no near-dup candidates, exercises the
     // no-signature edge).
-    val base = Files.createTempDirectory("graft_ingest_synth").toString
-    val mk = (id: Long, text: String) => (id, text)
-    val uniq = (id: Long) =>
-      (0 until 12).map(w => s"w${id}x$w").mkString(" ")
-    val docsSeq =
-      Seq(mk(0, uniq(7)), mk(5, uniq(5)), mk(10, uniq(10)), mk(15, uniq(15)),
-        mk(20, "two words")) ++
-        (1 to 24).filter(_ % 5 != 0).map(i => mk(i, uniq(i)))
-    import spark.implicits._
-    docsSeq.toDF("doc_id", "text")
-      .write.mode("overwrite").parquet(s"$base/documents.parquet")
-    val out = graft.streaming.DocStreams.streamIngestDedup(spark, base)
-      .collect().map(r => r.getLong(0) -> ((r.getBoolean(1), r.getLong(2)))).toMap
-    assert(out(0) == ((true, 7L)), s"doc 0 must flag corpus twin 7, got ${out(0)}")
-    assert(out(20) == ((false, -1L)), "a 2-word doc has no shingles, no verdicts")
-    assert(Seq(5L, 10L, 15L).forall(i => out(i) == ((false, -1L))),
-      "unique arrival docs must pass the filter")
-    graft.TrackedCaches.release()
+    withTempDir("graft_ingest_synth") { base =>
+      val mk = (id: Long, text: String) => (id, text)
+      val uniq = (id: Long) =>
+        (0 until 12).map(w => s"w${id}x$w").mkString(" ")
+      val docsSeq =
+        Seq(mk(0, uniq(7)), mk(5, uniq(5)), mk(10, uniq(10)), mk(15, uniq(15)),
+          mk(20, "two words")) ++
+          (1 to 24).filter(_ % 5 != 0).map(i => mk(i, uniq(i)))
+      import spark.implicits._
+      docsSeq.toDF("doc_id", "text")
+        .write.mode("overwrite").parquet(s"$base/documents.parquet")
+      val out = graft.streaming.DocStreams.streamIngestDedup(spark, base)
+        .collect().map(r => r.getLong(0) -> ((r.getBoolean(1), r.getLong(2)))).toMap
+      assert(out(0) == ((true, 7L)), s"doc 0 must flag corpus twin 7, got ${out(0)}")
+      assert(out(20) == ((false, -1L)), "a 2-word doc has no shingles, no verdicts")
+      assert(Seq(5L, 10L, 15L).forall(i => out(i) == ((false, -1L))),
+        "unique arrival docs must pass the filter")
+      graft.TrackedCaches.release()
+    }
   }
 
   test("streaming ingest dedup handles a sparse doc_id space (single-batch zone)") {
-    import java.nio.file._
     // Arrival ids {0, 1000000} land in only 2 of the 4 staged ranges (the
     // middle ranges are empty and skipped) -> one micro-batch. The
     // incrementality gate must not reject that; verdicts must still be
     // right (doc 1000000 has an exact corpus twin, doc 0 is unique).
-    val base = Files.createTempDirectory("graft_ingest_sparse").toString
-    val uniq = (id: Long) => (0 until 15).map(w => s"s${id}w$w").mkString(" ")
-    import spark.implicits._
-    (Seq((0L, uniq(0)), (1000000L, uniq(3))) ++
-        (1L to 3L).map(i => (i, uniq(i))))
-      .toDF("doc_id", "text")
-      .write.mode("overwrite").parquet(s"$base/documents.parquet")
-    val out = graft.streaming.DocStreams.streamIngestDedup(spark, base)
-      .collect().map(r => r.getLong(0) -> ((r.getBoolean(1), r.getLong(2)))).toMap
-    assert(out(1000000L) == ((true, 3L)), s"sparse twin must flag, got ${out(1000000L)}")
-    assert(out(0L) == ((false, -1L)))
-    graft.TrackedCaches.release()
+    withTempDir("graft_ingest_sparse") { base =>
+      val uniq = (id: Long) => (0 until 15).map(w => s"s${id}w$w").mkString(" ")
+      import spark.implicits._
+      (Seq((0L, uniq(0)), (1000000L, uniq(3))) ++
+          (1L to 3L).map(i => (i, uniq(i))))
+        .toDF("doc_id", "text")
+        .write.mode("overwrite").parquet(s"$base/documents.parquet")
+      val out = graft.streaming.DocStreams.streamIngestDedup(spark, base)
+        .collect().map(r => r.getLong(0) -> ((r.getBoolean(1), r.getLong(2)))).toMap
+      assert(out(1000000L) == ((true, 3L)), s"sparse twin must flag, got ${out(1000000L)}")
+      assert(out(0L) == ((false, -1L)))
+      graft.TrackedCaches.release()
+    }
   }
 
   test("CDC apply: state versions grow monotonically to the batch rollup") {
@@ -609,6 +621,36 @@ class StreamingSpec extends SparkSpec {
       "corpus must exercise both admit verdicts")
   }
 
+  test("distributed decontam screen leaves no per-batch cache behind") {
+    import java.nio.file._
+    import scala.jdk.CollectionConverters._
+    val ctx = spark.sparkContext
+    def newlyPersisted(body: => Unit): Int = {
+      TrackedCaches.release()
+      spark.catalog.clearCache()
+      val before = ctx.getPersistentRDDs.keySet
+      body
+      try (ctx.getPersistentRDDs.keySet -- before).size
+      finally { TrackedCaches.release(); spark.catalog.clearCache() }
+    }
+    // What the gate keeps for the whole stream: its cached corpus index.
+    val corpus = Tables.documents(spark, Sf).filter(col("doc_id") % 5 =!= 0)
+      .select("doc_id", "text")
+    val index = newlyPersisted {
+      graft.llm.Retrieval.forwardIndex(
+        graft.llm.Retrieval.buildIndex(corpus, cache = true), cache = true).count()
+    }
+    val gate = newlyPersisted {
+      graft.streaming.DocStreams.streamDecontamUnder(spark, Sf, 0L).collect()
+    }
+    val ls = Files.list(Paths.get(graft.streaming.Zone.tmp("graft_stream_decontam")))
+    val batches = try ls.iterator.asScala.count(_.getFileName.toString.startsWith("v"))
+      finally ls.close()
+    assert(batches >= 2, s"the gate ran $batches micro-batches")
+    assert(gate == index,
+      s"$batches micro-batches left ${gate - index} cached frames beyond the gate's index")
+  }
+
   test("evolving decontam: batch 0 equals the static gate, batch 1 sees the grown index") {
     // The evolving gate screens batch 0 against the corpus-only index —
     // identical verdicts to the static gate for those arrivals — then
@@ -708,18 +750,17 @@ class StreamingSpec extends SparkSpec {
       (10L, "alpha beta gamma delta epsilon"),
       (20L, "one two three four five"),
       (30L, "zeta eta theta iota kappa")).toDF("doc_id", "text")
-    val dir = java.nio.file.Files
-      .createTempDirectory("graft_stream_dedup_crafted").toString
-    docs.write.mode("overwrite").parquet(s"$dir/documents.parquet")
-    val got = graft.streaming.DocStreams.streamDedupEvolving(spark, dir)
-      .collect().map(r => (r.getLong(0), r.getBoolean(1), r.getLong(2)))
-    graft.TrackedCaches.release()
-    spark.catalog.clearCache()
-    assert(got.toSeq == Seq(
-      (0L, false, -1L), (10L, true, 1L), (20L, true, 0L),
-      (30L, false, -1L)),
-      s"crafted verdicts wrong: ${got.toSeq}")
-    graft.Fs.deleteRec(java.nio.file.Paths.get(dir))
+    withTempDir("graft_stream_dedup_crafted") { dir =>
+      docs.write.mode("overwrite").parquet(s"$dir/documents.parquet")
+      val got = graft.streaming.DocStreams.streamDedupEvolving(spark, dir)
+        .collect().map(r => (r.getLong(0), r.getBoolean(1), r.getLong(2)))
+      graft.TrackedCaches.release()
+      spark.catalog.clearCache()
+      assert(got.toSeq == Seq(
+        (0L, false, -1L), (10L, true, 1L), (20L, true, 0L),
+        (30L, false, -1L)),
+        s"crafted verdicts wrong: ${got.toSeq}")
+    }
   }
 
   test("evolving decontam: distributed (bucketed-append) twin == broadcast twin") {
