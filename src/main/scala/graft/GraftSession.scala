@@ -2,9 +2,9 @@ package graft
 
 import org.apache.spark.sql.SparkSession
 
-/** The one session recipe: every main (Bench, Verify, Measure, PlanDump,
-  * ScaleTest) and every spec builds its session here, so a measurement
-  * always plans the same query the benchmark runs.
+/** The one session recipe: every main (Bench, Verify, Measure) and every
+  * spec builds its session here, so a measurement always plans the same
+  * query the benchmark runs.
   *
   *   - `local[cpus]` with `cpus` shuffle partitions;
   *   - UTC session time zone, [[ShuffleDir]] scratch space, one shuffle

@@ -10,7 +10,7 @@ import org.apache.spark.sql.Dataset
   * GC-driven ContextCleaner fires. Builders whose RESULT still depends
   * lazily on a cached frame cannot unpersist before the caller's final
   * action, so they register here instead and the harness (Verify, Bench,
-  * ScaleTest) calls [[release]] once per query, after that action.
+  * Measure) calls [[release]] once per query, after that action.
   * Thread-safe; releasing is async (non-blocking unpersist). */
 object TrackedCaches {
   private val frames = new ConcurrentLinkedQueue[Dataset[_]]()

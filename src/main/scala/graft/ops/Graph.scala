@@ -27,17 +27,19 @@ object Graph {
     * every node has in- and out-edges and there is no dangling-mass term.
     * Node ids are parity-encoded longs (part p → 2p, supplier s → 2s+1):
     * integer hash joins throughout, with the display string minted only by
-    * [[nodeName]] in the final projection. The fact-sized list shuffles
-    * once, here, into the src bucketing every round's message join reads
-    * from cache (cached and tracked). */
-  private[graft] def edgeList(s: SparkSession, d: String): DataFrame = {
+    * [[nodeName]] in the final projection. Cached and tracked. Under the
+    * "shuffle_hash" hint the fact-sized list shuffles once, here, into the
+    * src bucketing every round's message join reads from cache; the
+    * broadcast rounds probe the edges in place and never read that
+    * bucketing, so they skip the shuffle. */
+  private[graft] def edgeList(s: SparkSession, d: String, joinHint: String): DataFrame = {
     val ps = Tables.lineitem(s, d)
       .select(col("l_partkey").as("p"), col("l_suppkey").as("sk"))
       .distinct()
+    val edges = ps.select((col("p") * 2).as("src"), (col("sk") * 2 + 1).as("dst"))
+      .union(ps.select((col("sk") * 2 + 1).as("src"), (col("p") * 2).as("dst")))
     graft.TrackedCaches.track(
-      ps.select((col("p") * 2).as("src"), (col("sk") * 2 + 1).as("dst"))
-        .union(ps.select((col("sk") * 2 + 1).as("src"), (col("p") * 2).as("dst")))
-        .repartition(col("src")).cache())
+      (if (joinHint == "shuffle_hash") edges.repartition(col("src")) else edges).cache())
   }
 
   /** "p:<partkey>" / "s:<suppkey>" for the parity-encoded `nid` column. */
@@ -46,11 +48,15 @@ object Graph {
       .otherwise(concat(lit("s:"), expr("(nid - 1) div 2")))
       .as("node")
 
-  /** [[edgeList]] and its out-degrees (which inherit the src bucketing:
-    * partial aggregation, no exchange). */
-  private[graft] def prGraph(s: SparkSession, d: String): (DataFrame, DataFrame) = {
-    val edges = edgeList(s, d)
-    (edges, edges.groupBy("src").agg(count(lit(1)).as("d")))
+  /** [[edgeList]] and its out-degrees. Under "shuffle_hash" the degrees
+    * inherit the src bucketing (partial aggregation, no exchange); under
+    * "broadcast" they pay one node-sized exchange, once: the degrees are a
+    * lazy local checkpoint, filled by the job that materializes the first
+    * state, so no round recomputes them and no job is added for them. */
+  private[graft] def prGraph(s: SparkSession, d: String,
+      joinHint: String): (DataFrame, DataFrame) = {
+    val edges = edgeList(s, d, joinHint)
+    (edges, edges.groupBy("src").agg(count(lit(1)).as("d")).localCheckpoint(false))
   }
 
   /** One un-materialized propagation round — the plan PlanShapeSpec audits
@@ -80,7 +86,7 @@ object Graph {
     * rank vector stays executor-resident between rounds; nothing is
     * collected to the driver. */
   def pageRank(s: SparkSession, d: String, joinHint: String): DataFrame = {
-    val (edges, deg) = prGraph(s, d)
+    val (edges, deg) = prGraph(s, d, joinHint)
     val init = deg.select(col("src").as("nid"), lit(PrInit).as("pr"))
     Superstep.iterate(init, PrIters)((pr, _) => prRound(edges, deg, pr, joinHint))
       .state.select(nodeName, col("pr").as("rank"))
@@ -254,7 +260,7 @@ object Graph {
   /** Min-hop reachability from [[BfsSeed]] over [[edgeList]] — the
     * supply-chain blast-radius query — as deduped-frontier BFS: the state
     * is one (nid, hop) table, and each round expands the last hop's
-    * frontier by one equi-join against the bucketed edges, DEDUPLICATES it
+    * frontier by one equi-join against the cached edges, DEDUPLICATES it
     * and anti-joins away every node already in the state, so a round's
     * frontier is bounded by |unvisited nodes| no matter the path
     * multiplicity. First discovery order IS min-hop order in BFS, so hop
@@ -269,7 +275,7 @@ object Graph {
     * in at most diameter rounds. */
   def reachBfs(s: SparkSession, d: String, joinHint: String,
       maxHop: Option[Int] = Some(BfsMaxHop)): DataFrame = {
-    val edges = edgeList(s, d)
+    val edges = edgeList(s, d, joinHint)
     val seed = s.range(0, 1, 1, 1).select(lit(BfsSeed).as("nid"), lit(0).as("hop"))
     val halt: (DataFrame, Int) => Boolean =
       if (maxHop.isDefined) (_, _) => false

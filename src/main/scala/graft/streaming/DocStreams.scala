@@ -40,7 +40,7 @@ import org.apache.spark.sql.types._
   * [[graft.llm.Retrieval.BroadcastScreenMaxBytes]] — a dedicated type (not
   * a bare require) so the scale ladder can record a skipped row by MATCHING
   * THE TYPE instead of the message text, which a reword would silently
-  * break (ScaleTest.docsMain). Subclasses IllegalArgumentException so
+  * break (ScaleTest.runLadder). Subclasses IllegalArgumentException so
   * callers treating the gate as a precondition failure keep working. */
 final class BroadcastRegimeExceeded(msg: String)
     extends IllegalArgumentException(msg)
@@ -601,7 +601,7 @@ object DocStreams {
     // zero-shuffle broadcast snapshot (one mapPartitions pass per
     // micro-batch); anything larger keeps the distributed postings-probe
     // kernel (StreamingSpec holds the two paths bit-identical; the
-    // ScaleTest ladder measures both).
+    // streams ladder measures both).
     val useBroadcast = {
       val st = corpus.agg(count(lit(1)).as("n"),
         sum(length(col("text"))).as("bytes")).head()

@@ -239,14 +239,18 @@ object VecStreams {
   def streamVecIngest(s: SparkSession, d: String): DataFrame =
     streamVecIngestUnder(s, d, graft.llm.Retrieval.BroadcastScreenMaxBytes)
 
+  /** Stage the arriving slice (vec_id % 5 == 0) as a [[Zone]] chunked on
+    * vec_id. */
+  def stageVecs(s: SparkSession, d: String): String =
+    Zone.stage(s, d, "embeddings", "vec_id",
+      Tables.embeddings(s, d).filter(col("vec_id") % 5 === 0).select("vec_id", "embedding"))
+
   /** [[streamVecIngest]] with the broadcast ceiling (corpus embedding
     * bytes) as a parameter: `Long.MaxValue` forces the broadcast screen,
     * `0L` the distributed one. */
   private[graft] def streamVecIngestUnder(s: SparkSession, d: String,
       screenMaxBytes: Long): DataFrame = {
-    // The arriving slice (vec_id % 5 == 0) as a [[Zone]] chunked on vec_id.
-    val dir = Zone.stage(s, d, "embeddings", "vec_id",
-      Tables.embeddings(s, d).filter(col("vec_id") % 5 === 0).select("vec_id", "embedding"))
+    val dir = stageVecs(s, d)
     val corpus = Tables.embeddings(s, d).filter(col("vec_id") % 5 =!= 0)
     // The standing IVF index, built once and reused by every micro-batch:
     // exact-integer k-means centroids + cell-assigned corpus vectors.

@@ -28,6 +28,13 @@ class GraftSessionSpec extends SparkSpec {
     assert(sites == Seq("GraftSession.scala"), s"builders outside the factory: $sites")
   }
 
+  test("the only mains under src/main/scala are Bench, Verify and Measure") {
+    val mains = scalaFiles("src/main/scala")
+      .filter(p => """def\s+main\s*\(""".r.findFirstIn(text(p)).nonEmpty)
+      .map(_.getFileName.toString).sorted
+    assert(mains == Seq("Bench.scala", "Measure.scala", "Verify.scala"), s"mains: $mains")
+  }
+
   test("the factory session installs the extensions and sizes shuffles to its cores") {
     assert(spark.conf.get("spark.sql.shuffle.partitions") == Cpus.toString)
     assert(spark.sparkContext.master == s"local[$Cpus]")

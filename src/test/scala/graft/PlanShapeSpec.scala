@@ -310,7 +310,7 @@ class PlanShapeSpec extends SparkSpec with AdaptiveSparkPlanHelper {
   test("PageRank rounds broadcast the node vector; edges never sort-merge") {
     // pageRank checkpoints each round (truncating the visible lineage), so
     // audit the plan of ONE un-materialized round — the shape every round runs.
-    val (edges, deg) = graft.ops.Graph.prGraph(spark, Sf)
+    val (edges, deg) = graft.ops.Graph.prGraph(spark, Sf, "broadcast")
     val pr0 = deg.select(col("src").as("nid"),
       lit(graft.ops.Graph.PrInit).as("pr"))
     val df = graft.ops.Graph.prRound(edges, deg, pr0, "broadcast")
@@ -339,7 +339,7 @@ class PlanShapeSpec extends SparkSpec with AdaptiveSparkPlanHelper {
       "rank-vector lineage must not pass through a driver-local relation")
     // And the per-round plan is the classic shuffle formulation: both rank
     // joins shuffle-hash against the pre-bucketed edges; nothing broadcasts.
-    val (edges, deg) = graft.ops.Graph.prGraph(spark, Sf)
+    val (edges, deg) = graft.ops.Graph.prGraph(spark, Sf, "shuffle_hash")
     val pr0 = deg.select(col("src").as("nid"),
       lit(graft.ops.Graph.PrInit).as("pr")).localCheckpoint(true)
     val round = graft.ops.Graph.prRound(edges, deg, pr0, "shuffle_hash")
@@ -369,7 +369,7 @@ class PlanShapeSpec extends SparkSpec with AdaptiveSparkPlanHelper {
     // Per-round shape (checkpoints truncate the final lineage, so audit the
     // round kernel directly): frontier expansion shuffle-hashes against the
     // bucketed edges; the anti-join carries no sort-merge of the edge list.
-    val edges = graft.ops.Graph.edgeList(spark, Sf)
+    val edges = graft.ops.Graph.edgeList(spark, Sf, "shuffle_hash")
     val seed = spark.range(1)
       .select(lit(graft.ops.Graph.BfsSeed).as("nid"), lit(0).as("hop"))
       .localCheckpoint(true)
