@@ -60,11 +60,11 @@ object Fs {
     * correct whenever the consumer's mutations are APPEND-ONLY (new files
     * only; linked bytes are never rewritten in place — the standing-index
     * commit contract). Small non-data METADATA files (leading-underscore
-    * names: `_meta`, `_stats`, `_SUCCESS`) are byte-COPIED, not linked:
-    * those are the files an index protocol rewrites IN PLACE (marker
-    * re-stamps truncate the inode), and a linked inode would silently
-    * corrupt the pristine source's marker the first time a clone
-    * re-stamps. Falls back to byte copy per data file when the
+    * names: the standing-index marker and build stats, `_SUCCESS`) are
+    * byte-COPIED, not linked: those are the files an index protocol may
+    * rewrite IN PLACE (a write truncates the inode), and a linked inode
+    * would silently corrupt the pristine source's marker the first time
+    * a clone re-stamps. Falls back to byte copy per data file when the
     * filesystem refuses the link (cross-device, unsupported). */
   def linkRec(src: Path, dst: Path): Unit =
     withStream(Files.walk(src)) {

@@ -277,8 +277,10 @@ object ScaleTest {
   private def recallLadders(spark: SparkSession, src: String, dst: String,
       copies: Int): Unit = {
     // Sweep the probe budget and report (nprobe, scan fraction, recall) so
-    // the cost of any recall target is measured, not asserted.
-    def ladder(tag: String, dir: String, probes: Seq[Int]): Unit = {
+    // the cost of any recall target is measured, not asserted. `probes`
+    // maps the corpus's cell count to the sweep; a budget above the cell
+    // count scans no more than all of them, so it is dropped.
+    def ladder(tag: String, dir: String, probes: Int => Seq[Int]): Unit = {
       def top(df: DataFrame): Set[(Long, Long)] = {
         val w = org.apache.spark.sql.expressions.Window
           .partitionBy("query_id").orderBy(col("cos").desc, col("neighbor_id"))
@@ -290,7 +292,7 @@ object ScaleTest {
       val truth = top(graft.llm.Similarity.annTopK(spark, dir))
       val n = spark.read.parquet(s"$dir/embeddings.parquet").count()
       val k = graft.llm.Similarity.centroidsFor(n)
-      probes.foreach { np =>
+      probes(k).filter(np => np >= 1 && np <= k).foreach { np =>
         val got = top(graft.llm.Similarity.annIvfWith(spark, dir, np))
         graft.TrackedCaches.release()
         spark.catalog.clearCache()
@@ -298,19 +300,18 @@ object ScaleTest {
         println(f"$tag,$k,$np,${np.toDouble / k}%.3f,$r%.2f")
       }
     }
-    // Each sweep includes the SHIPPED probesFor budget at that scale
-    // (14 of 45 cells at 1x; 42 of 141 at 10x, and proportionally at
-    // other copy counts) so the config in the library is the config the
-    // ladder measures. The Nx sweep is generated around the shipped
-    // budget (2/7 .. 12/7 of it — at 10x that reproduces the historical
-    // {12,24,36,42,48,72} sweep exactly).
+    // Each sweep is generated around the SHIPPED probesFor budget at that
+    // scale (14 of 45 cells at sf0.1 1x; 42 of 141 at 10x), 2/7 .. 12/7 of
+    // it, so the config in the library is the config the ladder measures
+    // at any data dir — at 10x that reproduces the historical
+    // {12,24,36,42,48,72} sweep exactly.
+    def aroundBudget(k: Int): Seq[Int] = {
+      val np = graft.llm.Similarity.probesFor(k)
+      Seq(2, 4, 6, 7, 8, 12).map(m => (np * m) / 7).distinct
+    }
     println("scale,k_cells,nprobe,scan_fraction,ivf_recall_at_10")
-    ladder("vecs1x", src, Seq(6, 12, 14, 18, 24))
-    val nBig = spark.read.parquet(s"$dst/embeddings.parquet").count()
-    val npBig = graft.llm.Similarity.probesFor(
-      graft.llm.Similarity.centroidsFor(nBig))
-    ladder(s"vecs${copies}x", dst,
-      Seq(2, 4, 6, 7, 8, 12).map(m => (npBig * m) / 7).distinct.filter(_ >= 1))
+    ladder("vecs1x", src, aroundBudget)
+    ladder(s"vecs${copies}x", dst, aroundBudget)
     // CLUSTERED ladder — the uniform corpus above is the adversarial case
     // that sized the shipped ~30% budget; real embeddings cluster. These
     // mixture-of-Gaussians corpora (unit-norm centers, per-dim noise sigma
@@ -322,8 +323,8 @@ object ScaleTest {
       staged(clusteredVecsDir(nc, pc))(buildClusteredVecs(spark, _, nc, pc))
     // k=45 cells at N=2000, k=141 at N=20000; sweeps cover 2-31% of cells
     // including the shipped probesFor point (14 / 42) at each scale.
-    ladder("clustered1x", clusteredDir(40, 50), Seq(1, 2, 4, 9, 14))
-    ladder("clustered10x", clusteredDir(400, 50), Seq(2, 4, 7, 14, 42))
+    ladder("clustered1x", clusteredDir(40, 50), _ => Seq(1, 2, 4, 9, 14))
+    ladder("clustered10x", clusteredDir(400, 50), _ => Seq(2, 4, 7, 14, 42))
   }
 
   /** One step of a standing-index ladder: a timed leg reports
@@ -880,11 +881,13 @@ object ScaleTest {
     val base = java.nio.file.Files
       .createTempDirectory("graft_soak_ann").toString
     var n = 0L
+    // Built through the marker protocol like any shipped index, so
+    // AnnIndex.compact runs under marker-suspend; buildFrom records the
+    // probe budget's n itself.
     val tBuild = time(spark) {
-      n = AnnIndex.buildFrom(spark, seed, base)
-      // The probe budget rides the marker's ` n=` tail (buildIfStale's
-      // protocol); the soak builds from a seed frame, so it stamps its own.
-      StandingIndex.commit(base, s"dir=soak sig=seed n=$n")
+      StandingIndex.ensure(base, "dir=soak sig=seed") {
+        n = AnnIndex.buildFrom(spark, seed, base)
+      }
     }
     println(f"soak ann build: $n vectors, $tBuild%.2f s")
     runSoak(spark, nBatches, "ann", base, s"$base/cells", 192L,

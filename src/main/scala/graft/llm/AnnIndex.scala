@@ -29,9 +29,10 @@ import graft.functions.VectorFunctions.floatCosine
   *                     (`cell=<id>/part-*.parquet`, one file per cell:
   *                     the build repartitions on the partition column
   *                     first, so appends never small-file-storm)
-  *   base/_meta        staleness marker: corpus dir + row count — a
-  *                     probe against a changed corpus rebuilds instead
-  *                     of silently serving a stale index
+  *   marker + stats    [[StandingIndex]]'s: the marker holds corpus
+  *                     dir + content signature (a probe against a
+  *                     changed corpus rebuilds instead of serving a
+  *                     stale index); the stats hold the build's n
   *
   * The probe plan filters the cells scan with a static partition-column
   * predicate (`cell IN (probed…)`), so the FileSourceScan's
@@ -56,7 +57,6 @@ object AnnIndex {
   private def centroidsDir(base: String) = s"$base/centroids"
   private def cellsDir(base: String)     = s"$base/cells"
   private def tombsDir(base: String)     = s"$base/tombstones"
-  private def metaPath(base: String)     = s"$base/_meta"
 
   /** True iff the tombstones table holds at least one data file — an
     * empty delete (ids matching nothing) leaves only a `_SUCCESS`
@@ -65,37 +65,35 @@ object AnnIndex {
   private def hasTombstones(base: String): Boolean =
     StandingIndex.hasParquetData(tombsDir(base))
 
-  /** Build the index at `base` unless `_meta` shows it was already built
-    * from this corpus (same dir, same corpus-file content signature —
-    * name/length/mtime of every file, so an in-place rewrite with the
+  /** Build the index at `base` unless its marker shows it was already
+    * built from this corpus (same dir, same corpus-file content signature
+    * — name/length/mtime of every file, so an in-place rewrite with the
     * same row count still rebuilds). Returns true iff a build ran. The
     * build is the amortized one-time cost: train (on the
     * [[Similarity.SamplePerCell]]-bounded slice), assign every vector to
     * its cell (the unavoidable full-corpus pass), and lay the corpus out
-    * cell-partitioned so probes can skip. The marker also records the
-    * corpus row count n: [[probe]] derives its budget as
-    * probesFor(centroidsFor(n)) — NOT from the stored centroid row
+    * cell-partitioned so probes can skip. */
+  def buildIfStale(s: SparkSession, d: String, base: String): Boolean =
+    StandingIndex.ensure(base, corpusMarker(d)) {
+      buildFrom(s, Tables.embeddings(s, d), base)
+    }
+
+  /** Marker of an index over corpus dir `d`; the phase queries extend it
+    * with the phase they reached. */
+  private def corpusMarker(d: String): String =
+    s"dir=$d sig=${StandingIndex.sourceSig(s"$d/embeddings.parquet")}"
+
+  /** The build body over an arbitrary (vec_id, embedding) corpus frame,
+    * into an empty `base`: train, lay out cell-partitioned, and record
+    * the corpus count n as the build stat [[probe]] derives its budget
+    * from — probesFor(centroidsFor(n)), NOT the stored centroid row
     * count, which can be smaller when training empties a cell (ties
     * break to one seed; the other's cell drops out of the groupBy) and
-    * would silently diverge from [[Similarity.annIvf]]'s budget. */
-  def buildIfStale(s: SparkSession, d: String, base: String): Boolean = {
-    val sig = StandingIndex.sourceSig(s"$d/embeddings.parquet")
-    if (StandingIndex.markerStartsWith(base, s"dir=$d sig=$sig n="))
-      return false
-    val n = buildFrom(s, Tables.embeddings(s, d), base)
-    StandingIndex.commit(base, s"dir=$d sig=$sig n=$n")
-    true
-  }
-
-  /** The build body over an arbitrary (vec_id, embedding) corpus frame:
-    * reset, train, lay out cell-partitioned. Returns the corpus count n
-    * (the probe-budget input). Writes NO marker — the caller stamps one
-    * (with ` n=$n` last) only once its whole state transition succeeded,
-    * so a crash anywhere leaves an unmarked dir that the next call
-    * rebuilds. */
+    * would silently diverge from [[Similarity.annIvf]]'s budget. Returns
+    * n. Stamps no marker: callers run it inside [[StandingIndex.ensure]],
+    * which stamps one only once the whole state transition succeeded. */
   private[graft] def buildFrom(s: SparkSession, emb: DataFrame,
       base: String): Long = {
-    StandingIndex.reset(base)
     val n = emb.count()
     val sx = graft.TrackedCaches.track(scaledOf(emb).cache())
     val k = centroidsFor(n)
@@ -109,6 +107,7 @@ object AnnIndex {
       // `cell=<id>/` directory at any corpus scale (k = √N directories).
       .repartition(col("cell"))
       .write.mode("overwrite").partitionBy("cell").parquet(cellsDir(base))
+    StandingIndex.recordStats(base, "n" -> n)
     n
   }
 
@@ -120,7 +119,7 @@ object AnnIndex {
     * cell per append, batch-scale work — the assignment is a broadcast
     * argmin over |arrivals|, never a corpus pass). The probe budget (k,
     * nprobe) is part of the frozen index geometry and does NOT move with
-    * appends — the ` n=` the marker carries stays the build-time corpus
+    * appends — the recorded build stat n stays the build-time corpus
     * count, exactly as IVF serving freezes its cell count until the next
     * retrain (recall under distribution drift is the retrain trigger, not
     * a correctness condition: probe results stay exact over whatever the
@@ -170,7 +169,7 @@ object AnnIndex {
     *  - ids absent from the index resolve to no cell → no tombstone;
     *  - the probe budget (k, nprobe) is FROZEN index geometry and does
     *    not shrink with deletes, exactly as [[append]] leaves it — the
-    *    marker's ` n=` stays the build-time corpus count;
+    *    recorded n stays the build-time corpus count;
     *  - a tombstoned id stays excluded until [[compact]] retires the
     *    tombstones, so re-appending a previously deleted id requires a
     *    compact first (standard tombstone semantics);
@@ -195,9 +194,7 @@ object AnnIndex {
     * (vec_id, embedding) frame; output matches [[Similarity.annIvf]]'s
     * (query_id, neighbor_id, cos) contract. */
   def probe(s: SparkSession, base: String, queries: DataFrame): DataFrame = {
-    val n = new String(java.nio.file.Files.readAllBytes(
-        java.nio.file.Paths.get(metaPath(base))), "UTF-8")
-      .split(" n=")(1).trim.toLong
+    val n = StandingIndex.stat(base, "n").toLong
     val cents = s.read.parquet(centroidsDir(base))
     // The annIvf-identical budget: from the corpus count the index was
     // built over, never from surviving centroid rows (scaladoc above).
@@ -279,15 +276,11 @@ object AnnIndex {
     * mid-transition (or a corpus rewrite) rebuilds from source. */
   def annIvfAppendStanding(s: SparkSession, d: String): DataFrame = {
     val base = s"${System.getProperty("java.io.tmpdir")}/graft_ivf_append"
-    val sig = StandingIndex.sourceSig(s"$d/embeddings.parquet")
     val emb = Tables.embeddings(s, d)
-    def wantFinal(n: Long) =
-      s"dir=$d sig=$sig corpus=mod5ne0 appended=mod5eq0 n=$n"
-    if (!StandingIndex.markerStartsWith(base,
-        s"dir=$d sig=$sig corpus=mod5ne0 appended=mod5eq0 n=")) {
-      val n = buildFrom(s, emb.filter(col("vec_id") % 5 =!= 0), base)
+    StandingIndex.ensure(base,
+        s"${corpusMarker(d)} corpus=mod5ne0 appended=mod5eq0") {
+      buildFrom(s, emb.filter(col("vec_id") % 5 =!= 0), base)
       append(s, base, emb.filter(col("vec_id") % 5 === 0))
-      StandingIndex.commit(base, wantFinal(n))
     }
     probe(s, base, emb.filter(col("vec_id") < NumQueries))
   }
@@ -346,13 +339,10 @@ object AnnIndex {
     * crash mid-transition or a corpus rewrite rebuilds from source. */
   def annIvfDeleteStanding(s: SparkSession, d: String): DataFrame = {
     val base = s"${System.getProperty("java.io.tmpdir")}/graft_ivf_delete"
-    val sig = StandingIndex.sourceSig(s"$d/embeddings.parquet")
     val emb = Tables.embeddings(s, d)
-    if (!StandingIndex.markerStartsWith(base,
-        s"dir=$d sig=$sig deleted=mod7eq3 n=")) {
-      val n = buildFrom(s, emb, base)
+    StandingIndex.ensure(base, s"${corpusMarker(d)} deleted=mod7eq3") {
+      buildFrom(s, emb, base)
       delete(s, base, emb.filter(col("vec_id") % 7 === 3).select("vec_id"))
-      StandingIndex.commit(base, s"dir=$d sig=$sig deleted=mod7eq3 n=$n")
     }
     probe(s, base, emb.filter(col("vec_id") < NumQueries))
   }

@@ -145,11 +145,8 @@ object Bpe {
   def bpeStandingApply(s: SparkSession, d: String): DataFrame = {
     val base = s"${System.getProperty("java.io.tmpdir")}/graft_bpe_standing"
     val sig = StandingIndex.sourceSig(s"$d/documents.parquet")
-    val want = s"dir=$d sig=$sig rounds=$MergeRounds"
-    if (!StandingIndex.upToDate(base, want)) {
-      StandingIndex.reset(base)
+    StandingIndex.ensure(base, s"dir=$d sig=$sig rounds=$MergeRounds") {
       bpeMerges(s, d).write.mode("overwrite").parquet(s"$base/merges")
-      StandingIndex.commit(base, want)
     }
     val merges = s.read.parquet(s"$base/merges").orderBy("rank")
       .select("left_unit", "right_unit")

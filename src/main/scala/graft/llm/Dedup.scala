@@ -526,17 +526,22 @@ object Dedup {
     * shingles — the probe must distinguish "new shingle" from "capped
     * shingle"), and `n0/` (doc_id, n0 — the doc's standing capped
     * size). The bucket count is sized from the corpus bytes
-    * ([[StandingIndex.bucketsFor]]); probes read it back from `_stats`. */
+    * ([[StandingIndex.bucketsFor]]) and recorded as the `buckets` build
+    * stat that probes, commits and deletes hash with. */
   def shingleBuildIfStale(s: SparkSession, d: String, base: String): Boolean =
     shingleBuildIfStale(s, d, base,
       StandingIndex.sizedBuckets(s"$d/documents.parquet"))
 
   /** [[shingleBuildIfStale]] with a caller-pinned bucket count. */
   def shingleBuildIfStale(s: SparkSession, d: String, base: String,
-      nBuckets: Int): Boolean = {
-    val want = shingleMarker(d, nBuckets)
-    if (StandingIndex.upToDate(base, want)) return false
-    StandingIndex.reset(base)
+      nBuckets: Int): Boolean =
+    StandingIndex.ensure(base, shingleMarker(d, nBuckets)) {
+      shingleBuild(s, d, base, nBuckets)
+    }
+
+  /** The build body of [[shingleBuildIfStale]] into an empty `base`. */
+  private def shingleBuild(s: SparkSession, d: String, base: String,
+      nBuckets: Int): Unit = {
     val corpus = Tables.documents(s, d)
       .filter(col("doc_id") % 5 =!= 0).select("doc_id", "text")
     // Content digests (doc-arity, 2 narrow columns): the witness
@@ -568,16 +573,17 @@ object Dedup {
       .groupBy("doc_id").agg(count(lit(1)).as("n0"))
       .write.mode("overwrite").parquet(s"$base/n0")
     Await.result(digJob, scala.concurrent.duration.Duration.Inf)
-    java.nio.file.Files.write(java.nio.file.Paths.get(s"$base/_stats"),
-      s"$nBuckets".getBytes("UTF-8"))
-    StandingIndex.commit(base, want)
-    true
+    StandingIndex.recordStats(base, "buckets" -> nBuckets)
   }
 
   /** Build marker of a shingle index over corpus dir `d`; the phase
     * queries extend it with the phase they reached. */
   private def shingleMarker(d: String, nBuckets: Int): String =
     s"dir=$d ${StandingIndex.layoutMarker(s"$d/documents.parquet", nBuckets)} dig=1"
+
+  /** The bucket count the shingle index at `base` was built with. */
+  private def buckets(base: String): Int =
+    StandingIndex.stat(base, "buckets").toInt
 
   /** Probe-only ingest dedup against a standing index: shingle the batch,
     * path-prune the standing postings/df scans to the batch's own
@@ -597,17 +603,10 @@ object Dedup {
     * sort per write, all discarded by the final orderBy. */
   private[graft] def shingleProbeUnordered(s: SparkSession, base: String,
       batchDocs: DataFrame): DataFrame = {
-    val nBuckets = new String(java.nio.file.Files.readAllBytes(
-      java.nio.file.Paths.get(s"$base/_stats")), "UTF-8").trim.toInt
     val bsh = graft.TrackedCaches.track(
       shinglesOf(batchDocs.select("doc_id", "text")).cache())
     val bdf = bsh.groupBy("sh").agg(count(lit(1)).as("dfb"))
-    val qb = bdf.select(StandingIndex.bucketOf(col("sh"), nBuckets)
-        .as("bucket")).distinct()
-      .collect().map(_.getLong(0)).sorted
-    def pruned(dir: String): DataFrame =
-      StandingIndex.prunedRead(s, s"$base/$dir", "bucket", qb)
-        .drop("bucket")
+    val pruned = StandingIndex.slice(s, base, bdf, "sh", buckets(base))
     // Joint-cap reconciliation over the batch's vocabulary: dfc = 0 for
     // genuinely new shingles (left join), kept iff dfb + dfc ≤ cap,
     // flipped iff the BATCH's arrivals pushed a standing shingle past it.
@@ -615,7 +614,7 @@ object Dedup {
     // deltas rather than rewriting the table (a fresh build has one row
     // per shingle, so the aggregate is the identity there).
     val v = graft.TrackedCaches.track(
-      bdf.join(pruned("dfc").groupBy("sh").agg(sum("dfc").as("dfc")),
+      bdf.join(pruned.read("dfc").groupBy("sh").agg(sum("dfc").as("dfc")),
           Seq("sh"), "left")
         .select(col("sh"), col("dfb"),
           coalesce(col("dfc"), lit(0L)).as("dfc"))
@@ -631,7 +630,7 @@ object Dedup {
     // ([[shingleDelete]]) are excluded here, the single postings
     // entry point, so deleted corpus docs can never match an arrival.
     val postings = graft.TrackedCaches.track(
-      livePostings(s, base, pruned("postings")).cache())
+      livePostings(s, base, pruned.read("postings")).cache())
     val inter = bKept.as("a")
       .join(postings.as("b"), col("a.sh") === col("b.sh"), "inner")
       .groupBy(col("a.doc_id").as("da"), col("b.doc_id").as("db"))
@@ -705,8 +704,7 @@ object Dedup {
     * never serve half-committed state). */
   def shingleCommit(s: SparkSession, base: String,
       accepted: DataFrame): Unit = {
-    val nBuckets = new String(java.nio.file.Files.readAllBytes(
-      java.nio.file.Paths.get(s"$base/_stats")), "UTF-8").trim.toInt
+    val nBuckets = buckets(base)
     // One eager localCheckpoint of the accepted docs WITH their content
     // digest, then one of the batch's SHINGLES derived from it: every
     // downstream term — df deltas, kept rows, size rows, the dig witness
@@ -724,19 +722,14 @@ object Dedup {
     val ash = shinglesOf(acc.select("doc_id", "text"))
       .localCheckpoint()
     val adf = ash.groupBy("sh").agg(count(lit(1)).as("dfa"))
-    val qb = adf.select(StandingIndex.bucketOf(col("sh"), nBuckets)
-        .as("bucket")).distinct()
-      .collect().map(_.getLong(0)).sorted
+    val pruned = StandingIndex.slice(s, base, adf, "sh", nBuckets)
     // Empty batch vocabulary — every arrival was a dup (reachable every
     // micro-batch in streamDedupEvolving) or nothing shingled. Nothing to
-    // append, no df can move, and prunedRead's empty-values fallback would
-    // otherwise pay a FULL postings/dfc listing plus three no-op write
-    // jobs — corpus-scale driver work on what must be a no-op.
-    if (qb.isEmpty) return
-    def pruned(dir: String): DataFrame =
-      StandingIndex.prunedRead(s, s"$base/$dir", "bucket", qb)
-        .drop("bucket")
-    val df0 = pruned("dfc").groupBy("sh").agg(sum("dfc").as("df0"))
+    // append, no df can move, and the pruned reader's empty-slice
+    // fallback would otherwise pay a FULL postings/dfc listing plus three
+    // no-op write jobs — corpus-scale driver work on what must be a no-op.
+    if (pruned.isEmpty) return
+    val df0 = pruned.read("dfc").groupBy("sh").agg(sum("dfc").as("df0"))
     val v = adf.join(df0, Seq("sh"), "left")
       .select(col("sh"), col("dfa"),
         coalesce(col("df0"), lit(0L)).as("df0"))
@@ -768,7 +761,7 @@ object Dedup {
     val n0Rows =
       if (!anyCrossed) sizes
       else sizes.unionByName(
-        livePostings(s, base, pruned("postings"))
+        livePostings(s, base, pruned.read("postings"))
           .join(v.filter(crossedCond).select("sh"), Seq("sh"))
           .groupBy("doc_id").agg((count(lit(1)) * -1).as("n0")))
     def writeN0(): Unit =
@@ -873,11 +866,10 @@ object Dedup {
     * new dfc file per touched bucket. Never a corpus pass. */
   def shingleDelete(s: SparkSession, base: String, docs: DataFrame): Unit = {
     val del = docs.select("doc_id", "text").localCheckpoint()
-    // Empty delete is the documented no-op — decided BEFORE touching
-    // $base/_stats, so it holds against a not-yet-built base too.
+    // Empty delete is the documented no-op — decided BEFORE reading the
+    // build stats, so it holds against a not-yet-built base too.
     if (del.isEmpty) return
-    val nBuckets = new String(java.nio.file.Files.readAllBytes(
-      java.nio.file.Paths.get(s"$base/_stats")), "UTF-8").trim.toInt
+    val nBuckets = buckets(base)
     val tombsDir = s"$base/tombs"
     StandingIndex.refuseRedelete(s, tombsDir, del, "doc_id",
       s"shingle index at $base",
@@ -912,20 +904,15 @@ object Dedup {
     val dsh = shinglesOf(del)
     val ddf = dsh.groupBy("sh").agg(count(lit(1)).as("ddel"))
       .localCheckpoint()
-    val qb = ddf.select(StandingIndex.bucketOf(col("sh"), nBuckets)
-        .as("bucket")).distinct()
-      .collect().map(_.getLong(0)).sorted
-    if (qb.nonEmpty) {
-      def pruned(dir: String): DataFrame =
-        StandingIndex.prunedRead(s, s"$base/$dir", "bucket", qb)
-          .drop("bucket")
+    val pruned = StandingIndex.slice(s, base, ddf, "sh", nBuckets)
+    if (!pruned.isEmpty) {
       // Unknown-id refusal: every deleted doc with a non-empty shingle
       // set must hold at least one LIVE posting row (its rows live only
       // in its own shingles' buckets, so this read is vocabulary-
       // bounded). A doc whose every shingle was over-cap at index time
       // has no posting rows and is refused as unprovable — the safe,
       // loud failure.
-      val present = livePostings(s, base, pruned("postings"))
+      val present = livePostings(s, base, pruned.read("postings"))
         .join(del.select("doc_id"), Seq("doc_id"), "left_semi")
         .select("doc_id").distinct()
       val missing = dsh.select("doc_id").distinct()
@@ -936,7 +923,7 @@ object Dedup {
             "rows (never indexed, already deleted-and-compacted, or " +
             "all-over-cap) — deleting them would corrupt the df deltas. " +
             "Refusing; rebuild from source for this case.")
-      val df0 = pruned("dfc").groupBy("sh").agg(sum("dfc").as("df0"))
+      val df0 = pruned.read("dfc").groupBy("sh").agg(sum("dfc").as("df0"))
       val crossing = ddf.join(df0, Seq("sh"))
         .filter(col("df0") > ShingleDfCap &&
           col("df0") - col("ddel") <= ShingleDfCap)
@@ -1015,16 +1002,13 @@ object Dedup {
   def standingCommitIngest(s: SparkSession, d: String): DataFrame = {
     val base = s"${System.getProperty("java.io.tmpdir")}/graft_shingle_commit"
     val nBuckets = StandingIndex.sizedBuckets(s"$d/documents.parquet")
-    val wantFinal = s"${shingleMarker(d, nBuckets)} committed=b1"
-    if (!StandingIndex.upToDate(base, wantFinal)) {
-      StandingIndex.reset(base)
-      shingleBuildIfStale(s, d, base, nBuckets)
+    StandingIndex.ensure(base, s"${shingleMarker(d, nBuckets)} committed=b1") {
+      shingleBuild(s, d, base, nBuckets)
       val b1 = Tables.documents(s, d).filter(col("doc_id") % 10 === 5)
         .select("doc_id", "text")
       val survivors = shingleProbeUnordered(s, base, b1)
         .filter(!col("is_dup")).select("doc_id")
       shingleCommit(s, base, b1.join(survivors, Seq("doc_id"), "left_semi"))
-      StandingIndex.commit(base, wantFinal)
     }
     shingleProbe(s, base,
       Tables.documents(s, d).filter(col("doc_id") % 10 === 0)
@@ -1045,14 +1029,11 @@ object Dedup {
   def standingDeleteIngest(s: SparkSession, d: String): DataFrame = {
     val base = s"${System.getProperty("java.io.tmpdir")}/graft_shingle_delete"
     val nBuckets = StandingIndex.sizedBuckets(s"$d/documents.parquet")
-    val wantFinal = s"${shingleMarker(d, nBuckets)} deleted=mod10eq1"
-    if (!StandingIndex.upToDate(base, wantFinal)) {
-      StandingIndex.reset(base)
-      shingleBuildIfStale(s, d, base, nBuckets)
+    StandingIndex.ensure(base, s"${shingleMarker(d, nBuckets)} deleted=mod10eq1") {
+      shingleBuild(s, d, base, nBuckets)
       shingleDelete(s, base,
         Tables.documents(s, d).filter(col("doc_id") % 10 === 1)
           .select("doc_id", "text"))
-      StandingIndex.commit(base, wantFinal)
     }
     shingleProbe(s, base,
       Tables.documents(s, d).filter(col("doc_id") % 5 === 0)

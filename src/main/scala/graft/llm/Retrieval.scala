@@ -902,9 +902,18 @@ object Retrieval {
     * snapshot equality on the live corpus every round. */
   private[graft] def impMicrosLocal(n: Long, avgLen: Double,
       tf: Long, df: Long, len: Long): Long =
-    math.floor(
-      StrictMath.log(1.0 + ((n - df).toDouble + 0.5) / (df.toDouble + 0.5)) *
-        (tf.toDouble * (K1 + 1.0)) /
+    impMicrosOfIdf(idfLocal(n, df), avgLen, tf, len)
+
+  /** The idf factor of [[impMicrosLocal]], for callers that hoist it out
+    * of a per-posting loop. */
+  private def idfLocal(n: Long, df: Long): Double =
+    StrictMath.log(1.0 + ((n - df).toDouble + 0.5) / (df.toDouble + 0.5))
+
+  /** [[impMicrosLocal]] given its idf factor: the same operations in the
+    * same order, so a hoisted idf stamps bit-identical impacts. */
+  private def impMicrosOfIdf(idf: Double, avgLen: Double, tf: Long,
+      len: Long): Long =
+    math.floor(idf * (tf.toDouble * (K1 + 1.0)) /
         (tf.toDouble + K1 * ((1.0 - B) + B * (len.toDouble / avgLen)))
       * 1000000.0 + 0.5).toLong
 
@@ -972,8 +981,9 @@ object Retrieval {
       * (RetrievalSpec compares field-for-field up to the row orders the
       * distributed build leaves arbitrary). The idf factor is hoisted out
       * of the per-posting loop (vocab-arity StrictMath.log calls instead
-      * of one per posting — same value, same association, so the stamped
-      * impacts are bit-identical), and term lookups go through a plain
+      * of one per posting): [[idfLocal]] and [[impMicrosOfIdf]] are the
+      * two halves of [[impMicrosLocal]], so the stamped impacts are
+      * bit-identical. Term lookups go through a plain
       * java HashMap (no per-term Option allocation). */
     def snapshot(): ScreenSnapshot = {
       val avgLen = totalLen.toDouble / n.toDouble
@@ -987,8 +997,7 @@ object Retrieval {
       var k = 0
       while (k < subTerms.length) {
         tIdx.put(subTerms(k), k)
-        idfOf(k) = StrictMath.log(1.0 +
-          ((n - termDf(k)).toDouble + 0.5) / (termDf(k).toDouble + 0.5))
+        idfOf(k) = idfLocal(n, termDf(k))
         k += 1
       }
       val outIds = scala.collection.mutable.ArrayBuffer.empty[Long]
@@ -1011,10 +1020,7 @@ object Retrieval {
             if (boxed != null) {
               val idx = boxed.intValue()
               ti(j) = idx
-              im(j) = math.floor(idfOf(idx) *
-                (tfs(i).toDouble * (K1 + 1.0)) /
-                (tfs(i).toDouble + K1 * ((1.0 - B) + B * (len.toDouble / avgLen)))
-                * 1000000.0 + 0.5).toLong
+              im(j) = impMicrosOfIdf(idfOf(idx), avgLen, tfs(i), len)
               j += 1
             }
             i += 1
@@ -1154,25 +1160,6 @@ object Retrieval {
             "(mutations are not atomic; see the stats scaladoc).")
     }
 
-    private def bucketed(df: DataFrame): DataFrame =
-      df.withColumn("bucket",
-        pmod(xxhash64(col("term")), lit(NumBuckets.toLong)))
-
-    // repartition ON the partition column before partitionBy: every
-    // bucket lands entirely in one task, so a mutation adds <= NumBuckets
-    // files — without it each of the write's input tasks opens a file
-    // per bucket it sees (tasks x buckets tiny files per write, and
-    // every later screen pays the file-open storm back with interest).
-    // Task count is the SESSION's shuffle parallelism capped at
-    // NumBuckets (the by-bucket file bound holds at any task count):
-    // a small batch under the stream's 8 shuffle partitions launches
-    // 8 tasks, not 64 near-empty ones.
-    private def byBucket(df: DataFrame): DataFrame = {
-      val tasks = math.max(1, math.min(NumBuckets,
-        s.conf.get("spark.sql.shuffle.partitions").toInt))
-      bucketed(df).repartition(tasks, col("bucket"))
-    }
-
     private val tombsDir = s"$base/tombs"
 
     /** Postings with the tombstoned docs ([[delete]]) masked — the one
@@ -1193,53 +1180,31 @@ object Retrieval {
       // append would double the partial rows) — same loud refusal the
       // screens give.
       requireNoTornAppend()
-      // Torn-append protocol (see the stats scaladoc): stake the intent
-      // BEFORE any data write; it is removed only after the stats delta
-      // lands, so a crash anywhere inside this method leaves the marker
-      // orphaned and every later reopen/screen fails loudly. An
-      // IN-PROCESS failure is cheaper to recover when provably clean:
-      // the catch below retires this append's own intent iff the data
-      // census (committed parquet files) is byte-for-byte where it
-      // started — a transient job failure that committed nothing must
-      // not brick the index into a delete-and-reseed (the same
-      // restore-iff-unchanged refinement withMarkerSuspended carries).
-      val census0 = dataCensus()
-      val appendId = java.util.UUID.randomUUID().toString
-      val intentPath = statsDir.resolve(s"intent_$appendId.txt")
-      // repartition ON the partition column before partitionBy: every
-      // bucket lands entirely in one task, so an append adds <= NumBuckets
-      // files — without it each of the write's input tasks opens a file
-      // per bucket it sees (tasks x buckets tiny files per append, and
-      // every later screen pays the file-open storm back with interest).
-      var tf: DataFrame = null
-      try {
-        java.nio.file.Files.createDirectories(statsDir)
-        java.nio.file.Files.write(intentPath, "pending".getBytes("UTF-8"))
+      mutate {
         // postings() analyzes the input frame EAGERLY at construction
         // (Catalyst resolves columns when the Dataset is built), so a bad
         // input — e.g. a missing text column — throws here. Construction
-        // therefore sits INSIDE the try: the failure reaches the
-        // clean-failure recovery below, which retires the intent it just
-        // staked (nothing was committed), instead of orphaning it and
-        // bricking the index into delete-and-reseed.
-        tf = postings(docs).cache()
-        byBucket(tf).write.partitionBy("bucket").mode("append")
-          .parquet(postingsDir)
-        // The dfd and fwd appends both derive from the now-cached tf and
-        // land in different dirs — run them as concurrent jobs (the
-        // shingleCommit idiom, guide-§2.6 back-fill: the second job's
-        // tasks fill the cores the first job's tail frees). The postings
-        // write stays FIRST and alone: it materializes the tf cache once,
-        // so the concurrent pair reads cached blocks instead of racing
-        // the aggregate. Both complete before the stats delta lands, so
-        // the torn-append protocol is unchanged.
-        val obs = org.apache.spark.sql.Observation()
-        locally {
+        // therefore sits INSIDE the mutation: the failure reaches the
+        // clean-failure recovery, which retires the intent it just staked
+        // (nothing was committed), instead of orphaning it and bricking
+        // the index into delete-and-reseed.
+        val tf = postings(docs).cache()
+        try {
+          StandingIndex.appendBucketed(tf, col("term"), NumBuckets,
+            postingsDir)
+          // The dfd and fwd appends both derive from the now-cached tf
+          // and land in different dirs — run them as concurrent jobs (the
+          // shingleCommit idiom: the second job's tasks fill the cores
+          // the first job's tail frees). The postings write stays FIRST
+          // and alone: it materializes the tf cache once, so the
+          // concurrent pair reads cached blocks instead of racing the
+          // aggregate. Both complete before the stats delta lands.
+          val obs = org.apache.spark.sql.Observation()
           import scala.concurrent.{Await, Future}
           import scala.concurrent.ExecutionContext.Implicits.global
-          val fDfd = Future(
-            byBucket(tf.groupBy("term").agg(count(lit(1)).as("df")))
-              .write.partitionBy("bucket").mode("append").parquet(dfdDir))
+          val fDfd = Future(StandingIndex.appendBucketed(
+            tf.groupBy("term").agg(count(lit(1)).as("df")), col("term"),
+            NumBuckets, dfdDir))
           val fFwd = Future(
             tf.groupBy("doc_id").agg(sum("tf").as("len"),
                 sort_array(collect_list(struct(col("term"), col("tf"))))
@@ -1247,7 +1212,7 @@ object Retrieval {
               .observe(obs, count(lit(1)).as("nd"), sum(col("len")).as("sl"))
               .write.mode("append").parquet(fwdDir))
           // Await BOTH to settlement before rethrowing a failure: the
-          // clean-failure recovery below runs a data census, and a still
+          // clean-failure recovery runs a data census, and a still
           // in-flight sibling write committing after that census would
           // retire the intent with data landed — the exact torn state
           // the protocol exists to catch.
@@ -1255,30 +1220,11 @@ object Retrieval {
             Await.result(f, scala.concurrent.duration.Duration.Inf)))
           done.collectFirst { case scala.util.Failure(e) => e }
             .foreach(e => throw e)
-        }
-        val m = obs.get
-        val nd = m("nd").asInstanceOf[Long]
-        val sl = m("sl") match { case l: Long => l; case _ => 0L }
-        nDocs += nd; lenSum += sl
-        java.nio.file.Files.write(
-          statsDir.resolve(s"delta_$appendId.txt"),
-          s"$nd $sl".getBytes("UTF-8"))
-        // Delta landed — the append is complete; retire the intent.
-        java.nio.file.Files.delete(intentPath)
-        ()
-      } catch {
-        case e: Throwable =>
-          // The recovery itself may fail (a census walk racing executor
-          // cleanup, a filesystem error on the delete) — that must not
-          // REPLACE the original exception, which is the one that says
-          // what actually broke. Suppress secondary failures onto it;
-          // the intent stays staked, which is the safe (loud) state.
-          try {
-            if (dataCensus() == census0)
-              java.nio.file.Files.deleteIfExists(intentPath)
-          } catch { case e2: Throwable => e.addSuppressed(e2) }
-          throw e
-      } finally { if (tf != null) { tf.unpersist(); () } }
+          val m = obs.get
+          (m("nd").asInstanceOf[Long],
+            m("sl") match { case l: Long => l; case _ => 0L })
+        } finally { tf.unpersist(); () }
+      }
     }
 
     /** Delete documents from the evolving index by id — EXACT, unlike
@@ -1339,25 +1285,48 @@ object Retrieval {
             "deleting them would corrupt the corpus stats. Refusing.")
       val agg = fw.agg(count(lit(1)).as("nd"), sum("len").as("sl")).head()
       val (nd, sl) = (agg.getLong(0), agg.getLong(1))
+      mutate {
+        del.write.mode("append").parquet(tombsDir)
+        StandingIndex.appendBucketed(
+          fw.select(explode(col("terms")).as("t"))
+            .groupBy(col("t.term").as("term"))
+            .agg((-count(lit(1))).as("df")),
+          col("term"), NumBuckets, dfdDir)
+        (-nd, -sl)
+      }
+    }
+
+    /** The torn-intent protocol every mutation runs under (see the stats
+      * scaladoc): stake `intent_<id>` BEFORE any data write, run `body`
+      * (its data writes), fold the (nd, sl) stats delta it returns into
+      * the live scalars, land `delta_<id>`, and only then retire the
+      * intent — a crash anywhere inside leaves the intent orphaned and
+      * every later reopen/screen fails loudly. An IN-PROCESS failure is
+      * cheaper to recover when provably clean: the intent is retired iff
+      * the data census (committed parquet files) is byte-for-byte where
+      * it started — a transient job failure that committed nothing must
+      * not brick the index into a delete-and-reseed (the same
+      * restore-iff-unchanged refinement withMarkerSuspended carries). */
+    private def mutate(body: => (Long, Long)): Unit = {
       val census0 = dataCensus()
-      val deleteId = java.util.UUID.randomUUID().toString
-      val intentPath = statsDir.resolve(s"intent_$deleteId.txt")
+      val id = java.util.UUID.randomUUID().toString
+      val intentPath = statsDir.resolve(s"intent_$id.txt")
       try {
         java.nio.file.Files.createDirectories(statsDir)
         java.nio.file.Files.write(intentPath, "pending".getBytes("UTF-8"))
-        del.write.mode("append").parquet(tombsDir)
-        byBucket(fw.select(explode(col("terms")).as("t"))
-            .groupBy(col("t.term").as("term"))
-            .agg((-count(lit(1))).as("df")))
-          .write.partitionBy("bucket").mode("append").parquet(dfdDir)
-        nDocs -= nd; lenSum -= sl
-        java.nio.file.Files.write(
-          statsDir.resolve(s"delta_$deleteId.txt"),
-          s"${-nd} ${-sl}".getBytes("UTF-8"))
+        val (nd, sl) = body
+        nDocs += nd; lenSum += sl
+        java.nio.file.Files.write(statsDir.resolve(s"delta_$id.txt"),
+          s"$nd $sl".getBytes("UTF-8"))
         java.nio.file.Files.delete(intentPath)
         ()
       } catch {
         case e: Throwable =>
+          // The recovery itself may fail (a census walk racing executor
+          // cleanup, a filesystem error on the delete) — that must not
+          // REPLACE the original exception, which is the one that says
+          // what actually broke. Suppress secondary failures onto it;
+          // the intent stays staked, which is the safe (loud) state.
           try {
             if (dataCensus() == census0)
               java.nio.file.Files.deleteIfExists(intentPath)
@@ -1415,54 +1384,26 @@ object Retrieval {
       * there could double-count or zero the corpus stats silently, and
       * one tiny text file per append is never the bottleneck. */
     def compact(): Unit = {
-      import java.nio.file.{Files, Paths}
       // A corpus-scale rewrite over a dir holding a torn append's partial
       // rows would fold the inconsistency into the rolled-up deltas of a
       // dir that must be delete-and-reseeded anyway — refuse first.
       requireNoTornAppend()
-      // Rename-only swap ([[StandingIndex.swapDirs]]): same reader-
-      // window hardening as the shared compactions.
-      def swapIn(tmp: String, dir: String): Unit =
-        StandingIndex.swapDirs(s, tmp, dir)
-      val tasks = math.max(1, math.min(NumBuckets,
-        s.conf.get("spark.sql.shuffle.partitions").toInt))
-      val pTmp = s"$base/_compact_postings"
-      graft.Fs.deleteRec(Paths.get(pTmp))
       // liveView: tombstoned docs' rows ([[delete]]) drop physically here;
       // their df/stats deltas were already applied at delete time, so the
-      // drop is purely the mask becoming material. Each rewrite passes
-      // the [[StandingIndex.ensureReadable]] guard before its swap: a
-      // purge of the whole population must leave a schemaed-empty table,
-      // not a data-less dir the next screen can't read.
-      val pOut = liveView(s.read.parquet(postingsDir))
-      pOut.repartition(tasks, col("bucket"))
-        .write.partitionBy("bucket").mode("overwrite").parquet(pTmp)
-      StandingIndex.ensureReadable(s, pTmp, pOut.schema, Some("bucket"))
-      swapIn(pTmp, postingsDir)
-      val dTmp = s"$base/_compact_dfd"
-      graft.Fs.deleteRec(Paths.get(dTmp))
-      // df = 0 rows (fully-deleted terms) drop: the screen's dftV already
-      // reads them as absent, so the rollup filter is semantics-free.
-      val dOut = s.read.parquet(dfdDir)
-        .groupBy("bucket", "term").agg(sum("df").as("df"))
-        .filter(col("df") =!= 0L)
-      dOut.repartition(tasks, col("bucket"))
-        .write.partitionBy("bucket").mode("overwrite").parquet(dTmp)
-      StandingIndex.ensureReadable(s, dTmp, dOut.schema, Some("bucket"))
-      swapIn(dTmp, dfdDir)
-      val fTmp = s"$base/_compact_fwd"
-      graft.Fs.deleteRec(Paths.get(fTmp))
-      val fOut = liveView(s.read.parquet(fwdDir))
-      fOut.repartition(tasks)
-        .write.mode("overwrite").parquet(fTmp)
-      StandingIndex.ensureReadable(s, fTmp, fOut.schema, None)
-      swapIn(fTmp, fwdDir)
+      // drop is purely the mask becoming material. df = 0 rows
+      // (fully-deleted terms) drop too: the screen's dftV already reads
+      // them as absent, so the rollup filter is semantics-free.
+      StandingIndex.compactTable(s, base, "postings", "bucket", liveView)
+      StandingIndex.compactTable(s, base, "dfd", "bucket",
+        _.groupBy("bucket", "term").agg(sum("df").as("df"))
+          .filter(col("df") =!= 0L))
+      StandingIndex.compactFlat(s, base, "fwd", liveView)
       // The tombstone list retires LAST — its exclusions are baked into
       // the rewritten tables above. (Before any swap, compaction refuses
       // on a torn intent; a crash between the fwd swap and this delete
       // leaves surviving tombstones whose anti-joins are now no-ops —
       // harmless, drained by the next compaction.)
-      graft.Fs.deleteRec(Paths.get(tombsDir))
+      graft.Fs.deleteRec(java.nio.file.Paths.get(tombsDir))
     }
 
     /** (doc_id, top_match, top_score) of each arrival against the standing
@@ -1474,26 +1415,23 @@ object Retrieval {
         .select(col("doc_id").as("query_id"), col("term"))
       // The batch's term-bucket set: |batch|-bounded driver data (the same
       // bound the broadcast twin's append collect takes), and the handle
-      // that turns both standing-side scans into partition-pruned reads.
-      val qb = qt.select(pmod(xxhash64(col("term")), lit(NumBuckets.toLong))
-          .as("bucket")).distinct().collect().map(_.getLong(0))
+      // that turns both standing-side scans into path-pruned reads.
+      val pruned = StandingIndex.slice(s, base, qt, "term", NumBuckets)
       // CACHE the pruned views for the batch: stage 1 drives several
       // driver actions (term-class collects, the doc-mask, the wave
       // percentile, the kernel slice) and each would otherwise re-read
       // the bucket slice and re-aggregate the df deltas from parquet —
       // the exact role ix.tf/ix.dft's caches play in the static gate.
       // Batch-scoped: the gate releases TrackedCaches after each write.
-      val tfV = graft.TrackedCaches.track(liveView(
-        s.read.parquet(postingsDir)
-          .filter(col("bucket").isin(qb: _*)).drop("bucket")).cache())
+      val tfV = graft.TrackedCaches.track(
+        liveView(pruned.read("postings")).cache())
       // df > 0: a fully-deleted term's rolled-up df is zero, and a
       // zero-df row must read as ABSENT (exactly as a rebuild without
       // the deleted docs would have it) — kept, it would enter qd with
       // df 0 and win a rare-term slot (rare sorts df ASCENDING) that a
       // term with live postings should hold, silently moving verdicts.
       val dftV = graft.TrackedCaches.track(
-        s.read.parquet(dfdDir)
-          .filter(col("bucket").isin(qb: _*))
+        pruned.read("dfd")
           .groupBy("term").agg(sum("df").as("df"))
           .filter(col("df") > 0L).cache())
       val bix = Bm25Index(tfV, dftV, nDocs, avgLen)
@@ -1997,30 +1935,31 @@ object Retrieval {
     * query: it is sized from the corpus bytes
     * ([[StandingIndex.bucketsFor]] — few buckets for a small corpus,
     * where a probe naming more than 32 bucket paths would pay a
-    * distributed listing job; 64 from 16 MB up). The count is persisted
-    * in `_stats`, so probes always hash with the layout that built the
-    * index. */
+    * distributed listing job; 64 from 16 MB up). The count is recorded
+    * as a build stat beside n and avgLen, so probes always hash with the
+    * layout that built the index. */
   def bm25BuildIfStale(s: SparkSession, d: String, base: String): Boolean =
     bm25BuildIfStale(s, d, base,
       StandingIndex.sizedBuckets(s"$d/documents.parquet"))
 
   /** [[bm25BuildIfStale]] with a caller-pinned bucket count. */
   def bm25BuildIfStale(s: SparkSession, d: String, base: String,
-      nBuckets: Int): Boolean = {
-    val want = bm25Marker(d, nBuckets)
-    if (StandingIndex.upToDate(base, want)) return false
-    StandingIndex.reset(base)
-    val docs = Tables.documents(s, d).select("doc_id", "text")
-    val ix = buildIndex(docs, cache = true)
+      nBuckets: Int): Boolean =
+    StandingIndex.ensure(base, bm25Marker(d, nBuckets)) {
+      bm25Build(s, d, base, nBuckets)
+    }
+
+  /** The build body of [[bm25BuildIfStale]] into an empty `base`. */
+  private def bm25Build(s: SparkSession, d: String, base: String,
+      nBuckets: Int): Unit = {
+    val ix = buildIndex(Tables.documents(s, d).select("doc_id", "text"),
+      cache = true)
     StandingIndex.writeBucketed(ix.tf, col("term"), nBuckets,
       s"$base/postings")
     StandingIndex.writeBucketed(ix.dft, col("term"), nBuckets,
       s"$base/dft")
-    java.nio.file.Files.write(java.nio.file.Paths.get(s"$base/_stats"),
-      s"${ix.n} ${java.lang.Double.toString(ix.avgLen)} $nBuckets"
-        .getBytes("UTF-8"))
-    StandingIndex.commit(base, want)
-    true
+    StandingIndex.recordStats(base,
+      "n" -> ix.n, "avgLen" -> ix.avgLen, "buckets" -> nBuckets)
   }
 
   /** Build marker of a BM25 index over corpus dir `d`; the delete query
@@ -2035,24 +1974,19 @@ object Retrieval {
     * impacts. No index build, no corpus pass. */
   def bm25Probe(s: SparkSession, base: String, queryDocs: DataFrame,
       k: Int = TopK): DataFrame = {
-    val Array(nS, alS, nbS) = new String(java.nio.file.Files.readAllBytes(
-      java.nio.file.Paths.get(s"$base/_stats")), "UTF-8").split(" ")
     // Two consumers (the bucket-set collect and the candidates
     // broadcast): cache the query-side term frame so the tokenize +
     // groupBy run once per probe.
     val qt = graft.TrackedCaches.track(postings(queryDocs)
       .select(col("doc_id").as("query_id"), col("term")).cache())
-    val qb = qt.select(StandingIndex.bucketOf(col("term"), nbS.toInt)
-        .as("bucket")).distinct()
-      .collect().map(_.getLong(0)).sorted
-    def pruned(dir: String): DataFrame =
-      StandingIndex.prunedRead(s, s"$base/$dir", "bucket", qb)
-        .drop("bucket")
+    val pruned = StandingIndex.slice(s, base, qt, "term",
+      StandingIndex.stat(base, "buckets").toInt)
     // Tombstoned docs ([[bm25Delete]]) are masked here, the index's one
     // postings entry point; dft and the frozen stats pass through
     // untouched — the live-docs serving semantics.
-    val ix = Bm25Index(liveBm25Postings(s, base, pruned("postings")),
-      pruned("dft"), nS.toLong, java.lang.Double.parseDouble(alS))
+    val ix = Bm25Index(liveBm25Postings(s, base, pruned.read("postings")),
+      pruned.read("dft"), StandingIndex.stat(base, "n").toLong,
+      StandingIndex.stat(base, "avgLen").toDouble)
     graft.plans.TopKPerKey.ensureRegistered(s)
     val scores = candidates(ix, qt)
       .groupBy("query_id", "doc_id").agg(sum("imp").as("smicro"))
@@ -2142,14 +2076,11 @@ object Retrieval {
   def bm25TopKStandingDelete(s: SparkSession, d: String): DataFrame = {
     val base = s"${System.getProperty("java.io.tmpdir")}/graft_bm25_delete"
     val nBuckets = StandingIndex.sizedBuckets(s"$d/documents.parquet")
-    val want = s"${bm25Marker(d, nBuckets)} deleted=mod9eq4"
-    if (!StandingIndex.upToDate(base, want)) {
-      StandingIndex.reset(base)
-      bm25BuildIfStale(s, d, base, nBuckets)
+    StandingIndex.ensure(base, s"${bm25Marker(d, nBuckets)} deleted=mod9eq4") {
+      bm25Build(s, d, base, nBuckets)
       bm25Delete(s, base,
         Tables.documents(s, d).filter(col("doc_id") % 9 === 4)
           .select("doc_id"))
-      StandingIndex.commit(base, want)
     }
     bm25Probe(s, base,
       Tables.documents(s, d).select("doc_id", "text")

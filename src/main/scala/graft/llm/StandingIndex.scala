@@ -1,43 +1,58 @@
 package graft.llm
 
+import java.nio.file.{Files, Paths}
+
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
-/** Shared machinery of the three standing (persisted, probe-only) indexes
-  * — [[AnnIndex]] (IVF cells), [[Retrieval]]'s BM25 impact index, and
-  * [[Dedup]]'s shingle index. One implementation of the three idioms they
-  * all need, so a fix lands once:
+/** The one module that knows what a standing (persisted, probe-only)
+  * directory holds. Five owners keep their state under it: [[AnnIndex]]
+  * (IVF cells), [[Dedup]]'s shingle index, [[Retrieval]]'s BM25 impact
+  * index, [[Retrieval.EvolvingDistIndex]] and [[Bpe]]'s merge table (the
+  * streaming landing zones stage through [[ensure]] too). The protocol:
   *
-  *  - **Content-aware staleness marker.** The first cut stamped only
-  *    (source dir, row count), which is blind to an in-place rewrite with
-  *    the same cardinality — a regenerated corpus would silently serve
-  *    the old index. The marker now embeds [[sourceSig]]: name + length +
-  *    mtime of every file under the source table, so any rewrite flips
-  *    it. Checking is pure file metadata — no Spark job on the serving
-  *    path.
-  *  - **Bucketed layout writer** (xxhash64 % n on the routing column,
-  *    repartitioned on the partition column so each bucket directory is
-  *    one file per write at any corpus scale). A build that is not handed
-  *    a count sizes n from the source table's bytes ([[bucketsFor]]: one
-  *    bucket per [[BytesPerBucket]], a power of two in [1,
-  *    [[MaxBuckets]]]) for two measured reasons: a probe whose pruned
-  *    read names more than 32 bucket paths makes Spark list them with a
+  *  - **Marker.** `base/_meta` holds the exact string a build was asked
+  *    for: the owner's source, its content signature ([[sourceSig]]:
+  *    name + length + mtime of every source file, so an in-place rewrite
+  *    with the same cardinality still flips it) and, for the phase
+  *    queries, the phase reached. [[ensure]] is the only way to build:
+  *    marker equal to `want` → serve; anything else → reset, build, stamp
+  *    `want` LAST, so a crash mid-build leaves an unmarked (rebuildable)
+  *    dir, never a fresh-marked partial one. Checking is file metadata
+  *    only — no Spark job on the serving path.
+  *  - **Build stats.** Values a build derives and later calls read back
+  *    (the bucket count, BM25's n and avgLen, IVF's corpus count n) live
+  *    as `key=value` lines in `base/_stats`, written by [[recordStats]]
+  *    inside the build (so before the marker) and read by [[stat]]. The
+  *    marker never carries them, so phase markers and
+  *    [[withMarkerSuspended]] have nothing to carry either.
+  *  - **Bucket layout.** `pmod(xxhash64(routing), n)` partitions, one
+  *    write task per bucket ([[writeBucketed]], [[appendBucketed]]), so a
+  *    write adds at most one file per bucket at any corpus scale. A build
+  *    that is not handed a count sizes n from the source bytes
+  *    ([[bucketsFor]]: one bucket per [[BytesPerBucket]], a power of two
+  *    in [1, [[MaxBuckets]]]) for two measured reasons: a pruned read
+  *    naming more than 32 bucket paths makes Spark list them with a
   *    distributed job (`parallelPartitionDiscovery.threshold`), and every
-  *    bucket a commit touches adds one file. The marker records the count
-  *    beside the source bytes that chose it.
-  *  - **Path-level pruned reader.** Handing the reader only the probed
-  *    `part=value` directories (with basePath preserving the partition
-  *    column) keeps the driver from listing + footer-reading the
-  *    unprobed ones — measured on the BM25 ladder: at 1024 buckets the
-  *    full-table listing cost MORE than the probe's data (5.5 → 3.1 s
-  *    after the fix). The residual isin filter stays as the in-plan
-  *    partition predicate and the plan-shape witness.
+  *    bucket a commit touches adds one file. [[layoutMarker]] records the
+  *    count beside the source bytes that chose it.
+  *  - **Bucket-pruned reads.** [[slice]] collects the bucket set a key
+  *    frame touches once and hands the reader only those `bucket=v`
+  *    directories (basePath keeps the partition column), so the driver
+  *    never lists or footer-reads the others — measured on the BM25
+  *    ladder: at 1024 buckets the full-table listing cost MORE than the
+  *    probe's data (5.5 → 3.1 s after the fix). The residual isin filter
+  *    stays as the in-plan partition predicate and the plan-shape witness.
+  *  - **Compaction.** Rewrite to a `_compact_*` temp, [[ensureReadable]],
+  *    rename-only swap ([[compactTable]], [[compactFlat]]); the marked
+  *    owners run it under [[withMarkerSuspended]].
+  *  - **Tombstones.** One mask ([[liveRows]]) and one re-delete refusal
+  *    ([[refuseRedelete]]).
   *
   * ==Concurrency contract: SINGLE WRITER, single process==
   *
-  * These indexes have no lock service; the `_meta` marker is a
-  * staleness witness, not a mutex. The contract every owner
-  * ([[AnnIndex]], BM25, shingle) inherits:
+  * These indexes have no lock service; the marker is a staleness
+  * witness, not a mutex. The contract every owner inherits:
   *
   *  - **One writer at a time.** Builds, appends, deletes, and
   *    compactions must be serialized by the caller. Two concurrent
@@ -65,6 +80,9 @@ import org.apache.spark.sql.functions._
   */
 private[graft] object StandingIndex {
 
+  private val MarkerFile = "_meta"
+  private val StatsFile = "_stats"
+
   /** Content signature of a source table (file or directory): md5 over
     * sorted (relative-name, length, mtime) of every regular file. File
     * metadata only — safe to evaluate on every serving call. */
@@ -75,19 +93,19 @@ private[graft] object StandingIndex {
     * locale) must land in both or the marker-restore check drifts from
     * the staleness check. `keep` filters by path relative to the root. */
   private def treeSig(path: String, keep: String => Boolean): String = {
-    val p = java.nio.file.Paths.get(path)
-    if (!java.nio.file.Files.exists(p)) return "absent"
-    val st = java.nio.file.Files.walk(p)
+    val p = Paths.get(path)
+    if (!Files.exists(p)) return "absent"
+    val st = Files.walk(p)
     val parts =
       try {
         val b = Seq.newBuilder[String]
-        st.filter(q => java.nio.file.Files.isRegularFile(q))
+        st.filter(q => Files.isRegularFile(q))
           .sorted()
           .forEach { q =>
             val rel = p.relativize(q).toString
             if (keep(rel))
-              b += s"$rel:${java.nio.file.Files.size(q)}:" +
-                s"${java.nio.file.Files.getLastModifiedTime(q).toMillis}"
+              b += s"$rel:${Files.size(q)}:" +
+                s"${Files.getLastModifiedTime(q).toMillis}"
           }
         b.result()
       } finally st.close()
@@ -100,12 +118,12 @@ private[graft] object StandingIndex {
     * only, like [[sourceSig]]. The measured size [[bucketsFor]] sizes a
     * layout from. */
   def sourceBytes(path: String): Long = {
-    val p = java.nio.file.Paths.get(path)
-    if (!java.nio.file.Files.exists(p)) return 0L
-    val st = java.nio.file.Files.walk(p)
-    try st.filter(q => java.nio.file.Files.isRegularFile(q) &&
+    val p = Paths.get(path)
+    if (!Files.exists(p)) return 0L
+    val st = Files.walk(p)
+    try st.filter(q => Files.isRegularFile(q) &&
         q.toString.endsWith(".parquet"))
-      .mapToLong(q => java.nio.file.Files.size(q)).sum()
+      .mapToLong(q => Files.size(q)).sum()
     finally st.close()
   }
 
@@ -133,50 +151,71 @@ private[graft] object StandingIndex {
 
   /** The layout part of a bucketed index's marker: the content signature
     * of `source`, the bucket count, and the source bytes beside it, so a
-    * reader of `_meta` sees what sized the layout. */
+    * reader of the marker sees what sized the layout. The trailing
+    * `stats=kv` names the build-stats format: a directory written before
+    * [[recordStats]] kept its stats as bare numbers, and the token makes
+    * such a directory read stale instead of failing its first [[stat]]. */
   def layoutMarker(source: String, nBuckets: Int): String =
     s"sig=${sourceSig(source)} buckets=$nBuckets " +
-      s"src_bytes=${sourceBytes(source)}"
+      s"src_bytes=${sourceBytes(source)} stats=kv"
 
-  /** True iff `base/_meta` exists and matches `want` exactly. */
-  def upToDate(base: String, want: String): Boolean = {
-    val mp = java.nio.file.Paths.get(s"$base/_meta")
-    java.nio.file.Files.exists(mp) &&
-      new String(java.nio.file.Files.readAllBytes(mp), "UTF-8") == want
+  /** The marker stamped at `base`, if any. */
+  def marker(base: String): Option[String] = {
+    val mp = Paths.get(base, MarkerFile)
+    if (Files.exists(mp)) Some(new String(Files.readAllBytes(mp), "UTF-8"))
+    else None
   }
 
-  /** True iff `base/_meta` exists and STARTS WITH `prefix` — the check
-    * for markers whose tail carries a build-derived value (AnnIndex's
-    * ` n=<corpus count>`, which the prober parses back out). One
-    * implementation so the recovery-protocol idiom can't drift between
-    * call sites. */
-  def markerStartsWith(base: String, prefix: String): Boolean = {
-    val mp = java.nio.file.Paths.get(s"$base/_meta")
-    java.nio.file.Files.exists(mp) &&
-      new String(java.nio.file.Files.readAllBytes(mp), "UTF-8")
-        .startsWith(prefix)
+  /** Build-if-stale, the one way a standing directory gets (re)built:
+    * returns false when the marker at `base` equals `want` exactly.
+    * Otherwise wipes `base`, runs `build` (which writes the owner's
+    * tables and its [[recordStats]]), stamps `want` last and returns
+    * true. */
+  def ensure(base: String, want: String)(build: => Unit): Boolean = {
+    if (marker(base).contains(want)) return false
+    reset(base)
+    build
+    stamp(base, want)
+    true
   }
 
-  /** Wipe and recreate `base` for a fresh build. */
+  /** Wipe and recreate `base`. */
   def reset(base: String): Unit = {
-    val bp = java.nio.file.Paths.get(base)
-    if (java.nio.file.Files.exists(bp)) graft.Fs.deleteRec(bp)
-    java.nio.file.Files.createDirectories(bp)
+    val bp = Paths.get(base)
+    if (Files.exists(bp)) graft.Fs.deleteRec(bp)
+    Files.createDirectories(bp)
     ()
   }
 
-  /** Stamp the marker — written LAST in every build, so a crash mid-build
-    * leaves a stale-marked (rebuildable) dir, never a fresh-marked
-    * partial one. */
-  def commit(base: String, want: String): Unit = {
-    java.nio.file.Files.write(java.nio.file.Paths.get(s"$base/_meta"),
-      want.getBytes("UTF-8"))
+  private def stamp(base: String, want: String): Unit = {
+    Files.write(Paths.get(base, MarkerFile), want.getBytes("UTF-8"))
     ()
   }
 
-  /** The routing-column bucket expression shared with
-    * [[Retrieval.EvolvingDistIndex]]: pmod(xxhash64(c), n). */
-  def bucketOf(c: Column, nBuckets: Int): Column =
+  /** Record the values a build derived, as `key=value` lines, replacing
+    * any earlier record. Called inside an [[ensure]] build, so the
+    * values land before the marker does. */
+  def recordStats(base: String, kv: (String, Any)*): Unit = {
+    Files.write(Paths.get(base, StatsFile),
+      kv.map { case (k, v) => s"$k=$v" }.mkString("\n").getBytes("UTF-8"))
+    ()
+  }
+
+  /** The build-derived value `key` recorded at `base`. Doubles round-trip
+    * exactly: [[recordStats]] writes `Double.toString`, the shortest
+    * decimal that parses back to the same bits. */
+  def stat(base: String, key: String): String = {
+    val p = Paths.get(base, StatsFile)
+    val lines =
+      if (Files.exists(p)) new String(Files.readAllBytes(p), "UTF-8").split("\n").toSeq
+      else Nil
+    lines.collectFirst { case l if l.startsWith(s"$key=") => l.drop(key.length + 1) }
+      .getOrElse(throw new IllegalStateException(
+        s"standing index at $base records no build stat '$key' — rebuild it"))
+  }
+
+  /** The routing-column bucket expression: pmod(xxhash64(c), n). */
+  private def bucketOf(c: Column, nBuckets: Int): Column =
     pmod(xxhash64(c), lit(nBuckets.toLong))
 
   /** Bucket-partitioned layout write: one task — hence one file — per
@@ -189,12 +228,12 @@ private[graft] object StandingIndex {
     ()
   }
 
-  /** Append-only variant of [[writeBucketed]] for standing indexes whose
-    * state GROWS (committed arrivals): same routing/repartition discipline
-    * — ≤ one new file per touched bucket per append, so a steady commit
-    * stream adds batch-bucket-count files, never task-count × bucket-count
-    * (the small-file storm [[Retrieval.EvolvingDistIndex]] guards against
-    * the same way). */
+  /** Append-only variant of [[writeBucketed]] for state that GROWS
+    * (committed arrivals, delta rows): the same repartition on the
+    * partition column, so every bucket lands in one task and a steady
+    * commit stream adds at most one file per touched bucket per append,
+    * never task-count × bucket-count (the small-file storm every later
+    * pruned read would pay back with interest). */
   def appendBucketed(df: DataFrame, routing: Column, nBuckets: Int,
       dir: String): Unit = {
     df.withColumn("bucket", bucketOf(routing, nBuckets))
@@ -202,6 +241,28 @@ private[graft] object StandingIndex {
       .write.partitionBy("bucket").mode("append").parquet(dir)
     ()
   }
+
+  /** The buckets of a layout under `base` that a key frame touches, and
+    * path-pruned reads of its tables restricted to them. */
+  final class Slice private[StandingIndex] (s: SparkSession, base: String,
+      buckets: Seq[Long]) {
+    def isEmpty: Boolean = buckets.isEmpty
+
+    /** `base/table` read through only this slice's bucket directories,
+      * the partition column dropped. */
+    def read(table: String): DataFrame =
+      prunedRead(s, s"$base/$table", "bucket", buckets).drop("bucket")
+  }
+
+  /** The bucket set `keys` touches on its `routing` column under an
+    * `nBuckets` layout: one distinct-collect, bounded by the key frame's
+    * own vocabulary (the same bound as the broadcast its callers' joins
+    * already take). */
+  def slice(s: SparkSession, base: String, keys: DataFrame, routing: String,
+      nBuckets: Int): Slice =
+    new Slice(s, base,
+      keys.select(bucketOf(col(routing), nBuckets).as("bucket")).distinct()
+        .collect().map(_.getLong(0)).sorted.toSeq)
 
   /** Run a state-rewriting maintenance `body` with the staleness marker
     * SUSPENDED: the marker is read, deleted, and only restored after the
@@ -228,17 +289,16 @@ private[graft] object StandingIndex {
     * this (add/move/delete only); a future body that can't must
     * strengthen [[liveSig]] to content hashes first. */
   def withMarkerSuspended(base: String)(body: => Unit): Unit = {
-    val mp = java.nio.file.Paths.get(s"$base/_meta")
-    if (!java.nio.file.Files.exists(mp)) return
-    val marker = new String(java.nio.file.Files.readAllBytes(mp), "UTF-8")
-    java.nio.file.Files.delete(mp)
+    val held = marker(base)
+    if (held.isEmpty) return
+    Files.delete(Paths.get(base, MarkerFile))
     val sig0 = liveSig(base)
     try {
       body
-      commit(base, marker)
+      stamp(base, held.get)
     } catch {
       case e: Throwable =>
-        if (liveSig(base) == sig0) commit(base, marker)
+        if (liveSig(base) == sig0) stamp(base, held.get)
         throw e
     }
   }
@@ -250,19 +310,19 @@ private[graft] object StandingIndex {
     * construction (shared [[treeSig]]). */
   private def liveSig(base: String): String =
     treeSig(base, rel =>
-      rel != "_meta" && !rel.split('/').exists(_.startsWith("_compact_")))
+      rel != MarkerFile && !rel.split('/').exists(_.startsWith("_compact_")))
 
   /** Compact one `part`-partitioned table of a standing index back to
     * one file per partition directory: appends accumulate a file per
     * touched partition per commit (the measured pressure — ~447 files
     * per IVF append at the 100× ladder), and scan cost eventually tracks
-    * file count, not bytes. Rewrite-to-temp, swap, called under
-    * [[withMarkerSuspended]] by the owners. */
+    * file count, not bytes. Rewrite-to-temp, swap; the marked owners call
+    * it under [[withMarkerSuspended]]. */
   def compactTable(s: SparkSession, base: String, table: String,
       part: String, xform: DataFrame => DataFrame = identity): Unit = {
     val dir = s"$base/$table"
     val tmp = s"$base/_compact_$table"
-    graft.Fs.deleteRec(java.nio.file.Paths.get(tmp))
+    graft.Fs.deleteRec(Paths.get(tmp))
     val out = xform(s.read.parquet(dir))
     out.repartition(col(part))
       .write.partitionBy(part).mode("overwrite").parquet(tmp)
@@ -272,14 +332,15 @@ private[graft] object StandingIndex {
     swapDirs(s, tmp, dir)
   }
 
-  /** Flat (non-partitioned) sibling of [[compactTable]] for delta tables
-    * with no routing column (the shingle index's n0): rewrite through
-    * `xform`, guard the all-rows-dropped case, swap. */
+  /** Flat (non-partitioned) sibling of [[compactTable]] for tables with
+    * no routing column (the shingle index's n0 and dig, the evolving
+    * index's fwd): rewrite through `xform`, guard the all-rows-dropped
+    * case, swap. */
   def compactFlat(s: SparkSession, base: String, table: String,
       xform: DataFrame => DataFrame = identity): Unit = {
     val dir = s"$base/$table"
     val tmp = s"$base/_compact_$table"
-    graft.Fs.deleteRec(java.nio.file.Paths.get(tmp))
+    graft.Fs.deleteRec(Paths.get(tmp))
     val out = xform(s.read.parquet(dir))
     out.write.mode("overwrite").parquet(tmp)
     ensureReadable(s, tmp, out.schema, None)
@@ -307,13 +368,12 @@ private[graft] object StandingIndex {
     * next probe of the same buckets from a file list the swap deleted —
     * certain on a one-bucket layout, where every probe reads the same
     * path. */
-  private[llm] def swapDirs(s: SparkSession, tmp: String,
-      dir: String): Unit = {
-    val live = java.nio.file.Paths.get(dir)
+  private def swapDirs(s: SparkSession, tmp: String, dir: String): Unit = {
+    val live = Paths.get(dir)
     val aside = live.resolveSibling("_old_" + live.getFileName.toString)
     graft.Fs.deleteRec(aside)
-    java.nio.file.Files.move(live, aside)
-    java.nio.file.Files.move(java.nio.file.Paths.get(tmp), live)
+    Files.move(live, aside)
+    Files.move(Paths.get(tmp), live)
     graft.Fs.deleteRec(aside)
     s.catalog.refreshByPath(dir)
   }
@@ -328,8 +388,7 @@ private[graft] object StandingIndex {
   // dropping every row can't brick the table. Family-specific delta
   // arithmetic (shingle df re-shingle, evolving fwd-derived deltas,
   // BM25's frozen-stats mask, IVF's per-cell slices) stays with the
-  // owners — this is the machinery they were hand-rolling four times,
-  // where the next fix to one copy would have missed the other three.
+  // owners.
 
   /** True iff `dir` holds at least one parquet DATA file (recursive) —
     * distinguishes "this table has rows on disk" from an absent dir AND
@@ -337,11 +396,11 @@ private[graft] object StandingIndex {
     * cannot even infer a schema from. File metadata only — safe on
     * every serving call. */
   def hasParquetData(dir: String): Boolean = {
-    val p = java.nio.file.Paths.get(dir)
-    if (!java.nio.file.Files.isDirectory(p)) return false
-    val st = java.nio.file.Files.walk(p)
+    val p = Paths.get(dir)
+    if (!Files.isDirectory(p)) return false
+    val st = Files.walk(p)
     try st.anyMatch(q => q.toString.endsWith(".parquet") &&
-      java.nio.file.Files.isRegularFile(q))
+      Files.isRegularFile(q))
     finally st.close()
   }
 
@@ -411,7 +470,7 @@ private[graft] object StandingIndex {
   def prunedRead(s: SparkSession, tableDir: String, part: String,
       values: Seq[Long]): DataFrame = {
     val paths = values.map(v => s"$tableDir/$part=$v")
-      .filter(p => java.nio.file.Files.isDirectory(java.nio.file.Paths.get(p)))
+      .filter(p => Files.isDirectory(Paths.get(p)))
     val raw = if (paths.isEmpty) s.read.parquet(tableDir)
       else s.read.option("basePath", tableDir).parquet(paths: _*)
     raw.filter(col(part).isin(values: _*))

@@ -966,27 +966,17 @@ object DocStreams {
     * its durable stats deltas and serve screen-only, and a crash
     * mid-transition or a corpus rewrite rebuilds from source. */
   def decontamEvolvingDistDelete(s: SparkSession, d: String): DataFrame = {
-    import java.nio.file._
     import graft.llm.{Retrieval, StandingIndex}
-    val base = Paths.get(System.getProperty("java.io.tmpdir"),
-      "graft_evodist_delete")
+    val base = Zone.tmp("graft_evodist_delete")
     val sig = StandingIndex.sourceSig(s"$d/documents.parquet")
-    val want = s"dir=$d sig=$sig deleted=mod10eq7"
     val docs = Tables.documents(s, d).select("doc_id", "text")
-    val inc =
-      if (StandingIndex.upToDate(base.toString, want))
-        new Retrieval.EvolvingDistIndex(s, base.toString)
-      else {
-        if (Files.exists(base)) graft.Fs.deleteRec(base)
-        Files.createDirectories(base)
-        val ix = new Retrieval.EvolvingDistIndex(s, base.toString)
-        ix.append(docs.filter(col("doc_id") % 5 =!= 0))
-        ix.delete(docs.filter(col("doc_id") % 10 === 7).select("doc_id"))
-        StandingIndex.commit(base.toString, want)
-        ix
-      }
+    StandingIndex.ensure(base, s"dir=$d sig=$sig deleted=mod10eq7") {
+      val ix = new Retrieval.EvolvingDistIndex(s, base)
+      ix.append(docs.filter(col("doc_id") % 5 =!= 0))
+      ix.delete(docs.filter(col("doc_id") % 10 === 7).select("doc_id"))
+    }
     graft.plans.TopKPerKey.ensureRegistered(s)
-    inc.screen(docs.filter(col("doc_id") % 5 === 0))
+    new Retrieval.EvolvingDistIndex(s, base).screen(docs.filter(col("doc_id") % 5 === 0))
       .select(col("doc_id"), col("top_match"), col("top_score"),
         (col("top_score") <= lit(Bm25AdmitMax)).as("admit"))
       .orderBy("doc_id")

@@ -66,27 +66,26 @@ object Zone {
       project: => DataFrame): String = lock.synchronized {
     val base = Paths.get(tmp(s"graft_stream_${table}_${d.replaceAll("[^a-zA-Z0-9.]", "_")}"))
     val want = s"chunks=$Chunks sig=${StandingIndex.sourceSig(s"$d/$table.parquet")}"
-    if (StandingIndex.upToDate(base.toString, want)) return base.toString
-    StandingIndex.reset(base.toString)
-    val rows = project.cache()
-    val bounds = rows.agg(min(key), max(key)).head()
-    if (!bounds.isNullAt(0)) {
-      val (lo, hi) = (bounds.getLong(0), bounds.getLong(1))
-      val span = (hi - lo) / Chunks + 1
-      (0 until Chunks).foreach { i =>
-        val part = base.resolve(s"_stage_$i")
-        rows.filter(col(key) >= lo + i * span && col(key) < lo + (i + 1) * span)
-          .coalesce(1).write.mode("overwrite").parquet(part.toString)
-        graft.Fs.firstWithSuffix(part, ".parquet").foreach { f =>
-          val dst = base.resolve(f"chunk_$i%02d.parquet")
-          Files.move(f, dst, StandardCopyOption.REPLACE_EXISTING)
-          Files.setLastModifiedTime(dst, FileTime.fromMillis(1000000000000L + i * 60000L))
+    StandingIndex.ensure(base.toString, want) {
+      val rows = project.cache()
+      val bounds = rows.agg(min(key), max(key)).head()
+      if (!bounds.isNullAt(0)) {
+        val (lo, hi) = (bounds.getLong(0), bounds.getLong(1))
+        val span = (hi - lo) / Chunks + 1
+        (0 until Chunks).foreach { i =>
+          val part = base.resolve(s"_stage_$i")
+          rows.filter(col(key) >= lo + i * span && col(key) < lo + (i + 1) * span)
+            .coalesce(1).write.mode("overwrite").parquet(part.toString)
+          graft.Fs.firstWithSuffix(part, ".parquet").foreach { f =>
+            val dst = base.resolve(f"chunk_$i%02d.parquet")
+            Files.move(f, dst, StandardCopyOption.REPLACE_EXISTING)
+            Files.setLastModifiedTime(dst, FileTime.fromMillis(1000000000000L + i * 60000L))
+          }
+          graft.Fs.deleteRec(part)
         }
-        graft.Fs.deleteRec(part)
       }
+      rows.unpersist()
     }
-    rows.unpersist()
-    StandingIndex.commit(base.toString, want)
     base.toString
   }
 

@@ -55,8 +55,11 @@ class AnnIndexSpec extends SparkSpec {
     // signature (file name/length/mtime digest) no longer matches ⇒
     // rebuild — the exact hole a row-count-only marker would miss.
     val meta = java.nio.file.Paths.get(s"$base/_meta")
-    val stamped = new String(java.nio.file.Files.readAllBytes(meta), "UTF-8")
+    val stamped = graft.llm.StandingIndex.marker(base).get
     assert(stamped.contains(" sig="), s"marker must carry a content sig: $stamped")
+    // The probe budget's input is a build stat, not a marker tail.
+    assert(graft.llm.StandingIndex.stat(base, "n").toLong ==
+      Tables.embeddings(spark, Sf).count())
     java.nio.file.Files.write(meta,
       stamped.replaceFirst(" sig=[0-9a-f]+", " sig=deadbeef").getBytes("UTF-8"))
     assert(AnnIndex.buildIfStale(spark, Sf, base),

@@ -7,7 +7,8 @@ import graft.functions.SelfCosine
 
 /** The session recipe and the operator library's configuration surface:
   * one place builds sessions, and the library reads no switch from the
-  * environment or the session conf. */
+  * environment or the session conf. Also the source scans that keep one
+  * module per protocol (micro-batch loop, standing directories). */
 class GraftSessionSpec extends SparkSpec {
 
   private def scalaFiles(root: String): Seq[Path] = {
@@ -69,6 +70,25 @@ class GraftSessionSpec extends SparkSpec {
     val shuffleSets =
       sites("""conf\s*\.\s*set\s*\(\s*"spark\.sql\.shuffle\.partitions"""".r)
     assert(shuffleSets.isEmpty, s"shuffle partitions set outside Zone.withConf: $shuffleSets")
+  }
+
+  test("one module owns the standing-directory protocol") {
+    // Marker and build-stats files, the marker check and stamp, and the
+    // bucket hash live only in StandingIndex.scala.
+    val names = """\b_(meta|stats)\b""".r
+    val calls = """StandingIndex\s*\.\s*(upToDate|commit|markerStartsWith)\b""".r
+    val hash = """pmod\s*\(\s*xxhash64\s*\(""".r
+    val offenders = scalaFiles("src/main/scala")
+      .filterNot(_.getFileName.toString == "StandingIndex.scala")
+      .flatMap { p =>
+        val t = text(p)
+        val lib = Seq("llm", "streaming").exists(d => p.getParent.endsWith(d))
+        (names.findAllMatchIn(t) ++ calls.findAllMatchIn(t) ++
+          (if (lib) hash.findAllMatchIn(t) else Iterator.empty))
+          .map(m => s"${p.getFileName}: ${m.matched}")
+      }
+    assert(offenders.isEmpty, s"standing-directory protocol outside StandingIndex: " +
+      offenders.mkString("; "))
   }
 
   test("the graph rounds collect nothing to the driver") {

@@ -15,12 +15,17 @@ class StandingIndexSpec extends SparkSpec {
 
   private def mkIndex(): java.nio.file.Path = {
     val base = Files.createTempDirectory("graft_standing_spec")
-    Files.createDirectories(base.resolve("cells"))
-    Files.write(base.resolve("cells/part-0.parquet"),
-      "livebytes".getBytes("UTF-8"))
-    StandingIndex.commit(base.toString, "sig v1")
+    StandingIndex.ensure(base.toString, "sig v1") {
+      Files.createDirectories(base.resolve("cells"))
+      Files.write(base.resolve("cells/part-0.parquet"),
+        "livebytes".getBytes("UTF-8"))
+      ()
+    }
     base
   }
+
+  private def marked(base: java.nio.file.Path, want: String): Boolean =
+    StandingIndex.marker(base.toString).contains(want)
 
   test("marker-suspend: pre-destructive failure restores the marker") {
     val base = mkIndex()
@@ -36,7 +41,7 @@ class StandingIndexSpec extends SparkSpec {
       }
     }
     assert(boom.getMessage == "tmp write failed")
-    assert(StandingIndex.upToDate(base.toString, "sig v1"),
+    assert(marked(base, "sig v1"),
       "a transient pre-destructive failure must not cost a full rebuild")
     Fs.deleteRec(base)
   }
@@ -50,7 +55,7 @@ class StandingIndexSpec extends SparkSpec {
         throw new RuntimeException("swap failed")
       }
     }
-    assert(!Files.exists(base.resolve("_meta")),
+    assert(StandingIndex.marker(base.toString).isEmpty,
       "a half-rewritten index must stay unmarked (rebuildable)")
     Fs.deleteRec(base)
   }
@@ -62,7 +67,7 @@ class StandingIndexSpec extends SparkSpec {
         "compacted".getBytes("UTF-8"))
       ()
     }
-    assert(StandingIndex.upToDate(base.toString, "sig v1"))
+    assert(marked(base, "sig v1"))
     Fs.deleteRec(base)
   }
 
@@ -79,15 +84,14 @@ class StandingIndexSpec extends SparkSpec {
     val base = mkIndex()
     var staleInside = false
     StandingIndex.withMarkerSuspended(base.toString) {
-      staleInside = !StandingIndex.upToDate(base.toString, "sig v1") &&
-        !StandingIndex.markerStartsWith(base.toString, "sig")
+      staleInside = StandingIndex.marker(base.toString).isEmpty
       ()
     }
     assert(staleInside,
       "a concurrent prober inside the maintenance window must read the " +
         "tree as stale — if this starts failing, the suspension protocol " +
         "changed and the documented concurrency contract must be rewritten")
-    assert(StandingIndex.upToDate(base.toString, "sig v1"),
+    assert(marked(base, "sig v1"),
       "the marker must be restored the moment maintenance completes")
     Fs.deleteRec(base)
   }
@@ -104,13 +108,12 @@ class StandingIndexSpec extends SparkSpec {
     val dstIno = Files.getAttribute(
       dst.resolve("cells/part-0.parquet"), "unix:ino")
     assert(srcIno == dstIno, "data files must be hard-linked")
-    // Marker: independent bytes — re-stamping the clone (the
-    // StandingIndex.commit truncate-in-place write) leaves the pristine
-    // index's marker intact.
-    StandingIndex.commit(dst.toString, "sig v2 (clone)")
-    assert(StandingIndex.upToDate(src.toString, "sig v1"),
+    // Marker: independent bytes — re-stamping the clone with a
+    // truncate-in-place write leaves the pristine index's marker intact.
+    Files.write(dst.resolve("_meta"), "sig v2 (clone)".getBytes("UTF-8"))
+    assert(marked(src, "sig v1"),
       "re-stamping the clone corrupted the pristine marker")
-    assert(StandingIndex.upToDate(dst.toString, "sig v2 (clone)"))
+    assert(marked(dst, "sig v2 (clone)"))
     Fs.deleteRec(src); Fs.deleteRec(dst)
   }
 
@@ -211,16 +214,14 @@ class StandingIndexSpec extends SparkSpec {
     graft.TrackedCaches.release()
     val pristine = Paths.get(System.getProperty("java.io.tmpdir"),
       "graft_shingle_stream_pristine")
-    val n = new String(Files.readAllBytes(pristine.resolve("_stats")),
-      "UTF-8").trim.toInt
+    val n = StandingIndex.stat(pristine.toString, "buckets").toInt
     val threshold = spark.conf
       .get("spark.sql.sources.parallelPartitionDiscovery.threshold").toInt
     assert(n <= threshold,
       s"$n buckets: a probe touching them all lists with a Spark job")
     val bytes = StandingIndex.sourceBytes(s"$Sf/documents.parquet")
     assert(n == StandingIndex.bucketsFor(bytes))
-    val marker = new String(Files.readAllBytes(pristine.resolve("_meta")),
-      "UTF-8")
+    val marker = StandingIndex.marker(pristine.toString).get
     assert(marker.contains(s"buckets=$n src_bytes=$bytes"),
       s"marker does not record the bytes that sized the layout: $marker")
   }
@@ -231,9 +232,7 @@ class StandingIndexSpec extends SparkSpec {
     import graft.llm.{Dedup, Retrieval}
     def fresh(tag: String) =
       Files.createTempDirectory(s"graft_standing_$tag").toString
-    def buckets(base: String) = new String(
-      Files.readAllBytes(Paths.get(s"$base/_stats")), "UTF-8")
-      .trim.split(" ").last.toInt
+    def buckets(base: String) = StandingIndex.stat(base, "buckets").toInt
     val docs = Tables.documents(spark, Sf).select("doc_id", "text")
     val (shSized, sh64) = (fresh("sh_sized"), fresh("sh_64"))
     Dedup.shingleBuildIfStale(spark, Sf, shSized)
@@ -257,5 +256,45 @@ class StandingIndexSpec extends SparkSpec {
     assert(bm.nonEmpty && bm == bm25(bm64), "BM25 top-k moved with the layout")
     graft.TrackedCaches.release()
     Seq(shSized, sh64, bmSized, bm64).foreach(b => Fs.deleteRec(Paths.get(b)))
+  }
+
+  test("a directory in the earlier marker/stats format reads stale and " +
+      "rebuilds instead of failing or serving") {
+    import org.apache.spark.sql.functions.col
+    import graft.llm.{AnnIndex, Dedup}
+    def rows(df: org.apache.spark.sql.DataFrame) =
+      df.collect().map(_.toString).toSeq
+    // IVF, at the shipped query's own dir (it persists between runs): the
+    // earlier format carried the build count as an ` n=` marker tail and
+    // kept no build stats.
+    val ivf = Paths.get(System.getProperty("java.io.tmpdir"),
+      "graft_ivf_standing")
+    val want = rows(AnnIndex.annIvfStanding(spark, Sf))
+    val n = StandingIndex.stat(ivf.toString, "n")
+    val sig = StandingIndex.sourceSig(s"$Sf/embeddings.parquet")
+    Files.write(ivf.resolve("_meta"), s"dir=$Sf sig=$sig n=$n".getBytes("UTF-8"))
+    Files.delete(ivf.resolve("_stats"))
+    assert(rows(AnnIndex.annIvfStanding(spark, Sf)) == want)
+    assert(StandingIndex.marker(ivf.toString).exists(!_.contains(" n=")),
+      "the n=-tailed marker was served instead of rebuilt")
+    assert(StandingIndex.stat(ivf.toString, "n") == n)
+    // Shingle: the earlier format kept the bucket count as a bare number.
+    val sh = Files.createTempDirectory("graft_standing_old_shingle").toString
+    assert(Dedup.shingleBuildIfStale(spark, Sf, sh, 8))
+    val batch = Tables.documents(spark, Sf).filter(col("doc_id") % 5 === 0)
+      .select("doc_id", "text")
+    val verdicts = rows(Dedup.shingleProbe(spark, sh, batch))
+    val src = s"$Sf/documents.parquet"
+    Files.write(Paths.get(sh, "_meta"),
+      (s"dir=$Sf sig=${StandingIndex.sourceSig(src)} buckets=8 " +
+        s"src_bytes=${StandingIndex.sourceBytes(src)} dig=1").getBytes("UTF-8"))
+    Files.write(Paths.get(sh, "_stats"), "8".getBytes("UTF-8"))
+    assert(Dedup.shingleBuildIfStale(spark, Sf, sh, 8),
+      "the earlier-format shingle dir must read stale")
+    assert(StandingIndex.stat(sh, "buckets") == "8")
+    assert(rows(Dedup.shingleProbe(spark, sh, batch)) == verdicts)
+    assert(!Dedup.shingleBuildIfStale(spark, Sf, sh, 8))
+    graft.TrackedCaches.release()
+    Fs.deleteRec(Paths.get(sh))
   }
 }
