@@ -171,11 +171,11 @@ object ScaleTest {
         // which side of the broadcast crossover the corpus lands on. The
         // evolving variant (round 11) rides alongside: same screen, but the
         // index is driver-maintained and appended per batch — the Nx pair
-        // prices the rebuild-vs-incremental difference directly. The
-        // DISTRIBUTED evolving twin (round 13) is the one gate MEANT for
-        // the >64 MB corpora the broadcast twin requires away: its Nx row
-        // proves per-batch screen+append cost stays |batch|-bounded while
-        // the standing corpus grows — the property that is its thesis.
+        // prices the rebuild-vs-incremental difference directly, and
+        // past the 64 MB ceiling the gate switches itself to its
+        // distributed regime. The _dist row forces that regime at both
+        // scales: its Nx row shows per-batch screen+append cost staying
+        // |batch|-bounded while the standing corpus grows.
         "q_stream_decontam", "q_stream_decontam_evolving",
         "q_stream_decontam_evolving_dist"), Seq(DocStreams.stageDocs _)))),
       // Events AND users grow together at the same per-user density — the
@@ -228,30 +228,14 @@ object ScaleTest {
     val dst = sec.corpus.at(spark, src, copies)
     def pass(dir: String): Seq[Double] = {
       sec.zones.foreach(_(spark, dir))
-      sec.rows.map { r =>
-        try time(spark)(noop(r.frame(spark, dir)))
-        catch {
-          // The evolving decontam gate hard-requires the broadcast regime
-          // (streamDecontamEvolving throws past BroadcastScreenMaxBytes by
-          // design rather than silently diverge); at docs 30/100 the
-          // staged corpus exceeds the gate, and one operator declining its
-          // regime must not abort the other rows mid-ladder. Record a
-          // skipped (NaN) row and keep going. Matched by TYPE — a reword
-          // of the gate's message must not silently revert this to an
-          // abort (its distributed twin runs those corpora instead).
-          case _: graft.streaming.BroadcastRegimeExceeded =>
-            println(s"[ladder] ${r.key} skipped: corpus exceeds the broadcast gate")
-            Double.NaN
-        }
-      }
+      sec.rows.map(r => time(spark)(noop(r.frame(spark, dir))))
     }
     pass(src) // warm
     val small = pass(src)
     val big = pass(dst)
     sec.header +: sec.rows.indices.map { i =>
       val (a, b, key) = (small(i), big(i), sec.rows(i).key)
-      if (a.isNaN || b.isNaN) s"$key,skipped,skipped" + (if (sec.ratio) ",-" else "")
-      else f"$key,$a%.2f,$b%.2f" + (if (sec.ratio) f",${b / a}%.1f" else "")
+      f"$key,$a%.2f,$b%.2f" + (if (sec.ratio) f",${b / a}%.1f" else "")
     }
   }
 

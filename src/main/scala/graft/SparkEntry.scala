@@ -176,7 +176,8 @@ object SparkEntry {
     "q_stream_quality_gate" -> (graft.streaming.DocStreams.streamQualityGate _),
     "q_stream_decontam" -> (graft.streaming.DocStreams.streamDecontam _),
     "q_stream_decontam_evolving" -> (graft.streaming.DocStreams.streamDecontamEvolving _),
-    "q_stream_decontam_evolving_dist" -> (graft.streaming.DocStreams.streamDecontamEvolvingDist _),
+    "q_stream_decontam_evolving_dist" ->
+      ((s, d) => graft.streaming.DocStreams.streamDecontamEvolvingUnder(s, d, 0L)),
     "q_decontam_evolving_dist_delete" -> (graft.streaming.DocStreams.decontamEvolvingDistDelete _),
     "q_stream_vec_ingest" -> (graft.streaming.VecStreams.streamVecIngest _),
     "q_stream_anomaly_gate" -> (graft.streaming.EventStreams.streamAnomalyGate _),
@@ -588,8 +589,8 @@ object SparkEntry {
     "q_stream_quality_gate" -> graft.streaming.DocStreams.streamQualityGateSql,
     "q_stream_decontam" -> graft.streaming.DocStreams.streamDecontamSql,
     "q_stream_decontam_evolving" -> graft.streaming.DocStreams.streamDecontamEvolvingSql,
-    // Same oracle as the broadcast twin — the gate moves the REGIME
-    // (bucketed-posting-append distributed index), not the semantics.
+    // Same oracle as the auto row: the forced distributed regime
+    // (bucketed-posting-append index) moves the plan, not the semantics.
     "q_stream_decontam_evolving_dist" -> graft.streaming.DocStreams.streamDecontamEvolvingSql,
     "q_decontam_evolving_dist_delete" -> graft.streaming.DocStreams.decontamEvolvingDistDeleteSql,
     "q_stream_vec_ingest" -> graft.streaming.VecStreams.streamVecIngestSql,

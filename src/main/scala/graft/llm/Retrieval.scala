@@ -1091,8 +1091,8 @@ object Retrieval {
     * class-split stage-1 kernel ([[screenCandidatesQd]]) and the stage-2
     * fold ([[scoreCandidatesQd]]) unchanged over views of the directories:
     * exactness there is route-invariant and proven per arrival, so the
-    * verdicts equal the broadcast evolving gate's row-for-row
-    * (StreamingSpec replays both gates end-to-end and asserts it). */
+    * verdicts equal the evolving gate's broadcast regime row-for-row
+    * (StreamingSpec replays both regimes end-to-end and asserts it). */
   private[graft] final class EvolvingDistIndex(s: SparkSession, base: String) {
     import EvolvingDistIndex.NumBuckets
     private val postingsDir = s"$base/postings"

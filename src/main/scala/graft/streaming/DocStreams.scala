@@ -36,27 +36,7 @@ import org.apache.spark.sql.types._
   * batch dedup family uses.
   */
 
-/** Thrown by broadcast-regime-only gates when the standing corpus exceeds
-  * [[graft.llm.Retrieval.BroadcastScreenMaxBytes]] — a dedicated type (not
-  * a bare require) so the scale ladder can record a skipped row by MATCHING
-  * THE TYPE instead of the message text, which a reword would silently
-  * break (ScaleTest.runLadder). Subclasses IllegalArgumentException so
-  * callers treating the gate as a precondition failure keep working. */
-final class BroadcastRegimeExceeded(msg: String)
-    extends IllegalArgumentException(msg)
-
 object DocStreams {
-
-  /** The most recent gate run's broadcast index snapshot — exposed so
-    * StreamingSpec can assert the lifecycle: once a gate's verdict frame is
-    * parquet-backed, its snapshot must be DESTROYED (driver + executor
-    * blocks freed), not merely unpersisted. `TrackedCaches.release()` only
-    * unpersists (the degenerate empty-zone path returns a LAZY frame that
-    * must stay re-broadcastable), so without the explicit destroy a
-    * long-running cluster invoking gates repeatedly accumulates driver
-    * broadcast blocks until the GC-driven ContextCleaner catches up. */
-  @volatile private[graft] var lastSnapshot:
-      Option[org.apache.spark.broadcast.Broadcast[_]] = None
 
   /** Streaming-source schema for the staged arrival slice. */
   private val docSchema = StructType(Seq(
@@ -256,8 +236,9 @@ object DocStreams {
     * sharing an LSH band with >= MinhashMatchThreshold/NumHashes signature
     * agreement; -1 when none).
     *
-    * Screening strategy is selected by INDEX SIZE like [[streamDecontam]]:
-    * under the broadcast gate the corpus signature/band/digest index is
+    * Screening strategy is selected by INDEX SIZE like [[streamDecontam]]
+    * ([[Zone.broadcastable]] over corpus text bytes): under the ceiling
+    * the corpus signature/band/digest index is
     * snapshotted (collected from the SAME distributed frames the other
     * strategy probes) and each micro-batch screens in one mapPartitions
     * pass. StreamingSpec holds both strategies row-identical end-to-end
@@ -275,15 +256,8 @@ object DocStreams {
     // The standing corpus index, built once and reused by every micro-batch:
     // band rows + signatures for the near-dup join, digests for exact dup.
     val rows = Dedup.NumHashes / Dedup.Bands
-    val useBroadcast = {
-      val st = corpus.agg(count(lit(1)).as("n"),
-        sum(length(col("text"))).as("bytes")).head()
-      st.getLong(0) == 0L || st.getLong(1) <= screenMaxBytes
-    }
-
-    var snapOpt: Option[org.apache.spark.broadcast.Broadcast[_]] = None
-    val screen: DataFrame => DataFrame =
-      if (useBroadcast) {
+    val (screen, snap): (DataFrame => DataFrame, Option[Zone.Snapshot[_]]) =
+      if (Zone.broadcastable(corpus, length(col("text")), screenMaxBytes)) {
         val sigRows = Dedup.signaturesOf(corpus).collect()
         val docIds = sigRows.map(_.getLong(0))
         val sigsFlat = new Array[Long](docIds.length * Dedup.NumHashes)
@@ -299,10 +273,8 @@ object DocStreams {
         val digests = corpus
           .select(md5(col("text")).as("digest"))
           .distinct().collect().map(_.getString(0))
-        val snap = graft.TrackedCaches.trackBroadcast(s.sparkContext.broadcast(
-          new DedupScreenSnapshot(docIds, sigsFlat, digests)))
-        snapOpt = Some(snap)
-        (batch: DataFrame) => screenBatchLocal(s, snap, batch)
+        val snap = Zone.snapshot(s, new DedupScreenSnapshot(docIds, sigsFlat, digests))
+        ((batch: DataFrame) => screenBatchLocal(s, snap.get, batch), Some(snap))
       } else {
         val corpusSig = graft.TrackedCaches.track(
           Dedup.signaturesOf(corpus).cache())
@@ -311,37 +283,11 @@ object DocStreams {
         val corpusDigests = graft.TrackedCaches.track(
           corpus.select(md5(col("text")).as("digest"), col("doc_id"))
             .groupBy("digest").agg(min("doc_id").as("exact_src")).cache())
-        (batch: DataFrame) =>
-          screenBatch(batch, corpusSig, corpusBands, corpusDigests)
+        ((batch: DataFrame) =>
+          screenBatch(batch, corpusSig, corpusBands, corpusDigests), None)
       }
-
-    val outBase = Zone.tmp("graft_stream_ingest")
-    val latest = Zone.run(s, dir, docSchema, outBase, Zone.SliceShuffles) {
-      (batch, batchId) => Zone.put(screen(batch), outBase, batchId)
-    }
-    // The incrementality gate (>= 2 micro-batches) applies only when the
-    // zone has enough chunks for two triggers: a sparse doc_id space can
-    // legitimately stage fewer than 3 non-empty chunks (stageDocs skips
-    // empty ranges), and one-batch screening of such a corpus is correct.
-    val nChunks = Zone.chunks(dir)
-    require(latest >= 1 || nChunks <= 2,
-      s"ingest dedup ran ${latest + 1} micro-batches over $nChunks chunks — " +
-        "need >= 2 batches for the screening to actually be incremental")
-    // Zero staged chunks (empty arrival slice) means zero micro-batches ran:
-    // return an empty verdict frame with the exact output schema (screening
-    // a LIMIT 0 batch) instead of calling read.parquet on an empty path list.
-    lastSnapshot = snapOpt
-    if (latest < 0)
-      // The returned frame lazily re-runs screen() — the snapshot must
-      // stay valid (TrackedCaches unpersists it after the caller's action).
-      screen(corpus.select(col("doc_id"), col("text")).limit(0))
-        .orderBy("doc_id")
-    else {
-      // Verdicts are parquet-backed; the snapshot can never be probed
-      // again — destroy it now (see [[lastSnapshot]]).
-      snapOpt.foreach(_.destroy())
-      Zone.versions(s, outBase, latest, "doc_id")
-    }
+    Zone.gate(s, dir, docSchema, "doc_id", Zone.tmp("graft_stream_ingest"),
+      Zone.Static, snap, Zone.SliceShuffles)(screen)
   }
 
   /** EVOLVING streaming ingest dedup — the commit-path gate: each
@@ -357,9 +303,9 @@ object DocStreams {
     * which ingest every arrival — a dedup gate admitting a dup would
     * poison the index with the copy).
     *
-    * Zone discipline is [[streamDecontamEvolving]]'s (dense 4-chunk /
-    * 2-batch staged slice, maxFilesPerTrigger = 2) so a batch DuckDB
-    * oracle can replay the boundary arithmetic. Each call clones a
+    * The zone must be the dense 4-chunk / 2-batch one ([[Zone.Evolving]],
+    * as for [[streamDecontamEvolving]]) so a batch DuckDB oracle can
+    * replay the boundary arithmetic. Each call clones a
     * PRISTINE marker-gated corpus index into a working copy (file copy,
     * not rebuild — the commits mutate the working copy only, so reruns
     * amortize the corpus-scale build exactly like the other standing
@@ -368,15 +314,9 @@ object DocStreams {
     * post-append state. */
   def streamDedupEvolving(s: SparkSession, d: String): DataFrame = {
     import java.nio.file._
-    import graft.llm.Dedup
     val dir = stageDocs(s, d)
     val pristine = Zone.tmp("graft_shingle_stream_pristine")
     Dedup.shingleBuildIfStale(s, d, pristine)
-    // Empty arrival slice: nothing will probe or commit — serve the empty
-    // verdict frame straight off the pristine index, no working clone.
-    if (Zone.chunks(dir) == 0)
-      return Dedup.shingleProbe(s, pristine,
-        Tables.documents(s, d).select(col("doc_id"), col("text")).limit(0))
     val base = Zone.tmp("graft_stream_dedup_evolving_ix")
     graft.Fs.deleteRec(Paths.get(base))
     // Hard-link clone: shingleCommit is append-only (existing files are
@@ -386,29 +326,17 @@ object DocStreams {
     // The clone bypasses Spark: drop any cached read of a previous call's
     // working copy, which Spark would match to this call's reads by path.
     s.catalog.refreshByPath(base)
-    val outBase = Zone.tmp("graft_stream_dedup_evolving")
-    val latest = Zone.run(s, dir, docSchema, outBase, Zone.SliceShuffles) {
-      (batch, batchId) =>
-        val b = batch.select(col("doc_id"), col("text"))
-        // Unordered per-batch verdicts: the combined read-back below is
-        // the one place this query sorts.
-        Zone.put(Dedup.shingleProbeUnordered(s, base, b), outBase, batchId)
-        val survivors = s.read.parquet(Zone.version(outBase, batchId))
+    val out = Zone.tmp("graft_stream_dedup_evolving")
+    Zone.gate(s, dir, docSchema, "doc_id", out, Zone.Evolving, None, Zone.SliceShuffles)(
+      // Unordered per-batch verdicts: the driver's combined read-back is
+      // the one place this query sorts.
+      batch => Dedup.shingleProbeUnordered(s, base, batch.select(col("doc_id"), col("text"))),
+      (batch, id) => {
+        val survivors = s.read.parquet(Zone.version(out, id))
           .filter(!col("is_dup")).select("doc_id")
         Dedup.shingleCommit(s, base,
-          b.join(survivors, Seq("doc_id"), "left_semi"))
-    }
-    val nChunks = Zone.chunks(dir)
-    if (latest < 0) {
-      // Empty arrival slice: nothing probed, nothing committed.
-      Dedup.shingleProbe(s, base,
-        Tables.documents(s, d).select(col("doc_id"), col("text")).limit(0))
-    } else {
-      require(nChunks == 4 && latest == 1,
-        s"evolving dedup ran ${latest + 1} batches over $nChunks chunks — " +
-          "the oracle's batch arithmetic needs the dense 4-chunk / 2-batch zone")
-      Zone.versions(s, outBase, latest, "doc_id")
-    }
+          batch.select(col("doc_id"), col("text")).join(survivors, Seq("doc_id"), "left_semi"))
+      })
   }
 
   /** Oracle for [[streamDedupEvolving]]: the shared two-phase commit
@@ -449,26 +377,11 @@ object DocStreams {
     val corpus = Tables.documents(s, d).filter(col("doc_id") % 5 =!= 0)
     val (c2, c1, vocab) =
       TextAnalysis.bigramModel(TextAnalysis.bigramsOf(corpus.select("doc_id", "text")))
-    val outBase = Zone.tmp("graft_stream_gate")
-    val latest = Zone.run(s, dir, docSchema, outBase, Zone.SliceShuffles) {
-      (batch, batchId) =>
-        Zone.put(TextAnalysis.scorePpl(TextAnalysis.bigramsOf(batch), c2, c1, vocab)
-          .withColumn("admit", col("ppl") <= lit(PplAdmitMax)), outBase, batchId)
-    }
-    val nChunks = Zone.chunks(dir)
-    require(latest >= 1 || nChunks <= 2,
-      s"quality gate ran ${latest + 1} micro-batches over $nChunks chunks — " +
-        "need >= 2 batches for the gate to actually be incremental")
-    // Same empty-zone discipline as streamIngestDedup: score a LIMIT 0
-    // batch to produce the exact output schema with zero rows.
-    if (latest < 0)
-      TextAnalysis.scorePpl(
-          TextAnalysis.bigramsOf(corpus.select("doc_id", "text").limit(0)),
-          c2, c1, vocab)
+    Zone.gate(s, dir, docSchema, "doc_id", Zone.tmp("graft_stream_gate"),
+        Zone.Static, None, Zone.SliceShuffles) { batch =>
+      TextAnalysis.scorePpl(TextAnalysis.bigramsOf(batch), c2, c1, vocab)
         .withColumn("admit", col("ppl") <= lit(PplAdmitMax))
-        .orderBy("doc_id")
-    else
-      Zone.versions(s, outBase, latest, "doc_id")
+    }
   }
 
   /** Batch oracle for the quality gate: the corpus-trained model scoring the
@@ -602,25 +515,14 @@ object DocStreams {
     // micro-batch); anything larger keeps the distributed postings-probe
     // kernel (StreamingSpec holds the two paths bit-identical; the
     // streams ladder measures both).
-    val useBroadcast = {
-      val st = corpus.agg(count(lit(1)).as("n"),
-        sum(length(col("text"))).as("bytes")).head()
-      st.getLong(0) == 0L || st.getLong(1) <= screenMaxBytes
-    }
-
-    var snapOpt: Option[org.apache.spark.broadcast.Broadcast[_]] = None
     // The distributed screen's per-batch cache, unpersisted once the
     // batch's verdicts are written.
     var batchCache: Option[DataFrame] = None
-    val screen: DataFrame => DataFrame =
-      if (useBroadcast) {
-        val snap = graft.TrackedCaches.trackBroadcast(
-          s.sparkContext.broadcast(Retrieval.buildScreenSnapshot(corpus)))
-        snapOpt = Some(snap)
-        (batch: DataFrame) =>
-          Retrieval.screenBatchLocal(s, snap, batch.select(col("doc_id"), col("text")))
-            .select(col("doc_id"), col("top_match"), col("top_score"),
-              (col("top_score") <= lit(Bm25AdmitMax)).as("admit"))
+    val (screen, snap): (DataFrame => DataFrame, Option[Zone.Snapshot[_]]) =
+      if (Zone.broadcastable(corpus, length(col("text")), screenMaxBytes)) {
+        val snap = Zone.snapshot(s, Retrieval.buildScreenSnapshot(corpus))
+        ((batch: DataFrame) => admitted(Retrieval.screenBatchLocal(s, snap.get,
+          batch.select(col("doc_id"), col("text")))), Some(snap))
       } else {
         val ix = Retrieval.buildIndex(corpus, cache = true)
         val fwd = Retrieval.forwardIndex(ix, cache = true)
@@ -628,7 +530,7 @@ object DocStreams {
         // micro-batch; the stream plans on a session clone made at start(), so
         // the strategy must be on the parent session first (see ensureRegistered).
         graft.plans.TopKPerKey.ensureRegistered(s)
-        (batch: DataFrame) => {
+        ((batch: DataFrame) => {
           val qt = Retrieval.postings(batch.select(col("doc_id"), col("text")))
             .select(col("doc_id").as("query_id"), col("term"))
           // Both screening stages read the (query term, df) rows; cache them
@@ -650,13 +552,12 @@ object DocStreams {
               Seq("score" -> false, "doc_id" -> true))
             .select(col("query_id").as("doc_id"), col("doc_id").as("top_match"),
               col("score").as("top_score"))
-          batch.select(col("doc_id"))
+          admitted(batch.select(col("doc_id"))
             .join(top, Seq("doc_id"), "left")
             .select(col("doc_id"),
               coalesce(col("top_match"), lit(-1L)).as("top_match"),
-              coalesce(col("top_score"), lit(0.0)).as("top_score"),
-              (coalesce(col("top_score"), lit(0.0)) <= lit(Bm25AdmitMax)).as("admit"))
-        }
+              coalesce(col("top_score"), lit(0.0)).as("top_score")))
+        }, None)
       }
 
     // Decontam's distributed stage-1 hit scatter is arrivals x posting-list
@@ -682,28 +583,16 @@ object DocStreams {
     // RareTerms 4 -> 3 moved CPU inside noise; batch-count reduction is
     // exhausted (4 staged chunks at maxFilesPerTrigger=2 is already the
     // 2-batch minimum the incrementality gate demands).
-    val outBase = Zone.tmp("graft_stream_decontam")
-    val latest = Zone.run(s, dir, docSchema, outBase, Zone.SliceShuffles) {
-      (batch, batchId) =>
-        Zone.put(screen(batch), outBase, batchId)
-        batchCache.foreach(_.unpersist(blocking = false))
-    }
-    val nChunks = Zone.chunks(dir)
-    require(latest >= 1 || nChunks <= 2,
-      s"decontam gate ran ${latest + 1} micro-batches over $nChunks chunks — " +
-        "need >= 2 batches for the screening to actually be incremental")
-    // Same empty-zone discipline as the sibling gates: screen a LIMIT 0
-    // batch to produce the exact output schema with zero rows.
-    lastSnapshot = snapOpt
-    if (latest < 0)
-      // Lazy frame — the snapshot must stay valid (unpersist-only).
-      screen(corpus.limit(0)).orderBy("doc_id")
-    else {
-      // Parquet-backed verdicts: destroy the snapshot (see [[lastSnapshot]]).
-      snapOpt.foreach(_.destroy())
-      Zone.versions(s, outBase, latest, "doc_id")
-    }
+    Zone.gate(s, dir, docSchema, "doc_id", Zone.tmp("graft_stream_decontam"),
+        Zone.Static, snap, Zone.SliceShuffles)(screen,
+      (_, _) => batchCache.foreach(_.unpersist(blocking = false)))
   }
+
+  /** Screen results (doc_id, top_match, top_score) with the
+    * [[Bm25AdmitMax]] verdict. */
+  private def admitted(screened: DataFrame): DataFrame =
+    screened.select(col("doc_id"), col("top_match"), col("top_score"),
+      (col("top_score") <= lit(Bm25AdmitMax)).as("admit"))
 
   /** EVOLVING streaming decontamination gate — the incremental-index twin
     * of [[streamDecontam]]: the standing index does NOT stay frozen; each
@@ -713,16 +602,23 @@ object DocStreams {
     * production shape when later arrivals must be screened against
     * everything already seen, not just the original corpus).
     *
-    * The index is maintained INCREMENTALLY on the driver
-    * ([[graft.llm.Retrieval.incrementalIndexOf]] +
-    * `IncrementalScreenIndex.append`): per batch the cost is |batch|
-    * local tokenization, one index-linear snapshot projection, and one
-    * re-broadcast (the superseded snapshot is destroyed on the spot) —
-    * never a corpus re-scan. A rebuild formulation would pay the full
-    * corpus-linear Spark index build per micro-batch, the very term that
-    * dominated the decontam 30x ladder. Broadcast-screen only by design:
-    * incremental append IS the broadcast regime's feature (the
-    * distributed regime's analogue is bucketed posting appends).
+    * The gate picks its regime once, from the corpus size, by the rule
+    * every size-selected gate uses ([[Zone.broadcastable]] over corpus
+    * text bytes against [[graft.llm.Retrieval.BroadcastScreenMaxBytes]]).
+    * Either way the index is maintained INCREMENTALLY — per batch a
+    * |batch|-scale append, never a corpus-linear rebuild (the term that
+    * dominated the decontam 30x ladder):
+    *  - broadcast: a driver-resident index
+    *    ([[graft.llm.Retrieval.incrementalIndexOf]] +
+    *    `IncrementalScreenIndex.append`), re-projected and re-broadcast at
+    *    the start of the batch that needs it (the superseded snapshot is
+    *    destroyed on the spot);
+    *  - distributed: append-only term-bucketed parquet
+    *    ([[graft.llm.Retrieval.EvolvingDistIndex]]) — one partition-pruned
+    *    distributed screen per batch and no driver-resident snapshot.
+    * Verdicts are row-identical in both regimes (StreamingSpec replays
+    * both through [[streamDecontamEvolvingUnder]]), and one DuckDB oracle,
+    * [[streamDecontamEvolvingSql]], gates both registry rows.
     *
     * Verdict determinism (what makes a batch DuckDB oracle possible):
     * [[stageDocs]] cuts the arrival slice into 4 mtime-ordered chunks at
@@ -731,124 +627,73 @@ object DocStreams {
     * with (doc_id - lo) / span in {2b, 2b+1} — the oracle replays the
     * boundary arithmetic and screens batch 0 against the corpus, batch 1
     * against corpus ∪ batch-0 arrivals. The gate REQUIRES the dense
-    * 4-chunk zone (it throws on sparse corpora rather than silently
-    * diverging from the oracle's batch arithmetic). */
-  def streamDecontamEvolving(s: SparkSession, d: String): DataFrame = {
-    import graft.llm.Retrieval
-    val dir = stageDocs(s, d)
-    val corpus = Tables.documents(s, d).filter(col("doc_id") % 5 =!= 0)
-      .select("doc_id", "text")
-    val st = corpus.agg(count(lit(1)).as("n"),
-      sum(length(col("text"))).as("bytes")).head()
-    if (!(st.getLong(0) == 0L ||
-        st.getLong(1) <= Retrieval.BroadcastScreenMaxBytes))
-      throw new BroadcastRegimeExceeded(
-        "evolving decontam is broadcast-screen only — corpus exceeds the gate")
-    val inc = Retrieval.incrementalIndexOf(corpus)
-    @volatile var snap = graft.TrackedCaches.trackBroadcast(
-      s.sparkContext.broadcast(inc.snapshot()))
-    // The snapshot is re-projected lazily at the START of the batch that
-    // needs it, not eagerly after every append — the final batch's append
-    // would otherwise pay a projection + broadcast nothing ever reads.
-    @volatile var stale = false
-    val outBase = Zone.tmp("graft_stream_decontam_evolving")
-    val latest = Zone.run(s, dir, docSchema, outBase, Zone.SliceShuffles) {
-      (b, batchId) =>
-        if (stale) {
-          val old = snap
-          snap = graft.TrackedCaches.trackBroadcast(
-            s.sparkContext.broadcast(inc.snapshot()))
-          old.destroy()
-          stale = false
-        }
-        Zone.put(Retrieval.screenBatchLocal(s, snap, b.select(col("doc_id"), col("text")))
-          .select(col("doc_id"), col("top_match"), col("top_score"),
-            (col("top_score") <= lit(Bm25AdmitMax)).as("admit")), outBase, batchId)
-        // Ingest the batch into the standing index; the NEXT batch (if any)
-        // screens against it. Batch frames are arrival-slice-scale — the
-        // collect is |batch|-bounded by construction of the staged zone.
-        val rows = b.select(col("doc_id").cast("long"), col("text")).collect()
-          .map(r => (r.getLong(0), r.getString(1)))
-        inc.append(rows.sortBy(_._1).toSeq)
-        stale = true
-    }
-    lastSnapshot = Some(snap)
-    val nChunks = Zone.chunks(dir)
-    if (latest < 0) {
-      // Empty arrival slice: nothing screened, nothing ingested — return
-      // the empty verdict frame (snapshot stays valid for the lazy plan).
-      Retrieval.screenBatchLocal(s, snap, corpus.limit(0))
-        .select(col("doc_id"), col("top_match"), col("top_score"),
-          (col("top_score") <= lit(Bm25AdmitMax)).as("admit"))
-        .orderBy("doc_id")
-    } else {
-      require(nChunks == 4 && latest == 1,
-        s"evolving decontam ran ${latest + 1} batches over $nChunks chunks — " +
-          "the oracle's batch arithmetic needs the dense 4-chunk / 2-batch zone")
-      snap.destroy()
-      Zone.versions(s, outBase, latest, "doc_id")
-    }
-  }
+    * 4-chunk zone ([[Zone.Evolving]]; it throws on sparse corpora rather
+    * than silently diverging from the oracle's batch arithmetic). */
+  def streamDecontamEvolving(s: SparkSession, d: String): DataFrame =
+    streamDecontamEvolvingUnder(s, d, graft.llm.Retrieval.BroadcastScreenMaxBytes)
 
-  /** EVOLVING streaming decontamination gate, DISTRIBUTED regime — the
-    * bucketed-posting-append twin of [[streamDecontamEvolving]] for
-    * standing corpora past [[graft.llm.Retrieval.BroadcastScreenMaxBytes]]
-    * (the budget the broadcast gate `require`s): identical screen-then-
-    * ingest semantics (batch b screened against corpus ∪ batches < b),
-    * but the standing index lives as append-only term-bucketed parquet
-    * ([[graft.llm.Retrieval.EvolvingDistIndex]]) — per batch the gate pays
-    * one partition-pruned distributed screen plus a |batch|-scale append,
-    * never a corpus-linear index rebuild and never a driver-resident
-    * snapshot. Verdicts are row-identical to the broadcast twin
-    * (StreamingSpec replays both) and the DuckDB oracle is the SAME
-    * [[streamDecontamEvolvingSql]] — the regime moves, the semantics
-    * don't. Zone discipline (dense 4-chunk / 2-batch staged slice,
-    * maxFilesPerTrigger = 2) is copied from the broadcast twin so the
-    * oracle's batch arithmetic holds here too. */
-  def streamDecontamEvolvingDist(s: SparkSession, d: String): DataFrame = {
+  /** [[streamDecontamEvolving]] with the broadcast ceiling (corpus text
+    * bytes) as a parameter: `Long.MaxValue` forces the broadcast regime,
+    * `0L` the distributed one (the `q_stream_decontam_evolving_dist`
+    * registry row). */
+  private[graft] def streamDecontamEvolvingUnder(s: SparkSession, d: String,
+      screenMaxBytes: Long): DataFrame = {
     import graft.llm.{Retrieval, StandingIndex}
     val dir = stageDocs(s, d)
     val corpus = Tables.documents(s, d).filter(col("doc_id") % 5 =!= 0)
       .select("doc_id", "text")
-    val ix = Zone.tmp("graft_stream_decontam_evolving_dist_ix")
-    StandingIndex.reset(ix)
-    val inc = new Retrieval.EvolvingDistIndex(s, ix)
-    inc.append(corpus) // the one-time seed build — corpus-scale, like buildIndex
-    graft.plans.TopKPerKey.ensureRegistered(s)
-    def verdicts(batch: DataFrame): DataFrame =
-      inc.screen(batch.select(col("doc_id"), col("text")))
-        .select(col("doc_id"), col("top_match"), col("top_score"),
-          (col("top_score") <= lit(Bm25AdmitMax)).as("admit"))
-    // UNLIKE the broadcast-regime gates, no shuffle.partitions=8 override:
-    // this gate exists for heavy batches against big standing state, and
-    // its kernel + stage-2 fold want the session's full parallelism (the
-    // 8 was zone discipline for tiny-batch machinery; here it cost ~2×).
-    // One scan task PER FILE for the standing dirs: the fwd/postings
-    // files are small enough that Spark's default openCost packs them
-    // into 1-2 scan partitions, and the stage-2 fold — which executes
-    // INSIDE the fwd scan stage via the broadcast joins — then runs
-    // near-serial (measured 8 s/verdict at sf0.1, ~2.5 s after). File
-    // count is bounded by construction (appends repartition by bucket),
-    // so task count stays sane at any corpus scale; files larger than
-    // maxPartitionBytes still split.
-    val out = Zone.tmp("graft_stream_decontam_evolving_dist")
-    val latest = Zone.run(s, dir, docSchema, out,
-        "spark.sql.files.openCostInBytes" -> (128L << 20).toString) {
-      (b, batchId) =>
-        Zone.put(verdicts(b), out, batchId)
+    val out = Zone.tmp("graft_stream_decontam_evolving")
+    if (Zone.broadcastable(corpus, length(col("text")), screenMaxBytes)) {
+      val inc = Retrieval.incrementalIndexOf(corpus)
+      val snap = Zone.snapshot(s, inc.snapshot())
+      // The snapshot is re-projected lazily at the START of the batch that
+      // needs it, not eagerly after every append — the final batch's append
+      // would otherwise pay a projection + broadcast nothing ever reads.
+      @volatile var stale = false
+      Zone.gate(s, dir, docSchema, "doc_id", out, Zone.Evolving, Some(snap),
+          Zone.SliceShuffles)(
+        batch => {
+          if (stale) {
+            snap.replace(inc.snapshot())
+            stale = false
+          }
+          admitted(Retrieval.screenBatchLocal(s, snap.get,
+            batch.select(col("doc_id"), col("text"))))
+        },
+        // Ingest the batch into the standing index; the NEXT batch (if any)
+        // screens against it. Batch frames are arrival-slice-scale — the
+        // collect is |batch|-bounded by construction of the staged zone.
+        (batch, _) => {
+          val rows = batch.select(col("doc_id").cast("long"), col("text")).collect()
+            .map(r => (r.getLong(0), r.getString(1)))
+          inc.append(rows.sortBy(_._1).toSeq)
+          stale = true
+        })
+    } else {
+      val ix = Zone.tmp("graft_stream_decontam_evolving_dist_ix")
+      StandingIndex.reset(ix)
+      val inc = new Retrieval.EvolvingDistIndex(s, ix)
+      inc.append(corpus) // the one-time seed build — corpus-scale, like buildIndex
+      graft.plans.TopKPerKey.ensureRegistered(s)
+      // No shuffle.partitions=8 override here: this regime exists for heavy
+      // batches against big standing state, and its kernel + stage-2 fold
+      // want the session's full parallelism (the 8 was zone discipline for
+      // tiny-batch machinery; here it cost ~2×). One scan task PER FILE for
+      // the standing dirs: the fwd/postings files are small enough that
+      // Spark's default openCost packs them into 1-2 scan partitions, and
+      // the stage-2 fold — which executes INSIDE the fwd scan stage via the
+      // broadcast joins — then runs near-serial (measured 8 s/verdict at
+      // sf0.1, ~2.5 s after). File count is bounded by construction
+      // (appends repartition by bucket), so task count stays sane at any
+      // corpus scale; files larger than maxPartitionBytes still split.
+      Zone.gate(s, dir, docSchema, "doc_id", out, Zone.Evolving, None,
+          "spark.sql.files.openCostInBytes" -> (128L << 20).toString)(
+        batch => admitted(inc.screen(batch.select(col("doc_id"), col("text")))),
         // Ingest AFTER the screen: the NEXT batch sees this one.
-        inc.append(b.select(col("doc_id"), col("text")))
-        graft.TrackedCaches.release()
-    }
-    val nChunks = Zone.chunks(dir)
-    if (latest < 0)
-      verdicts(corpus.limit(0)).orderBy("doc_id")
-    else {
-      require(nChunks == 4 && latest == 1,
-        s"evolving-dist decontam ran ${latest + 1} batches over $nChunks " +
-          "chunks — the oracle's batch arithmetic needs the dense " +
-          "4-chunk / 2-batch zone")
-      Zone.versions(s, out, latest, "doc_id")
+        (batch, _) => {
+          inc.append(batch.select(col("doc_id"), col("text")))
+          graft.TrackedCaches.release()
+        })
     }
   }
 
@@ -976,10 +821,8 @@ object DocStreams {
       ix.delete(docs.filter(col("doc_id") % 10 === 7).select("doc_id"))
     }
     graft.plans.TopKPerKey.ensureRegistered(s)
-    new Retrieval.EvolvingDistIndex(s, base).screen(docs.filter(col("doc_id") % 5 === 0))
-      .select(col("doc_id"), col("top_match"), col("top_score"),
-        (col("top_score") <= lit(Bm25AdmitMax)).as("admit"))
-      .orderBy("doc_id")
+    admitted(new Retrieval.EvolvingDistIndex(s, base)
+      .screen(docs.filter(col("doc_id") % 5 === 0))).orderBy("doc_id")
   }
 
   /** Oracle for [[decontamEvolvingDistDelete]]: the one-phase screen

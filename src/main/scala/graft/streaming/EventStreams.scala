@@ -555,8 +555,7 @@ object EventStreams {
         }
       Zone.put(merged, base, batchId)
     }
-    require(latest >= 1, s"CDC apply ran ${latest + 1} micro-batches — " +
-      "need >= 2 for the merge to actually be incremental")
+    Zone.Static.check(latest, dir, base)
     s.read.parquet(Zone.version(base, latest))
       .select(col("user_id"), col("n_events"), col("last_ts_us"),
         col("sum_dec").cast(DoubleType).as("sum_value"))
@@ -617,14 +616,10 @@ object EventStreams {
     val stats = graft.TrackedCaches.track(
       graft.ops.EventAnalytics.userRobustStats(train).cache())
     stats.count() // materialize the baseline once, before the stream starts
-    val base = Zone.tmp("graft_stream_anomaly")
-    val latest = Zone.run(s, dir, stagedSchema, base) { (batch, batchId) =>
-      Zone.put(screenAnomalyBatch(
-        batch.filter(col("ts_us") >= AnomalyCutoffUs), stats), base, batchId)
+    Zone.gate(s, dir, stagedSchema, "event_id", Zone.tmp("graft_stream_anomaly"),
+        Zone.Static, None) { batch =>
+      screenAnomalyBatch(batch.filter(col("ts_us") >= AnomalyCutoffUs), stats)
     }
-    require(latest >= 1, s"anomaly gate ran ${latest + 1} micro-batches — " +
-      "need >= 2 for the screening to actually be incremental")
-    Zone.versions(s, base, latest, "event_id")
   }
 
   val streamAnomalyGateSql: String =

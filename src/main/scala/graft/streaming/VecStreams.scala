@@ -40,12 +40,6 @@ import org.apache.spark.sql.types._
   */
 object VecStreams {
 
-  /** Most recent gate run's broadcast snapshot — the
-    * [[DocStreams.lastSnapshot]] lifecycle discipline (StreamingSpec
-    * asserts it is destroyed once verdicts are parquet-backed). */
-  @volatile private[graft] var lastSnapshot:
-      Option[org.apache.spark.broadcast.Broadcast[_]] = None
-
   /** Streaming-source schema for the staged arrival slice. */
   private val vecSchema = StructType(Seq(
     StructField("vec_id", LongType),
@@ -229,8 +223,8 @@ object VecStreams {
     * corpus neighbor (by exact cosine over the probed IVF cells) and
     * admit/reject against [[AdmitCosMax]].
     *
-    * Screening strategy is selected by INDEX SIZE (the
-    * [[DocStreams.streamDecontam]] discipline): a corpus whose embedding
+    * Screening strategy is selected by INDEX SIZE ([[Zone.broadcastable]],
+    * the [[DocStreams.streamDecontam]] rule): a corpus whose embedding
     * payload is under [[graft.llm.Retrieval.BroadcastScreenMaxBytes]]
     * broadcasts its trained index and screens each micro-batch in one
     * mapPartitions pass; larger corpora keep the distributed probed-cells
@@ -261,17 +255,14 @@ object VecStreams {
     val cents = Similarity.trainCentroids(sx,
       Similarity.seedCentroidsOf(corpus, sx, k), nVec, k)
 
-    val dims = if (nVec == 0) 0L
-      else corpus.select(size(col("embedding"))).head().getInt(0).toLong
-    val useBroadcast = nVec * dims * 4 <= screenMaxBytes
-
-    var snapOpt: Option[org.apache.spark.broadcast.Broadcast[_]] = None
-    val screen: DataFrame => DataFrame =
-      if (useBroadcast) {
+    val (screen, snap): (DataFrame => DataFrame, Option[Zone.Snapshot[_]]) =
+      // Embedding payload, 4 bytes per dimension, over the cached vectors.
+      if (Zone.broadcastable(sx, size(col("sarr")).cast("long") * 4, screenMaxBytes)) {
         val cellRows = Similarity.assignCells(sx, cents).join(corpus, "vec_id")
           .select(col("vec_id"), col("embedding"), col("cell")).collect()
         val centRows = cents.collect()
-        val dimsI = dims.toInt
+        val dimsI = cellRows.headOption
+          .fold(0)(r => r.getSeq[Float](r.fieldIndex("embedding")).length)
         val centIds = centRows.map(_.getAs[Number]("cent_id").intValue())
         val centFlat = new Array[Long](centRows.length * dimsI)
         var i = 0
@@ -293,39 +284,17 @@ object VecStreams {
           while (j < dimsI) { embFlat(i * dimsI + j) = e(j); j += 1 }
           i += 1
         }
-        val snap = graft.TrackedCaches.trackBroadcast(s.sparkContext.broadcast(
-          new VecScreenSnapshot(nprobe, dimsI, centIds, centFlat,
-            vecIds, cellOf, embFlat)))
-        snapOpt = Some(snap)
-        (batch: DataFrame) => screenBatchLocal(s, snap, batch)
+        val snap = Zone.snapshot(s, new VecScreenSnapshot(nprobe, dimsI, centIds,
+          centFlat, vecIds, cellOf, embFlat))
+        ((batch: DataFrame) => screenBatchLocal(s, snap.get, batch), Some(snap))
       } else {
         val cells = graft.TrackedCaches.track(
           Similarity.assignCells(sx, cents).join(corpus, "vec_id")
             .select(col("vec_id"), col("embedding"), col("cell")).cache())
-        (batch: DataFrame) => screenBatch(batch, cents, cells, nprobe)
+        ((batch: DataFrame) => screenBatch(batch, cents, cells, nprobe), None)
       }
-
-    val outBase = Zone.tmp("graft_stream_vec_ingest")
-    val latest = Zone.run(s, dir, vecSchema, outBase, Zone.SliceShuffles) {
-      (batch, batchId) => Zone.put(screen(batch), outBase, batchId)
-    }
-    val nChunks = Zone.chunks(dir)
-    require(latest >= 1 || nChunks <= 2,
-      s"vec ingest ran ${latest + 1} micro-batches over $nChunks chunks — " +
-        "need >= 2 batches for the screening to actually be incremental")
-    // Zero staged chunks (empty arrival slice): screen a LIMIT 0 batch for
-    // the exact output schema instead of reading an empty path list.
-    lastSnapshot = snapOpt
-    if (latest < 0)
-      // Lazy frame — the snapshot must stay valid (unpersist-only).
-      screen(corpus.select(col("vec_id"), col("embedding")).limit(0))
-        .orderBy("vec_id")
-    else {
-      // Parquet-backed verdicts: destroy the snapshot (the
-      // [[DocStreams.lastSnapshot]] lifecycle discipline).
-      snapOpt.foreach(_.destroy())
-      Zone.versions(s, outBase, latest, "vec_id")
-    }
+    Zone.gate(s, dir, vecSchema, "vec_id", Zone.tmp("graft_stream_vec_ingest"),
+      Zone.Static, snap, Zone.SliceShuffles)(screen)
   }
 
   /** Batch oracle: the identical corpus-trained index probed by the same

@@ -3,14 +3,18 @@ package graft.streaming
 import java.nio.file.{Files, Paths, StandardCopyOption}
 import java.nio.file.attribute.FileTime
 
+import scala.reflect.ClassTag
+
+import graft.TrackedCaches
 import graft.llm.StandingIndex
-import org.apache.spark.sql.{DataFrame, Dataset, Row, SparkSession}
+import org.apache.spark.broadcast.Broadcast
+import org.apache.spark.sql.{Column, DataFrame, Dataset, Row, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.DataStreamWriter
 import org.apache.spark.sql.types.StructType
 
-/** The landing zone every streaming query reads, and the micro-batch loop
-  * the gates run over it.
+/** The landing zone every streaming query reads, the micro-batch loop over
+  * it, and the one driver every screening gate runs ([[gate]]).
   *
   * A zone is a source table's arrival rows cut into [[Chunks]] parquet
   * files of contiguous key ranges (span = (hi - lo) / Chunks + 1), with
@@ -152,8 +156,101 @@ object Zone {
   def put(df: DataFrame, out: String, id: Long): Unit =
     df.write.mode("overwrite").parquet(version(out, id))
 
-  /** Versions 0..latest under `out` read back as one frame ordered by
-    * `key`. */
-  def versions(s: SparkSession, out: String, latest: Long, key: String): DataFrame =
-    s.read.parquet((0L to latest).map(version(out, _)): _*).orderBy(key)
+  /** The micro-batch count a stream must reach over a zone of `chunks`
+    * chunks, given its last batch id `latest`. */
+  sealed abstract class Batches(need: String) {
+    def hold(latest: Long, chunks: Long): Boolean
+
+    /** Throws unless a run over zone `dir` into `out` ran at least one
+      * micro-batch and ended at a `latest` that meets this rule. */
+    def check(latest: Long, dir: String, out: String): Unit = {
+      val n = chunks(dir)
+      require(latest >= 0 && hold(latest, n), s"${Paths.get(out).getFileName} ran " +
+        s"${latest + 1} micro-batches over $n chunks — $need")
+    }
+  }
+
+  /** Gates screening against a frozen standing set: at least two
+    * micro-batches, so the screen really ran incrementally, unless the
+    * zone staged no more than one trigger's files — a sparse key space
+    * leaves key ranges empty, and one-batch screening of it is correct. */
+  case object Static extends Batches("need >= 2 batches for the screening to be incremental") {
+    def hold(latest: Long, chunks: Long): Boolean = latest >= 1 || chunks <= FilesPerTrigger
+  }
+
+  /** Gates whose standing set grows by each batch: the dense zone, every
+    * chunk staged and read in Chunks / FilesPerTrigger batches, because
+    * their oracles replay that batch arithmetic ([[batchOfSql]]). */
+  case object Evolving extends Batches(
+      s"the oracle's batch arithmetic needs the dense $Chunks-chunk / " +
+        s"${Chunks / FilesPerTrigger}-batch zone") {
+    def hold(latest: Long, chunks: Long): Boolean =
+      chunks == Chunks && latest == Chunks / FilesPerTrigger - 1
+  }
+
+  /** The one broadcast-or-distributed rule of the size-selected gates,
+    * the way Spark picks a broadcast join: the standing set is screened
+    * from a broadcast snapshot when it is empty or its payload — `bytes`
+    * summed over its rows — is at most `ceiling`, and by the distributed
+    * kernel otherwise. One aggregate job measures both figures.
+    * `Long.MaxValue` forces the broadcast regime and `0L` the distributed
+    * one (on a non-empty set). */
+  def broadcastable(standing: DataFrame, bytes: Column, ceiling: Long): Boolean = {
+    val st = standing.agg(count(lit(1)), sum(bytes)).head()
+    st.getLong(0) == 0L || st.getLong(1) <= ceiling
+  }
+
+  /** The broadcast index snapshot a gate screens against; [[gate]] owns
+    * its lifecycle. `replace` publishes a new value mid-stream (an
+    * evolving gate's grown index) and destroys the one it supersedes. */
+  final class Snapshot[T: ClassTag] private[Zone] (s: SparkSession, v: T) {
+    private def publish(v: T): Broadcast[T] =
+      TrackedCaches.trackBroadcast(s.sparkContext.broadcast(v))
+    @volatile private var b = publish(v)
+    def get: Broadcast[T] = b
+    def replace(v: T): Unit = {
+      val old = b
+      b = publish(v)
+      old.destroy()
+    }
+  }
+
+  /** `v` broadcast as a gate's snapshot. */
+  def snapshot[T: ClassTag](s: SparkSession, v: T): Snapshot[T] = new Snapshot(s, v)
+
+  /** The snapshot the latest [[gate]] run ended with (None when it
+    * screened without one). A test hook: StreamingSpec checks that a gate
+    * whose verdicts are parquet-backed has destroyed it. */
+  @volatile private[graft] var lastSnapshot: Option[Broadcast[_]] = None
+
+  /** The one gate driver. Streams zone `dir` (schema `schema`) through
+    * `screen` one micro-batch at a time with `conf` set, writing batch
+    * b's verdicts to version b under `out` and then running
+    * `after(batch, b)` (an evolving gate's ingest step). Returns every
+    * verdict ordered by `key`:
+    *  - zone with no chunks: `screen` over an empty frame of the zone
+    *    schema, the exact output schema with zero rows. That frame is lazy
+    *    and may re-run the screen, so `snap` stays alive; TrackedCaches
+    *    unpersists it after the caller's action.
+    *  - otherwise: `rule` must hold, and the versions are read back. The
+    *    verdicts are parquet-backed, so `snap` is destroyed, freeing the
+    *    driver's blocks too, which unpersist would leave to the
+    *    ContextCleaner's GC cycle on a long-running session. */
+  def gate(s: SparkSession, dir: String, schema: StructType, key: String,
+      out: String, rule: Batches, snap: Option[Snapshot[_]],
+      conf: (String, String)*)(screen: DataFrame => DataFrame,
+      after: (DataFrame, Long) => Unit = (_, _) => ()): DataFrame = {
+    val latest = run(s, dir, schema, out, conf: _*) { (batch, id) =>
+      put(screen(batch), out, id)
+      after(batch, id)
+    }
+    lastSnapshot = snap.map(_.get)
+    if (latest < 0)
+      screen(s.createDataFrame(java.util.Collections.emptyList[Row](), schema)).orderBy(key)
+    else {
+      rule.check(latest, dir, out)
+      snap.foreach(_.get.destroy())
+      s.read.parquet((0L to latest).map(version(out, _)): _*).orderBy(key)
+    }
+  }
 }

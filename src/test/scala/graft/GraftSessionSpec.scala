@@ -8,7 +8,8 @@ import graft.functions.SelfCosine
 /** The session recipe and the operator library's configuration surface:
   * one place builds sessions, and the library reads no switch from the
   * environment or the session conf. Also the source scans that keep one
-  * module per protocol (micro-batch loop, standing directories). */
+  * module per protocol (micro-batch loop, gate lifecycle, standing
+  * directories). */
 class GraftSessionSpec extends SparkSpec {
 
   private def scalaFiles(root: String): Seq[Path] = {
@@ -89,6 +90,29 @@ class GraftSessionSpec extends SparkSpec {
       }
     assert(offenders.isEmpty, s"standing-directory protocol outside StandingIndex: " +
       offenders.mkString("; "))
+  }
+
+  test("one module owns the gate lifecycle") {
+    // Under graft/streaming only Zone.scala (the gate driver) declares the
+    // snapshot test hook, destroys a broadcast, reads a gate's verdict
+    // versions back or writes a batch-count check; the exception the
+    // broadcast-only evolving gate threw is gone from src/.
+    val lifecycle = Seq(
+      """\b(val|var|def)\s+lastSnapshot\b""".r,
+      """\.destroy\s*\(\s*\)""".r,
+      """\bZone\s*\.\s*versions\b""".r,
+      """\brequire\s*\(\s*latest\b""".r)
+    val offenders = scalaFiles("src/main/scala/graft/streaming")
+      .filterNot(_.getFileName.toString == "Zone.scala")
+      .flatMap { p =>
+        val t = text(p)
+        lifecycle.flatMap(_.findAllMatchIn(t)).map(m => s"${p.getFileName}: ${m.matched}")
+      }
+    assert(offenders.isEmpty, s"gate lifecycle outside Zone: ${offenders.mkString("; ")}")
+    val retired = "BroadcastRegime" + "Exceeded"
+    val mentions = (scalaFiles("src/main/scala") ++ scalaFiles("src/test/scala"))
+      .filter(p => text(p).contains(retired)).map(_.getFileName.toString)
+    assert(mentions.isEmpty, s"$retired mentioned in: $mentions")
   }
 
   test("the graph rounds collect nothing to the driver") {

@@ -659,7 +659,7 @@ class StreamingSpec extends SparkSpec {
     val evolving = graft.streaming.DocStreams.streamDecontamEvolving(spark, Sf).collect()
     // Lifecycle: the final snapshot is destroyed once verdicts are
     // parquet-backed (the gate's broadcast discipline).
-    val snap = graft.streaming.DocStreams.lastSnapshot
+    val snap = graft.streaming.Zone.lastSnapshot
     assert(snap.nonEmpty)
     intercept[org.apache.spark.SparkException](snap.get.value)
     graft.TrackedCaches.release()
@@ -770,11 +770,11 @@ class StreamingSpec extends SparkSpec {
     // top_match, same 6-dp score, same admit, both batches — or the
     // regime switch would change answers, not just physical strategy.
     val dist = graft.streaming.DocStreams
-      .streamDecontamEvolvingDist(spark, Sf).collect()
+      .streamDecontamEvolvingUnder(spark, Sf, 0L).collect()
     graft.TrackedCaches.release()
     spark.catalog.clearCache()
     val bc = graft.streaming.DocStreams
-      .streamDecontamEvolving(spark, Sf).collect()
+      .streamDecontamEvolvingUnder(spark, Sf, Long.MaxValue).collect()
     graft.TrackedCaches.release()
     spark.catalog.clearCache()
     assert(bc.nonEmpty, "evolving verdicts must be non-empty at the test SF")
@@ -801,16 +801,69 @@ class StreamingSpec extends SparkSpec {
         s"$name: snapshot was not destroyed: ${e.getMessage}")
     }
     val broadcastSide = Long.MaxValue
-    graft.streaming.DocStreams.lastSnapshot = None
+    graft.streaming.Zone.lastSnapshot = None
     graft.streaming.DocStreams.streamDecontamUnder(spark, Sf, broadcastSide).collect()
-    assertDestroyed("decontam", graft.streaming.DocStreams.lastSnapshot)
-    graft.streaming.DocStreams.lastSnapshot = None
+    assertDestroyed("decontam", graft.streaming.Zone.lastSnapshot)
+    graft.streaming.Zone.lastSnapshot = None
     graft.streaming.DocStreams.streamIngestDedupUnder(spark, Sf, broadcastSide).collect()
-    assertDestroyed("ingest-dedup", graft.streaming.DocStreams.lastSnapshot)
-    graft.streaming.VecStreams.lastSnapshot = None
+    assertDestroyed("ingest-dedup", graft.streaming.Zone.lastSnapshot)
+    graft.streaming.Zone.lastSnapshot = None
     graft.streaming.VecStreams.streamVecIngestUnder(spark, Sf, broadcastSide).collect()
-    assertDestroyed("vec-ingest", graft.streaming.VecStreams.lastSnapshot)
+    assertDestroyed("vec-ingest", graft.streaming.Zone.lastSnapshot)
+    graft.streaming.Zone.lastSnapshot = None
+    graft.streaming.DocStreams.streamDecontamEvolvingUnder(spark, Sf, broadcastSide).collect()
+    assertDestroyed("evolving-decontam", graft.streaming.Zone.lastSnapshot)
     graft.TrackedCaches.release()
     spark.catalog.clearCache()
+  }
+
+  test("every gate returns zero verdicts, with its usual schema, when nothing arrives") {
+    import graft.streaming.{DocStreams, VecStreams}
+    // A corpus with no arrival rows: no doc_id % 5 == 0, no vec_id % 5 == 0
+    // and no event past the anomaly cutoff (the events zone stages every
+    // event, so the events table is empty). Every zone stages no chunk,
+    // and each gate takes the driver's empty-zone path.
+    type Gate = (org.apache.spark.sql.SparkSession, String) => org.apache.spark.sql.DataFrame
+    val gates: Seq[(String, Gate)] = Seq(
+      ("ingest-dedup", DocStreams.streamIngestDedup),
+      ("quality", DocStreams.streamQualityGate),
+      ("decontam", DocStreams.streamDecontam),
+      ("evolving-dedup", DocStreams.streamDedupEvolving),
+      ("evolving-decontam", DocStreams.streamDecontamEvolving),
+      ("vec-ingest", VecStreams.streamVecIngest),
+      ("anomaly", EventStreams.streamAnomalyGate))
+    // The size-selected gates' distributed regimes, forced.
+    val distributed: Seq[(String, Gate)] = Seq(
+      ("ingest-dedup", DocStreams.streamIngestDedupUnder(_, _, 0L)),
+      ("decontam", DocStreams.streamDecontamUnder(_, _, 0L)),
+      ("evolving-decontam", DocStreams.streamDecontamEvolvingUnder(_, _, 0L)),
+      ("vec-ingest", VecStreams.streamVecIngestUnder(_, _, 0L)))
+    def shape(df: org.apache.spark.sql.DataFrame) = df.schema.map(f => f.name -> f.dataType)
+    val want = gates.map { case (name, gate) =>
+      val df = gate(spark, Sf)
+      assert(df.count() > 0, s"$name: no verdicts on the test corpus")
+      TrackedCaches.release()
+      spark.catalog.clearCache()
+      name -> shape(df)
+    }.toMap
+    withTempDir("graft_no_arrivals") { base =>
+      Tables.documents(spark, Sf).filter(col("doc_id") % 5 =!= 0)
+        .write.parquet(s"$base/documents.parquet")
+      Tables.embeddings(spark, Sf).filter(col("vec_id") % 5 =!= 0)
+        .write.parquet(s"$base/embeddings.parquet")
+      Tables.events(spark, Sf).limit(0).write.parquet(s"$base/events.parquet")
+      val zones = Seq(DocStreams.stageDocs(spark, base), VecStreams.stageVecs(spark, base),
+        EventStreams.stageEvents(spark, base))
+      try {
+        assert(zones.forall(graft.streaming.Zone.chunks(_) == 0), "a zone staged arrivals")
+        (gates ++ distributed).foreach { case (name, gate) =>
+          val df = gate(spark, base)
+          assert(df.collect().isEmpty, s"$name: verdicts without arrivals")
+          assert(shape(df) == want(name), s"$name: schema ${shape(df)}, not ${want(name)}")
+          TrackedCaches.release()
+          spark.catalog.clearCache()
+        }
+      } finally zones.foreach(z => graft.Fs.deleteRec(java.nio.file.Paths.get(z)))
+    }
   }
 }
