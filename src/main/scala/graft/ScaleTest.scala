@@ -501,9 +501,11 @@ object ScaleTest {
     // leg that silently shrank its takedown would overstate nothing but
     // still misreport coverage. The shingle delete itself carries no
     // corpus-linear resolve term (it re-shingles only the handed text);
-    // the corpus term this leg watches is the vocabulary-bucket-pruned
-    // dfc/postings reads, which degenerate toward full scans as the
-    // takedown's vocabulary covers all buckets.
+    // the corpus term this leg watches is the scan of the dfc/postings
+    // buckets its vocabulary touches, which degenerates toward a full
+    // scan as that vocabulary covers all buckets. The aggregate and the
+    // shuffle after the scan stay batch-bounded: the scan filters to the
+    // takedown's own shingles before anything is summed.
     lazy val doomed = {
       val cand0 = Tables.documents(spark, dir)
         .filter(col("doc_id") % 5 =!= 0 && col("doc_id") % 100 === 1)

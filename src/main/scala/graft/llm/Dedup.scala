@@ -503,7 +503,8 @@ object Dedup {
   // corpus-linear capped_index term DOMINATING the remaining cost
   // (7.1 s of 14.9). The standing form persists the corpus side once —
   // shingle-bucketed postings, the full df table, and per-doc standing
-  // sizes — and a probe touches only the BATCH's own buckets.
+  // sizes — and a probe reads only the BATCH's own shingles' rows of
+  // them (the buckets they hash to, filtered to the shingles themselves).
   //
   // The subtlety that makes this exact rather than approximate: the
   // df > [[ShingleDfCap]] stop-shingle cap in [[cappedShingles]] is
@@ -513,7 +514,7 @@ object Dedup {
   // shingle is KEPT iff joint ≤ cap, and a corpus doc's size is its
   // standing size n0 minus its count of FLIPPED shingles (corpus df ≤
   // cap but joint > cap — only batch-vocabulary shingles can flip, so
-  // the correction reads only the probed buckets). Probe output is
+  // the correction reads only the batch's own postings). Probe output is
   // row-identical to [[incrementalDedup]] (DedupSpec proves it);
   // `q_dedup_standing` reuses [[incrementalDedupSql]] unchanged.
 
@@ -590,8 +591,17 @@ object Dedup {
     * buckets, reconcile the joint df cap, and report every batch doc
     * (is_dup + smallest matching corpus doc) — [[incrementalDedup]]'s
     * output contract with the corpus-linear index build GONE from the
-    * serving path. Per-probe cost is |batch| + the batch-vocabulary
-    * posting lists, never |corpus|. */
+    * serving path.
+    *
+    * Cost: |batch| + the batch-vocabulary posting lists, never |corpus|.
+    * A batch of any real size touches every bucket, so the bucket
+    * pruning alone would still scan and sum whole tables; every read is
+    * also keyed on the batch's own shingles ([[StandingIndex.Slice]]):
+    * the df reconciliation is one keyed sum over the batch's shingles
+    * and their dfc rows, the cached postings view holds only the
+    * batch's shingles, and the size sum reads only the docs in that view
+    * (a broadcast semi-join on it). Scans stay bucket-bounded; what the
+    * probe aggregates and shuffles is batch-bounded at any corpus size. */
   def shingleProbe(s: SparkSession, base: String,
       batchDocs: DataFrame): DataFrame =
     shingleProbeUnordered(s, base, batchDocs).orderBy("doc_id")
@@ -605,32 +615,28 @@ object Dedup {
       batchDocs: DataFrame): DataFrame = {
     val bsh = graft.TrackedCaches.track(
       shinglesOf(batchDocs.select("doc_id", "text")).cache())
-    val bdf = bsh.groupBy("sh").agg(count(lit(1)).as("dfb"))
-    val pruned = StandingIndex.slice(s, base, bdf, "sh", buckets(base))
-    // Joint-cap reconciliation over the batch's vocabulary: dfc = 0 for
-    // genuinely new shingles (left join), kept iff dfb + dfc ≤ cap,
-    // flipped iff the BATCH's arrivals pushed a standing shingle past it.
-    // The standing df is a SUM: [[shingleCommit]] appends per-commit df
-    // deltas rather than rewriting the table (a fresh build has one row
-    // per shingle, so the aggregate is the identity there).
-    val v = graft.TrackedCaches.track(
-      bdf.join(pruned.read("dfc").groupBy("sh").agg(sum("dfc").as("dfc")),
-          Seq("sh"), "left")
-        .select(col("sh"), col("dfb"),
-          coalesce(col("dfc"), lit(0L)).as("dfc"))
-        .withColumn("joint", col("dfb") + col("dfc")).cache())
+    val pruned = StandingIndex.slice(s, base,
+      bsh.select(col("sh"), lit(1L).as("dfb")), "sh", buckets(base))
+    // Joint-cap reconciliation over the batch's vocabulary: one keyed
+    // sum gives each batch shingle its batch df (dfb) and its standing
+    // df (dfc, 0 for a genuinely new shingle) — the standing df is a SUM
+    // because [[shingleCommit]] and [[shingleDelete]] append df deltas —
+    // reading only the batch's own rows of dfc/. Kept iff dfb + dfc ≤
+    // cap, flipped iff the BATCH's arrivals pushed a standing shingle
+    // past it.
+    val v = graft.TrackedCaches.track(pruned.sum("dfc", "dfc")
+      .withColumn("joint", col("dfb") + col("dfc")).cache())
     val kept = v.filter(col("joint") <= ShingleDfCap).select("sh")
     val flipped = v.filter(col("dfc") <= ShingleDfCap &&
       col("joint") > ShingleDfCap).select("sh")
     val bKept = bsh.join(kept, Seq("sh"))
     val na = bKept.groupBy("doc_id").agg(count(lit(1)).as("n"))
-    // Two consumers (the pair join and the flip correction): one standing
-    // read, not two — the probe's cost is dominated by this scan whenever
-    // the batch's vocabulary covers the bucket space. Tombstoned docs
-    // ([[shingleDelete]]) are excluded here, the single postings
+    // Two consumers (the pair join and the flip correction): one keyed
+    // standing read of the batch's own shingles, not two. Tombstoned
+    // docs ([[shingleDelete]]) are excluded here, the single postings
     // entry point, so deleted corpus docs can never match an arrival.
     val postings = graft.TrackedCaches.track(
-      livePostings(s, base, pruned.read("postings")).cache())
+      livePostings(s, base, pruned.keyed("postings")).cache())
     val inter = bKept.as("a")
       .join(postings.as("b"), col("a.sh") === col("b.sh"), "inner")
       .groupBy(col("a.doc_id").as("da"), col("b.doc_id").as("db"))
@@ -639,8 +645,11 @@ object Dedup {
       .groupBy("doc_id").agg(count(lit(1)).as("fl"))
     // Standing sizes are also delta-summed: [[shingleCommit]] appends the
     // accepted docs' sizes plus NEGATIVE corrections for standing docs
-    // whose shingles a commit pushed past the cap.
+    // whose shingles a commit pushed past the cap. Only docs holding a
+    // batch shingle can pair with an arrival, so the sum reads theirs
+    // alone: a broadcast semi-join on the cached postings view.
     val nb = s.read.parquet(s"$base/n0")
+      .join(broadcast(postings.select("doc_id")), Seq("doc_id"), "left_semi")
       .groupBy("doc_id").agg(sum("n0").as("n0"))
       .join(f, Seq("doc_id"), "left")
       .select(col("doc_id"),
@@ -676,6 +685,12 @@ object Dedup {
     * batch-vocabulary-bounded, the [[graft.llm.Retrieval.EvolvingDistIndex]]
     * discipline: no corpus rebuild, no standing-table rewrite, ≤ one new
     * file per touched bucket per commit.
+    *
+    * Cost: shingle |accepted| once, one keyed sum of the accepted
+    * vocabulary's df and standing df ([[StandingIndex.Slice.sum]]: it
+    * shuffles the batch's shingles and their own dfc rows, never the
+    * rest of the table), and on a cap crossing one keyed postings read of
+    * the crossed shingles. The df delta append reuses that sum.
     *
     * What a commit appends, and why each piece keeps the index EXACT
     * (probe-after-commit ≡ rebuild over corpus ∪ accepted — DedupSpec):
@@ -721,18 +736,18 @@ object Dedup {
       md5(col("text")).as("dig")).localCheckpoint()
     val ash = shinglesOf(acc.select("doc_id", "text"))
       .localCheckpoint()
-    val adf = ash.groupBy("sh").agg(count(lit(1)).as("dfa"))
-    val pruned = StandingIndex.slice(s, base, adf, "sh", nBuckets)
+    val pruned = StandingIndex.slice(s, base,
+      ash.select(col("sh"), lit(1L).as("dfa")), "sh", nBuckets)
     // Empty batch vocabulary — every arrival was a dup (reachable every
     // micro-batch in streamDedupEvolving) or nothing shingled. Nothing to
     // append, no df can move, and the pruned reader's empty-slice
     // fallback would otherwise pay a FULL postings/dfc listing plus three
     // no-op write jobs — corpus-scale driver work on what must be a no-op.
     if (pruned.isEmpty) return
-    val df0 = pruned.read("dfc").groupBy("sh").agg(sum("dfc").as("df0"))
-    val v = adf.join(df0, Seq("sh"), "left")
-      .select(col("sh"), col("dfa"),
-        coalesce(col("df0"), lit(0L)).as("df0"))
+    // Each accepted shingle's df (dfa) and standing df (df0) from one
+    // keyed sum over the batch's own dfc rows; v also feeds the df delta
+    // append below, so the batch is counted once.
+    val v = pruned.sum("dfc", "dfc").withColumnRenamed("dfc", "df0")
       .withColumn("dfNew", col("dfa") + col("df0"))
       .localCheckpoint()
     val keptSh = v.filter(col("dfNew") <= ShingleDfCap).select("sh")
@@ -761,7 +776,7 @@ object Dedup {
     val n0Rows =
       if (!anyCrossed) sizes
       else sizes.unionByName(
-        livePostings(s, base, pruned.read("postings"))
+        livePostings(s, base, pruned.keyed("postings"))
           .join(v.filter(crossedCond).select("sh"), Seq("sh"))
           .groupBy("doc_id").agg((count(lit(1)) * -1).as("n0")))
     def writeN0(): Unit =
@@ -780,7 +795,7 @@ object Dedup {
     val jobs = Seq(
       Future(StandingIndex.appendBucketed(keptRows, col("sh"), nBuckets,
         s"$base/postings")),
-      Future(StandingIndex.appendBucketed(adf.select(col("sh"),
+      Future(StandingIndex.appendBucketed(v.select(col("sh"),
         col("dfa").as("dfc")), col("sh"), nBuckets, s"$base/dfc")),
       // Content digests for the accepted docs — [[shingleDelete]]'s
       // verbatim-text witness, read straight off the checkpointed batch
@@ -861,9 +876,12 @@ object Dedup {
     * delete succeeded; a marker mismatch rebuilds from source
     * ([[standingDeleteIngest]] does exactly that).
     *
-    * Cost: re-shingle |deleted| docs, one bucket-pruned dfc + postings
-    * read over their vocabulary, one doc-arity tombstone append, ≤ one
-    * new dfc file per touched bucket. Never a corpus pass. */
+    * Cost: re-shingle |deleted| docs, one keyed postings read and one
+    * keyed dfc sum over their vocabulary (bucket-pruned scans, filtered
+    * to that vocabulary before anything is shuffled; the sum also feeds
+    * the negative delta append), one doc-arity tombstone append, ≤ one
+    * new dfc file per touched bucket. Never a corpus pass, and nothing
+    * shuffled grows with the corpus. */
   def shingleDelete(s: SparkSession, base: String, docs: DataFrame): Unit = {
     val del = docs.select("doc_id", "text").localCheckpoint()
     // Empty delete is the documented no-op — decided BEFORE reading the
@@ -902,9 +920,8 @@ object Dedup {
           "re-shingling it would corrupt the df deltas silently. " +
           "Refusing; pass the indexed content verbatim.")
     val dsh = shinglesOf(del)
-    val ddf = dsh.groupBy("sh").agg(count(lit(1)).as("ddel"))
-      .localCheckpoint()
-    val pruned = StandingIndex.slice(s, base, ddf, "sh", nBuckets)
+    val pruned = StandingIndex.slice(s, base,
+      dsh.select(col("sh"), lit(1L).as("ddel")), "sh", nBuckets)
     if (!pruned.isEmpty) {
       // Unknown-id refusal: every deleted doc with a non-empty shingle
       // set must hold at least one LIVE posting row (its rows live only
@@ -912,7 +929,7 @@ object Dedup {
       // bounded). A doc whose every shingle was over-cap at index time
       // has no posting rows and is refused as unprovable — the safe,
       // loud failure.
-      val present = livePostings(s, base, pruned.read("postings"))
+      val present = livePostings(s, base, pruned.keyed("postings"))
         .join(del.select("doc_id"), Seq("doc_id"), "left_semi")
         .select("doc_id").distinct()
       val missing = dsh.select("doc_id").distinct()
@@ -923,10 +940,13 @@ object Dedup {
             "rows (never indexed, already deleted-and-compacted, or " +
             "all-over-cap) — deleting them would corrupt the df deltas. " +
             "Refusing; rebuild from source for this case.")
-      val df0 = pruned.read("dfc").groupBy("sh").agg(sum("dfc").as("df0"))
-      val crossing = ddf.join(df0, Seq("sh"))
-        .filter(col("df0") > ShingleDfCap &&
-          col("df0") - col("ddel") <= ShingleDfCap)
+      // Each deleted shingle's df (ddel) and standing df (df0) from one
+      // keyed sum over the deleted vocabulary's own dfc rows; it also
+      // feeds the negative delta append below.
+      val v = pruned.sum("dfc", "dfc").withColumnRenamed("dfc", "df0")
+        .localCheckpoint()
+      val crossing = v.filter(col("df0") > ShingleDfCap &&
+        col("df0") - col("ddel") <= ShingleDfCap)
       if (crossing.head(1).nonEmpty)
         throw new IllegalStateException(
           s"shingle index at $base: this delete would bring shingle(s) " +
@@ -943,7 +963,7 @@ object Dedup {
       // the caller's protocol.
       del.select("doc_id").write.mode("append").parquet(tombsDir)
       StandingIndex.appendBucketed(
-        ddf.select(col("sh"), (-col("ddel")).as("dfc")),
+        v.select(col("sh"), (-col("ddel")).as("dfc")),
         col("sh"), nBuckets, s"$base/dfc")
     } else {
       // No shingles (every deleted doc is under 3 words): nothing to

@@ -1413,10 +1413,12 @@ object Retrieval {
       requireNoTornAppend()
       val qt = postings(arrivals)
         .select(col("doc_id").as("query_id"), col("term"))
-      // The batch's term-bucket set: |batch|-bounded driver data (the same
-      // bound the broadcast twin's append collect takes), and the handle
-      // that turns both standing-side scans into path-pruned reads.
-      val pruned = StandingIndex.slice(s, base, qt, "term", NumBuckets)
+      // The batch's terms: their routing hashes are |batch|-bounded driver
+      // data (the same bound the broadcast twin's append collect takes),
+      // and the handle that turns both standing-side scans into
+      // path-pruned reads and the df view into a keyed sum.
+      val pruned = StandingIndex.slice(s, base, qt.select("term"), "term",
+        NumBuckets)
       // CACHE the pruned views for the batch: stage 1 drives several
       // driver actions (term-class collects, the doc-mask, the wave
       // percentile, the kernel slice) and each would otherwise re-read
@@ -1425,15 +1427,18 @@ object Retrieval {
       // Batch-scoped: the gate releases TrackedCaches after each write.
       val tfV = graft.TrackedCaches.track(
         liveView(pruned.read("postings")).cache())
-      // df > 0: a fully-deleted term's rolled-up df is zero, and a
-      // zero-df row must read as ABSENT (exactly as a rebuild without
-      // the deleted docs would have it) — kept, it would enter qd with
-      // df 0 and win a rare-term slot (rare sorts df ASCENDING) that a
-      // term with live postings should hold, silently moving verdicts.
+      // The df view's one consumer joins it to the batch's terms (qd),
+      // so it is the keyed sum over those terms alone, never the whole
+      // bucket slice of dfd. (tfV stays the whole slice: the wave cutoff
+      // takes a percentile over every posting in it.) df > 0: a
+      // fully-deleted term's rolled-up df is zero, and a zero-df row must
+      // read as ABSENT (exactly as a rebuild without the deleted docs
+      // would have it) — kept, it would enter qd with df 0 and win a
+      // rare-term slot (rare sorts df ASCENDING) that a term with live
+      // postings should hold, silently moving verdicts. The keyed sum's
+      // 0 for a term with no df row drops the same way.
       val dftV = graft.TrackedCaches.track(
-        pruned.read("dfd")
-          .groupBy("term").agg(sum("df").as("df"))
-          .filter(col("df") > 0L).cache())
+        pruned.sum("dfd", "df").filter(col("df") > 0L).cache())
       val bix = Bm25Index(tfV, dftV, nDocs, avgLen)
       // qd is multi-consumer (stage 1's collects + stage 2's qmaps) so it
       // caches, but NOT eagerly — stage 1's first driver action fills it.

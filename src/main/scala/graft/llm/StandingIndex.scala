@@ -2,7 +2,8 @@ package graft.llm
 
 import java.nio.file.{Files, Paths}
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, GraftColumnBridge, SparkSession,
+  functions}
 import org.apache.spark.sql.functions._
 
 /** The one module that knows what a standing (persisted, probe-only)
@@ -36,13 +37,21 @@ import org.apache.spark.sql.functions._
   *    distributed job (`parallelPartitionDiscovery.threshold`), and every
   *    bucket a commit touches adds one file. [[layoutMarker]] records the
   *    count beside the source bytes that chose it.
-  *  - **Bucket-pruned reads.** [[slice]] collects the bucket set a key
-  *    frame touches once and hands the reader only those `bucket=v`
-  *    directories (basePath keeps the partition column), so the driver
-  *    never lists or footer-reads the others — measured on the BM25
-  *    ladder: at 1024 buckets the full-table listing cost MORE than the
-  *    probe's data (5.5 → 3.1 s after the fix). The residual isin filter
-  *    stays as the in-plan partition predicate and the plan-shape witness.
+  *  - **Bucket-pruned reads.** [[slice]] collects the routing hashes of
+  *    a key frame once and hands the reader only the `bucket=v`
+  *    directories they touch (basePath keeps the partition column), so
+  *    the driver never lists or footer-reads the others — measured on
+  *    the BM25 ladder: at 1024 buckets the full-table listing cost MORE
+  *    than the probe's data (5.5 → 3.1 s after the fix). The residual
+  *    isin filter stays as the in-plan partition predicate and the
+  *    plan-shape witness.
+  *  - **Batch-bounded reconciliation.** A batch of any real size touches
+  *    every bucket, so a bucket-pruned read is the whole table. The
+  *    delta tables are therefore read per key: [[Slice.keyed]] filters
+  *    the scan by the same hash set, and [[Slice.sum]] adds up a delta
+  *    table for the slice's keys in one aggregate that also carries the
+  *    key frame's own counts, so what it shuffles is bounded by the
+  *    batch's vocabulary at any corpus size.
   *  - **Compaction.** Rewrite to a `_compact_*` temp, [[ensureReadable]],
   *    rename-only swap ([[compactTable]], [[compactFlat]]); the marked
   *    owners run it under [[withMarkerSuspended]].
@@ -242,9 +251,13 @@ private[graft] object StandingIndex {
     ()
   }
 
-  /** The buckets of a layout under `base` that a key frame touches, and
-    * path-pruned reads of its tables restricted to them. */
+  /** The keys of a key frame and the buckets of a layout under `base`
+    * they touch, with path-pruned reads of its tables restricted to them.
+    * The slice holds the keys' routing hashes (`xxhash64`, the hash the
+    * bucket expression takes modulo the count), so it names the buckets
+    * and filters the rows of those buckets from one driver-side set. */
   final class Slice private[StandingIndex] (s: SparkSession, base: String,
+      keys: DataFrame, routing: String, hashes: Set[Long],
       buckets: Seq[Long]) {
     def isEmpty: Boolean = buckets.isEmpty
 
@@ -252,17 +265,51 @@ private[graft] object StandingIndex {
       * the partition column dropped. */
     def read(table: String): DataFrame =
       prunedRead(s, s"$base/$table", "bucket", buckets).drop("bucket")
+
+    /** [[read]] restricted in the scan to the rows whose routing key
+      * hashes like one of the slice's keys: every row of the keys, and a
+      * foreign key's only on a 64-bit hash collision, so a consumer that
+      * joins on the key itself reads exactly what the whole buckets would
+      * give it. */
+    def keyed(table: String): DataFrame =
+      read(table).filter(GraftColumnBridge.toColumn(graft.functions.LongIn.of(
+        GraftColumnBridge.toExpression(xxhash64(col(routing))), hashes)))
+
+    /** For each key of the slice, the sum of `table`'s `delta` column over
+      * its rows, 0 when it has none, beside the sum of every other column
+      * of the key frame. One aggregate over the key frame's rows unioned
+      * with the [[keyed]] rows of `table`, so it shuffles at most the
+      * key frame and the keys' delta rows, never the rest of the table,
+      * and takes no job beyond the one its caller's action runs. */
+    def sum(table: String, delta: String): DataFrame = {
+      val carried = keys.columns.filterNot(_ == routing).toSeq
+      val fromKeys = keys.select(col(routing) +: carried.map(col) :+
+        lit(0L).as(delta) :+ lit(true).as(InSlice): _*)
+      val fromTable = keyed(table).select(col(routing) +:
+        carried.map(c => lit(0L).as(c)) :+ col(delta) :+
+        lit(false).as(InSlice): _*)
+      fromKeys.unionByName(fromTable).groupBy(routing)
+        .agg(max(InSlice).as(InSlice),
+          (carried :+ delta).map(c => functions.sum(c).as(c)): _*)
+        .filter(col(InSlice)).drop(InSlice)
+    }
   }
 
-  /** The bucket set `keys` touches on its `routing` column under an
-    * `nBuckets` layout: one distinct-collect, bounded by the key frame's
-    * own vocabulary (the same bound as the broadcast its callers' joins
-    * already take). */
+  private val InSlice = "_in_slice"
+
+  /** The slice of the `nBuckets` layout under `base` that `keys` touches
+    * on its `routing` column: one distinct-collect of the keys' routing
+    * hashes, bounded by the key frame's own vocabulary (the same bound as
+    * the broadcast its callers' joins already take). The key frame's
+    * other columns are the values [[Slice.sum]] adds up per key. */
   def slice(s: SparkSession, base: String, keys: DataFrame, routing: String,
-      nBuckets: Int): Slice =
-    new Slice(s, base,
-      keys.select(bucketOf(col(routing), nBuckets).as("bucket")).distinct()
-        .collect().map(_.getLong(0)).sorted.toSeq)
+      nBuckets: Int): Slice = {
+    val hashes = keys.select(xxhash64(col(routing))).distinct()
+      .collect().map(_.getLong(0)).toSet
+    // floorMod is [[bucketOf]]'s pmod, taken on the driver.
+    new Slice(s, base, keys, routing, hashes,
+      hashes.map(h => Math.floorMod(h, nBuckets.toLong)).toSeq.sorted)
+  }
 
   /** Run a state-rewriting maintenance `body` with the staleness marker
     * SUSPENDED: the marker is read, deleted, and only restored after the

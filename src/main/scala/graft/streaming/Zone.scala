@@ -64,8 +64,11 @@ object Zone {
     * orphan cleanup finds a zone by the source dir name it embeds). The
     * marker records the source table's file signature, so a table
     * rewritten at the same path restages instead of serving the old
-    * arrivals. An empty arrival set stages a zone with no chunks, and a
-    * key gap spanning a whole range leaves that chunk out. */
+    * arrivals. An empty arrival set stages a zone with no chunks. Any
+    * other set stages all [[Chunks]] chunks: a key range with no rows
+    * still writes its chunk, a schema-only parquet file (a one-task write
+    * of zero rows leaves one), and that is what keeps [[batchOfSql]]'s
+    * arithmetic true of a sparse key space too. */
   def stage(s: SparkSession, d: String, table: String, key: String,
       project: => DataFrame): String = lock.synchronized {
     val base = Paths.get(tmp(s"graft_stream_${table}_${d.replaceAll("[^a-zA-Z0-9.]", "_")}"))
@@ -93,8 +96,8 @@ object Zone {
     base.toString
   }
 
-  /** Staged chunk files in zone `dir` (fewer than [[Chunks]] when key
-    * ranges were empty). */
+  /** Staged chunk files in zone `dir`: [[Chunks]], or 0 for a zone with no
+    * arrivals. */
   def chunks(dir: String): Long = graft.Fs.countWithSuffix(Paths.get(dir), ".parquet")
 
   /** SQL over `rel` (a relation holding the zone's rows) adding the
@@ -171,11 +174,11 @@ object Zone {
   }
 
   /** Gates screening against a frozen standing set: at least two
-    * micro-batches, so the screen really ran incrementally, unless the
-    * zone staged no more than one trigger's files — a sparse key space
-    * leaves key ranges empty, and one-batch screening of it is correct. */
+    * micro-batches, so the screen really ran incrementally. A zone that
+    * has arrivals always stages [[Chunks]] chunks, a sparse key space
+    * included ([[stage]]), so it always reads in more than one batch. */
   case object Static extends Batches("need >= 2 batches for the screening to be incremental") {
-    def hold(latest: Long, chunks: Long): Boolean = latest >= 1 || chunks <= FilesPerTrigger
+    def hold(latest: Long, chunks: Long): Boolean = latest >= 1
   }
 
   /** Gates whose standing set grows by each batch: the dense zone, every

@@ -826,4 +826,125 @@ class DedupSpec extends SparkSpec {
     Dedup.shingleDelete(spark, base,
       Seq.empty[(Long, String)].toDF("doc_id", "text"))
   }
+
+  // ── Standing shingle index: what one operation costs ──
+  // Probe, commit and delete reconcile the batch's df against the
+  // standing delta tables; these specs pin that the reconciliation reads
+  // and shuffles the batch's own keys, not the corpus, and that none of
+  // the three gains a Spark job unnoticed.
+
+  /** Spark jobs started and shuffle bytes written by `body`. */
+  private def metered(body: => Unit): (Int, Long) = {
+    val jobs = new java.util.concurrent.atomic.AtomicInteger(0)
+    val bytes = new java.util.concurrent.atomic.AtomicLong(0L)
+    val listener = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(
+          e: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+        jobs.incrementAndGet()
+      override def onTaskEnd(
+          e: org.apache.spark.scheduler.SparkListenerTaskEnd): Unit =
+        if (e.taskMetrics != null)
+          bytes.addAndGet(e.taskMetrics.shuffleWriteMetrics.bytesWritten)
+    }
+    org.apache.spark.SpecListenerBus.drain(spark.sparkContext)
+    spark.sparkContext.addSparkListener(listener)
+    try {
+      body
+      org.apache.spark.SpecListenerBus.drain(spark.sparkContext)
+    } finally spark.sparkContext.removeSparkListener(listener)
+    (jobs.get(), bytes.get())
+  }
+
+  /** A corpus dir of `nCorpus` docs over a 40-word vocabulary plus
+    * `nExtra` docs whose words occur nowhere else, and a 40-doc arrival
+    * batch over the corpus vocabulary (every fourth arrival a verbatim
+    * copy of a corpus doc). Corpus ids are ≢ 0 (mod 5), arrival ids ≡ 0. */
+  private def costFixture(nCorpus: Int, nExtra: Int)
+      : (String, org.apache.spark.sql.DataFrame) = {
+    val rnd = new scala.util.Random(7)
+    def words(n: Int) = Seq.fill(n)(s"v${rnd.nextInt(40)}").mkString(" ")
+    val corpus = (0 until nCorpus).map(i => (i * 5L + 1, words(8 + i % 7)))
+    val extra = (0 until nExtra).map { i =>
+      (i * 5L + 2, (0 until 8 + i % 7).map(j => s"x${i}y$j").mkString(" "))
+    }
+    val batch = (1 to 40).map { i =>
+      (i * 5L, if (i % 4 == 0) corpus(i * 3)._2 else words(8 + i % 7))
+    }
+    val dir = java.nio.file.Files
+      .createTempDirectory("graft_shingle_cost").toString
+    (corpus ++ extra).toDF("doc_id", "text")
+      .write.mode("overwrite").parquet(s"$dir/documents.parquet")
+    (dir, batch.toDF("doc_id", "text"))
+  }
+
+  /** Jobs and shuffle bytes of probe (with its write), commit and delete
+    * of `batch` against a freshly built 4-bucket index over `dir`. */
+  private def operationCosts(dir: String,
+      batch: org.apache.spark.sql.DataFrame): Seq[(String, (Int, Long))] = {
+    val base = java.nio.file.Files
+      .createTempDirectory("graft_shingle_cost_ix").toString
+    val out = java.nio.file.Files
+      .createTempDirectory("graft_shingle_cost_out").toString
+    try {
+      Dedup.shingleBuildIfStale(spark, dir, base, nBuckets = 4)
+      val probe = metered(Dedup.shingleProbe(spark, base, batch)
+        .write.mode("overwrite").parquet(out))
+      graft.TrackedCaches.release()
+      val commit = metered(Dedup.shingleCommit(spark, base, batch))
+      val delete = metered(Dedup.shingleDelete(spark, base, batch))
+      Seq("probe" -> probe, "commit" -> commit, "delete" -> delete)
+    } finally {
+      graft.TrackedCaches.release()
+      graft.Fs.deleteRec(java.nio.file.Paths.get(base))
+      graft.Fs.deleteRec(java.nio.file.Paths.get(out))
+    }
+  }
+
+  test("reconciliation is batch-bounded: probe, commit and delete shuffle " +
+      "the same bytes over a corpus grown by disjoint-vocabulary docs") {
+    val (small, batch) = costFixture(200, 0)
+    val (grown, _) = costFixture(200, 1200)
+    try {
+      val a = operationCosts(small, batch)
+      val b = operationCosts(grown, batch)
+      // The grown index holds 6x the corpus's docs, and every bucket of
+      // its delta tables, postings and sizes holds rows the batch never
+      // names. Summing whole tables shuffled about 5x the bytes there
+      // (probe 40 → 231 KB); keyed sums shuffle the batch's own rows,
+      // the same on both (probe 19.9 KB, commit 26.5 KB, delete 26.6 KB
+      // when this was written). 5% leaves room for the shuffle files'
+      // compression, nothing for a term that grows with the corpus.
+      a.zip(b).foreach { case ((op, (_, x)), (_, (_, y))) =>
+        info(s"$op: $x shuffle bytes over the corpus, $y over corpus + 1200")
+        assert(x > 0L, s"$op shuffled nothing: the fixture measures nothing")
+        assert(math.abs(y - x) <= x / 20,
+          s"$op shuffled $x bytes over the corpus but $y over the grown " +
+            "corpus: some sum still reads rows the batch does not name")
+      }
+    } finally {
+      graft.Fs.deleteRec(java.nio.file.Paths.get(small))
+      graft.Fs.deleteRec(java.nio.file.Paths.get(grown))
+    }
+  }
+
+  test("jobs per standing shingle operation are pinned (AQE off)") {
+    val (dir, batch) = costFixture(200, 200)
+    val aqe = spark.conf.get("spark.sql.adaptive.enabled")
+    spark.conf.set("spark.sql.adaptive.enabled", "false")
+    try {
+      // Jobs with AQE off (adaptive execution adds one per shuffle stage,
+      // and their number follows thread timing). The probe counts its
+      // write; all three count their reads' schema-inference jobs. Before
+      // the keyed sums: probe 10, commit 14, delete 18.
+      val pinned = Map("probe" -> 10, "commit" -> 13, "delete" -> 17)
+      operationCosts(dir, batch).foreach { case (op, (jobs, _)) =>
+        info(s"$op: $jobs jobs")
+        assert(jobs <= pinned(op),
+          s"$op ran $jobs Spark jobs, pinned at ${pinned(op)}")
+      }
+    } finally {
+      spark.conf.set("spark.sql.adaptive.enabled", aqe)
+      graft.Fs.deleteRec(java.nio.file.Paths.get(dir))
+    }
+  }
 }

@@ -486,10 +486,12 @@ class StreamingSpec extends SparkSpec {
   }
 
   test("streaming ingest dedup handles a sparse doc_id space (single-batch zone)") {
-    // Arrival ids {0, 1000000} land in only 2 of the 4 staged ranges (the
-    // middle ranges are empty and skipped) -> one micro-batch. The
-    // incrementality gate must not reject that; verdicts must still be
-    // right (doc 1000000 has an exact corpus twin, doc 0 is unique).
+    // Arrival ids {0, 1000000} land in only 2 of the 4 key ranges. The
+    // middle ranges still stage their chunks, schema-only files, so the
+    // zone holds 4 chunks and streams in 2 micro-batches (doc 0, then doc
+    // 1000000), the batch arithmetic the oracles replay. Verdicts must
+    // still be right (doc 1000000 has an exact corpus twin, doc 0 is
+    // unique).
     withTempDir("graft_ingest_sparse") { base =>
       val uniq = (id: Long) => (0 until 15).map(w => s"s${id}w$w").mkString(" ")
       import spark.implicits._
@@ -501,6 +503,8 @@ class StreamingSpec extends SparkSpec {
         .collect().map(r => r.getLong(0) -> ((r.getBoolean(1), r.getLong(2)))).toMap
       assert(out(1000000L) == ((true, 3L)), s"sparse twin must flag, got ${out(1000000L)}")
       assert(out(0L) == ((false, -1L)))
+      assert(graft.streaming.Zone.chunks(graft.streaming.DocStreams.stageDocs(spark, base)) ==
+        graft.streaming.Zone.Chunks, "a sparse zone must still stage every chunk")
       graft.TrackedCaches.release()
     }
   }
