@@ -218,10 +218,12 @@ object AnnIndex {
     // Tombstone exclusion through the shared mask, with the tombs side
     // path-pruned to the probed cells like the data itself — the
     // exclusion reads O(tombstones in probed cells), broadcast.
-    val candidates = StandingIndex.liveRows(s, tombsDir(base),
+    val candidates = StandingIndex.liveRows(
       StandingIndex.prunedRead(s, cellsDir(base), "cell", probed),
       Seq("cell", "vec_id"),
-      Some(StandingIndex.prunedRead(s, tombsDir(base), "cell", probed)))
+      if (hasTombstones(base))
+        Some(StandingIndex.prunedRead(s, tombsDir(base), "cell", probed))
+      else None)
     candidates
       .join(broadcast(q), Seq("cell"))
       .filter(col("vec_id") =!= col("query_id"))
@@ -249,7 +251,8 @@ object AnnIndex {
   def compact(s: SparkSession, base: String): Unit =
     StandingIndex.withMarkerSuspended(base) {
       StandingIndex.compactTable(s, base, "cells", "cell",
-        StandingIndex.liveRows(s, tombsDir(base), _, Seq("cell", "vec_id")))
+        StandingIndex.liveRows(_, Seq("cell", "vec_id"),
+          if (hasTombstones(base)) Some(s.read.parquet(tombsDir(base))) else None))
       graft.Fs.deleteRec(java.nio.file.Paths.get(tombsDir(base)))
     }
 

@@ -521,12 +521,8 @@ object Dedup {
   /** Build the standing corpus shingle index at `base` unless its marker
     * shows it was built from this corpus (same dir, same corpus-file
     * content signature — an in-place rewrite with the same doc count
-    * still rebuilds — and same bucket count). Three tables: `postings/`
-    * (sh, doc_id; pre-filtered to corpus-df ≤ cap — a shingle past the
-    * cap on corpus df alone can never be kept), `dfc/` (sh, dfc; ALL
-    * shingles — the probe must distinguish "new shingle" from "capped
-    * shingle"), and `n0/` (doc_id, n0 — the doc's standing capped
-    * size). The bucket count is sized from the corpus bytes
+    * still rebuilds — and same bucket count), into the tables of
+    * [[ShingleTables]]. The bucket count is sized from the corpus bytes
     * ([[StandingIndex.bucketsFor]]) and recorded as the `buckets` build
     * stat that probes, commits and deletes hash with. */
   def shingleBuildIfStale(s: SparkSession, d: String, base: String): Boolean =
@@ -543,38 +539,25 @@ object Dedup {
   /** The build body of [[shingleBuildIfStale]] into an empty `base`. */
   private def shingleBuild(s: SparkSession, d: String, base: String,
       nBuckets: Int): Unit = {
+    StandingIndex.recordStats(base, "buckets" -> nBuckets)
+    val store = shingleStore(s, base)
     val corpus = Tables.documents(s, d)
       .filter(col("doc_id") % 5 =!= 0).select("doc_id", "text")
-    // Content digests (doc-arity, 2 narrow columns): the witness
-    // [[shingleDelete]] checks its handed text against — see the dig/
-    // note there. FLAT, not bucketed: commits append to this table on
-    // the streaming hot path (one tiny file, no shuffle), while only
-    // rare takedowns read it — the witness scan is the delete's own
-    // corpus term, the same accepted class as the IVF delete's
-    // (vec_id, cell) resolve scan. The write runs as a CONCURRENT job:
-    // it reads only the source corpus (never the dirs the chain below
-    // writes), so the witness's extra doc-arity scan overlaps the
-    // build's own jobs instead of serializing after them — the round-16
-    // verdict priced the serial witness at roughly a doubled build cpu
-    // band; overlap takes its wall term out of every build.
+    // The digest write runs as a CONCURRENT job: it reads only the
+    // source corpus (never the dirs the chain below writes), so its
+    // doc-arity scan overlaps the build's own jobs.
     import scala.concurrent.{Await, Future}
     import scala.concurrent.ExecutionContext.Implicits.global
-    val digJob = Future(
-      corpus.select(col("doc_id"), md5(col("text")).as("dig"))
-        .write.mode("overwrite").parquet(s"$base/dig"))
+    val digJob = Future(store.write("dig",
+      corpus.select(col("doc_id"), md5(col("text")).as("dig"))))
     val csh = graft.TrackedCaches.track(shinglesOf(corpus).cache())
-    val dfc = csh.groupBy("sh").agg(count(lit(1)).as("dfc"))
-    StandingIndex.writeBucketed(dfc, col("sh"), nBuckets, s"$base/dfc")
-    val kept = csh.join(
-      s.read.parquet(s"$base/dfc").filter(col("dfc") <= ShingleDfCap)
-        .select("sh"), Seq("sh"))
-    StandingIndex.writeBucketed(kept, col("sh"), nBuckets,
-      s"$base/postings")
-    s.read.parquet(s"$base/postings")
-      .groupBy("doc_id").agg(count(lit(1)).as("n0"))
-      .write.mode("overwrite").parquet(s"$base/n0")
+    store.write("dfc", csh.groupBy("sh").agg(count(lit(1)).as("dfc")))
+    store.write("postings", csh.join(
+      store.read("dfc").filter(col("dfc") <= ShingleDfCap).select("sh"),
+      Seq("sh")))
+    store.write("n0",
+      store.read("postings").groupBy("doc_id").agg(count(lit(1)).as("n0")))
     Await.result(digJob, scala.concurrent.duration.Duration.Inf)
-    StandingIndex.recordStats(base, "buckets" -> nBuckets)
   }
 
   /** Build marker of a shingle index over corpus dir `d`; the phase
@@ -582,9 +565,29 @@ object Dedup {
   private def shingleMarker(d: String, nBuckets: Int): String =
     s"dir=$d ${StandingIndex.layoutMarker(s"$d/documents.parquet", nBuckets)} dig=1"
 
-  /** The bucket count the shingle index at `base` was built with. */
-  private def buckets(base: String): Int =
-    StandingIndex.stat(base, "buckets").toInt
+  /** The shingle index's tables: `postings/` (sh, doc_id; pre-filtered to
+    * corpus-df ≤ cap — a shingle past the cap on corpus df alone can
+    * never be kept), the df deltas `dfc/` (ALL shingles — the probe must
+    * tell "new shingle" from "capped shingle"), the standing capped-size
+    * deltas `n0/`, and the content digests `dig/` that [[shingleDelete]]
+    * checks its handed text against. The per-doc tables are FLAT: commits
+    * append to them on the streaming hot path (one tiny file, no
+    * shuffle). */
+  private val ShingleTables = Seq(
+    PostingsStore.Table("postings", keyed = true,
+      Seq("sh" -> StringType, "doc_id" -> LongType)),
+    PostingsStore.Table("dfc", keyed = true,
+      Seq("sh" -> StringType, "dfc" -> LongType), sum = Some("dfc")),
+    PostingsStore.Table("n0", keyed = false,
+      Seq("doc_id" -> LongType, "n0" -> LongType), sum = Some("n0")),
+    PostingsStore.Table("dig", keyed = false,
+      Seq("doc_id" -> LongType, "dig" -> StringType)))
+
+  /** The store of the shingle index at `base`, routed with the bucket
+    * count it was built with. */
+  private def shingleStore(s: SparkSession, base: String): PostingsStore =
+    new PostingsStore(s, base, "sh", StandingIndex.stat(base, "buckets").toInt,
+      ShingleTables)
 
   /** Probe-only ingest dedup against a standing index: shingle the batch,
     * path-prune the standing postings/df scans to the batch's own
@@ -613,10 +616,10 @@ object Dedup {
     * sort per write, all discarded by the final orderBy. */
   private[graft] def shingleProbeUnordered(s: SparkSession, base: String,
       batchDocs: DataFrame): DataFrame = {
+    val store = shingleStore(s, base)
     val bsh = graft.TrackedCaches.track(
       shinglesOf(batchDocs.select("doc_id", "text")).cache())
-    val pruned = StandingIndex.slice(s, base,
-      bsh.select(col("sh"), lit(1L).as("dfb")), "sh", buckets(base))
+    val pruned = store.slice(bsh.select(col("sh"), lit(1L).as("dfb")))
     // Joint-cap reconciliation over the batch's vocabulary: one keyed
     // sum gives each batch shingle its batch df (dfb) and its standing
     // df (dfc, 0 for a genuinely new shingle) — the standing df is a SUM
@@ -636,7 +639,7 @@ object Dedup {
     // docs ([[shingleDelete]]) are excluded here, the single postings
     // entry point, so deleted corpus docs can never match an arrival.
     val postings = graft.TrackedCaches.track(
-      livePostings(s, base, pruned.keyed("postings")).cache())
+      store.live(pruned.keyed("postings")).cache())
     val inter = bKept.as("a")
       .join(postings.as("b"), col("a.sh") === col("b.sh"), "inner")
       .groupBy(col("a.doc_id").as("da"), col("b.doc_id").as("db"))
@@ -648,7 +651,7 @@ object Dedup {
     // whose shingles a commit pushed past the cap. Only docs holding a
     // batch shingle can pair with an arrival, so the sum reads theirs
     // alone: a broadcast semi-join on the cached postings view.
-    val nb = s.read.parquet(s"$base/n0")
+    val nb = store.read("n0")
       .join(broadcast(postings.select("doc_id")), Seq("doc_id"), "left_semi")
       .groupBy("doc_id").agg(sum("n0").as("n0"))
       .join(f, Seq("doc_id"), "left")
@@ -719,16 +722,14 @@ object Dedup {
     * never serve half-committed state). */
   def shingleCommit(s: SparkSession, base: String,
       accepted: DataFrame): Unit = {
-    val nBuckets = buckets(base)
+    val store = shingleStore(s, base)
     // One eager localCheckpoint of the accepted docs WITH their content
     // digest, then one of the batch's SHINGLES derived from it: every
     // downstream term — df deltas, kept rows, size rows, the dig witness
     // append — reads materialized state, so the batch's lineage (which
     // for the shipped callers includes a parquet read or a probe frame)
     // is evaluated ONCE per commit, the batch is shingled once, and md5
-    // rides the same pass. (The round-16 witness re-evaluated `accepted`
-    // a second time just for the dig append — the commit-path tax the
-    // r16 verdict flagged.) Checkpoints rather than caches because the
+    // rides the same pass. Checkpoints rather than caches because the
     // write actions below MUTATE the very directories later lineage
     // would re-read — a dropped cache would silently recompute against
     // post-append state.
@@ -736,8 +737,7 @@ object Dedup {
       md5(col("text")).as("dig")).localCheckpoint()
     val ash = shinglesOf(acc.select("doc_id", "text"))
       .localCheckpoint()
-    val pruned = StandingIndex.slice(s, base,
-      ash.select(col("sh"), lit(1L).as("dfa")), "sh", nBuckets)
+    val pruned = store.slice(ash.select(col("sh"), lit(1L).as("dfa")))
     // Empty batch vocabulary — every arrival was a dup (reachable every
     // micro-batch in streamDedupEvolving) or nothing shingled. Nothing to
     // append, no df can move, and the pruned reader's empty-slice
@@ -763,62 +763,33 @@ object Dedup {
     val keptRows = ash.join(keptSh, Seq("sh"))
     val sizes = keptRows.groupBy("doc_id").agg(count(lit(1)).as("n0"))
     // The accepted docs' kept sizes and the NEGATIVE corrections for
-    // standing owners of crossed shingles land as ONE n0 append (they
-    // were two separate write jobs): the corrections' postings read runs
-    // strictly BEFORE the postings append below, so it sees only
-    // pre-commit rows — same discipline as the old corrections-first
-    // ordering (this commit never appends occurrences of crossed
-    // shingles anyway — kept ∩ crossed = ∅ on the same checkpointed v —
-    // but the ordering keeps the read's correctness independent of that
-    // invariant). Tombstoned docs take no corrections: their sizes are
-    // never read (excluded from every intersection), and a correction
-    // row for them would just be a dead row the compaction drops anyway.
+    // standing owners of crossed shingles land as ONE n0 append, and the
+    // corrections' postings read completes BEFORE the postings append
+    // below begins, so it sees only pre-commit rows (this commit never
+    // appends occurrences of crossed shingles anyway — kept ∩ crossed = ∅
+    // on the same checkpointed v — but the ordering keeps the read's
+    // correctness independent of that invariant). Tombstoned docs take no
+    // corrections: their sizes are never read (excluded from every
+    // intersection), and a correction row for them would just be a dead
+    // row the compaction drops anyway. Without crossings all the appends
+    // are independent and the store runs them as CONCURRENT jobs (every
+    // input is checkpointed, every target dir distinct). A torn commit is
+    // the caller's marker protocol either way.
     val n0Rows =
       if (!anyCrossed) sizes
       else sizes.unionByName(
-        livePostings(s, base, pruned.keyed("postings"))
+        store.live(pruned.keyed("postings"))
           .join(v.filter(crossedCond).select("sh"), Seq("sh"))
           .groupBy("doc_id").agg((count(lit(1)) * -1).as("n0")))
-    def writeN0(): Unit =
-      n0Rows.write.mode("append").parquet(s"$base/n0")
-    // When the commit carries corrections, their postings read must
-    // complete before the postings append below begins (pre-commit rows
-    // only); without crossings all three appends are independent — run
-    // them as CONCURRENT jobs (every input is checkpointed, every target
-    // dir distinct), overlapping three tiny jobs' fixed scheduling and
-    // file-commit overhead. All three are awaited — a failure in any
-    // still surfaces after the others settle, and a torn commit is the
-    // caller's marker protocol either way.
-    if (anyCrossed) writeN0()
-    import scala.concurrent.{Await, Future}
-    import scala.concurrent.ExecutionContext.Implicits.global
-    val jobs = Seq(
-      Future(StandingIndex.appendBucketed(keptRows, col("sh"), nBuckets,
-        s"$base/postings")),
-      Future(StandingIndex.appendBucketed(v.select(col("sh"),
-        col("dfa").as("dfc")), col("sh"), nBuckets, s"$base/dfc")),
-      // Content digests for the accepted docs — [[shingleDelete]]'s
-      // verbatim-text witness, read straight off the checkpointed batch
-      // (md5 already computed there; no lineage re-evaluation, no extra
-      // scan). coalesce(1) keeps the append at one tiny file per commit
-      // — the small-file discipline, and the frame is batch-arity so the
-      // single task is the cheap choice, not a serialization point.
-      Future(acc.select("doc_id", "dig")
-        .coalesce(1).write.mode("append").parquet(s"$base/dig"))) ++
-      (if (anyCrossed) Nil else Seq(Future(writeN0())))
-    val results = jobs.map(f => scala.util.Try(
-      Await.result(f, scala.concurrent.duration.Duration.Inf)))
-    results.foreach(_.get)
+    if (anyCrossed) store.append("n0" -> n0Rows)
+    store.append(Seq(
+      "postings" -> keptRows,
+      "dfc" -> v.select(col("sh"), col("dfa").as("dfc")),
+      // coalesce(1): one tiny digest file per commit; the frame is
+      // batch-arity, so the single task is no serialization point.
+      "dig" -> acc.select("doc_id", "dig").coalesce(1)) ++
+      (if (anyCrossed) Nil else Seq("n0" -> n0Rows)): _*)
   }
-
-  /** Postings with the tombstoned docs ([[shingleDelete]]) excluded — the
-    * single exclusion point every postings consumer (probe intersections,
-    * commit crossing corrections) reads through. The shared
-    * [[StandingIndex.liveRows]] mask: broadcast anti-join, pass-through
-    * when no delete ever ran. */
-  private def livePostings(s: SparkSession, base: String,
-      postings: DataFrame): DataFrame =
-    StandingIndex.liveRows(s, s"$base/tombs", postings, Seq("doc_id"))
 
   /** Delete documents from a standing shingle index — the takedown /
     * contamination-purge verb completing this family's lifecycle
@@ -834,15 +805,12 @@ object Dedup {
     * refuses loudly when any handed text mismatches its recorded
     * digest — see the witness block below.
     *
-    * What a delete writes:
-    *  - `tombs/`: the deleted doc_ids (doc-arity tiny) — probes and
-    *    commits anti-join postings against it ([[livePostings]]), and
-    *    [[shingleCompact]] physically drops the rows and retires the
-    *    list;
-    *  - `dfc/`: NEGATIVE per-shingle df deltas for the deleted docs'
-    *    full shingle sets, so standing df stays the EXACT df of the
-    *    remaining population (df is read through sums everywhere — a
-    *    negative delta is just another commit).
+    * What a delete writes ([[PostingsStore.delete]]): the deleted
+    * doc_ids to the store's tombstones, which probes and commits mask
+    * postings with and [[shingleCompact]] drains, and NEGATIVE df deltas
+    * for the deleted docs' full shingle sets to `dfc/`, so standing df
+    * stays the EXACT df of the remaining population (df is read through
+    * sums everywhere — a negative delta is just another commit).
     *
     * Exactness and the CAP-RESURRECTION guard: probe-after-delete is
     * row-identical to a from-scratch screen against the remaining
@@ -864,10 +832,8 @@ object Dedup {
     * protocol: no silent wrong answers.
     *
     * Two more loud refusals keep the delta arithmetic sound: ids
-    * already tombstoned (a re-delete would double-subtract df — the
-    * tombs list is the replay witness, so a crashed delete re-run is
-    * caught here and resolved by the caller's marker protocol), and ids
-    * with shingles but NO live posting rows (never indexed, or already
+    * already tombstoned (the store's replay witness), and ids with
+    * shingles but NO live posting rows (never indexed, or already
     * deleted-and-compacted — subtracting df for a doc the index doesn't
     * hold corrupts every affected shingle's count).
     *
@@ -887,127 +853,93 @@ object Dedup {
     // Empty delete is the documented no-op — decided BEFORE reading the
     // build stats, so it holds against a not-yet-built base too.
     if (del.isEmpty) return
-    val nBuckets = buckets(base)
-    val tombsDir = s"$base/tombs"
-    StandingIndex.refuseRedelete(s, tombsDir, del, "doc_id",
-      s"shingle index at $base",
-      "If a previous delete crashed mid-write, the index marker " +
-        "protocol applies: rebuild from source.")
-    // Verbatim-text witness: the df corrections below re-shingle the
-    // HANDED text, and a caller passing the right ids with the wrong
-    // text (a re-normalized copy, a stale revision) would corrupt the
-    // affected shingles' df counts SILENTLY — every later screen
-    // mis-caps with no error anywhere. Build and commit persist
-    // md5(text) per doc (dig/, doc-arity); the delete refuses loud on
-    // any mismatch, upgrading "must be the indexed content verbatim"
-    // from a scaladoc plea to a checked precondition.
-    val digDir = s"$base/dig"
-    if (!StandingIndex.hasParquetData(digDir))
-      throw new IllegalStateException(
-        s"shingle index at $base carries no content digests (dig/) — " +
-          "it predates the digest witness; rebuild from source before " +
-          "deleting.")
-    val digOk = s.read.parquet(digDir)
-      .join(broadcast(del.select(col("doc_id"),
-        md5(col("text")).as("dig"))), Seq("doc_id", "dig"), "left_semi")
-      .select("doc_id").distinct()
-    val digMismatch = del.select("doc_id")
-      .join(digOk, Seq("doc_id"), "left_anti")
-    if (!digMismatch.isEmpty)
-      throw new IllegalStateException(
-        s"shingle index at $base: the text handed for some doc_ids does " +
-          "not match the content digest recorded at index time — " +
-          "re-shingling it would corrupt the df deltas silently. " +
-          "Refusing; pass the indexed content verbatim.")
-    val dsh = shinglesOf(del)
-    val pruned = StandingIndex.slice(s, base,
-      dsh.select(col("sh"), lit(1L).as("ddel")), "sh", nBuckets)
-    if (!pruned.isEmpty) {
-      // Unknown-id refusal: every deleted doc with a non-empty shingle
-      // set must hold at least one LIVE posting row (its rows live only
-      // in its own shingles' buckets, so this read is vocabulary-
-      // bounded). A doc whose every shingle was over-cap at index time
-      // has no posting rows and is refused as unprovable — the safe,
-      // loud failure.
-      val present = livePostings(s, base, pruned.keyed("postings"))
-        .join(del.select("doc_id"), Seq("doc_id"), "left_semi")
+    val store = shingleStore(s, base)
+    // The store refuses tombstoned ids first, then runs the checks below
+    // (each refuses with nothing written) and writes the tombstones
+    // before the negative df deltas they return.
+    store.delete(del) {
+      // Verbatim-text witness: the df corrections below re-shingle the
+      // HANDED text, and a caller passing the right ids with the wrong
+      // text (a re-normalized copy, a stale revision) would corrupt the
+      // affected shingles' df counts SILENTLY — every later screen
+      // mis-caps with no error anywhere. Build and commit persist
+      // md5(text) per doc (dig/, doc-arity); the delete refuses loud on
+      // any mismatch, upgrading "must be the indexed content verbatim"
+      // from a scaladoc plea to a checked precondition.
+      if (!java.nio.file.Files.isDirectory(java.nio.file.Paths.get(base, "dig")))
+        throw new IllegalStateException(
+          s"shingle index at $base carries no content digests (dig/) — " +
+            "it predates the digest witness; rebuild from source before " +
+            "deleting.")
+      val digOk = store.read("dig")
+        .join(broadcast(del.select(col("doc_id"),
+          md5(col("text")).as("dig"))), Seq("doc_id", "dig"), "left_semi")
         .select("doc_id").distinct()
-      val missing = dsh.select("doc_id").distinct()
-        .join(present, Seq("doc_id"), "left_anti")
-      if (!missing.isEmpty)
+      val digMismatch = del.select("doc_id")
+        .join(digOk, Seq("doc_id"), "left_anti")
+      if (!digMismatch.isEmpty)
         throw new IllegalStateException(
-          s"shingle index at $base: some doc_ids have no live posting " +
-            "rows (never indexed, already deleted-and-compacted, or " +
-            "all-over-cap) — deleting them would corrupt the df deltas. " +
-            "Refusing; rebuild from source for this case.")
-      // Each deleted shingle's df (ddel) and standing df (df0) from one
-      // keyed sum over the deleted vocabulary's own dfc rows; it also
-      // feeds the negative delta append below.
-      val v = pruned.sum("dfc", "dfc").withColumnRenamed("dfc", "df0")
-        .localCheckpoint()
-      val crossing = v.filter(col("df0") > ShingleDfCap &&
-        col("df0") - col("ddel") <= ShingleDfCap)
-      if (crossing.head(1).nonEmpty)
-        throw new IllegalStateException(
-          s"shingle index at $base: this delete would bring shingle(s) " +
-            s"back under the df cap ($ShingleDfCap) from above, but " +
-            "their postings are historically incomplete (over-cap " +
-            "occurrences are dropped at index time) — serving them " +
-            "would produce silently-wrong intersections. Refusing; " +
-            "delete-and-rebuild from source, or exclude the offending " +
-            "docs from the delete.")
-      // Tombstones FIRST: a crash between the two writes then leaves a
-      // state the re-delete refusal catches (ids tombstoned, deltas
-      // missing) instead of one it can't (deltas landed, ids free to
-      // double-subtract). Either torn state is a marker mismatch for
-      // the caller's protocol.
-      del.select("doc_id").write.mode("append").parquet(tombsDir)
-      StandingIndex.appendBucketed(
-        v.select(col("sh"), (-col("ddel")).as("dfc")),
-        col("sh"), nBuckets, s"$base/dfc")
-    } else {
+          s"shingle index at $base: the text handed for some doc_ids does " +
+            "not match the content digest recorded at index time — " +
+            "re-shingling it would corrupt the df deltas silently. " +
+            "Refusing; pass the indexed content verbatim.")
+      val dsh = shinglesOf(del)
+      val pruned = store.slice(dsh.select(col("sh"), lit(1L).as("ddel")))
       // No shingles (every deleted doc is under 3 words): nothing to
       // correct, but the ids still tombstone so the replay witness and
       // compaction semantics stay uniform.
-      del.select("doc_id").write.mode("append").parquet(tombsDir)
+      if (pruned.isEmpty) Nil
+      else {
+        // Unknown-id refusal: every deleted doc with a non-empty shingle
+        // set must hold at least one LIVE posting row (its rows live only
+        // in its own shingles' buckets, so this read is vocabulary-
+        // bounded). A doc whose every shingle was over-cap at index time
+        // has no posting rows and is refused as unprovable — the safe,
+        // loud failure.
+        val present = store.live(pruned.keyed("postings"))
+          .join(del.select("doc_id"), Seq("doc_id"), "left_semi")
+          .select("doc_id").distinct()
+        val missing = dsh.select("doc_id").distinct()
+          .join(present, Seq("doc_id"), "left_anti")
+        if (!missing.isEmpty)
+          throw new IllegalStateException(
+            s"shingle index at $base: some doc_ids have no live posting " +
+              "rows (never indexed, already deleted-and-compacted, or " +
+              "all-over-cap) — deleting them would corrupt the df deltas. " +
+              "Refusing; rebuild from source for this case.")
+        // Each deleted shingle's df (ddel) and standing df (df0) from one
+        // keyed sum over the deleted vocabulary's own dfc rows; it also
+        // feeds the negative delta append.
+        val v = pruned.sum("dfc", "dfc").withColumnRenamed("dfc", "df0")
+          .localCheckpoint()
+        val crossing = v.filter(col("df0") > ShingleDfCap &&
+          col("df0") - col("ddel") <= ShingleDfCap)
+        if (crossing.head(1).nonEmpty)
+          throw new IllegalStateException(
+            s"shingle index at $base: this delete would bring shingle(s) " +
+              s"back under the df cap ($ShingleDfCap) from above, but " +
+              "their postings are historically incomplete (over-cap " +
+              "occurrences are dropped at index time) — serving them " +
+              "would produce silently-wrong intersections. Refusing; " +
+              "delete-and-rebuild from source, or exclude the offending " +
+              "docs from the delete.")
+        Seq("dfc" -> v.select(col("sh"), (-col("ddel")).as("dfc")))
+      }
     }
   }
 
   /** Compact a standing shingle index that has taken commits and/or
-    * deletes: rewrite postings to one file per bucket with the
-    * tombstoned docs ([[shingleDelete]]) PHYSICALLY dropped, and ROLL UP
-    * the delta tables — dfc's per-commit/per-delete df rows collapse to
-    * one row per shingle (zero-sum rows, a fully-deleted shingle's
-    * remains, are dropped: an absent row reads as df 0 through the
-    * probes' coalesce anyway) and n0's size rows (including the negative
-    * crossing corrections) to one row per doc, minus the tombstoned
-    * docs' rows — exactly because the probe reads both through sums and
-    * exclusions, so the rewrite is semantics-free by construction. The
-    * tombstone list retires LAST (its exclusions are already baked into
-    * the rewritten tables). Runs under the marker-suspend protocol
-    * (crash ⇒ unmarked, rebuildable dir). DedupSpec proves
-    * probe-after-compact stays row-identical to the rebuild on both the
-    * crafted crossing corpus and the post-delete index. */
+    * deletes ([[PostingsStore.compact]]): the tombstoned docs' rows drop
+    * (their dig rows too: a stale one would let a later delete of a
+    * RE-COMMITTED doc pass the verbatim-text witness with the OLD text),
+    * and the dfc and n0 deltas roll up, which the probe's sums make
+    * semantics-free. Runs under the marker-suspend protocol (crash ⇒
+    * unmarked, rebuildable dir). DedupSpec proves probe-after-compact
+    * stays row-identical to the rebuild on both the crafted crossing
+    * corpus and the post-delete index. */
   def shingleCompact(s: SparkSession, base: String): Unit =
     StandingIndex.withMarkerSuspended(base) {
-      val tombsDir = s"$base/tombs"
-      StandingIndex.compactTable(s, base, "postings", "bucket",
-        livePostings(s, base, _))
-      StandingIndex.compactTable(s, base, "dfc", "bucket",
-        _.groupBy("bucket", "sh").agg(sum("dfc").as("dfc"))
-          .filter(col("dfc") =!= 0L))
-      StandingIndex.compactFlat(s, base, "n0",
-        n0 => StandingIndex.liveRows(s, tombsDir,
-          n0.groupBy("doc_id").agg(sum("n0").as("n0")), Seq("doc_id")))
-      // The drained docs' content digests go with their rows: a stale
-      // dig row surviving the drain would let a later delete of a
-      // RE-COMMITTED doc pass the verbatim-text witness with the OLD
-      // text — exactly the silent df corruption the witness exists to
-      // refuse. Must run before the tombstone list retires below.
-      StandingIndex.compactFlat(s, base, "dig",
-        d => StandingIndex.liveRows(s, tombsDir, d, Seq("doc_id"))
-          .dropDuplicates("doc_id", "dig"))
-      graft.Fs.deleteRec(java.nio.file.Paths.get(tombsDir))
+      shingleStore(s, base).compact()
     }
 
   /** The shipped two-phase ingest query (`q_dedup_standing_commit`):

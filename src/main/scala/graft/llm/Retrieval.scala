@@ -5,6 +5,7 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
+import scala.jdk.CollectionConverters._
 
 /** Text retrieval over the documents table — the lookup side of a curation
   * pipeline (decontamination probes against eval sets, quality-by-example
@@ -1059,9 +1060,10 @@ object Retrieval {
   /** DISTRIBUTED evolving screen index — the bucketed-posting-append
     * analogue of [[IncrementalScreenIndex]], for standing corpora past the
     * broadcast budget (the true-100 TB regime the broadcast-only evolving
-    * gate `require`s away). Three append-only parquet directories hold the
-    * standing state, so ingesting a batch NEVER rebuilds or re-scans the
-    * corpus:
+    * gate `require`s away). Its standing state is a [[PostingsStore]] of
+    * three append-only tables (plus the store's tombstones and this
+    * index's own `stats/` directory), so ingesting a batch NEVER rebuilds
+    * or re-scans the corpus:
     *
     *  - `postings/` (doc_id, term, tf), hash-PARTITIONED into
     *    [[EvolvingDistIndex.NumBuckets]] term buckets — a screen only ever
@@ -1094,10 +1096,8 @@ object Retrieval {
     * verdicts equal the evolving gate's broadcast regime row-for-row
     * (StreamingSpec replays both regimes end-to-end and asserts it). */
   private[graft] final class EvolvingDistIndex(s: SparkSession, base: String) {
-    import EvolvingDistIndex.NumBuckets
-    private val postingsDir = s"$base/postings"
-    private val dfdDir = s"$base/dfd"
-    private val fwdDir = s"$base/fwd"
+    private val store = new PostingsStore(s, base, "term",
+      EvolvingDistIndex.NumBuckets, EvolvingDistIndex.Tables)
     private val statsDir = java.nio.file.Paths.get(base, "stats")
     // Corpus stats are DURABLE alongside the three data dirs: each append
     // drops a tiny driver-written delta file (nd, sl) and construction
@@ -1116,19 +1116,22 @@ object Retrieval {
     @volatile private var nDocs = 0L
     @volatile private var lenSum = 0L
     requireNoTornAppend()
-    if (java.nio.file.Files.isDirectory(statsDir)) {
-      val ds = java.nio.file.Files.list(statsDir)
-      try ds.forEach { p =>
-        if (p.getFileName.toString.startsWith("delta_")) {
-          val Array(nd, sl) =
-            new String(java.nio.file.Files.readAllBytes(p), "UTF-8")
-              .trim.split(" ")
-          nDocs += nd.toLong; lenSum += sl.toLong
-        }
-      } finally ds.close()
+    statsFiles("delta_").foreach { p =>
+      val Array(nd, sl) =
+        new String(java.nio.file.Files.readAllBytes(p), "UTF-8").trim.split(" ")
+      nDocs += nd.toLong; lenSum += sl.toLong
     }
     def n: Long = nDocs
     def avgLen: Double = lenSum.toDouble / nDocs
+
+    /** The files of stats/ whose names start with `prefix`. */
+    private def statsFiles(prefix: String): Seq[java.nio.file.Path] =
+      if (!java.nio.file.Files.isDirectory(statsDir)) Nil
+      else {
+        val ds = java.nio.file.Files.list(statsDir)
+        try ds.toList.asScala.toSeq.filter(_.getFileName.toString.startsWith(prefix))
+        finally ds.close()
+      }
 
     /** Fail-loud gate on the append protocol: any orphaned intent marker
       * means a previous append died between its first data write and its
@@ -1139,17 +1142,7 @@ object Retrieval {
       * screen — the in-process path where this object's own failed
       * append() left the same inconsistency. */
     private def requireNoTornAppend(): Unit = {
-      if (!java.nio.file.Files.isDirectory(statsDir)) return
-      val ds = java.nio.file.Files.list(statsDir)
-      val torn =
-        try {
-          val b = Seq.newBuilder[String]
-          ds.forEach { p =>
-            val nm = p.getFileName.toString
-            if (nm.startsWith("intent_")) b += nm
-          }
-          b.result()
-        } finally ds.close()
+      val torn = statsFiles("intent_").map(_.getFileName.toString)
       if (torn.nonEmpty)
         throw new IllegalStateException(
           s"evolving index at $base has ${torn.size} interrupted " +
@@ -1159,16 +1152,6 @@ object Retrieval {
             "inconsistent BM25 constants — delete-and-reseed the index dir " +
             "(mutations are not atomic; see the stats scaladoc).")
     }
-
-    private val tombsDir = s"$base/tombs"
-
-    /** Postings with the tombstoned docs ([[delete]]) masked — the one
-      * exclusion point every screen reads through (the shared
-      * [[StandingIndex.liveRows]] mask). fwd reads are candidate-driven
-      * (a masked doc can never become a candidate), so masking the
-      * postings entry point covers the whole screen. */
-    private def liveView(p: DataFrame): DataFrame =
-      StandingIndex.liveRows(s, tombsDir, p, Seq("doc_id"))
 
     /** Ingest a (doc_id, text) frame: batch-scale tokenize, three appends
       * — cost is |batch|, never |corpus|. Corpus stats ride the fwd write
@@ -1190,36 +1173,17 @@ object Retrieval {
         // the index into delete-and-reseed.
         val tf = postings(docs).cache()
         try {
-          StandingIndex.appendBucketed(tf, col("term"), NumBuckets,
-            postingsDir)
-          // The dfd and fwd appends both derive from the now-cached tf
-          // and land in different dirs — run them as concurrent jobs (the
-          // shingleCommit idiom: the second job's tasks fill the cores
-          // the first job's tail frees). The postings write stays FIRST
-          // and alone: it materializes the tf cache once, so the
-          // concurrent pair reads cached blocks instead of racing the
-          // aggregate. Both complete before the stats delta lands.
+          // The postings write goes FIRST and alone: it materializes the
+          // tf cache once, so the concurrent dfd and fwd appends read
+          // cached blocks instead of racing the aggregate.
+          store.append("postings" -> tf)
           val obs = org.apache.spark.sql.Observation()
-          import scala.concurrent.{Await, Future}
-          import scala.concurrent.ExecutionContext.Implicits.global
-          val fDfd = Future(StandingIndex.appendBucketed(
-            tf.groupBy("term").agg(count(lit(1)).as("df")), col("term"),
-            NumBuckets, dfdDir))
-          val fFwd = Future(
-            tf.groupBy("doc_id").agg(sum("tf").as("len"),
+          store.append(
+            "dfd" -> tf.groupBy("term").agg(count(lit(1)).as("df")),
+            "fwd" -> tf.groupBy("doc_id").agg(sum("tf").as("len"),
                 sort_array(collect_list(struct(col("term"), col("tf"))))
                   .as("terms"))
-              .observe(obs, count(lit(1)).as("nd"), sum(col("len")).as("sl"))
-              .write.mode("append").parquet(fwdDir))
-          // Await BOTH to settlement before rethrowing a failure: the
-          // clean-failure recovery runs a data census, and a still
-          // in-flight sibling write committing after that census would
-          // retire the intent with data landed — the exact torn state
-          // the protocol exists to catch.
-          val done = Seq(fDfd, fFwd).map(f => scala.util.Try(
-            Await.result(f, scala.concurrent.duration.Duration.Inf)))
-          done.collectFirst { case scala.util.Failure(e) => e }
-            .foreach(e => throw e)
+              .observe(obs, count(lit(1)).as("nd"), sum(col("len")).as("sl")))
           val m = obs.get
           (m("nd").asInstanceOf[Long],
             m("sl") match { case l: Long => l; case _ => 0L })
@@ -1241,35 +1205,28 @@ object Retrieval {
       * over-cap posting drops force a text re-shingle and a resurrection
       * guard; here nothing is ever dropped, so no guard is needed).
       *
-      * Writes, under the SAME intent-marker protocol as [[append]] (a
-      * delete is a multi-write mutation; a crash mid-way must be loud,
-      * never silently half-applied — and `tombs/` is part of
-      * [[dataCensus]], so the clean-failure recovery only retires the
-      * intent when truly nothing landed):
-      *  - `tombs/`: the deleted ids; screens anti-join the postings
-      *    entry point ([[liveView]]), [[compact]] drops rows physically
-      *    and retires the list;
-      *  - `dfd/`: −1 per (term, deleted doc holding it), from fwd;
-      *  - `stats/delta_<id>`: negative (nd, sl).
+      * Writes, under the SAME intent-marker protocol as [[append]] (the
+      * store's tombstones are part of [[dataCensus]], so the
+      * clean-failure recovery only retires the intent when truly nothing
+      * landed): the ids to the store's tombstones ([[PostingsStore.delete]]),
+      * −1 per (term, deleted doc holding it) to `dfd/`, from fwd, and a
+      * negative (nd, sl) `stats/delta_<id>`.
       *
-      * Refusals (loud, nothing written): ids already tombstoned (a
-      * re-delete would double-subtract the deltas — the tombs list is
-      * the replay witness) and ids with no live fwd row (never indexed,
-      * or already deleted-and-drained — subtracting their stats would
-      * corrupt the corpus constants). An empty delete is a hard no-op. */
+      * Refusals (loud, nothing written): ids with no fwd row (never
+      * indexed, or already deleted-and-drained — subtracting their stats
+      * would corrupt the corpus constants) and, in the store, ids already
+      * tombstoned (a re-delete would double-subtract the deltas — the
+      * tombs list is the replay witness). An empty delete is a hard
+      * no-op. */
     def delete(ids: DataFrame): Unit = {
       requireNoTornAppend()
       val del = ids.select("doc_id").distinct().localCheckpoint()
       if (del.isEmpty) return
-      StandingIndex.refuseRedelete(s, tombsDir, del, "doc_id",
-        s"evolving index at $base",
-        "If a previous delete crashed mid-write, the torn-intent " +
-          "protocol already marked the index; delete-and-reseed.")
       // The deleted docs' term vectors, from the index's own forward
       // table. localCheckpoint: multi-consumer (membership count, stats
       // aggregate, df deltas) AND the writes below mutate dirs its
       // lineage reads.
-      val fw = s.read.parquet(fwdDir)
+      val fw = store.read("fwd")
         .join(broadcast(del), Seq("doc_id"), "left_semi")
         .localCheckpoint()
       // Membership by anti-join, not by count comparison: a doc_id that
@@ -1286,12 +1243,10 @@ object Retrieval {
       val agg = fw.agg(count(lit(1)).as("nd"), sum("len").as("sl")).head()
       val (nd, sl) = (agg.getLong(0), agg.getLong(1))
       mutate {
-        del.write.mode("append").parquet(tombsDir)
-        StandingIndex.appendBucketed(
+        store.delete(del)(Seq("dfd" ->
           fw.select(explode(col("terms")).as("t"))
             .groupBy(col("t.term").as("term"))
-            .agg((-count(lit(1))).as("df")),
-          col("term"), NumBuckets, dfdDir)
+            .agg((-count(lit(1))).as("df"))))
         (-nd, -sl)
       }
     }
@@ -1347,7 +1302,7 @@ object Retrieval {
       * job. */
     private def dataCensus(): Seq[String] = {
       val b = Seq.newBuilder[String]
-      Seq(postingsDir, fwdDir, dfdDir, tombsDir).foreach { d =>
+      store.dirs.foreach { d =>
         val p = java.nio.file.Paths.get(d)
         if (java.nio.file.Files.isDirectory(p)) {
           val st = java.nio.file.Files.walk(p)
@@ -1363,13 +1318,14 @@ object Retrieval {
       b.result().sorted
     }
 
-    /** Compact the append-only state: postings rewritten to one file per
-      * bucket, df DELTAS rolled up to one row per term (semantics-free —
-      * the screen already reads dfd through a per-term sum), fwd
-      * rewritten to bounded file count. A steady batch stream otherwise
-      * accumulates ≤ NumBuckets files per append and every screen's
-      * bucket-pruned scans pay the file-open count back. Same atomicity
-      * caveat as [[append]] (documented above): the rewrite-and-swap is
+    /** Compact the append-only state ([[PostingsStore.compact]]):
+      * postings rewritten to one file per bucket, df DELTAS rolled up to
+      * one row per term (semantics-free — the screen already reads dfd
+      * through a per-term sum, and reads the dropped df = 0 rows of
+      * fully-deleted terms as absent), fwd rewritten to bounded file
+      * count, the tombstoned docs' rows ([[delete]]) dropped physically
+      * (their deltas were applied at delete time) and the tombstone list
+      * retired last. Same atomicity caveat as [[append]]: the rewrite-and-swap is
       * not crash-atomic — a crash between a delete and its move loses a
       * dir and the next screen fails LOUDLY (no silent wrong answers;
       * production wraps state transitions in a transactional table
@@ -1388,22 +1344,10 @@ object Retrieval {
       // rows would fold the inconsistency into the rolled-up deltas of a
       // dir that must be delete-and-reseeded anyway — refuse first.
       requireNoTornAppend()
-      // liveView: tombstoned docs' rows ([[delete]]) drop physically here;
-      // their df/stats deltas were already applied at delete time, so the
-      // drop is purely the mask becoming material. df = 0 rows
-      // (fully-deleted terms) drop too: the screen's dftV already reads
-      // them as absent, so the rollup filter is semantics-free.
-      StandingIndex.compactTable(s, base, "postings", "bucket", liveView)
-      StandingIndex.compactTable(s, base, "dfd", "bucket",
-        _.groupBy("bucket", "term").agg(sum("df").as("df"))
-          .filter(col("df") =!= 0L))
-      StandingIndex.compactFlat(s, base, "fwd", liveView)
-      // The tombstone list retires LAST — its exclusions are baked into
-      // the rewritten tables above. (Before any swap, compaction refuses
-      // on a torn intent; a crash between the fwd swap and this delete
-      // leaves surviving tombstones whose anti-joins are now no-ops —
-      // harmless, drained by the next compaction.)
-      graft.Fs.deleteRec(java.nio.file.Paths.get(tombsDir))
+      // A crash between the fwd swap and the tombstone retire leaves
+      // surviving tombstones whose anti-joins are now no-ops — harmless,
+      // drained by the next compaction.
+      store.compact()
     }
 
     /** (doc_id, top_match, top_score) of each arrival against the standing
@@ -1417,16 +1361,18 @@ object Retrieval {
       // data (the same bound the broadcast twin's append collect takes),
       // and the handle that turns both standing-side scans into
       // path-pruned reads and the df view into a keyed sum.
-      val pruned = StandingIndex.slice(s, base, qt.select("term"), "term",
-        NumBuckets)
+      val pruned = store.slice(qt.select("term"))
       // CACHE the pruned views for the batch: stage 1 drives several
       // driver actions (term-class collects, the doc-mask, the wave
       // percentile, the kernel slice) and each would otherwise re-read
       // the bucket slice and re-aggregate the df deltas from parquet —
       // the exact role ix.tf/ix.dft's caches play in the static gate.
       // Batch-scoped: the gate releases TrackedCaches after each write.
+      // Tombstoned docs ([[delete]]) are masked here, the one postings
+      // entry point: fwd reads are candidate-driven, and a masked doc can
+      // never become a candidate.
       val tfV = graft.TrackedCaches.track(
-        liveView(pruned.read("postings")).cache())
+        store.live(pruned.read("postings")).cache())
       // The df view's one consumer joins it to the batch's terms (qd),
       // so it is the keyed sum over those terms alone, never the whole
       // bucket slice of dfd. (tfV stays the whole slice: the wave cutoff
@@ -1447,7 +1393,7 @@ object Retrieval {
       // (kout / topA / topB) carry their own caches.
       val qd = graft.TrackedCaches.track(subCeilingQueryDf(bix, qt).cache())
       val cand = screenCandidatesQd(bix, qd)
-      val scores = scoreCandidatesQd(bix, s.read.parquet(fwdDir), qd, cand)
+      val scores = scoreCandidatesQd(bix, store.read("fwd"), qd, cand)
       val top = graft.plans.TopKPerKey.topKPerKey(scores, 1, Seq("query_id"),
           Seq("score" -> false, "doc_id" -> true))
         .select(col("query_id").as("doc_id"), col("doc_id").as("top_match"),
@@ -1465,6 +1411,17 @@ object Retrieval {
       * batch touching V terms reads ~min(V, 64)/64 of the standing
       * postings, fine enough that per-append file counts stay sane. */
     val NumBuckets = 64
+
+    /** The tables the class scaladoc describes. */
+    val Tables = Seq(
+      PostingsStore.Table("postings", keyed = true,
+        Seq("doc_id" -> LongType, "term" -> StringType, "tf" -> LongType)),
+      PostingsStore.Table("dfd", keyed = true,
+        Seq("term" -> StringType, "df" -> LongType), sum = Some("df")),
+      PostingsStore.Table("fwd", keyed = false,
+        Seq("doc_id" -> LongType, "len" -> LongType, "terms" -> ArrayType(
+          StructType(Seq(StructField("term", StringType),
+            StructField("tf", LongType)))))))
   }
 
   /** Unsigned-UTF-8 term comparison — the binary ordering Spark's
@@ -1934,7 +1891,7 @@ object Retrieval {
     * built from this corpus (same dir, same corpus-file content
     * signature — an in-place rewrite with the same doc count still
     * rebuilds — and same bucket count). One write task per bucket dir
-    * ([[StandingIndex.writeBucketed]]), so the layout is ≤ nBuckets
+    * ([[PostingsStore.write]]), so the layout is ≤ nBuckets
     * files per table at any corpus scale. A probe reads the buckets its
     * query terms hash into, so the count follows the corpus, not the
     * query: it is sized from the corpus bytes
@@ -1959,18 +1916,32 @@ object Retrieval {
       nBuckets: Int): Unit = {
     val ix = buildIndex(Tables.documents(s, d).select("doc_id", "text"),
       cache = true)
-    StandingIndex.writeBucketed(ix.tf, col("term"), nBuckets,
-      s"$base/postings")
-    StandingIndex.writeBucketed(ix.dft, col("term"), nBuckets,
-      s"$base/dft")
     StandingIndex.recordStats(base,
       "n" -> ix.n, "avgLen" -> ix.avgLen, "buckets" -> nBuckets)
+    val store = bm25Store(s, base)
+    store.write("postings", ix.tf)
+    store.write("dft", ix.dft)
   }
 
   /** Build marker of a BM25 index over corpus dir `d`; the delete query
     * extends it with the phase it reached. */
   private def bm25Marker(d: String, nBuckets: Int): String =
     s"dir=$d ${StandingIndex.layoutMarker(s"$d/documents.parquet", nBuckets)}"
+
+  /** The BM25 index's tables: the frozen impact `postings/` and the
+    * per-term `dft/`, both written once by the build. */
+  private val Bm25Tables = Seq(
+    PostingsStore.Table("postings", keyed = true,
+      Seq("term" -> StringType, "doc_id" -> LongType, "tf" -> LongType,
+        "len" -> LongType, "df" -> LongType, "imp" -> LongType)),
+    PostingsStore.Table("dft", keyed = true,
+      Seq("term" -> StringType, "df" -> LongType)))
+
+  /** The store of the BM25 index at `base`, routed with the bucket count
+    * it was built with. */
+  private def bm25Store(s: SparkSession, base: String): PostingsStore =
+    new PostingsStore(s, base, "term", StandingIndex.stat(base, "buckets").toInt,
+      Bm25Tables)
 
   /** Probe-only ranked top-k against a standing index: tokenize the query
     * docs, prune BOTH standing scans to the query's term buckets (the
@@ -1984,12 +1955,12 @@ object Retrieval {
     // groupBy run once per probe.
     val qt = graft.TrackedCaches.track(postings(queryDocs)
       .select(col("doc_id").as("query_id"), col("term")).cache())
-    val pruned = StandingIndex.slice(s, base, qt, "term",
-      StandingIndex.stat(base, "buckets").toInt)
+    val store = bm25Store(s, base)
+    val pruned = store.slice(qt)
     // Tombstoned docs ([[bm25Delete]]) are masked here, the index's one
     // postings entry point; dft and the frozen stats pass through
     // untouched — the live-docs serving semantics.
-    val ix = Bm25Index(liveBm25Postings(s, base, pruned.read("postings")),
+    val ix = Bm25Index(store.live(pruned.read("postings")),
       pruned.read("dft"), StandingIndex.stat(base, "n").toLong,
       StandingIndex.stat(base, "avgLen").toDouble)
     graft.plans.TopKPerKey.ensureRegistered(s)
@@ -2016,14 +1987,6 @@ object Retrieval {
         .filter(col("doc_id") < NumQueries))
   }
 
-  /** Postings with the tombstoned docs ([[bm25Delete]]) masked — the one
-    * exclusion point [[bm25Probe]] reads through. The shared
-    * [[StandingIndex.liveRows]] mask: broadcast anti-join, pass-through
-    * when no delete ever ran. */
-  private def liveBm25Postings(s: SparkSession, base: String,
-      p: DataFrame): DataFrame =
-    StandingIndex.liveRows(s, s"$base/tombs", p, Seq("doc_id"))
-
   /** Delete documents from a standing BM25 impact index — the live-docs
     * model every static inverted index serves deletes with (Lucene's:
     * deleted docs are masked from results IMMEDIATELY; the scoring
@@ -2037,36 +2000,26 @@ object Retrieval {
     * ([[bm25DeleteSql]]) encodes exactly this: full-corpus statistics,
     * candidates minus the deleted slice.
     *
-    * Mechanics: the ids append to a doc-arity `tombs/` list that probes
-    * anti-join (broadcast — [[liveBm25Postings]]); [[bm25Compact]]
-    * physically drops the posting rows and retires the list. No deltas,
-    * no resolve pass (the postings are term-bucketed; a doc mask needs
-    * no cell lookup), so the delete is pure-mask: IDEMPOTENT,
-    * re-runnable after a crash, and a no-op for ids the index never
-    * held. An EMPTY delete is a hard no-op: writing zero rows could
-    * leave a data-less tombs dir (just `_SUCCESS`) that the mask's
-    * parquet read cannot even infer a schema from. */
+    * Mechanics: the ids append to the store's tombstones, which probes
+    * mask ([[PostingsStore.live]]) and [[bm25Compact]] drains. No deltas,
+    * so the delete is pure-mask: IDEMPOTENT, re-runnable after a crash,
+    * and a no-op for ids the index never held. An EMPTY delete is a hard
+    * no-op. */
   def bm25Delete(s: SparkSession, base: String, ids: DataFrame): Unit = {
     val d = ids.select("doc_id").distinct().localCheckpoint()
-    if (!d.isEmpty) d.write.mode("append").parquet(s"$base/tombs")
+    if (!d.isEmpty) bm25Store(s, base).delete(d)(Nil)
   }
 
-  /** Physically drop the tombstoned docs' posting rows (per-bucket
-    * rewrite) and retire the tombstone list. This index takes no appends
-    * (frozen impacts — its growth regime is [[EvolvingDistIndex]]), so
-    * draining deletes is compaction's ONLY job here. Impacts and stats
-    * are untouched: the frozen-stats semantics survive the rewrite,
-    * and probe answers are identical before and after (RetrievalSpec).
-    * Runs under the marker-suspend protocol (crash ⇒ unmarked,
-    * rebuildable dir). */
+  /** Physically drop the tombstoned docs' posting rows and retire the
+    * tombstone list ([[PostingsStore.compact]]) — compaction's ONLY job
+    * here, since this index takes no appends (its growth regime is
+    * [[EvolvingDistIndex]]). Impacts, dft and stats are untouched, so
+    * probe answers are identical before and after (RetrievalSpec). Runs
+    * under the marker-suspend protocol (crash ⇒ unmarked, rebuildable
+    * dir). */
   def bm25Compact(s: SparkSession, base: String): Unit =
     StandingIndex.withMarkerSuspended(base) {
-      val tombsDir = s"$base/tombs"
-      if (StandingIndex.hasParquetData(tombsDir)) {
-        StandingIndex.compactTable(s, base, "postings", "bucket",
-          liveBm25Postings(s, base, _))
-        graft.Fs.deleteRec(java.nio.file.Paths.get(tombsDir))
-      }
+      bm25Store(s, base).compact()
     }
 
   /** The shipped DELETE query (`q_bm25_standing_delete`): build the

@@ -5,11 +5,14 @@ import java.nio.file.{Files, Paths}
 import org.apache.spark.sql.{Column, DataFrame, GraftColumnBridge, SparkSession,
   functions}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.StructType
 
 /** The one module that knows what a standing (persisted, probe-only)
-  * directory holds. Five owners keep their state under it: [[AnnIndex]]
-  * (IVF cells), [[Dedup]]'s shingle index, [[Retrieval]]'s BM25 impact
-  * index, [[Retrieval.EvolvingDistIndex]] and [[Bpe]]'s merge table (the
+  * directory holds. [[AnnIndex]] (IVF cells) and [[Bpe]]'s merge table
+  * use it directly; the three term-keyed indexes — [[Dedup]]'s shingle
+  * index, [[Retrieval]]'s BM25 impact index and
+  * [[Retrieval.EvolvingDistIndex]] — keep their tables in a
+  * [[PostingsStore]] built on the writers, [[Slice]] and swap below (the
   * streaming landing zones stage through [[ensure]] too). The protocol:
   *
   *  - **Marker.** `base/_meta` holds the exact string a build was asked
@@ -39,24 +42,21 @@ import org.apache.spark.sql.functions._
   *    count beside the source bytes that chose it.
   *  - **Bucket-pruned reads.** [[slice]] collects the routing hashes of
   *    a key frame once and hands the reader only the `bucket=v`
-  *    directories they touch (basePath keeps the partition column), so
-  *    the driver never lists or footer-reads the others — measured on
-  *    the BM25 ladder: at 1024 buckets the full-table listing cost MORE
-  *    than the probe's data (5.5 → 3.1 s after the fix). The residual
-  *    isin filter stays as the in-plan partition predicate and the
-  *    plan-shape witness.
-  *  - **Batch-bounded reconciliation.** A batch of any real size touches
-  *    every bucket, so a bucket-pruned read is the whole table. The
-  *    delta tables are therefore read per key: [[Slice.keyed]] filters
-  *    the scan by the same hash set, and [[Slice.sum]] adds up a delta
-  *    table for the slice's keys in one aggregate that also carries the
-  *    key frame's own counts, so what it shuffles is bounded by the
-  *    batch's vocabulary at any corpus size.
-  *  - **Compaction.** Rewrite to a `_compact_*` temp, [[ensureReadable]],
-  *    rename-only swap ([[compactTable]], [[compactFlat]]); the marked
-  *    owners run it under [[withMarkerSuspended]].
-  *  - **Tombstones.** One mask ([[liveRows]]) and one re-delete refusal
-  *    ([[refuseRedelete]]).
+  *    directories they touch, so the driver never lists or footer-reads
+  *    the others — measured on the BM25 ladder: at 1024 buckets the
+  *    full-table listing cost MORE than the probe's data (5.5 → 3.1 s
+  *    after the fix). A batch of any real size touches every bucket, so
+  *    [[Slice.keyed]] and [[Slice.sum]] also filter the scan by the hash
+  *    set: what a batch shuffles is bounded by its vocabulary.
+  *  - **Declared schemas.** A read handed a table's schema (every
+  *    [[Slice]] read, [[prunedRead]], [[compactTable]], [[compactFlat]])
+  *    runs no schema-inference job and reads a data-less table as empty.
+  *    Only [[AnnIndex]] still reads by inference.
+  *  - **Compaction.** Rewrite to a `_compact_*` temp, rename-only swap
+  *    ([[compactTable]], [[compactFlat]]); the marked owners run it under
+  *    [[withMarkerSuspended]].
+  *  - **Tombstones.** One mask ([[liveRows]]), a broadcast anti-join.
+  *    The term-keyed owners' tombstones live in [[PostingsStore]].
   *
   * ==Concurrency contract: SINGLE WRITER, single process==
   *
@@ -255,16 +255,18 @@ private[graft] object StandingIndex {
     * they touch, with path-pruned reads of its tables restricted to them.
     * The slice holds the keys' routing hashes (`xxhash64`, the hash the
     * bucket expression takes modulo the count), so it names the buckets
-    * and filters the rows of those buckets from one driver-side set. */
+    * and filters the rows of those buckets from one driver-side set.
+    * `schemas` declares the read schema of every table it can read. */
   final class Slice private[StandingIndex] (s: SparkSession, base: String,
       keys: DataFrame, routing: String, hashes: Set[Long],
-      buckets: Seq[Long]) {
+      buckets: Seq[Long], schemas: Map[String, StructType]) {
     def isEmpty: Boolean = buckets.isEmpty
 
     /** `base/table` read through only this slice's bucket directories,
       * the partition column dropped. */
     def read(table: String): DataFrame =
-      prunedRead(s, s"$base/$table", "bucket", buckets).drop("bucket")
+      prunedRead(s, s"$base/$table", "bucket", buckets, Some(schemas(table)))
+        .drop("bucket")
 
     /** [[read]] restricted in the scan to the rows whose routing key
       * hashes like one of the slice's keys: every row of the keys, and a
@@ -303,12 +305,12 @@ private[graft] object StandingIndex {
     * the broadcast its callers' joins already take). The key frame's
     * other columns are the values [[Slice.sum]] adds up per key. */
   def slice(s: SparkSession, base: String, keys: DataFrame, routing: String,
-      nBuckets: Int): Slice = {
+      nBuckets: Int, schemas: Map[String, StructType]): Slice = {
     val hashes = keys.select(xxhash64(col(routing))).distinct()
       .collect().map(_.getLong(0)).toSet
     // floorMod is [[bucketOf]]'s pmod, taken on the driver.
     new Slice(s, base, keys, routing, hashes,
-      hashes.map(h => Math.floorMod(h, nBuckets.toLong)).toSeq.sorted)
+      hashes.map(h => Math.floorMod(h, nBuckets.toLong)).toSeq.sorted, schemas)
   }
 
   /** Run a state-rewriting maintenance `body` with the staleness marker
@@ -364,42 +366,39 @@ private[graft] object StandingIndex {
     * touched partition per commit (the measured pressure — ~447 files
     * per IVF append at the 100× ladder), and scan cost eventually tracks
     * file count, not bytes. Rewrite-to-temp, swap; the marked owners call
-    * it under [[withMarkerSuspended]]. */
+    * it under [[withMarkerSuspended]]. A table read with its declared
+    * `schema` reads as empty after a full purge; without one, the purged
+    * rewrite keeps a schema file ([[ensureReadable]]). */
   def compactTable(s: SparkSession, base: String, table: String,
-      part: String, xform: DataFrame => DataFrame = identity): Unit = {
-    val dir = s"$base/$table"
-    val tmp = s"$base/_compact_$table"
-    graft.Fs.deleteRec(Paths.get(tmp))
-    val out = xform(s.read.parquet(dir))
-    out.repartition(col(part))
-      .write.partitionBy(part).mode("overwrite").parquet(tmp)
-    // Dropping every row (a full purge) or compacting an already-empty
-    // table must not swap in a data-less dir — see [[ensureReadable]].
-    ensureReadable(s, tmp, out.schema, Some(part))
-    swapDirs(s, tmp, dir)
-  }
+      part: String, xform: DataFrame => DataFrame = identity,
+      schema: Option[StructType] = None): Unit =
+    compact(s, base, table, Some(part), xform, schema)
 
   /** Flat (non-partitioned) sibling of [[compactTable]] for tables with
     * no routing column (the shingle index's n0 and dig, the evolving
-    * index's fwd): rewrite through `xform`, guard the all-rows-dropped
-    * case, swap. */
+    * index's fwd). */
   def compactFlat(s: SparkSession, base: String, table: String,
-      xform: DataFrame => DataFrame = identity): Unit = {
+      xform: DataFrame => DataFrame = identity,
+      schema: Option[StructType] = None): Unit =
+    compact(s, base, table, None, xform, schema)
+
+  private def compact(s: SparkSession, base: String, table: String,
+      part: Option[String], xform: DataFrame => DataFrame,
+      schema: Option[StructType]): Unit = {
     val dir = s"$base/$table"
     val tmp = s"$base/_compact_$table"
     graft.Fs.deleteRec(Paths.get(tmp))
-    val out = xform(s.read.parquet(dir))
-    out.write.mode("overwrite").parquet(tmp)
-    ensureReadable(s, tmp, out.schema, None)
+    val out = xform(schema.fold(s.read)(s.read.schema(_)).parquet(dir))
+    part.fold(out.write)(p => out.repartition(col(p)).write.partitionBy(p))
+      .mode("overwrite").parquet(tmp)
+    if (schema.isEmpty) ensureReadable(s, tmp, out.schema, part)
     swapDirs(s, tmp, dir)
   }
 
   /** Swap a fully-written temp table into the live path by RENAMES
-    * only: live → aside, tmp → live, then delete the aside copy. The
-    * old swap deleted the live tree in place before the move, leaving
-    * a concurrent probe-only reader a missing-table window as long as
-    * an O(files) recursive delete; two metadata-cost renames shrink
-    * that window to a single rename gap. This is HARDENING, not a
+    * only: live → aside, tmp → live, then delete the aside copy, so a
+    * concurrent probe-only reader's missing-table window is a single
+    * rename gap, not an O(files) recursive delete. This is HARDENING, not a
     * cross-process guarantee — a reader listing exactly between the
     * two renames still misses the table (the single-writer contract
     * above stands; true concurrent serving during maintenance needs a
@@ -425,17 +424,7 @@ private[graft] object StandingIndex {
     s.catalog.refreshByPath(dir)
   }
 
-  // ── Tombstone protocol ─────────────────────────────────────────────
-  //
-  // One implementation of the delete idiom all four standing structures
-  // (shingle, BM25 impact, evolving decontam, IVF) serve deletes with: a
-  // takedown-arity tombstone table under the index dir, a broadcast
-  // anti-join at each structure's ONE postings entry point, the generic
-  // loud re-delete refusal, and a compaction guard that physically
-  // dropping every row can't brick the table. Family-specific delta
-  // arithmetic (shingle df re-shingle, evolving fwd-derived deltas,
-  // BM25's frozen-stats mask, IVF's per-cell slices) stays with the
-  // owners.
+  // ── Tombstones ────────────────────────────────────────────────────
 
   /** True iff `dir` holds at least one parquet DATA file (recursive) —
     * distinguishes "this table has rows on disk" from an absent dir AND
@@ -451,51 +440,25 @@ private[graft] object StandingIndex {
     finally st.close()
   }
 
-  /** The tombstone mask: `rows` anti-joined against the tombstone table
-    * at `tombsDir` on `keys` — the single exclusion point every postings
-    * consumer of a deleted-from index reads through. The list is
+  /** The tombstone mask: `rows` anti-joined against an owner's tombstone
+    * rows on `keys`, pass-through when it has none. The list is
     * takedown-arity tiny, so the anti-join side BROADCASTS (never a
-    * shuffle on the corpus side); pass-through when no delete ever ran
-    * (no dir, or a data-less one). Owners with a partitioned tombstone
-    * layout pass their own path-pruned slice as `tombs` (IVF probes
-    * prune to the probed cells) — the existence gate and join shape
-    * still come from here. */
-  def liveRows(s: SparkSession, tombsDir: String, rows: DataFrame,
-      keys: Seq[String], tombs: => Option[DataFrame] = None): DataFrame =
-    if (!hasParquetData(tombsDir)) rows
-    else rows.join(
-      broadcast(tombs.getOrElse(s.read.parquet(tombsDir))
-        .select(keys.map(col): _*)),
-      keys, "left_anti")
+    * shuffle on the corpus side). */
+  def liveRows(rows: DataFrame, keys: Seq[String],
+      tombs: Option[DataFrame]): DataFrame =
+    tombs.fold(rows)(t =>
+      rows.join(broadcast(t.select(keys.map(col): _*)), keys, "left_anti"))
 
-  /** Loud re-delete refusal shared by the delta-bearing deletes (shingle
-    * df deltas, evolving df/stats deltas): ids already tombstoned must
-    * refuse — re-applying their deltas would double-subtract. The tombs
-    * list is the replay witness; `recovery` names the owner's protocol
-    * for the torn case. Pure-mask deletes (BM25, IVF) are idempotent and
-    * never call this. */
-  def refuseRedelete(s: SparkSession, tombsDir: String, del: DataFrame,
-      key: String, what: String, recovery: String): Unit =
-    if (hasParquetData(tombsDir) &&
-        !s.read.parquet(tombsDir)
-          .join(del.select(key), Seq(key), "left_semi").isEmpty)
-      throw new IllegalStateException(
-        s"$what: some of these ${key}s are already tombstoned — a " +
-          "re-delete would double-subtract their deltas. " + recovery)
-
-  /** Post-rewrite guard for compactions that physically drop rows: when
-    * EVERY row was deleted (a legally-reached state — a purge of the
-    * whole population), a partitionBy write of the empty frame lands NO
-    * data file at all (only `_SUCCESS` — measured on Spark 4.1; flat
-    * writes DO emit a schema file) and the next read of the table dies
-    * on parquet schema inference, bricking the index with a confusing
-    * error instead of serving empty results. Keep one explicit empty
-    * but SCHEMAED file: inside a `part=0` partition dir for partitioned
-    * tables — the layout stays uniform, so partition discovery, pruned
-    * reads, and later partitioned appends all keep working (spec-pinned)
-    * — or flat for flat tables. No-op whenever any data file landed. */
-  def ensureReadable(s: SparkSession, dir: String,
-      schema: org.apache.spark.sql.types.StructType,
+  /** Post-rewrite guard for compactions of an undeclared table that drop
+    * EVERY row (a purge of the whole population): a partitionBy write of
+    * the empty frame lands NO data file (only `_SUCCESS` — measured on
+    * Spark 4.1), and the next inferring read would die on schema
+    * inference. Keep one empty but SCHEMAED file: inside a `part=0`
+    * partition dir for partitioned tables — the layout stays uniform, so
+    * partition discovery, pruned reads, and later partitioned appends all
+    * keep working (spec-pinned) — or flat for flat tables. No-op whenever
+    * any data file landed. */
+  private def ensureReadable(s: SparkSession, dir: String, schema: StructType,
       part: Option[String]): Unit =
     if (!hasParquetData(dir)) {
       val (target, fields) = part match {
@@ -503,7 +466,7 @@ private[graft] object StandingIndex {
         case None    => (dir, schema.fields)
       }
       s.createDataFrame(new java.util.ArrayList[org.apache.spark.sql.Row](),
-        org.apache.spark.sql.types.StructType(fields))
+        StructType(fields))
         .coalesce(1).write.mode("append").parquet(target)
     }
 
@@ -513,13 +476,15 @@ private[graft] object StandingIndex {
     * don't join on it drop the column). Falls back to a full
     * (partition-filtered) read when none of the probed directories
     * exist, which also covers reading a layout written before any
-    * matching value existed. */
+    * matching value existed. `schema` declares the table's read schema
+    * (partition column included); without one the read infers it. */
   def prunedRead(s: SparkSession, tableDir: String, part: String,
-      values: Seq[Long]): DataFrame = {
+      values: Seq[Long], schema: Option[StructType] = None): DataFrame = {
     val paths = values.map(v => s"$tableDir/$part=$v")
       .filter(p => Files.isDirectory(Paths.get(p)))
-    val raw = if (paths.isEmpty) s.read.parquet(tableDir)
-      else s.read.option("basePath", tableDir).parquet(paths: _*)
+    val reader = schema.fold(s.read)(s.read.schema(_))
+    val raw = if (paths.isEmpty) reader.parquet(tableDir)
+      else reader.option("basePath", tableDir).parquet(paths: _*)
     raw.filter(col(part).isin(values: _*))
   }
 }

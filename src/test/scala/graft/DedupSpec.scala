@@ -819,12 +819,12 @@ class DedupSpec extends SparkSpec {
   test("empty shingle delete against a not-yet-built base is the " +
       "documented no-op") {
     import spark.implicits._
-    val base = java.nio.file.Files
-      .createTempDirectory("graft_shingle_nobase").toString + "/nothere"
+    val dir = java.nio.file.Files.createTempDirectory("graft_shingle_nobase")
     // Decided before any index file is touched — must not throw on the
     // missing _stats of a base that was never built.
-    Dedup.shingleDelete(spark, base,
+    try Dedup.shingleDelete(spark, s"$dir/nothere",
       Seq.empty[(Long, String)].toDF("doc_id", "text"))
+    finally graft.Fs.deleteRec(dir)
   }
 
   // ── Standing shingle index: what one operation costs ──
@@ -832,28 +832,6 @@ class DedupSpec extends SparkSpec {
   // standing delta tables; these specs pin that the reconciliation reads
   // and shuffles the batch's own keys, not the corpus, and that none of
   // the three gains a Spark job unnoticed.
-
-  /** Spark jobs started and shuffle bytes written by `body`. */
-  private def metered(body: => Unit): (Int, Long) = {
-    val jobs = new java.util.concurrent.atomic.AtomicInteger(0)
-    val bytes = new java.util.concurrent.atomic.AtomicLong(0L)
-    val listener = new org.apache.spark.scheduler.SparkListener {
-      override def onJobStart(
-          e: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
-        jobs.incrementAndGet()
-      override def onTaskEnd(
-          e: org.apache.spark.scheduler.SparkListenerTaskEnd): Unit =
-        if (e.taskMetrics != null)
-          bytes.addAndGet(e.taskMetrics.shuffleWriteMetrics.bytesWritten)
-    }
-    org.apache.spark.SpecListenerBus.drain(spark.sparkContext)
-    spark.sparkContext.addSparkListener(listener)
-    try {
-      body
-      org.apache.spark.SpecListenerBus.drain(spark.sparkContext)
-    } finally spark.sparkContext.removeSparkListener(listener)
-    (jobs.get(), bytes.get())
-  }
 
   /** A corpus dir of `nCorpus` docs over a 40-word vocabulary plus
     * `nExtra` docs whose words occur nowhere else, and a 40-doc arrival
@@ -934,9 +912,10 @@ class DedupSpec extends SparkSpec {
     try {
       // Jobs with AQE off (adaptive execution adds one per shuffle stage,
       // and their number follows thread timing). The probe counts its
-      // write; all three count their reads' schema-inference jobs. Before
-      // the keyed sums: probe 10, commit 14, delete 18.
-      val pinned = Map("probe" -> 10, "commit" -> 13, "delete" -> 17)
+      // write. Every read passes its declared schema, so none runs a
+      // schema-inference job. Before the keyed sums: probe 10, commit 14,
+      // delete 18; before the declared schemas: 10, 13, 17.
+      val pinned = Map("probe" -> 7, "commit" -> 12, "delete" -> 14)
       operationCosts(dir, batch).foreach { case (op, (jobs, _)) =>
         info(s"$op: $jobs jobs")
         assert(jobs <= pinned(op),

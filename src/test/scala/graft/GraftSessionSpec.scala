@@ -92,6 +92,26 @@ class GraftSessionSpec extends SparkSpec {
       offenders.mkString("; "))
   }
 
+  test("the postings store's protocol stays in the store") {
+    // Tombstone masks, re-delete refusals, compactions and bucketed
+    // writes of the term-keyed indexes go through PostingsStore; only
+    // StandingIndex (which defines them) and AnnIndex (the IVF cell
+    // layout, not term-keyed) call them directly.
+    val calls =
+      """\b(liveRows|refuseRedelete|compactTable|compactFlat|appendBucketed|writeBucketed)\s*\(""".r
+    val tombs = """/tombs\b""".r
+    val owners = Set("StandingIndex.scala", "PostingsStore.scala", "AnnIndex.scala")
+    val offenders = scalaFiles("src/main/scala")
+      .filterNot(p => owners(p.getFileName.toString))
+      .flatMap { p =>
+        val t = text(p)
+        (calls.findAllMatchIn(t) ++ tombs.findAllMatchIn(t))
+          .map(m => s"${p.getFileName}: ${m.matched}")
+      }
+    assert(offenders.isEmpty, s"postings-store protocol outside the store: " +
+      offenders.mkString("; "))
+  }
+
   test("one module owns the gate lifecycle") {
     // Under graft/streaming only Zone.scala (the gate driver) declares the
     // snapshot test hook, destroys a broadcast, reads a gate's verdict

@@ -1,12 +1,9 @@
 package graft
 
 import graft.ops.Quality
-import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.execution.FileSourceScanExec
 import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
 import org.apache.spark.sql.functions._
-
-import java.util.concurrent.atomic.AtomicInteger
 
 /** The DQ audit must be ONE lazy plan, not a sequence of driver actions:
   * at 100 TB, seven .count() calls are seven full-table jobs where one
@@ -14,32 +11,22 @@ import java.util.concurrent.atomic.AtomicInteger
 class QualitySpec extends SparkSpec with AdaptiveSparkPlanHelper {
 
   test("dqReport builds lazily — no jobs beyond bare table-read metadata") {
-    val jobs = new AtomicInteger(0)
-    val listener = new SparkListener {
-      override def onJobStart(jobStart: SparkListenerJobStart): Unit =
-        jobs.incrementAndGet()
-    }
     // spark.read.parquet itself runs tiny schema-inference jobs; measure that
     // floor first, then assert the report build adds NOTHING on top (i.e. no
     // .count()-style actions hidden in the builder).
-    spark.sparkContext.addSparkListener(listener)
-    try {
-      // Same table-read sequence the two builders perform (report: 4 tables,
-      // detect: lineitem + orders again).
+    // Same table-read sequence the two builders perform (report: 4 tables,
+    // detect: lineitem + orders again).
+    val (metadataFloor, _) = metered(
       Seq("lineitem", "orders", "customer", "nation", "lineitem", "orders")
-        .foreach(t => Tables.load(spark, Sf, t))
-      Thread.sleep(1000) // listener events post asynchronously
-      val metadataFloor = jobs.get()
-      val df = Quality.dqReport(spark, Sf)
-      val detect = Quality.dqDetect(spark, Sf)
-      Thread.sleep(1000)
-      val buildJobs = jobs.get() - metadataFloor
-      assert(buildJobs <= metadataFloor,
-        s"dqReport+dqDetect build ran $buildJobs jobs vs read floor " +
-          s"$metadataFloor — driver-side actions crept back in")
-      assert(df.columns.toSeq == Seq("check_name", "violations"))
-      assert(detect.columns.toSeq == Seq("check_name", "violations"))
-    } finally spark.sparkContext.removeSparkListener(listener)
+        .foreach(t => Tables.load(spark, Sf, t)))
+    lazy val df = Quality.dqReport(spark, Sf)
+    lazy val detect = Quality.dqDetect(spark, Sf)
+    val (buildJobs, _) = metered { df; detect }
+    assert(buildJobs <= metadataFloor,
+      s"dqReport+dqDetect build ran $buildJobs jobs vs read floor " +
+        s"$metadataFloor — driver-side actions crept back in")
+    assert(df.columns.toSeq == Seq("check_name", "violations"))
+    assert(detect.columns.toSeq == Seq("check_name", "violations"))
   }
 
   test("dqReport scans each table a bounded number of times") {

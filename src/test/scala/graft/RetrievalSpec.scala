@@ -869,4 +869,47 @@ class RetrievalSpec extends SparkSpec with AdaptiveSparkPlanHelper {
     ix.delete(Seq(1L).toDF("doc_id"))
     graft.Fs.deleteRec(java.nio.file.Paths.get(base))
   }
+
+  test("jobs per standing BM25 and evolving operation are pinned (AQE off)") {
+    val docs = Tables.documents(spark, Sf).select("doc_id", "text")
+    val bm25 = java.nio.file.Files.createTempDirectory("graft_bm25_jobs")
+    val evo = java.nio.file.Files.createTempDirectory("graft_evodist_jobs")
+    val aqe = spark.conf.get("spark.sql.adaptive.enabled")
+    spark.conf.set("spark.sql.adaptive.enabled", "false")
+    try {
+      Retrieval.bm25BuildIfStale(spark, Sf, bm25.toString, 4)
+      val ix = new Retrieval.EvolvingDistIndex(spark, evo.toString)
+      ix.append(docs.filter(col("doc_id") % 5 =!= 0))
+      val arrivals = docs.filter(col("doc_id") % 5 === 0)
+      val deleted = docs.filter(col("doc_id") % 5 =!= 0 && col("doc_id") % 9 === 4)
+        .select("doc_id")
+      // Jobs with AQE off (adaptive execution adds one per shuffle stage,
+      // and their number follows thread timing). Probe and screen count
+      // their collect.
+      val costs = Seq(
+        "bm25 probe" -> metered(Retrieval.bm25Probe(spark, bm25.toString,
+          docs.filter(col("doc_id") < 8)).collect()),
+        "bm25 delete" -> metered(Retrieval.bm25Delete(spark, bm25.toString, deleted)),
+        "bm25 compact" -> metered(Retrieval.bm25Compact(spark, bm25.toString)),
+        "evolving append" -> metered(ix.append(arrivals.filter(col("doc_id") % 10 === 0))),
+        "evolving screen" -> metered(ix.screen(arrivals.filter(col("doc_id") % 10 === 5))
+          .collect()),
+        "evolving delete" -> metered(ix.delete(deleted)),
+        "evolving compact" -> metered(ix.compact()))
+      // Pinned at the counts before the postings store declared its read
+      // schemas; those reads' inference jobs are gone now.
+      val pinned = Map("bm25 probe" -> 7, "bm25 delete" -> 3, "bm25 compact" -> 4,
+        "evolving append" -> 3, "evolving screen" -> 12, "evolving delete" -> 10,
+        "evolving compact" -> 10)
+      costs.foreach { case (op, (jobs, _)) =>
+        info(s"$op: $jobs jobs")
+        assert(jobs <= pinned(op), s"$op ran $jobs Spark jobs, pinned at ${pinned(op)}")
+      }
+    } finally {
+      spark.conf.set("spark.sql.adaptive.enabled", aqe)
+      graft.TrackedCaches.release()
+      graft.Fs.deleteRec(bm25)
+      graft.Fs.deleteRec(evo)
+    }
+  }
 }
