@@ -9,9 +9,17 @@ import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCo
   * stage's task binary and prints every member, sorted, each time the plan
   * is described (every adaptive re-plan posts a description). Here a plan
   * string shows only the key count, so a batch vocabulary of any size
-  * costs the driver nothing per description. */
+  * costs the driver nothing per description. Equality and hash compare
+  * the keys' contents, so plan comparison sees equal predicates as equal. */
 case class LongIn(child: Expression, keys: Array[Long])
     extends UnaryExpression with Predicate {
+
+  override def equals(o: Any): Boolean = o match {
+    case that: LongIn => child == that.child && java.util.Arrays.equals(keys, that.keys)
+    case _ => false
+  }
+
+  override def hashCode(): Int = 31 * child.hashCode + java.util.Arrays.hashCode(keys)
 
   override def nullIntolerant: Boolean = true
 

@@ -383,18 +383,14 @@ object Bm25Fold {
   }
 }
 
-/** Column form of [[Bm25Fold.microSum]]; `n`/`avgLen` are literal
-  * parameters exactly as the fold embedded them (Double.toString
-  * round-trips, so codegen and eval see the same constants). */
+/** Column form of [[Bm25Fold.microSum]]; `n`/`avgLen` are per-call
+  * constants that the generated code takes as references, not as source
+  * text, so every corpus size shares one compiled class. */
 case class Bm25FoldMicros(first: Expression, second: Expression,
     third: Expression, n: Long, avgLen: Double)
     extends org.apache.spark.sql.catalyst.expressions.TernaryExpression {
 
-  // doGenCode interpolates avgLen via Double.toString: a NaN/Infinite
-  // value (an empty index's 0/0) would emit uncompilable Java ("NaND")
-  // and force a codegen-compile failure + interpreted fallback at every
-  // call site. Fail loudly at construction instead — an index with no
-  // documents has no meaningful BM25 score anyway (ADVICE r16).
+  // A non-finite avgLen is an empty index's 0/0, which has no BM25 score.
   require(java.lang.Double.isFinite(avgLen),
     s"bm25_fold_micros: avgLen must be finite, got $avgLen " +
       "(empty index? build stats before scoring)")
@@ -429,9 +425,13 @@ case class Bm25FoldMicros(first: Expression, second: Expression,
     java.lang.Long.valueOf(Bm25Fold.microSum(d.asInstanceOf[ArrayData],
       q.asInstanceOf[ArrayData], l.asInstanceOf[Long], n, avgLen))
 
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
+  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
+    val nRef = ctx.addReferenceObj("n", Long.box(n), "java.lang.Long")
+    val avgRef = ctx.addReferenceObj("avgLen", Double.box(avgLen), "java.lang.Double")
     nullSafeCodeGen(ctx, ev, (d, q, l) =>
-      s"${ev.value} = graft.functions.Bm25Fold.microSum($d, $q, $l, ${n}L, ${avgLen}D);")
+      s"${ev.value} = graft.functions.Bm25Fold.microSum($d, $q, $l, " +
+        s"$nRef.longValue(), $avgRef.doubleValue());")
+  }
 
   override protected def withNewChildrenInternal(newFirst: Expression,
       newSecond: Expression, newThird: Expression): Bm25FoldMicros =

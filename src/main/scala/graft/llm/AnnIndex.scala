@@ -2,7 +2,7 @@ package graft.llm
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.StringType
+import org.apache.spark.sql.types._
 
 import graft.Tables
 import graft.functions.VectorFunctions.floatCosine
@@ -29,6 +29,8 @@ import graft.functions.VectorFunctions.floatCosine
   *                     (`cell=<id>/part-*.parquet`, one file per cell:
   *                     the build repartitions on the partition column
   *                     first, so appends never small-file-storm)
+  *   base/tombstones/  deleted vec_ids, cell-partitioned ([[delete]]),
+  *                     absent until a delete, retired by [[compact]]
   *   marker + stats    [[StandingIndex]]'s: the marker holds corpus
   *                     dir + content signature (a probe against a
   *                     changed corpus rebuilds instead of serving a
@@ -58,12 +60,21 @@ object AnnIndex {
   private def cellsDir(base: String)     = s"$base/cells"
   private def tombsDir(base: String)     = s"$base/tombstones"
 
-  /** True iff the tombstones table holds at least one data file — an
-    * empty delete (ids matching nothing) leaves only a `_SUCCESS`
-    * marker, which must read as "no tombstones". The shared
-    * [[StandingIndex.hasParquetData]] witness. */
-  private def hasTombstones(base: String): Boolean =
-    StandingIndex.hasParquetData(tombsDir(base))
+  /** The declared schemas every read of the three tables passes; `cell`
+    * is typed as partition discovery infers it. */
+  private val CentroidsSchema = StructType(Seq(
+    StructField("cent_id", IntegerType), StructField("carr", ArrayType(LongType))))
+  private val CellsSchema = StructType(Seq(StructField("vec_id", LongType),
+    StructField("embedding", ArrayType(FloatType)), StructField("cell", IntegerType)))
+  private val TombstonesSchema = StructType(Seq(
+    StructField("vec_id", LongType), StructField("cell", IntegerType)))
+
+  /** The tombstones read by `read`, None before any delete; an empty
+    * delete's data-less table reads as empty. */
+  private def tombstones(base: String)(read: String => DataFrame): Option[DataFrame] =
+    if (java.nio.file.Files.isDirectory(java.nio.file.Paths.get(tombsDir(base))))
+      Some(read(tombsDir(base)))
+    else None
 
   /** Build the index at `base` unless its marker shows it was already
     * built from this corpus (same dir, same corpus-file content signature
@@ -127,7 +138,7 @@ object AnnIndex {
     * reference). Arrival vec_ids must be disjoint from the standing
     * corpus. */
   def append(s: SparkSession, base: String, arrivals: DataFrame): Unit = {
-    val cents = s.read.parquet(centroidsDir(base))
+    val cents = s.read.schema(CentroidsSchema).parquet(centroidsDir(base))
     // Materialize the arrival slice ONCE: it fans out to two consumers
     // (the quantize/argmin branch and the embedding join-back), and when
     // the caller passes a filter over the corpus table an uncut lineage
@@ -177,7 +188,7 @@ object AnnIndex {
     *    still contains the rows resurrects them, so a durable takedown
     *    must also purge the source table. */
   def delete(s: SparkSession, base: String, ids: DataFrame): Unit = {
-    s.read.parquet(cellsDir(base))
+    s.read.schema(CellsSchema).parquet(cellsDir(base))
       .select(col("cell"), col("vec_id"))
       .join(broadcast(ids.select("vec_id").distinct()), "vec_id")
       .select(col("cell"), col("vec_id"))
@@ -195,7 +206,7 @@ object AnnIndex {
     * (query_id, neighbor_id, cos) contract. */
   def probe(s: SparkSession, base: String, queries: DataFrame): DataFrame = {
     val n = StandingIndex.stat(base, "n").toLong
-    val cents = s.read.parquet(centroidsDir(base))
+    val cents = s.read.schema(CentroidsSchema).parquet(centroidsDir(base))
     // The annIvf-identical budget: from the corpus count the index was
     // built over, never from surviving centroid rows (scaladoc above).
     val nprobe = probesFor(centroidsFor(n))
@@ -219,11 +230,9 @@ object AnnIndex {
     // path-pruned to the probed cells like the data itself — the
     // exclusion reads O(tombstones in probed cells), broadcast.
     val candidates = StandingIndex.liveRows(
-      StandingIndex.prunedRead(s, cellsDir(base), "cell", probed),
+      StandingIndex.prunedRead(s, cellsDir(base), "cell", probed, CellsSchema),
       Seq("cell", "vec_id"),
-      if (hasTombstones(base))
-        Some(StandingIndex.prunedRead(s, tombsDir(base), "cell", probed))
-      else None)
+      tombstones(base)(StandingIndex.prunedRead(s, _, "cell", probed, TombstonesSchema)))
     candidates
       .join(broadcast(q), Seq("cell"))
       .filter(col("vec_id") =!= col("query_id"))
@@ -250,9 +259,9 @@ object AnnIndex {
     * semantics. */
   def compact(s: SparkSession, base: String): Unit =
     StandingIndex.withMarkerSuspended(base) {
-      StandingIndex.compactTable(s, base, "cells", "cell",
+      StandingIndex.compactTable(s, base, "cells", "cell", CellsSchema,
         StandingIndex.liveRows(_, Seq("cell", "vec_id"),
-          if (hasTombstones(base)) Some(s.read.parquet(tombsDir(base))) else None))
+          tombstones(base)(s.read.schema(TombstonesSchema).parquet(_))))
       graft.Fs.deleteRec(java.nio.file.Paths.get(tombsDir(base)))
     }
 

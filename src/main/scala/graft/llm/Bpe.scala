@@ -3,6 +3,7 @@ package graft.llm
 import graft.Tables
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types._
 
 /** Byte-pair-encoding merge TRAINING over the documents corpus — the
   * subword-tokenizer-construction step of an LLM data pipeline, run as a
@@ -128,6 +129,11 @@ object Bpe {
       .orderBy("doc_id")
   }
 
+  /** The merge table as [[bpeMerges]] writes it. */
+  private val MergesSchema = StructType(Seq(StructField("rank", IntegerType),
+    StructField("left_unit", StringType), StructField("right_unit", StringType),
+    StructField("n_occurrences", LongType), StructField("units_after", LongType)))
+
   /** STANDING tokenizer (`q_bpe_standing`) — the fourth standing index,
     * and the smallest: the trained merge table persisted once under a
     * content-signature marker ([[StandingIndex]] discipline), apply-only
@@ -148,7 +154,7 @@ object Bpe {
     StandingIndex.ensure(base, s"dir=$d sig=$sig rounds=$MergeRounds") {
       bpeMerges(s, d).write.mode("overwrite").parquet(s"$base/merges")
     }
-    val merges = s.read.parquet(s"$base/merges").orderBy("rank")
+    val merges = s.read.schema(MergesSchema).parquet(s"$base/merges").orderBy("rank")
       .select("left_unit", "right_unit")
       .collect().map(r => (r.getString(0), r.getString(1))).toSeq
     bpeApplyWith(Tables.documents(s, d).select("doc_id", "text"), merges)

@@ -113,8 +113,8 @@ private[graft] final class PostingsStore(s: SparkSession, base: String,
         if (holdsDocs(t)) live(rolled) else rolled
       }
       if (t.keyed)
-        StandingIndex.compactTable(s, base, t.name, "bucket", rewrite, Some(t.schema))
-      else StandingIndex.compactFlat(s, base, t.name, rewrite, Some(t.schema))
+        StandingIndex.compactTable(s, base, t.name, "bucket", t.schema, rewrite)
+      else StandingIndex.compactFlat(s, base, t.name, t.schema, rewrite)
     }
     graft.Fs.deleteRec(tombsDir)
   }

@@ -48,10 +48,10 @@ import org.apache.spark.sql.types.StructType
   *    after the fix). A batch of any real size touches every bucket, so
   *    [[Slice.keyed]] and [[Slice.sum]] also filter the scan by the hash
   *    set: what a batch shuffles is bounded by its vocabulary.
-  *  - **Declared schemas.** A read handed a table's schema (every
-  *    [[Slice]] read, [[prunedRead]], [[compactTable]], [[compactFlat]])
-  *    runs no schema-inference job and reads a data-less table as empty.
-  *    Only [[AnnIndex]] still reads by inference.
+  *  - **Declared schemas.** Owners declare each table's schema beside
+  *    its writer and every read passes it ([[Slice]], [[prunedRead]],
+  *    [[compactTable]], [[compactFlat]]): no schema-inference job runs, a
+  *    data-less table reads as empty, and a drifted file fails the read.
   *  - **Compaction.** Rewrite to a `_compact_*` temp, rename-only swap
   *    ([[compactTable]], [[compactFlat]]); the marked owners run it under
   *    [[withMarkerSuspended]].
@@ -265,7 +265,7 @@ private[graft] object StandingIndex {
     /** `base/table` read through only this slice's bucket directories,
       * the partition column dropped. */
     def read(table: String): DataFrame =
-      prunedRead(s, s"$base/$table", "bucket", buckets, Some(schemas(table)))
+      prunedRead(s, s"$base/$table", "bucket", buckets, schemas(table))
         .drop("bucket")
 
     /** [[read]] restricted in the scan to the rows whose routing key
@@ -366,32 +366,29 @@ private[graft] object StandingIndex {
     * touched partition per commit (the measured pressure — ~447 files
     * per IVF append at the 100× ladder), and scan cost eventually tracks
     * file count, not bytes. Rewrite-to-temp, swap; the marked owners call
-    * it under [[withMarkerSuspended]]. A table read with its declared
-    * `schema` reads as empty after a full purge; without one, the purged
-    * rewrite keeps a schema file ([[ensureReadable]]). */
+    * it under [[withMarkerSuspended]]. Read with its declared `schema`,
+    * a fully purged table is data-less, reads as empty and takes appends. */
   def compactTable(s: SparkSession, base: String, table: String,
-      part: String, xform: DataFrame => DataFrame = identity,
-      schema: Option[StructType] = None): Unit =
-    compact(s, base, table, Some(part), xform, schema)
+      part: String, schema: StructType,
+      xform: DataFrame => DataFrame = identity): Unit =
+    compact(s, base, table, Some(part), schema, xform)
 
   /** Flat (non-partitioned) sibling of [[compactTable]] for tables with
     * no routing column (the shingle index's n0 and dig, the evolving
     * index's fwd). */
   def compactFlat(s: SparkSession, base: String, table: String,
-      xform: DataFrame => DataFrame = identity,
-      schema: Option[StructType] = None): Unit =
-    compact(s, base, table, None, xform, schema)
+      schema: StructType, xform: DataFrame => DataFrame = identity): Unit =
+    compact(s, base, table, None, schema, xform)
 
   private def compact(s: SparkSession, base: String, table: String,
-      part: Option[String], xform: DataFrame => DataFrame,
-      schema: Option[StructType]): Unit = {
+      part: Option[String], schema: StructType,
+      xform: DataFrame => DataFrame): Unit = {
     val dir = s"$base/$table"
     val tmp = s"$base/_compact_$table"
     graft.Fs.deleteRec(Paths.get(tmp))
-    val out = xform(schema.fold(s.read)(s.read.schema(_)).parquet(dir))
+    val out = xform(s.read.schema(schema).parquet(dir))
     part.fold(out.write)(p => out.repartition(col(p)).write.partitionBy(p))
       .mode("overwrite").parquet(tmp)
-    if (schema.isEmpty) ensureReadable(s, tmp, out.schema, part)
     swapDirs(s, tmp, dir)
   }
 
@@ -426,20 +423,6 @@ private[graft] object StandingIndex {
 
   // ── Tombstones ────────────────────────────────────────────────────
 
-  /** True iff `dir` holds at least one parquet DATA file (recursive) —
-    * distinguishes "this table has rows on disk" from an absent dir AND
-    * from a data-less write (`_SUCCESS` only), which a parquet read
-    * cannot even infer a schema from. File metadata only — safe on
-    * every serving call. */
-  def hasParquetData(dir: String): Boolean = {
-    val p = Paths.get(dir)
-    if (!Files.isDirectory(p)) return false
-    val st = Files.walk(p)
-    try st.anyMatch(q => q.toString.endsWith(".parquet") &&
-      Files.isRegularFile(q))
-    finally st.close()
-  }
-
   /** The tombstone mask: `rows` anti-joined against an owner's tombstone
     * rows on `keys`, pass-through when it has none. The list is
     * takedown-arity tiny, so the anti-join side BROADCASTS (never a
@@ -449,27 +432,6 @@ private[graft] object StandingIndex {
     tombs.fold(rows)(t =>
       rows.join(broadcast(t.select(keys.map(col): _*)), keys, "left_anti"))
 
-  /** Post-rewrite guard for compactions of an undeclared table that drop
-    * EVERY row (a purge of the whole population): a partitionBy write of
-    * the empty frame lands NO data file (only `_SUCCESS` — measured on
-    * Spark 4.1), and the next inferring read would die on schema
-    * inference. Keep one empty but SCHEMAED file: inside a `part=0`
-    * partition dir for partitioned tables — the layout stays uniform, so
-    * partition discovery, pruned reads, and later partitioned appends all
-    * keep working (spec-pinned) — or flat for flat tables. No-op whenever
-    * any data file landed. */
-  private def ensureReadable(s: SparkSession, dir: String, schema: StructType,
-      part: Option[String]): Unit =
-    if (!hasParquetData(dir)) {
-      val (target, fields) = part match {
-        case Some(p) => (s"$dir/$p=0", schema.fields.filterNot(_.name == p))
-        case None    => (dir, schema.fields)
-      }
-      s.createDataFrame(new java.util.ArrayList[org.apache.spark.sql.Row](),
-        StructType(fields))
-        .coalesce(1).write.mode("append").parquet(target)
-    }
-
   /** Path-level pruned read of a `part`-partitioned table: only the
     * probed `part=value` directories are listed and read; the isin
     * filter remains as the in-plan partition predicate (callers that
@@ -477,12 +439,12 @@ private[graft] object StandingIndex {
     * (partition-filtered) read when none of the probed directories
     * exist, which also covers reading a layout written before any
     * matching value existed. `schema` declares the table's read schema
-    * (partition column included); without one the read infers it. */
+    * (partition column included). */
   def prunedRead(s: SparkSession, tableDir: String, part: String,
-      values: Seq[Long], schema: Option[StructType] = None): DataFrame = {
+      values: Seq[Long], schema: StructType): DataFrame = {
     val paths = values.map(v => s"$tableDir/$part=$v")
       .filter(p => Files.isDirectory(Paths.get(p)))
-    val reader = schema.fold(s.read)(s.read.schema(_))
+    val reader = s.read.schema(schema)
     val raw = if (paths.isEmpty) reader.parquet(tableDir)
       else reader.option("basePath", tableDir).parquet(paths: _*)
     raw.filter(col(part).isin(values: _*))

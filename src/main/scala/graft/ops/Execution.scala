@@ -170,20 +170,21 @@ object Execution {
     * the oracle hash gate proves the rewrite lost nothing. At 100 TB the
     * same two knobs (repartition width, maxRecordsPerFile) size output
     * files to the table's read pattern; the rewrite is one shuffle-free
-    * coalescing pass per partition of the fragmented input. */
+    * coalescing pass per partition of the fragmented input. Each call
+    * overwrites one fixed directory under `java.io.tmpdir`. */
   def compaction(s: SparkSession, d: String): DataFrame = {
-    val base = java.nio.file.Files.createTempDirectory("graft_compact").toString
+    val base = s"${System.getProperty("java.io.tmpdir")}/graft_compact"
     def nFiles(p: String): Int =
       new java.io.File(p).listFiles().count(_.getName.endsWith(".parquet"))
     Tables.events(s, d)
       .select(col("event_id"), col("event_type"),
         round(col("value") * 100, 0).cast(LongType).as("cents"))
       .repartition(64)
-      .write.parquet(s"$base/frag")
+      .write.mode("overwrite").parquet(s"$base/frag")
     val frag = nFiles(s"$base/frag")
     s.read.parquet(s"$base/frag")
       .coalesce(4)
-      .write.parquet(s"$base/opt")
+      .write.mode("overwrite").parquet(s"$base/opt")
     val opt = nFiles(s"$base/opt")
     require(frag >= 32 && opt * 8 <= frag,
       s"compaction must cut the file count >= 8x, got $frag -> $opt")

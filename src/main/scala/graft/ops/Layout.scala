@@ -66,13 +66,13 @@ object Layout {
       .withColumn("z", zValue)
 
   /** Write events under `layout` ("z" | "ts" | "none") as ~64 parquet
-    * files and return the directory. Range partitioning by the sort key
-    * makes each file a contiguous key slice, so its row-group min/max
-    * stats are tight in that key. */
+    * files and return the directory: one fixed directory per layout under
+    * `java.io.tmpdir`, overwritten by each call. Range partitioning by the
+    * sort key makes each file a contiguous key slice, so its row-group
+    * min/max stats are tight in that key. */
   private[graft] def writeLayout(s: SparkSession, d: String,
       layout: String): String = {
-    val base = java.nio.file.Files.createTempDirectory(s"graft_zorder_$layout")
-      .toString
+    val base = s"${System.getProperty("java.io.tmpdir")}/graft_zorder_$layout"
     val ev = zEvents(s, d).drop("hour_idx", "z")
     // Partitioning by a BIT-ALIGNED z prefix (not raw z quantiles) makes
     // every file a complete grid cell — a 32-user x 32-hour rectangle.

@@ -331,12 +331,9 @@ object DocStreams {
       // Unordered per-batch verdicts: the driver's combined read-back is
       // the one place this query sorts.
       batch => Dedup.shingleProbeUnordered(s, base, batch.select(col("doc_id"), col("text"))),
-      (batch, id) => {
-        val survivors = s.read.parquet(Zone.version(out, id))
-          .filter(!col("is_dup")).select("doc_id")
-        Dedup.shingleCommit(s, base,
-          batch.select(col("doc_id"), col("text")).join(survivors, Seq("doc_id"), "left_semi"))
-      })
+      (batch, verdicts) => Dedup.shingleCommit(s, base,
+        batch.select(col("doc_id"), col("text"))
+          .join(verdicts.filter(!col("is_dup")).select("doc_id"), Seq("doc_id"), "left_semi")))
   }
 
   /** Oracle for [[streamDedupEvolving]]: the shared two-phase commit

@@ -458,15 +458,10 @@ object EventStreams {
     toMemory(s, "graft_sessions_tws", OutputMode.Append(), RocksDbState)(
       twsSessions(s, stageEvents(s, d))).orderBy("user_id", "sess_start")
 
-  /** Streaming ETL into a PARQUET FILE SINK — the landing-zone-to-lake shape
-    * every production pipeline ends in, where the memory-sink queries above
-    * end in a table. Append-mode watermarked hourly aggregate → parquet
-    * files + checkpoint (exactly-once via the sink's file-commit log: a
-    * re-run of a failed batch overwrites, never duplicates). The final
-    * window stays open past the watermark, so the batch read-back fills it
-    * from the staged events — asserting precisely which rows a correct
-    * append sink must have flushed. Oracle: the same hourly rollup minus
-    * the unclosed tail hour, unioned with that tail computed batch-side. */
+  /** The rows [[runFileSinkOnce]] writes under `base/out`. */
+  private val fileSinkSchema = StructType(Seq(
+    StructField("win_start", TimestampType), StructField("cnt", LongType)))
+
   /** One run of the file-sink query against an existing base dir (restart =
     * call again with the SAME base: the checkpoint's file-commit log makes
     * replay exactly-once — StreamingSpec gates that). */
@@ -482,6 +477,15 @@ object EventStreams {
     toFiles(s, base, Zone.SliceShuffles)(agg)
   }
 
+  /** Streaming ETL into a PARQUET FILE SINK — the landing-zone-to-lake shape
+    * every production pipeline ends in, where the memory-sink queries above
+    * end in a table. Append-mode watermarked hourly aggregate → parquet
+    * files + checkpoint (exactly-once via the sink's file-commit log: a
+    * re-run of a failed batch overwrites, never duplicates). The final
+    * window stays open past the watermark, so the batch read-back fills it
+    * from the staged events — asserting precisely which rows a correct
+    * append sink must have flushed. Oracle: the same hourly rollup minus
+    * the unclosed tail hour, unioned with that tail computed batch-side. */
   def streamFileSink(s: SparkSession, d: String): DataFrame = {
     val dir = stageEvents(s, d)
     // One working dir per query, wiped per call. The wipe bypasses Spark:
@@ -491,14 +495,15 @@ object EventStreams {
     graft.llm.StandingIndex.reset(base)
     s.catalog.refreshByPath(base)
     runFileSinkOnce(s, dir, base)
-    val flushed = graft.TrackedCaches.track(s.read.parquet(s"$base/out").cache())
+    val flushed = graft.TrackedCaches.track(
+      s.read.schema(fileSinkSchema).parquet(s"$base/out").cache())
     // Windows still open at the watermark when input ends are never flushed
     // (up to two trailing hours for a 1h watermark over 1h windows);
     // complete exactly the MISSING hours from the staged batch. The flushed
     // files stay load-bearing two ways: the coverage require below, and the
     // hash gate — a wrong flushed row can't be papered over because the
     // batch side fills only hours the sink didn't emit.
-    val batchAll = s.read.parquet(dir)
+    val batchAll = s.read.schema(stagedSchema).parquet(dir)
       .withColumn("ts", timestamp_micros(col("ts_us")))
       .groupBy(date_trunc("hour", col("ts")).as("win_start"))
       .agg(count(lit(1)).as("cnt"))
@@ -515,6 +520,11 @@ object EventStreams {
   val streamFileSinkSql: String =
     """SELECT date_trunc('hour', ts) AS win_start, count(*) AS cnt
        FROM events GROUP BY 1 ORDER BY win_start"""
+
+  /** The state table [[streamCdcApply]] writes, one version per batch. */
+  private val cdcStateSchema = StructType(Seq(
+    StructField("user_id", LongType), StructField("n_events", LongType),
+    StructField("last_ts_us", LongType), StructField("sum_dec", DecimalType(28, 4))))
 
   /** Streaming CDC apply — the foreachBatch MERGE recipe: each micro-batch
     * is reduced to a per-user delta (count / max-ts / decimal sum) and
@@ -543,7 +553,7 @@ object EventStreams {
           delta.select(col("user_id"), col("d_n").as("n_events"),
             col("d_ts").as("last_ts_us"), col("d_sum").as("sum_dec"))
         else {
-          val cur = s.read.parquet(Zone.version(base, batchId - 1))
+          val cur = s.read.schema(cdcStateSchema).parquet(Zone.version(base, batchId - 1))
           cur.join(delta, Seq("user_id"), "full_outer")
             .select(col("user_id"),
               (coalesce(col("n_events"), lit(0L))
@@ -556,7 +566,7 @@ object EventStreams {
       Zone.put(merged, base, batchId)
     }
     Zone.Static.check(latest, dir, base)
-    s.read.parquet(Zone.version(base, latest))
+    s.read.schema(cdcStateSchema).parquet(Zone.version(base, latest))
       .select(col("user_id"), col("n_events"), col("last_ts_us"),
         col("sum_dec").cast(DoubleType).as("sum_value"))
       .orderBy("user_id")

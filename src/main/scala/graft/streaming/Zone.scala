@@ -229,7 +229,8 @@ object Zone {
   /** The one gate driver. Streams zone `dir` (schema `schema`) through
     * `screen` one micro-batch at a time with `conf` set, writing batch
     * b's verdicts to version b under `out` and then running
-    * `after(batch, b)` (an evolving gate's ingest step). Returns every
+    * `after(batch, verdicts)` (an evolving gate's ingest step) on them
+    * read back with the schema of the frame written. Returns every
     * verdict ordered by `key`:
     *  - zone with no chunks: `screen` over an empty frame of the zone
     *    schema, the exact output schema with zero rows. That frame is lazy
@@ -242,10 +243,14 @@ object Zone {
   def gate(s: SparkSession, dir: String, schema: StructType, key: String,
       out: String, rule: Batches, snap: Option[Snapshot[_]],
       conf: (String, String)*)(screen: DataFrame => DataFrame,
-      after: (DataFrame, Long) => Unit = (_, _) => ()): DataFrame = {
+      after: (DataFrame, DataFrame) => Unit = (_, _) => ()): DataFrame = {
+    @volatile var written: StructType = null
+    def read(ids: Long*) = s.read.schema(written).parquet(ids.map(version(out, _)): _*)
     val latest = run(s, dir, schema, out, conf: _*) { (batch, id) =>
-      put(screen(batch), out, id)
-      after(batch, id)
+      val verdicts = screen(batch)
+      written = verdicts.schema
+      put(verdicts, out, id)
+      after(batch, read(id))
     }
     lastSnapshot = snap.map(_.get)
     if (latest < 0)
@@ -253,7 +258,7 @@ object Zone {
     else {
       rule.check(latest, dir, out)
       snap.foreach(_.get.destroy())
-      s.read.parquet((0L to latest).map(version(out, _)): _*).orderBy(key)
+      read(0L to latest: _*).orderBy(key)
     }
   }
 }

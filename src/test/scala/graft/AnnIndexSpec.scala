@@ -255,8 +255,9 @@ class AnnIndexSpec extends SparkSpec {
     AnnIndex.delete(spark, base, emb.select("vec_id"))
     assert(AnnIndex.probe(spark, base, queries).count() == 0,
       "every candidate is tombstoned — the probe must serve empty")
-    // Compaction physically drops ALL rows: without the ensureReadable
-    // guard the cells table becomes a data-less dir the probe can't read.
+    // Compaction physically drops ALL rows: the cells table becomes a
+    // data-less dir, which the probe reads as empty through its declared
+    // schema.
     AnnIndex.compact(spark, base)
     assert(AnnIndex.probe(spark, base, queries).count() == 0,
       "the drained-empty index must serve empty, not error")
@@ -267,5 +268,41 @@ class AnnIndexSpec extends SparkSpec {
     assert(rows(AnnIndex.probe(spark, base, queries)) == want,
       "probe after purge-then-reappend diverged from the original")
     graft.Fs.deleteRec(java.nio.file.Paths.get(base))
+  }
+
+  test("jobs per standing IVF operation are pinned (AQE off)") {
+    val base = freshBase("jobs")
+    val emb = Tables.embeddings(spark, Sf)
+    val aqe = spark.conf.get("spark.sql.adaptive.enabled")
+    spark.conf.set("spark.sql.adaptive.enabled", "false")
+    try {
+      // A marked index, so compact runs its body under the suspension.
+      graft.llm.StandingIndex.ensure(base, "jobs spec") {
+        AnnIndex.buildFrom(spark, emb.filter(col("vec_id") % 5 =!= 0), base)
+        ()
+      }
+      val queries = emb.filter(col("vec_id") < Similarity.NumQueries)
+      // Jobs with AQE off (adaptive execution adds one per shuffle stage,
+      // and their number follows thread timing). The probe counts its
+      // collect, and runs against tombstones so both pruned reads run.
+      val costs = Seq(
+        "append" -> metered(AnnIndex.append(spark, base,
+          emb.filter(col("vec_id") % 5 === 0))),
+        "delete" -> metered(AnnIndex.delete(spark, base,
+          emb.filter(col("vec_id") % 7 === 3).select("vec_id"))),
+        "probe" -> metered(AnnIndex.probe(spark, base, queries).collect()),
+        "compact" -> metered(AnnIndex.compact(spark, base)))
+      // Pinned at the counts before the IVF tables declared their read
+      // schemas; those reads' inference jobs are gone now.
+      val pinned = Map("append" -> 5, "delete" -> 3, "probe" -> 10, "compact" -> 4)
+      costs.foreach { case (op, (jobs, _)) =>
+        info(s"$op: $jobs jobs")
+        assert(jobs <= pinned(op), s"$op ran $jobs Spark jobs, pinned at ${pinned(op)}")
+      }
+    } finally {
+      spark.conf.set("spark.sql.adaptive.enabled", aqe)
+      graft.TrackedCaches.release()
+      graft.Fs.deleteRec(java.nio.file.Paths.get(base))
+    }
   }
 }

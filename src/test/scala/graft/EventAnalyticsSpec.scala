@@ -12,17 +12,21 @@ import org.apache.spark.sql.functions._
   * MAD=0 edge, and quartile-score bounds. */
 class EventAnalyticsSpec extends SparkSpec {
 
-  /** Write a crafted events table (full corpus schema) into a temp sf-dir so
-    * Tables.events reads it through the normal path. */
-  private def craftEvents(rows: Seq[(Long, String, Long, String, Double)]): String = {
+  /** Run `body` on a crafted events table (full corpus schema) in a temp
+    * sf-dir, so Tables.events reads it through the normal path; the dir is
+    * deleted afterwards. */
+  private def craftEvents[A](rows: Seq[(Long, String, Long, String, Double)])(
+      body: String => A): A = {
     import spark.implicits._
-    val dir = java.nio.file.Files.createTempDirectory("graft_ev_spec").toString
-    rows.toDF("event_id", "tss", "user_id", "event_type", "value")
-      .select(col("event_id"), to_timestamp(col("tss")).as("ts"),
-        col("user_id"), col("event_type"), col("value"),
-        lit("""{"k": 1}""").as("props"))
-      .write.mode("overwrite").parquet(s"$dir/events.parquet")
-    dir
+    val dir = java.nio.file.Files.createTempDirectory("graft_ev_spec")
+    try {
+      rows.toDF("event_id", "tss", "user_id", "event_type", "value")
+        .select(col("event_id"), to_timestamp(col("tss")).as("ts"),
+          col("user_id"), col("event_type"), col("value"),
+          lit("""{"k": 1}""").as("props"))
+        .write.mode("overwrite").parquet(s"$dir/events.parquet")
+      body(dir.toString)
+    } finally Fs.deleteRec(dir)
   }
 
   test("funnel: step counts are monotone non-increasing, base converts at 1.0") {
@@ -35,7 +39,7 @@ class EventAnalyticsSpec extends SparkSpec {
   }
 
   test("funnel: an out-of-order step does not convert; a later one does") {
-    val dir = craftEvents(Seq(
+    val got = craftEvents(Seq(
       // user 1 converts signup -> view -> click -> purchase in order
       (1L, "2024-01-01 10:00:00", 1L, "signup", 1.0),
       (2L, "2024-01-01 11:00:00", 1L, "view", 1.0),
@@ -45,8 +49,8 @@ class EventAnalyticsSpec extends SparkSpec {
       // and their purchase (later) cannot skip the missing view/click
       (5L, "2024-01-01 09:00:00", 2L, "view", 1.0),
       (6L, "2024-01-01 10:00:00", 2L, "signup", 1.0),
-      (7L, "2024-01-01 13:00:00", 2L, "purchase", 1.0)))
-    val got = EventAnalytics.eventFunnel(spark, dir).collect()
+      (7L, "2024-01-01 13:00:00", 2L, "purchase", 1.0)))(
+      EventAnalytics.eventFunnel(spark, _).collect())
       .map(r => r.getString(1) -> r.getLong(2)).toMap
     assert(got == Map("signup" -> 2L, "view" -> 1L, "click" -> 1L, "purchase" -> 1L))
   }
@@ -103,9 +107,9 @@ class EventAnalyticsSpec extends SparkSpec {
   test("anomaly MAD: a lone spike is flagged; zero-MAD users flag only movers") {
     val base = (1L to 9L).map(i =>
       (i, f"2024-01-01 10:0$i%01d:00", 1L, "click", 10.0))
-    val dir = craftEvents(base :+
-      (10L, "2024-01-01 11:00:00", 1L, "click", 1000.0))
-    val got = EventAnalytics.anomalyMad(spark, dir).collect()
+    val got = craftEvents(base :+
+      (10L, "2024-01-01 11:00:00", 1L, "click", 1000.0))(
+      EventAnalytics.anomalyMad(spark, _).collect())
     // median 10.00 (m2=2000 cents-doubled), MAD 0 -> only the spike moves
     assert(got.map(_.getLong(1)).toSeq == Seq(10L))
     assert(got.head.getLong(4) == 2000L, "doubled median cents")
@@ -132,13 +136,13 @@ class EventAnalyticsSpec extends SparkSpec {
       .filter(col("event_type") === "purchase").count()
     assert(attr.values.sum == purchases,
       "every purchase must land in exactly one channel")
-    val dir = craftEvents(Seq(
+    val got = craftEvents(Seq(
       (1L, "2024-01-01 08:00:00", 1L, "purchase", 10.0), // nothing before -> none
       (2L, "2024-01-01 09:00:00", 2L, "click", 0.0),
       (3L, "2024-01-01 09:30:00", 2L, "view", 0.0),
       (4L, "2024-01-01 10:00:00", 2L, "purchase", 25.0), // last touch = view
-      (5L, "2024-01-01 11:00:00", 2L, "purchase", 5.0))) // last non-purchase = view
-    val got = EventAnalytics.lastTouchAttribution(spark, dir).collect()
+      (5L, "2024-01-01 11:00:00", 2L, "purchase", 5.0)))( // last non-purchase = view
+      EventAnalytics.lastTouchAttribution(spark, _).collect())
       .map(r => r.getString(0) -> (r.getLong(1), r.getLong(2))).toMap
     assert(got == Map("none" -> ((1L, 1000L)), "view" -> ((2L, 3000L))),
       s"unexpected attribution: $got")
@@ -152,8 +156,7 @@ class EventAnalyticsSpec extends SparkSpec {
       val v = if (day <= 10) { if (day % 2 == 1) 9.00 else 11.00 } else 30.00
       (day.toLong, f"2024-01-$day%02d 12:00:00", 1L, "purchase", v)
     }
-    val dir = craftEvents(rows)
-    val got = EventAnalytics.cusumShift(spark, dir).collect()
+    val got = craftEvents(rows)(EventAnalytics.cusumShift(spark, _).collect())
       .map(r => r.getTimestamp(1).toString.take(10))
     assert(got.toSeq == Seq("2024-01-12", "2024-01-13", "2024-01-14", "2024-01-15"),
       s"unexpected flagged days: ${got.toSeq}")

@@ -112,6 +112,17 @@ class GraftSessionSpec extends SparkSpec {
       offenders.mkString("; "))
   }
 
+  test("the index and streaming code reads no parquet table by inference") {
+    // Every table graft/llm and graft/streaming write has a declared
+    // schema, and every read passes it (`read.schema(st).parquet`), so no
+    // read runs a schema-inference job or silently re-infers a drifted file.
+    val inferring = """\.read\s*\.\s*parquet\s*\(""".r
+    val offenders = Seq("llm", "streaming")
+      .flatMap(d => scalaFiles(s"src/main/scala/graft/$d"))
+      .flatMap(p => inferring.findAllMatchIn(text(p)).map(_ => p.getFileName.toString))
+    assert(offenders.isEmpty, s"inferring parquet reads: ${offenders.mkString("; ")}")
+  }
+
   test("one module owns the gate lifecycle") {
     // Under graft/streaming only Zone.scala (the gate driver) declares the
     // snapshot test hook, destroys a broadcast, reads a gate's verdict

@@ -82,4 +82,24 @@ class LayoutSpec extends SparkSpec with AdaptiveSparkPlanHelper {
     assert(rows("z") * 2 <= rows("ts"),
       s"z-order not materially better than time-sort: $rows")
   }
+
+  test("q_compaction and q_zorder_layout rewrite one fixed dir each, " +
+      "so a second call adds no temp dir") {
+    val tmp = java.nio.file.Paths.get(System.getProperty("java.io.tmpdir"))
+    def dirs(): Set[String] = {
+      val st = java.nio.file.Files.list(tmp)
+      try st.toArray.map(_.asInstanceOf[java.nio.file.Path].getFileName.toString)
+        .filter(n => n.startsWith("graft_compact") || n.startsWith("graft_zorder_")).toSet
+      finally st.close()
+    }
+    def run(): Unit = {
+      graft.ops.Execution.compaction(spark, Dir).collect()
+      Layout.zOrderLayout(spark, Dir).collect()
+      ()
+    }
+    run()
+    val first = dirs()
+    run()
+    assert((dirs() -- first).isEmpty, s"new temp dirs: ${dirs() -- first}")
+  }
 }

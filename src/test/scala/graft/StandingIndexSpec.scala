@@ -3,6 +3,8 @@ package graft
 import java.nio.file.{Files, Paths}
 
 import graft.llm.StandingIndex
+import org.apache.spark.sql.types.{IntegerType, LongType, StringType, StructField,
+  StructType}
 import org.scalatest.funsuite.AnyFunSuite
 
 /** Recovery-protocol properties of the standing-index shared machinery
@@ -123,26 +125,28 @@ class StandingIndexSpec extends SparkSpec {
     import org.apache.spark.sql.functions.{col, lit}
     val base = Files.createTempDirectory("graft_standing_purge").toString
     val rows = Seq((1L, 10L), (2L, 20L), (3L, 30L)).toDF("doc_id", "v")
+    val schema = StructType(Seq(StructField("doc_id", LongType),
+      StructField("v", LongType), StructField("bucket", IntegerType)))
     StandingIndex.writeBucketed(rows, col("doc_id"), 4, s"$base/t")
-    // The all-rows-deleted rewrite (a purge of the whole population):
-    // without the ensureReadable guard this swaps in a data-less dir
-    // (only _SUCCESS) that the next read can't infer a schema from.
-    StandingIndex.compactTable(spark, base, "t", "bucket",
+    // The all-rows-deleted rewrite (a purge of the whole population)
+    // swaps in a data-less dir (only _SUCCESS), which no read can infer a
+    // schema from; read with its declared schema it serves empty.
+    StandingIndex.compactTable(spark, base, "t", "bucket", schema,
       _.filter(lit(false)))
-    val empty = spark.read.parquet(s"$base/t")
+    val empty = spark.read.schema(schema).parquet(s"$base/t")
     assert(empty.count() == 0, "the purged table must serve empty")
     assert(empty.columns.toSet == Set("doc_id", "v", "bucket"),
       s"schema lost: ${empty.columns.toList}")
     // prunedRead's full-read fallback path must serve too.
-    assert(StandingIndex.prunedRead(spark, s"$base/t", "bucket", Seq(9L))
+    assert(StandingIndex.prunedRead(spark, s"$base/t", "bucket", Seq(9L), schema)
       .count() == 0)
     // Later partitioned appends must land in the same (uniform) layout.
     StandingIndex.appendBucketed(rows, col("doc_id"), 4, s"$base/t")
-    assert(spark.read.parquet(s"$base/t").count() == 3,
+    assert(spark.read.schema(schema).parquet(s"$base/t").count() == 3,
       "the schemaed-empty state must stay append-compatible")
     // A plain re-compaction of the refilled table keeps every row.
-    StandingIndex.compactTable(spark, base, "t", "bucket")
-    assert(spark.read.parquet(s"$base/t").count() == 3)
+    StandingIndex.compactTable(spark, base, "t", "bucket", schema)
+    assert(spark.read.schema(schema).parquet(s"$base/t").count() == 3)
     Fs.deleteRec(Paths.get(base))
   }
 
@@ -151,12 +155,14 @@ class StandingIndexSpec extends SparkSpec {
     import org.apache.spark.sql.functions.{col, sum}
     val base = Files.createTempDirectory("graft_standing_flat").toString
     // Delta rows that sum to zero everywhere — the rollup drops them all.
+    val schema = StructType(Seq(StructField("doc_id", LongType),
+      StructField("n0", LongType)))
     Seq((1L, 5L), (1L, -5L)).toDF("doc_id", "n0")
       .write.parquet(s"$base/n0")
-    StandingIndex.compactFlat(spark, base, "n0",
+    StandingIndex.compactFlat(spark, base, "n0", schema,
       _.groupBy("doc_id").agg(sum("n0").as("n0"))
         .filter(col("n0") =!= 0L))
-    val e = spark.read.parquet(s"$base/n0")
+    val e = spark.read.schema(schema).parquet(s"$base/n0")
     assert(e.count() == 0 && e.columns.toSet == Set("doc_id", "n0"),
       s"all-zero-sum rollup bricked the flat table: ${e.columns.toList}")
     Fs.deleteRec(Paths.get(base))
@@ -176,6 +182,7 @@ class StandingIndexSpec extends SparkSpec {
     Files.write(Paths.get(s"$base/_old_t/junk/stale.txt"),
       "stale".getBytes("UTF-8"))
     StandingIndex.compactFlat(spark, base, "t",
+      StructType(Seq(StructField("doc_id", LongType), StructField("v", StringType))),
       _.filter(col("doc_id") === 1L))
     val t = spark.read.parquet(s"$base/t")
     assert(t.count() == 1 && t.columns.toSet == Set("doc_id", "v"))
